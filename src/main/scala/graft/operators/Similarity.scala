@@ -385,7 +385,7 @@ object Similarity {
       .persist(StorageLevel.MEMORY_AND_DISK))
     cellCounts.count()
     def branch(p: Int): DataFrame = {
-      val edges = annIvfWith(v, cents, p, nQueries, k)
+      val edges = serveFirst(v, nQueries, Some(cents), p, Exact, TopK(k))
         .select(key.head, key.tail: _*)
       val probes = v.filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("query_id"), explode(cellsOf(p)).as("cell"))
@@ -489,24 +489,20 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     TransientCaches.register(truth)
     val maxF = factors.max
-    val queries = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
+    val queries = queryRows(v.filter(col("vec_id") < nQueries))
     // one ADC ranking at the largest factor; srnk = ADC rank, so a
     // smaller factor's shortlist is srnk <= f*k
+    val codec = Pq(cbs)
     val shortMax = rankTopKFull(
-      pqAdcScored(v, cbs, nQueries)
-        .withColumnRenamed("score", "cos"), maxF * k)
+      stage1(codec.encode(inlineRows(v, None)), queries, None, 0, codec),
+      maxF * k)
       .select(col("query_id"), col("neighbor_id"), col("rnk").as("srnk"))
     // exact cosines of the max shortlist, computed once
     val rer = shortMax
-      .join(v.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("e_c"), col("nrm").as("n_c")),
-        Seq("neighbor_id"))
+      .join(fullRows(v), Seq("neighbor_id"))
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("srnk"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-          col("n_c")).as("cos"))
+        Exact.score.as("cos"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     TransientCaches.register(rer)
     // eager: the concurrent factor branches below scan both caches
@@ -647,49 +643,20 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     TransientCaches.register(truth)
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
     val maxF = factors.max
-    val centArr = typedLit(cents.map(_.toSeq).toSeq)
-    val codeCols = (0 until nSub).map { m =>
-      element_at(graft.functions.VectorQuantize.nearestCellsBiased(
-        expr(s"slice(res, ${m * sub + 1}, $sub)"), cbs(m),
-        l2Biases(cbs(m)), 1), 1)
-        .as(s"c$m")
-    }
-    val coded = residualAssigned(v, cents)
-      .select(col("cell") +: col("vec_id").as("neighbor_id") +: codeCols: _*)
-    val queries = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
-    val probes = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        explode(graft.functions.VectorQuantize.nearestCells(
-          col("embedding"), cents, nProbe)).as("cell"))
-    val score = (graft.functions.VectorFunctions.dot(
-      col("e_q"), element_at(centArr, col("cell") + 1)) +:
-      (0 until nSub).map { m =>
-        graft.functions.VectorFunctions.dot(
-          expr(s"slice(e_q, ${m * sub + 1}, $sub)"),
-          element_at(typedLit(cbs(m).map(_.toSeq).toSeq), col(s"c$m") + 1))
-      }).reduceLeft(_ + _)
+    val queries = queryRows(v.filter(col("vec_id") < nQueries))
     // one residual-ADC ranking over the probed-cell candidates at the
     // LARGEST factor; srnk = ADC rank, smaller factors are prefixes
+    val codec = Pq(cbs, Some(cents))
     val shortMax = rankTopKFull(
-      coded.join(broadcast(probes.select("cell", "query_id", "e_q")),
-          Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"), score.as("cos")),
-      maxF * k)
+      stage1(codec.encode(inlineRows(v, Some(cents))), queries, Some(cents),
+        nProbe, codec), maxF * k)
       .select(col("query_id"), col("neighbor_id"), col("rnk").as("srnk"))
     val rer = shortMax
-      .join(v.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("e_c"), col("nrm").as("n_c")),
-        Seq("neighbor_id"))
+      .join(fullRows(v), Seq("neighbor_id"))
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("srnk"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-          col("n_c")).as("cos"))
+        Exact.score.as("cos"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     TransientCaches.register(rer)
     // eager: the concurrent factor branches below scan both caches
@@ -874,7 +841,7 @@ object Similarity {
         .agg(sum(col("cur_esum")).as("esum"), sum(col("cur_cnt")).as("cnt"))
         .select(round(col("esum").cast("double") / col("cnt"), 6)
           .as("mean_mse6"))
-      val edges = annPqWith(v, cbs, nQueries, k)
+      val edges = serveFirst(v, nQueries, None, 0, Pq(cbs), TopK(k))
         .select("query_id", "neighbor_id")
       val hits = edges.join(truth, Seq("query_id", "neighbor_id"))
       truth.agg(count(lit(1)).as("n_truth"))
@@ -1042,14 +1009,16 @@ object Similarity {
     // six independent 1-row rungs over the persisted truth — concurrent
     // branch jobs (Branches scaladoc)
     Branches.unionAllConcurrent(Seq(
-        one("ann_pq", annPqWith(v, cbs, nQueries, k)),
-        one("ann_pq_opq", annPqOpqWith(v, rO, cbsO, nQueries, k)),
-        one("ann_ivfpq_opq",
-          annIvfPqOpqWith(v, cents, rO, cbsO, 4, nQueries, k)),
-        one("ann_ivfpq", annIvfPqWith(v, cents, cbs, 4, nQueries, k)),
-        one("ann_ivfpq_residual",
-          annIvfPqResidualWith(v, cents, cbsR, 4, nQueries, k)),
-        one("ann_sq8", annSq8With(v, nQueries, k))))
+        one("ann_pq", serveFirst(v, nQueries, None, 0, Pq(cbs), TopK(k))),
+        one("ann_pq_opq", serveFirst(v, nQueries, None, 0,
+          Pq(cbsO, rotation = Some(rO)), TopK(k))),
+        one("ann_ivfpq_opq", serveFirst(v, nQueries, Some(cents), 4,
+          Pq(cbsO, rotation = Some(rO)), TopK(k))),
+        one("ann_ivfpq", serveFirst(v, nQueries, Some(cents), 4, Pq(cbs),
+          TopK(k))),
+        one("ann_ivfpq_residual", serveFirst(v, nQueries, Some(cents), 4,
+          Pq(cbsR, Some(cents)), TopK(k))),
+        one("ann_sq8", serveFirst(v, nQueries, None, 0, Sq8, TopK(k)))))
       .orderBy("variant")
   }
 
@@ -1748,8 +1717,8 @@ object Similarity {
   def annIvf(spark: SparkSession, sfDir: String, nCells: Int = 16,
              nProbe: Int = 4, nQueries: Int = 10, k: Int = 5): DataFrame = {
     val v = vectors(spark, sfDir)
-    annIvfWith(v, withTrainCache(v)(trainCentroids(_, nCells)),
-      nProbe, nQueries, k)
+    serveFirst(v, nQueries, Some(withTrainCache(v)(trainCentroids(_, nCells))),
+      nProbe, Exact, TopK(k))
   }
 
   /** Training scans the vectors frame once per k-means iteration (and
@@ -1793,7 +1762,9 @@ object Similarity {
     * nothing extra: LocalRelations carry their rows in the canonicalized
     * plan, and RDD-backed frames never compare equal (always fresh). */
   private def inputFingerprint(v: DataFrame): String = {
-    val files = try v.inputFiles catch { case _: Throwable => Array.empty[String] }
+    val files = try v.inputFiles catch {
+      case scala.util.control.NonFatal(_) => Array.empty[String]
+    }
     if (files.isEmpty) ""
     else {
       val conf = v.sparkSession.sparkContext.hadoopConfiguration
@@ -1802,7 +1773,7 @@ object Similarity {
           val p = new org.apache.hadoop.fs.Path(f)
           val st = p.getFileSystem(conf).getFileStatus(p)
           s"$f:${st.getLen}:${st.getModificationTime}"
-        } catch { case _: Throwable => f }
+        } catch { case scala.util.control.NonFatal(_) => f }
       }
       java.util.UUID
         .nameUUIDFromBytes(parts.mkString("\n").getBytes("UTF-8")).toString
@@ -1837,39 +1808,217 @@ object Similarity {
     * (see [[ivfStaticOracle]]). */
   def annIvfStatic(spark: SparkSession, sfDir: String, nProbe: Int = 4,
                    nQueries: Int = 10, k: Int = 5): DataFrame =
-    annIvfWith(vectors(spark, sfDir), staticCentroids(), nProbe, nQueries, k)
+    serveFirst(vectors(spark, sfDir), nQueries, Some(staticCentroids()),
+      nProbe, Exact, TopK(k))
 
-  private def annIvfWith(v: DataFrame, cents: Array[Array[Double]],
-                         nProbe: Int, nQueries: Int, k: Int): DataFrame =
-    ivfServe(v, v.filter(col("vec_id") < nQueries), cents, nProbe, k)
+  /** How stage 1 of ANN serving stores and scores a candidate: its
+    * encoding (raw floats, int8, or PQ codes), the query-side columns
+    * its score reads, and the score its shortlist ranks by. Every
+    * approximate codec is followed by one exact cosine re-rank
+    * ([[serve]]). */
+  private[graft] sealed trait Codec {
+    /** (keys…, embedding, nrm) rows → (keys…, stage-1 columns), where
+      * the keys are every other column (cell, a vec_id or neighbor_id). */
+    def encode(rows: DataFrame): DataFrame
+    /** Probe-side columns [[score]] reads besides e_q / n_q. */
+    def queryCols: Seq[Column] = Nil
+    /** Stage-1 score of a (probe ⋈ encoded candidate) row. */
+    def score: Column
+  }
 
-  /** TWO-FRAME IVF serving core: score `queries` against `corpus`
-    * (both need vec_id, embedding, nrm) through the cell probe — the
-    * seam the streaming ANN path reuses per micro-batch (query side
-    * broadcast: micro-batches and online query sets are small by
-    * construction; the corpus-sized side only ever streams through
-    * the cell equi-join). */
-  private[graft] def ivfServe(corpus: DataFrame, queries: DataFrame,
-                              cents: Array[Array[Double]], nProbe: Int,
-                              k: Int): DataFrame = {
-    def cellsOf(n: Int) =
-      graft.functions.VectorQuantize.nearestCells(col("embedding"), cents, n)
+  private def keysOf(rows: DataFrame): Seq[Column] =
+    rows.columns.toSeq.filterNot(Set("embedding", "nrm")).map(col)
 
-    val assigned = corpus.select(
-      element_at(cellsOf(1), 1).as("cell"),
-      col("vec_id").as("neighbor_id"),
-      col("embedding").as("e_c"), col("nrm").as("n_c"))
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"), explode(cellsOf(nProbe)).as("cell"))
+  /** Full-precision scan: exact cosine, ranked in a single stage. */
+  private[graft] case object Exact extends Codec {
+    def encode(rows: DataFrame): DataFrame =
+      rows.select(keysOf(rows) :+ col("embedding").as("e_c") :+
+        col("nrm").as("n_c"): _*)
+    def score: Column =
+      cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
+  }
 
-    rankTopK(
-      assigned.join(broadcast(probes), Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
-      k)
+  /** int8 scan: cosine against [[graft.functions.Sq8Dequant]]'s serving
+    * vector, dequantized ONCE per candidate (map-only) — re-quantizing
+    * inside the pair join would multiply the work by the query count. */
+  private[graft] case object Sq8 extends Codec {
+    def encode(rows: DataFrame): DataFrame =
+      rows.select(keysOf(rows) :+
+          graft.functions.Sq8Dequant.dequant(col("embedding")).as("d"): _*)
+        .withColumn("n_d", l2norm(col("d")))
+    def score: Column =
+      cosineWithNorms(dot(col("e_q"), col("d")), col("n_q"), col("n_d"))
+  }
+
+  /** Product quantization (ADC): one L2-argmin code per sub-space of the
+    * ENCODING-SPACE vector — the raw vector, or its double residual
+    * `e − c(cell)` under `residualCentroids`, then rotated by an OPQ
+    * `rotation`. The score is the asymmetric distance: the query (rotated
+    * once, broadcast model state) dotted with each selected codeword,
+    * summed LEFT TO RIGHT after the residual leg's centroid term — the
+    * oracles add in the same order, so the double is bit-identical. */
+  private[graft] final case class Pq(
+      cbs: Array[Array[Array[Double]]],
+      residualCentroids: Option[Array[Array[Double]]] = None,
+      rotation: Option[Array[Array[Double]]] = None) extends Codec {
+    private val sub = cbs.head.head.length
+    private def slice(v: String, m: Int): Column =
+      expr(s"slice($v, ${m * sub + 1}, $sub)")
+    /** The encoding-space vector of `e` (reads `cell` in residual mode). */
+    def space(e: Column): Column = {
+      val r = residualCentroids.fold(e)(residualOf(_, e))
+      rotation.fold(r)(rotCol(_, r))
+    }
+    def encode(rows: DataFrame): DataFrame = {
+      val keys = keysOf(rows)
+      rows.select(keys :+ space(col("embedding")).as("enc"): _*)
+        .select(keys ++ cbs.indices.map { m =>
+          element_at(graft.functions.VectorQuantize.nearestCellsBiased(
+            slice("enc", m), cbs(m), l2Biases(cbs(m)), 1), 1).as(s"c$m")
+        }: _*)
+    }
+    override def queryCols: Seq[Column] =
+      Seq(rotation.fold(col("e_q"))(rotCol(_, col("e_q"))).as("e_s"))
+    def score: Column =
+      (residualCentroids.map(c => dot(col("e_q"), element_at(
+          typedLit(c.map(_.toSeq).toSeq), col("cell") + 1))).toSeq ++
+        cbs.indices.map { m =>
+          dot(slice("e_s", m),
+            element_at(typedLit(cbs(m).map(_.toSeq).toSeq), col(s"c$m") + 1))
+        }).reduceLeft(_ + _)
+  }
+
+  /** What serving returns per query: the exact top-k (approximate codecs
+    * shortlist `shortlistFactor·k` first), or MMR over the exact
+    * top-`shortlistFactor·k` (approximate codecs shortlist
+    * `preFactor·shortlistFactor·k` first). */
+  private[graft] sealed trait Rank {
+    /** Stage-1 shortlist size of an approximate codec. */
+    def shortlist: Int
+  }
+  private[graft] final case class TopK(k: Int, shortlistFactor: Int = 8)
+      extends Rank {
+    def shortlist: Int = shortlistFactor * k
+  }
+  private[graft] final case class Mmr(k: Int, shortlistFactor: Int,
+                                      lambda: Double, preFactor: Int = 1)
+      extends Rank {
+    def shortlist: Int = preFactor * shortlistFactor * k
+  }
+
+  /** Encoded candidates (cell, neighbor_id, …) joined to the broadcast
+    * (query_id, e_q, n_q) set: under a coarse quantizer each query
+    * probes its `nProbe` nearest cells — an equi-join, and since cells
+    * partition the corpus the pairs are unique without a distinct;
+    * without one (`cents = None`) every candidate meets every query, the
+    * flat scan. Self-matches are dropped either way. */
+  private def probed(cand: DataFrame, queries: DataFrame,
+                     cents: Option[Array[Array[Double]]], nProbe: Int,
+                     codec: Codec): DataFrame = {
+    val q = queries.select(col("*") +: codec.queryCols: _*)
+    cents match {
+      case Some(c) =>
+        cand.join(broadcast(q.withColumn("cell", explode(
+            graft.functions.VectorQuantize.nearestCells(col("e_q"), c,
+              nProbe)))), Seq("cell"))
+          .filter(col("query_id") =!= col("neighbor_id"))
+      case None =>
+        cand.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+    }
+  }
+
+  /** Stage 1: every probed (query_id, neighbor_id) pair with the codec's
+    * score as `cos`. */
+  private def stage1(cand: DataFrame, queries: DataFrame,
+                     cents: Option[Array[Array[Double]]], nProbe: Int,
+                     codec: Codec): DataFrame =
+    probed(cand, queries, cents, nProbe, codec)
+      .select(col("query_id"), col("neighbor_id"), codec.score.as("cos"))
+
+  /** THE two-stage ANN serving core every inline and artifact path runs.
+    * `cand` = the codec's encoded candidates, `full` = (neighbor_id, e_c,
+    * n_c) full-precision rows, `queries` = (query_id, e_q, n_q). An
+    * [[Exact]] scan ranks its scores directly; an approximate codec keeps
+    * a bounded TopK shortlist, adds the `fresh` (cell, neighbor_id) rows
+    * its probes reach unscored (live deltas the codes do not cover —
+    * never approximated, never shortlist-pruned), gathers full vectors by
+    * id and re-ranks by exact cosine. [[Mmr]] then runs [[mmrRerank]]
+    * over the exact top-f·k. Both rankings are the bounded
+    * [[graft.functions.TopKByScore]] aggregate. */
+  private def serve(cand: DataFrame, full: DataFrame, queries: DataFrame,
+                    cents: Option[Array[Array[Double]]], nProbe: Int,
+                    codec: Codec, rank: Rank,
+                    fresh: Option[DataFrame] = None): DataFrame = {
+    val scored = stage1(cand, queries, cents, nProbe, codec)
+    val exact = codec match {
+      case Exact => scored
+      case _ =>
+        val short = scored.groupBy("query_id")
+          .agg(graft.functions.TopKByScoreAgg.topkByScore(
+            col("neighbor_id"), col("cos"), rank.shortlist).as("top"))
+          .select(col("query_id"), explode(col("top.neighbor_id"))
+            .as("neighbor_id"))
+        fresh.fold(short)(f => short.unionByName(
+            probed(f, queries, cents, nProbe, codec)
+              .select("query_id", "neighbor_id")))
+          .join(full, Seq("neighbor_id"))
+          .join(broadcast(queries), Seq("query_id"))
+          .select(col("query_id"), col("neighbor_id"), Exact.score.as("cos"))
+    }
+    rank match {
+      case TopK(k, _) => rankTopK(exact, k)
+      case Mmr(k, f, lambda, _) =>
+        mmrRerank(rankTopKFull(exact, f * k), full, k, lambda)
+    }
+  }
+
+  /** (query_id, e_q, n_q) from a (vec_id, embedding) query frame. */
+  private def queryRows(queries: DataFrame): DataFrame =
+    queries.select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
+      l2norm(col("embedding")).as("n_q"))
+
+  /** (neighbor_id, e_c, n_c) — the exact stage's gather side. */
+  private def fullRows(rows: DataFrame): DataFrame =
+    rows.select(col("vec_id").as("neighbor_id"), col("embedding").as("e_c"),
+      col("nrm").as("n_c"))
+
+  /** Inline serving: `queries` against `corpus` (both vec_id, embedding,
+    * nrm), cells assigned map-only under `cents` and the candidates
+    * encoded by `codec` in the same pass. */
+  private[graft] def serveFrames(corpus: DataFrame, queries: DataFrame,
+                                 cents: Option[Array[Array[Double]]],
+                                 nProbe: Int, codec: Codec,
+                                 rank: Rank): DataFrame =
+    serve(codec.encode(inlineRows(corpus, cents)), fullRows(corpus),
+      queryRows(queries), cents, nProbe, codec, rank)
+
+  /** (cell, neighbor_id, embedding, nrm) — cells assigned under `cents`
+    * (none for a flat scan), ready for a codec's encode. */
+  private def inlineRows(corpus: DataFrame,
+                         cents: Option[Array[Array[Double]]]): DataFrame =
+    corpus.select(cents.map(c => element_at(
+        graft.functions.VectorQuantize.nearestCells(col("embedding"), c, 1),
+        1).as("cell")).toSeq ++
+      Seq(col("vec_id").as("neighbor_id"), col("embedding"), col("nrm")): _*)
+
+  /** [[serveFrames]] for the fixture query set: `v`'s first `nQueries`
+    * ids against all of `v`. */
+  private[graft] def serveFirst(v: DataFrame, nQueries: Int,
+                                cents: Option[Array[Array[Double]]],
+                                nProbe: Int, codec: Codec,
+                                rank: Rank): DataFrame =
+    serveFrames(v, v.filter(col("vec_id") < nQueries), cents, nProbe, codec,
+      rank)
+
+  /** Serving from an index artifact's `assigned/` inverted lists (base +
+    * live deltas): broadcast probes join only their cell partitions. */
+  private def serveIndex(spark: SparkSession, dir: String,
+                         queries: DataFrame, nProbe: Int, codec: Codec,
+                         rank: Rank): DataFrame = {
+    val cents = readIvfCentroids(spark, dir)
+    val rows = readIvfAssigned(spark, dir)
+    serve(codec.encode(rows.withColumnRenamed("vec_id", "neighbor_id")),
+      fullRows(rows), queryRows(queries), Some(cents), nProbe, codec, rank)
   }
 
   /** Batch twin for the streaming ANN path: serve an explicit
@@ -1877,10 +2026,8 @@ object Similarity {
     * static quantizer. */
   def annServe(spark: SparkSession, sfDir: String, queries: DataFrame,
                nProbe: Int = 4, k: Int = 5): DataFrame =
-    ivfServe(vectors(spark, sfDir),
-      queries.select(col("vec_id"), col("embedding"),
-        l2norm(col("embedding")).as("nrm")),
-      staticCentroids(), nProbe, k)
+    serveFrames(vectors(spark, sfDir), queries, Some(staticCentroids()),
+      nProbe, Exact, TopK(k))
 
   /** The MATERIALIZED IVF index artifact: centroids + the corpus's cell
     * assignment written ONCE as parquet, inverted-list style. The
@@ -1980,7 +2127,10 @@ object Similarity {
     * map-only over the delta; existing partitions are untouched (append
     * mode writes new files into the matching cell directories), so the
     * updated index serves identically to a full rebuild over the
-    * combined vector set — SimilaritySpec proves it. The quantizer
+    * combined vector set — SimilaritySpec proves it, for every codec.
+    * When the artifact has a PQ leg ([[ivfPqIndexAdd]]) the delta is
+    * also encoded with the stored codebook unit and appended to
+    * `codes/`, so the ADC scan keeps covering `assigned/`. The quantizer
     * itself is versioned with the corpus: retrain + rebuild when drift
     * warrants, append between versions (the standard IVF deployment
     * cadence). */
@@ -1988,9 +2138,16 @@ object Similarity {
                      vectors: DataFrame): Unit = {
     requireRawIndex(spark, dir)
     val cents = readIvfCentroids(spark, dir)
-    assignWithCentroids(vectors, cents)
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$dir/assigned")
+    val rows = assignWithCentroids(vectors, cents)
+    // a PQ leg gets the delta's codes FIRST: a crash between the two
+    // writes leaves codes the exact gather drops (no assigned/ row to
+    // join), never assigned/ rows the ADC scan silently misses
+    val (fs, codes) = graft.streaming.StreamIO.fsFor(s"$dir/codes",
+      spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(codes))
+      storedPqCodec(spark, dir, cents).encode(rows)
+        .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
+    rows.write.mode("append").partitionBy("cell").parquet(s"$dir/assigned")
   }
 
   /** ARTIFACT COMPACTION / delta GC for the IVF index: fold every
@@ -2344,7 +2501,8 @@ object Similarity {
           cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
             col("n_c")).as("cos")), k)
         .select("query_id", "neighbor_id")
-      val served = ivfServe(corpus, queries, cents, nProbe, k)
+      val served = serveFrames(corpus, queries, Some(cents), nProbe, Exact,
+        TopK(k))
         .select("query_id", "neighbor_id")
       // the pruning bill: probed-cell population, no vector join (each
       // query's own vector sits in its probed top cell — subtract)
@@ -3054,31 +3212,24 @@ object Similarity {
   def annServeFromIndex(spark: SparkSession, dir: String, queries: DataFrame,
                         nProbe: Int = 4, k: Int = 5): DataFrame = {
     requireRawIndex(spark, dir)
-    serveFromIndexUnchecked(spark, dir, queries, nProbe, k)
+    serveIndex(spark, dir, queries, nProbe, Exact, TopK(k))
   }
 
-  /** The probe/rank body [[annServeFromIndex]] guards — shared with
-    * [[annServeWhitenedFromIndex]], whose queries arrive ALREADY in
-    * the artifact's (whitened) space. */
-  private def serveFromIndexUnchecked(spark: SparkSession, dir: String,
-                                      queries: DataFrame, nProbe: Int,
-                                      k: Int): DataFrame = {
-    val cents = readIvfCentroids(spark, dir)
-    val assigned = readIvfAssigned(spark, dir)
-      .select(col("cell"), col("vec_id").as("neighbor_id"),
-        col("embedding").as("e_c"), col("nrm").as("n_c"))
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        l2norm(col("embedding")).as("n_q"),
-        explode(graft.functions.VectorQuantize
-          .nearestCells(col("embedding"), cents, nProbe)).as("cell"))
-    rankTopK(
-      assigned.join(broadcast(probes), Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
-      k)
+  /** Build an index artifact in a fresh per-run scratch dir (concurrent
+    * runs must not overwrite each other's artifact mid-read), then serve
+    * the fixture's first `nQueries` vectors from it — the shared body of
+    * the §2 `ann_*_indexed` queries. */
+  private def servedFromScratch(spark: SparkSession, sfDir: String,
+                                kind: String, nQueries: Int)
+                               (build: String => Unit)
+                               (serveFrom: (String, DataFrame) => DataFrame)
+      : DataFrame = {
+    val dir = ExportImport.scratch(
+      s"$kind/run-${java.util.UUID.randomUUID()}")
+    build(dir)
+    serveFrom(dir, Tables.load(spark, sfDir, "embeddings")
+      .filter(col("vec_id") < nQueries)
+      .select(col("vec_id"), col("embedding")))
   }
 
   /** §2 #150 — IVF serving FROM THE ARTIFACT: build the index once
@@ -3088,18 +3239,9 @@ object Similarity {
     * same probes, same ranking — which the shared oracle and
     * SimilaritySpec both pin. */
   def annIvfIndexed(spark: SparkSession, sfDir: String, nProbe: Int = 4,
-                    nQueries: Int = 10, k: Int = 5): DataFrame = {
-    // per-run UUID subdir: concurrent runs must not overwrite each
-    // other's artifact mid-read
-    val dir = ExportImport.scratch(
-      s"ivf-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexToDir(spark, sfDir, dir)
-    annServeFromIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k)
-  }
+                    nQueries: Int = 10, k: Int = 5): DataFrame =
+    servedFromScratch(spark, sfDir, "ivf-index", nQueries)(
+      ivfIndexToDir(spark, sfDir, _))(annServeFromIndex(spark, _, _, nProbe, k))
 
   /** SQ8 serving FROM an IVF index artifact: like
     * [[annServeFromIndex]] but stage 1 scores the probed cells with
@@ -3113,41 +3255,7 @@ object Similarity {
                            queries: DataFrame, nProbe: Int = 4, k: Int = 5,
                            shortlistFactor: Int = 8): DataFrame = {
     requireRawIndex(spark, dir)
-    val cents = readIvfCentroids(spark, dir)
-    val assigned = readIvfAssigned(spark, dir)
-      .select(col("cell"), col("vec_id").as("neighbor_id"),
-        col("embedding").as("e_c"), col("nrm").as("n_c"))
-    // the candidate scan reads the dequantized serving vector, built
-    // once per candidate — the 1-byte/dim read path at scale
-    val scan = assigned.select(col("cell"), col("neighbor_id"),
-      graft.functions.Sq8Dequant.dequant(col("e_c")).as("d"))
-      .withColumn("n_d", l2norm(col("d")))
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        l2norm(col("embedding")).as("n_q"),
-        explode(graft.functions.VectorQuantize
-          .nearestCells(col("embedding"), cents, nProbe)).as("cell"))
-    val short = scan
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineWithNorms(dot(col("e_q"), col("d")), col("n_q"), col("n_d"))
-          .as("score"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("score"), shortlistFactor * k).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("neighbor_id"))
-    rankTopK(
-      short
-        .join(assigned.select(col("neighbor_id"), col("e_c"), col("n_c")),
-          Seq("neighbor_id"))
-        .join(broadcast(probes.select("query_id", "e_q", "n_q").distinct()),
-          Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
-      k)
+    serveIndex(spark, dir, queries, nProbe, Sq8, TopK(k, shortlistFactor))
   }
 
   /** §2 #237 — IVF-SQ8 serving FROM THE ARTIFACT: build the standard
@@ -3159,16 +3267,10 @@ object Similarity {
     * ([[ivfSq8StaticOracle]]) and SimilaritySpec both pin. */
   def annIvfSq8Indexed(spark: SparkSession, sfDir: String,
                        nProbe: Int = 4, nQueries: Int = 10,
-                       k: Int = 5): DataFrame = {
-    val dir = ExportImport.scratch(
-      s"ivf-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexToDir(spark, sfDir, dir)
-    annServeSq8FromIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k)
-  }
+                       k: Int = 5): DataFrame =
+    servedFromScratch(spark, sfDir, "ivf-index", nQueries)(
+      ivfIndexToDir(spark, sfDir, _))(
+      annServeSq8FromIndex(spark, _, _, nProbe, k))
 
   /** Oracle for [[annIvfSq8Indexed]]: the [[ivfSq8TrainedOracle]]
     * replay over the STATIC quantizer the artifact build pins. */
@@ -3205,38 +3307,22 @@ object Similarity {
   /** Generic two-frame core: MMR-select from ANY (vec_id, embedding)
     * corpus for ANY (vec_id, embedding) query frame (norms recomputed
     * if absent; shared-id rows are excluded as self-matches, disjoint
-    * id spaces are simply unaffected). The facade entry point. */
+    * id spaces are simply unaffected). The facade entry point. Stage 1
+    * is the exact cosine shortlist of a flat scan (brute scan + bounded
+    * TopK). */
   def annMmrFrames(corpus: DataFrame, queryFrame: DataFrame, k: Int = 5,
                    shortlistFactor: Int = 8,
                    lambda: Double = 0.7): DataFrame = {
-    def withNrm(df: DataFrame) =
-      if (df.columns.contains("nrm")) df
-      else df.withColumn("nrm", l2norm(col("embedding")))
-    val queries = withNrm(queryFrame)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
-    val cEmb = withNrm(corpus).select(col("vec_id").as("cand_id"),
-      col("embedding").as("e_c"), col("nrm").as("n_c"))
-    // stage 1 — exact cosine shortlist (the brute scan + bounded TopK)
-    val short = cEmb
-      .join(broadcast(queries), col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-          .as("cosq"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("cand_id"), col("cosq"), shortlistFactor * k).as("top"))
-      .select(col("query_id"), explode(col("top")).as("e"))
-      .select(col("query_id"), col("e.neighbor_id").as("cand_id"),
-        col("e.cos").as("cosq"))
-    mmrRerank(short, cEmb, k, lambda)
+    val c = if (corpus.columns.contains("nrm")) corpus
+            else corpus.withColumn("nrm", l2norm(col("embedding")))
+    serveFrames(c, queryFrame, None, 0, Exact,
+      Mmr(k, shortlistFactor, lambda))
   }
 
-  /** MMR stages 2–3 over ANY (query_id, cand_id, cosq) shortlist and
-    * (cand_id, e_c, n_c) candidate-embedding source — shared by the
-    * brute form ([[annMmrFrames]]) and the artifact-served form
-    * ([[annMmrFromIndex]]), so the greedy selection arithmetic cannot
-    * drift between them.
+  /** MMR stages 2–3 over ANY (query_id, neighbor_id, cos) shortlist and
+    * (neighbor_id, e_c, n_c) candidate-embedding source — the last step
+    * of [[serve]] under [[Mmr]], so the greedy selection arithmetic is
+    * one body for the brute, artifact, sq8 and ADC forms.
     *
     * The shortlist is BOUNDED by construction (≤ nQueries ×
     * shortlistFactor·k rows — its producer is always a bounded TopK
@@ -3257,8 +3343,8 @@ object Similarity {
                         lambda: Double): DataFrame = {
     val spark = shortRaw.sparkSession
     val shortRows = shortRaw
-      .select(col("query_id").cast("long"), col("cand_id").cast("long"),
-        col("cosq").cast("double"))
+      .select(col("query_id").cast("long"), col("neighbor_id").cast("long"),
+        col("cos").cast("double"))
       .collect()
     require(shortRows.length <= 2000000,
       s"MMR shortlist collected ${shortRows.length} rows — the bounded " +
@@ -3276,14 +3362,14 @@ object Similarity {
     // against a local id frame: same rows, hash-lookup pruning.
     val candFetch =
       if (candIds.length <= 10000)
-        cEmb.filter(col("cand_id").isin(candIds.map(Long.box).toSeq: _*))
+        cEmb.filter(col("neighbor_id").isin(candIds.map(Long.box).toSeq: _*))
       else {
         import spark.implicits._
-        cEmb.join(broadcast(candIds.toSeq.toDF("cand_id")),
-          Seq("cand_id"), "left_semi")
+        cEmb.join(broadcast(candIds.toSeq.toDF("neighbor_id")),
+          Seq("neighbor_id"), "left_semi")
       }
     val embRows = candFetch
-      .select(col("cand_id").cast("long"), col("e_c"),
+      .select(col("neighbor_id").cast("long"), col("e_c"),
         col("n_c").cast("double"))
       .collect()
     val emb = new scala.collection.mutable.HashMap[Long, (Array[Double], Double)]
@@ -3297,7 +3383,7 @@ object Similarity {
     }
     def embOf(id: Long): (Array[Double], Double) = emb.getOrElse(id,
       throw new IllegalArgumentException(
-        s"MMR shortlist references cand_id=$id with no embedding row in " +
+        s"MMR shortlist references neighbor_id=$id with no embedding row in " +
           "the candidate source — shortlist and corpus frames disagree"))
     def cos(aId: Long, bId: Long): Double = {
       val (ea, na) = embOf(aId)
@@ -3361,27 +3447,8 @@ object Similarity {
                       nProbe: Int = 4, k: Int = 5, shortlistFactor: Int = 8,
                       lambda: Double = 0.7): DataFrame = {
     requireRawIndex(spark, dir)
-    val cents = readIvfCentroids(spark, dir)
-    val assigned = readIvfAssigned(spark, dir)
-      .select(col("cell"), col("vec_id").as("cand_id"),
-        col("embedding").as("e_c"), col("nrm").as("n_c"))
-    val probes = queryFrame
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        l2norm(col("embedding")).as("n_q"),
-        explode(graft.functions.VectorQuantize
-          .nearestCells(col("embedding"), cents, nProbe)).as("cell"))
-    val short = assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-          .as("cosq"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("cand_id"), col("cosq"), shortlistFactor * k).as("top"))
-      .select(col("query_id"), explode(col("top")).as("e"))
-      .select(col("query_id"), col("e.neighbor_id").as("cand_id"),
-        col("e.cos").as("cosq"))
-    mmrRerank(short, assigned.select("cand_id", "e_c", "n_c"), k, lambda)
+    serveIndex(spark, dir, queryFrame, nProbe, Exact,
+      Mmr(k, shortlistFactor, lambda))
   }
 
   /** MMR with its stage-1 shortlist from the SQ8 SCAN (VERDICT-r18
@@ -3401,44 +3468,8 @@ object Similarity {
                          lambda: Double = 0.7,
                          preFactor: Int = 2): DataFrame = {
     requireRawIndex(spark, dir)
-    val cents = readIvfCentroids(spark, dir)
-    val assigned = readIvfAssigned(spark, dir)
-      .select(col("cell"), col("vec_id").as("cand_id"),
-        col("embedding").as("e_c"), col("nrm").as("n_c"))
-    val scan = assigned.select(col("cell"), col("cand_id"),
-      graft.functions.Sq8Dequant.dequant(col("e_c")).as("d"))
-      .withColumn("n_d", l2norm(col("d")))
-    val probes = queryFrame
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        l2norm(col("embedding")).as("n_q"),
-        explode(graft.functions.VectorQuantize
-          .nearestCells(col("embedding"), cents, nProbe)).as("cell"))
-    val pre = scan.join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        cosineWithNorms(dot(col("e_q"), col("d")), col("n_q"), col("n_d"))
-          .as("score"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("cand_id"), col("score"),
-        preFactor * shortlistFactor * k).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("cand_id"))
-    val short = pre
-      .join(assigned.select(col("cand_id"), col("e_c"), col("n_c")),
-        Seq("cand_id"))
-      .join(broadcast(probes.select("query_id", "e_q", "n_q").distinct()),
-        Seq("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-          col("n_c")).as("cosq"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("cand_id"), col("cosq"), shortlistFactor * k).as("top"))
-      .select(col("query_id"), explode(col("top")).as("e"))
-      .select(col("query_id"), col("e.neighbor_id").as("cand_id"),
-        col("e.cos").as("cosq"))
-    mmrRerank(short, assigned.select("cand_id", "e_c", "n_c"), k, lambda)
+    serveIndex(spark, dir, queryFrame, nProbe, Sq8,
+      Mmr(k, shortlistFactor, lambda, preFactor))
   }
 
   /** §2 #250 — MMR OVER THE SQ8 SCAN, FROM THE ARTIFACT: the standard
@@ -3450,16 +3481,10 @@ object Similarity {
   def annMmrSq8Indexed(spark: SparkSession, sfDir: String,
                        nProbe: Int = 4, nQueries: Int = 10, k: Int = 5,
                        shortlistFactor: Int = 8, lambda: Double = 0.7,
-                       preFactor: Int = 2): DataFrame = {
-    val dir = ExportImport.scratch(
-      s"ivf-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexToDir(spark, sfDir, dir)
-    annMmrSq8FromIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k, shortlistFactor, lambda, preFactor)
-  }
+                       preFactor: Int = 2): DataFrame =
+    servedFromScratch(spark, sfDir, "ivf-index", nQueries)(
+      ivfIndexToDir(spark, sfDir, _))(annMmrSq8FromIndex(spark, _, _,
+        nProbe, k, shortlistFactor, lambda, preFactor))
 
   /** DuckDB replay for [[annMmrSq8Indexed]]: [[mmrOracleOver]]'s
     * greedy rounds fed by the sq8 two-stage shortlist — static-IVF
@@ -3602,16 +3627,10 @@ object Similarity {
   def annMmrIndexed(spark: SparkSession, sfDir: String, nProbe: Int = 4,
                     nQueries: Int = 10, k: Int = 5,
                     shortlistFactor: Int = 8,
-                    lambda: Double = 0.7): DataFrame = {
-    val dir = ExportImport.scratch(
-      s"ivf-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexToDir(spark, sfDir, dir)
-    annMmrFromIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k, shortlistFactor, lambda)
-  }
+                    lambda: Double = 0.7): DataFrame =
+    servedFromScratch(spark, sfDir, "ivf-index", nQueries)(
+      ivfIndexToDir(spark, sfDir, _))(annMmrFromIndex(spark, _, _, nProbe,
+        k, shortlistFactor, lambda))
 
   /** DuckDB replay for [[annMmr]] — static SQL with the k greedy
     * rounds UNROLLED (sel1..selK + cumulative selected sets): the same
@@ -3916,8 +3935,8 @@ object Similarity {
     * neighborhood). Eval split = `vec_id % 10 == 0` (the held-out
     * tenth), corpus = the rest.
     *
-    * Geometry is [[ivfServe]]'s, sides chosen by size: the SMALL eval
-    * set probes its `nProbe` nearest cells and broadcasts; the corpus
+    * Geometry is [[serve]]'s IVF probe, sides chosen by size: the SMALL
+    * eval set probes its `nProbe` nearest cells and broadcasts; the corpus
     * streams through ONE cell equi-join on its single-cell assignment
     * — at 100 TB the corpus never shuffles more than (cell, id) and
     * its vectors are touched map-only, while missing a match requires
@@ -4537,84 +4556,8 @@ object Similarity {
   def annPq(spark: SparkSession, sfDir: String,
             nQueries: Int = 10, k: Int = 5): DataFrame = {
     val v = vectors(spark, sfDir)
-    annPqWith(v, withTrainCache(v)(trainPqCodebooks(_)), nQueries, k)
-  }
-
-  /** Stage-1 ADC scoring of every candidate against the broadcast
-    * query set over the codes table — shared by [[annPqWith]] and the
-    * shortlist sweep (which ranks it ONCE at the largest factor and
-    * reads smaller factors as prefixes). */
-  private def pqAdcScored(v: DataFrame, cbs: Array[Array[Array[Double]]],
-                          nQueries: Int): DataFrame = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val codeCols = (0 until nSub).map { m =>
-      element_at(graft.functions.VectorQuantize.nearestCellsBiased(
-        expr(s"slice(embedding, ${m * sub + 1}, $sub)"), cbs(m),
-        l2Biases(cbs(m)), 1), 1)
-        .as(s"c$m")
-    }
-    val coded = v.select(col("vec_id").as("neighbor_id") +: codeCols: _*)
-    // ADC: fixed left-to-right sub-space sum — the oracle adds in the
-    // same order, so the double is bit-identical
-    val score = (0 until nSub).map { m =>
-      graft.functions.VectorFunctions.dot(
-        expr(s"slice(e_q, ${m * sub + 1}, $sub)"),
-        element_at(typedLit(cbs(m).map(_.toSeq).toSeq), col(s"c$m") + 1))
-    }.reduceLeft(_ + _)
-    coded
-      .join(broadcast(v.filter(col("vec_id") < nQueries)
-          .select(col("vec_id").as("query_id"),
-            col("embedding").as("e_q"))),
-        col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), score.as("score"))
-  }
-
-  private def annPqWith(v: DataFrame, cbs: Array[Array[Array[Double]]],
-                        nQueries: Int, k: Int,
-                        shortlistFactor: Int = 8): DataFrame =
-    // stage 1 — ADC shortlist over the CODES table (compressed scan);
-    // stage 2 — exact re-rank of the gathered shortlist
-    pqExactRerank(
-      pqShortlistOf(pqAdcScored(v, cbs, nQueries), shortlistFactor * k),
-      v, nQueries, k)
-
-  /** Bounded top-`shortlist` per query over an ADC-scored pair frame —
-    * stage 1's ranking, shared by the raw and OPQ pipelines. */
-  private def pqShortlistOf(scored: DataFrame, shortlist: Int): DataFrame =
-    scored
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("score"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("neighbor_id"))
-
-  /** Stage 2 — EXACT re-rank: gather only the shortlisted vectors by
-    * id (an equi-join, R×Q rows) from `v` and rank by true cosine in
-    * `v`'s space. Shared by the raw and OPQ pipelines (the OPQ
-    * shortlist is ranked in rotated space, the re-rank here stays in
-    * the ORIGINAL space — rotation preserves cosine, and ranking on
-    * the raw embeddings keeps the output directly comparable). */
-  private def pqExactRerank(short: DataFrame, v: DataFrame,
-                            nQueries: Int, k: Int): DataFrame = {
-    val queries = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
-    short
-      .join(v.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("e_c"), col("nrm").as("n_c")), Seq("neighbor_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-          .as("cos"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("cos"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e.neighbor_id").as("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rnk"),
-        round(col("e.cos"), 6).as("cos6"))
-      .orderBy("query_id", "rnk")
+    serveFirst(v, nQueries, None, 0, Pq(withTrainCache(v)(trainPqCodebooks(_))),
+      TopK(k))
   }
 
   /** §2 #234 — SQ8 ANN (scalar-quantized flat scan, the FAISS
@@ -4622,7 +4565,7 @@ object Similarity {
     * `cos(q, dequant_i8(x))` — the asymmetric distance over
     * [[graft.functions.Sq8Dequant]]'s int8 storage leg that #120 (embedding_quantize)
     * writes and #121 (quantize_eval) prices — and stage 2 exact-reranks
-    * the bounded shortlist ([[pqExactRerank]], shared with the PQ
+    * the bounded shortlist (the [[serve]] core shared with the PQ
     * family). The compression rung BETWEEN raw floats and PQ: 4× smaller
     * scan than float32 (1 byte/dim + one scale per vector) with far less
     * distortion than 8×4-bit PQ, no training, no codebook lifecycle —
@@ -4639,28 +4582,8 @@ object Similarity {
   def annSq8(spark: SparkSession, sfDir: String,
              nQueries: Int = 10, k: Int = 5,
              shortlistFactor: Int = 8): DataFrame = {
-    val v = vectors(spark, sfDir)
-    annSq8With(v, nQueries, k, shortlistFactor)
-  }
-
-  private[graft] def annSq8With(v: DataFrame, nQueries: Int, k: Int,
-                                shortlistFactor: Int = 8): DataFrame = {
-    // dequantize ONCE PER CANDIDATE (map-only), then the broadcast-
-    // query scan scores with the codegen'd dot — re-quantizing inside
-    // the pair join would multiply the quantization work by nQueries
-    val dq = v.select(col("vec_id").as("neighbor_id"),
-        graft.functions.Sq8Dequant.dequant(col("embedding")).as("d"))
-      .withColumn("n_d", l2norm(col("d")))
-    val scored = dq
-      .join(broadcast(v.filter(col("vec_id") < nQueries)
-          .select(col("vec_id").as("query_id"),
-            col("embedding").as("e_q"), col("nrm").as("n_q"))),
-        col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineWithNorms(dot(col("e_q"), col("d")), col("n_q"), col("n_d"))
-          .as("score"))
-    pqExactRerank(pqShortlistOf(scored, shortlistFactor * k),
-      v, nQueries, k)
+    serveFirst(vectors(spark, sfDir), nQueries, None, 0, Sq8,
+      TopK(k, shortlistFactor))
   }
 
   /** DuckDB replay for [[annSq8]] — static SQL: per-element max-abs
@@ -4719,51 +4642,8 @@ object Similarity {
   def annIvfSq8(spark: SparkSession, sfDir: String, nCells: Int = 16,
                 nProbe: Int = 4, nQueries: Int = 10, k: Int = 5): DataFrame = {
     val v = vectors(spark, sfDir)
-    annIvfSq8With(v, withTrainCache(v)(trainCentroids(_, nCells)),
-      nProbe, nQueries, k)
-  }
-
-  private[graft] def annIvfSq8With(v: DataFrame,
-                                   cents: Array[Array[Double]],
-                                   nProbe: Int, nQueries: Int, k: Int,
-                                   shortlistFactor: Int = 8): DataFrame = {
-    val shortlist = shortlistFactor * k
-    def cellsOf(n: Int) =
-      graft.functions.VectorQuantize.nearestCells(col("embedding"), cents, n)
-    // one map-only pass: coarse cell + the dequantized serving vector
-    val cand = v.select(element_at(cellsOf(1), 1).as("cell"),
-      col("vec_id").as("neighbor_id"),
-      graft.functions.Sq8Dequant.dequant(col("embedding")).as("d"))
-      .withColumn("n_d", l2norm(col("d")))
-    val queries = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
-    val probes = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"), explode(cellsOf(nProbe)).as("cell"))
-    // stage 1 — sq8 shortlist over the PROBED CELLS only
-    val short = cand
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineWithNorms(dot(col("e_q"), col("d")), col("n_q"), col("n_d"))
-          .as("score"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("score"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("neighbor_id"))
-    // stage 2 — exact re-rank of the shortlist by true cosine
-    rankTopK(
-      short
-        .join(v.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("e_c"), col("nrm").as("n_c")),
-          Seq("neighbor_id"))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
-      k)
+    serveFirst(v, nQueries, Some(withTrainCache(v)(trainCentroids(_, nCells))),
+      nProbe, Sq8, TopK(k))
   }
 
   /** DuckDB replay for [[annIvfSq8]]: trained centroids inlined (the
@@ -4853,122 +4733,7 @@ object Similarity {
     val (cents, cbs) =
       withTrainCache(v)(vc => (trainCentroids(vc, nCells),
         trainPqCodebooks(vc)))
-    annIvfPqWith(v, cents, cbs, nProbe, nQueries, k)
-  }
-
-  private def annIvfPqWith(v: DataFrame, cents: Array[Array[Double]],
-                           cbs: Array[Array[Array[Double]]],
-                           nProbe: Int, nQueries: Int, k: Int,
-                           shortlistFactor: Int = 8): DataFrame = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val shortlist = shortlistFactor * k
-    def cellsOf(n: Int) =
-      graft.functions.VectorQuantize.nearestCells(col("embedding"), cents, n)
-    val codeCols = (0 until nSub).map { m =>
-      element_at(graft.functions.VectorQuantize.nearestCellsBiased(
-        expr(s"slice(embedding, ${m * sub + 1}, $sub)"), cbs(m),
-        l2Biases(cbs(m)), 1), 1)
-        .as(s"c$m")
-    }
-    // one map-only pass builds the whole index row: coarse cell + codes
-    val coded = v.select(element_at(cellsOf(1), 1).as("cell") +:
-      col("vec_id").as("neighbor_id") +: codeCols: _*)
-    val queries = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
-    val probes = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        explode(cellsOf(nProbe)).as("cell"))
-    val score = (0 until nSub).map { m =>
-      graft.functions.VectorFunctions.dot(
-        expr(s"slice(e_q, ${m * sub + 1}, $sub)"),
-        element_at(typedLit(cbs(m).map(_.toSeq).toSeq), col(s"c$m") + 1))
-    }.reduceLeft(_ + _)
-    // stage 1 — ADC shortlist over the codes of PROBED CELLS only
-    val short = coded
-      .join(broadcast(probes.select("cell", "query_id", "e_q")), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), score.as("score"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("score"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("neighbor_id"))
-    // stage 2 — exact re-rank of the shortlist by true cosine
-    rankTopK(
-      short
-        .join(v.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("e_c"), col("nrm").as("n_c")),
-          Seq("neighbor_id"))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
-      k)
-  }
-
-  /** Inline IVF×OPQ serving: [[annIvfPqWith]] with the PQ stage in
-    * ROTATED space — codes quantize R·x per probed cell, the ADC dots
-    * read the rotated query's slices, the exact re-rank stays in the
-    * original space. The arithmetic twin of what
-    * [[annServeFromPqIndex]] computes off an OPQ-marked artifact
-    * (SimilaritySpec pins the equality), and the composition
-    * [[annRecallEvalPq]]'s `ann_ivfpq_opq` row prices. */
-  private[graft] def annIvfPqOpqWith(v: DataFrame,
-                              cents: Array[Array[Double]],
-                              r: Array[Array[Double]],
-                              cbs: Array[Array[Array[Double]]],
-                              nProbe: Int, nQueries: Int, k: Int,
-                              shortlistFactor: Int = 8): DataFrame = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val shortlist = shortlistFactor * k
-    def cellsOf(n: Int) =
-      graft.functions.VectorQuantize.nearestCells(col("embedding"), cents, n)
-    val codeCols = (0 until nSub).map { m =>
-      element_at(graft.functions.VectorQuantize.nearestCellsBiased(
-        expr(s"slice(re, ${m * sub + 1}, $sub)"), cbs(m),
-        l2Biases(cbs(m)), 1), 1)
-        .as(s"c$m")
-    }
-    // one map-only pass: coarse cell (original space) + rotated codes
-    val coded = v
-      .select(element_at(cellsOf(1), 1).as("cell"),
-        col("vec_id").as("neighbor_id"),
-        rotCol(r, col("embedding")).as("re"))
-      .select(col("cell") +: col("neighbor_id") +: codeCols: _*)
-    val queries = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
-    val probes = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"),
-        rotCol(r, col("embedding")).as("e_s"),
-        explode(cellsOf(nProbe)).as("cell"))
-    val score = (0 until nSub).map { m =>
-      graft.functions.VectorFunctions.dot(
-        expr(s"slice(e_s, ${m * sub + 1}, $sub)"),
-        element_at(typedLit(cbs(m).map(_.toSeq).toSeq), col(s"c$m") + 1))
-    }.reduceLeft(_ + _)
-    val short = coded
-      .join(broadcast(probes.select("cell", "query_id", "e_s")), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), score.as("score"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("score"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("neighbor_id"))
-    rankTopK(
-      short
-        .join(v.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("e_c"), col("nrm").as("n_c")),
-          Seq("neighbor_id"))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
-      k)
+    serveFirst(v, nQueries, Some(cents), nProbe, Pq(cbs), TopK(k))
   }
 
   /** §2 #241 — OPQ IVFADC serving FROM THE ARTIFACT: the
@@ -4979,27 +4744,15 @@ object Similarity {
     * in the codebook unit). The `_rotation` marker beside the
     * codebooks tells serving to rotate the query before the ADC dots,
     * and the same marker steers re-sync, `pq_drift`, and retrain.
-    * Identical to the inline [[annIvfPqOpqWith]] under the same models
+    * Identical to inline IVF-OPQ serving under the same models
     * (SimilaritySpec pins it; shared [[ivfPqOpqTrainedOracle]]). */
   def annIvfPqOpqIndexed(spark: SparkSession, sfDir: String,
                          nProbe: Int = 4, nQueries: Int = 10,
-                         k: Int = 5): DataFrame = {
-    val v = vectors(spark, sfDir)
-    val (cents, rO, cbsO) = withTrainCache(v) { vc =>
-      val c = trainCentroids(vc, 16)
-      val (r, cb) = trainOpqRotation(vc)
-      (c, r, cb)
-    }
-    val dir = ExportImport.scratch(
-      s"ivfpq-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexBuild(spark, v.select("vec_id", "embedding"), dir, cents)
-    ivfPqIndexAdd(spark, dir, Some(cbsO), rotation = Some(rO))
-    annServeFromPqIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k)
-  }
+                         k: Int = 5): DataFrame =
+    pqServedFromScratch(spark, sfDir, nQueries)((vc, _) =>
+      trainOpqRotation(vc))((dir, opq) =>
+      ivfPqIndexAdd(spark, dir, Some(opq._2), rotation = Some(opq._1)))(
+      annServeFromPqIndex(spark, _, _, nProbe, k))
 
   /** (vec_id, cell, res) for every corpus vector: its coarse cell and
     * the DOUBLE-precision residual `e − c(e)` — the quantity a residual
@@ -5010,15 +4763,16 @@ object Similarity {
     * runs once per corpus ROW on map-only passes (train/encode), never
     * on the per-pair ADC hot path. */
   private def residualAssigned(v: DataFrame,
-                               cents: Array[Array[Double]]): DataFrame = {
-    val centArr = typedLit(cents.map(_.toSeq).toSeq)
+                               cents: Array[Array[Double]]): DataFrame =
     v.select(col("vec_id"), col("embedding"),
         element_at(graft.functions.VectorQuantize.nearestCells(
           col("embedding"), cents, 1), 1).as("cell"))
-      .withColumn("res",
-        zip_with(col("embedding"), element_at(centArr, col("cell") + 1),
-          (x, c) => x.cast("double") - c))
-  }
+      .withColumn("res", residualOf(cents, col("embedding")))
+
+  /** `e − cents(cell)` per element, in double (reads the `cell` column). */
+  private def residualOf(cents: Array[Array[Double]], e: Column): Column =
+    zip_with(e, element_at(typedLit(cents.map(_.toSeq).toSeq), col("cell") + 1),
+      (x, c) => x.cast("double") - c)
 
   /** §2 #227 — IVFADC with RESIDUAL encoding (Jégou et al. 2011 §IV-A —
     * the composition the paper actually recommends): PQ codes quantize
@@ -5052,66 +4806,8 @@ object Similarity {
         residualAssigned(vc, cents).select(col("vec_id"),
           col("res").as("embedding"))))
     }
-    annIvfPqResidualWith(v, cents, cbs, nProbe, nQueries, k)
-  }
-
-  private[graft] def annIvfPqResidualWith(v: DataFrame,
-                                          cents: Array[Array[Double]],
-                                          cbs: Array[Array[Array[Double]]],
-                                          nProbe: Int, nQueries: Int, k: Int,
-                                          shortlistFactor: Int = 8)
-      : DataFrame = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val shortlist = shortlistFactor * k
-    val centArr = typedLit(cents.map(_.toSeq).toSeq)
-    val codeCols = (0 until nSub).map { m =>
-      element_at(graft.functions.VectorQuantize.nearestCellsBiased(
-        expr(s"slice(res, ${m * sub + 1}, $sub)"), cbs(m),
-        l2Biases(cbs(m)), 1), 1)
-        .as(s"c$m")
-    }
-    // one map-only pass: coarse cell + double residual + residual codes
-    val coded = residualAssigned(v, cents)
-      .select(col("cell") +: col("vec_id").as("neighbor_id") +: codeCols: _*)
-    val queries = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
-    val probes = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        explode(graft.functions.VectorQuantize.nearestCells(
-          col("embedding"), cents, nProbe)).as("cell"))
-    // ADC = dot(q, cell centroid) + per-sub-space codeword dots, summed
-    // LEFT TO RIGHT starting at the centroid term — the oracle adds in
-    // the same order, so the double is bit-identical
-    val centDot = graft.functions.VectorFunctions.dot(
-      col("e_q"), element_at(centArr, col("cell") + 1))
-    val score = (centDot +: (0 until nSub).map { m =>
-      graft.functions.VectorFunctions.dot(
-        expr(s"slice(e_q, ${m * sub + 1}, $sub)"),
-        element_at(typedLit(cbs(m).map(_.toSeq).toSeq), col(s"c$m") + 1))
-    }).reduceLeft(_ + _)
-    // stage 1 — ADC shortlist over the residual codes of PROBED CELLS
-    val short = coded
-      .join(broadcast(probes.select("cell", "query_id", "e_q")), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), score.as("score"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("score"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("neighbor_id"))
-    // stage 2 — exact re-rank of the shortlist by true cosine
-    rankTopK(
-      short
-        .join(v.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("e_c"), col("nrm").as("n_c")),
-          Seq("neighbor_id"))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
-      k)
+    serveFirst(v, nQueries, Some(cents), nProbe, Pq(cbs, Some(cents)),
+      TopK(k))
   }
 
   /** Oracle for [[annIvfPqResidual]]: both trained models inlined (the
@@ -5230,10 +4926,11 @@ object Similarity {
     * `assigned/` stays the ground truth (exact re-rank gathers from
     * it); `codes/` is the acceleration structure, version-consistent
     * by construction and by marker:
-    *  - codes cover the BASE only — live `stream/batch_id=N` deltas
-    *    serve through the exact fresh path ([[annServeFromPqIndex]]),
-    *    the sealed-segments-compressed / fresh-buffer-exact split of
-    *    every production ANN engine;
+    *  - codes cover `assigned/` — this encode covers the rows present
+    *    now and [[ivfIndexAppend]] encodes every later batch it adds;
+    *    live `stream/batch_id=N` deltas serve through the exact fresh
+    *    path ([[annServeFromPqIndex]]), the sealed-segments-compressed
+    *    / fresh-buffer-exact split of every production ANN engine;
     *  - a `_synced_to` marker inside `codes/` records the base
     *    compaction watermark the encode saw; after [[ivfIndexCompact]]
     *    folds deltas into the base the markers disagree and serving
@@ -5355,17 +5052,6 @@ object Similarity {
     // residual mode subtracts the artifact's own centroid per the
     // STORED cell assignment — the exact quantity serving adds back
     lazy val cents = readIvfCentroids(spark, dir)
-    def residualFrameOf(df: DataFrame): DataFrame = {
-      val centArr = typedLit(cents.map(_.toSeq).toSeq)
-      df.select(col("cell"), col("vec_id"),
-        zip_with(col("embedding"), element_at(centArr, col("cell") + 1),
-          (x, c) => x.cast("double") - c).as("embedding"))
-    }
-    // the rotation applies AFTER the residual/raw choice (OPQ rotates
-    // the encoding-space vector, whichever space that is)
-    def encBase(df: DataFrame): DataFrame =
-      if (mode) residualFrameOf(df)
-      else df.select(col("cell"), col("vec_id"), col("embedding"))
     // resolve (rotation, codebooks) TOGETHER — OPQ codebooks only make
     // sense in their rotation's space, so the pair travels as a unit
     val (rot, cbs): (Option[Array[Array[Double]]],
@@ -5375,7 +5061,11 @@ object Similarity {
         (if (rotMode) Some(readPqRotation(spark, dir)) else None,
           readPqCodebooks(spark, dir))
       else {
-        val vecs = encBase(base)
+        // the trainers see the residual/raw space; OPQ learns its
+        // rotation on top of it
+        val vecs = base.select(col("cell"), col("vec_id"),
+            (if (mode) residualOf(cents, col("embedding"))
+             else col("embedding")).as("embedding"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // sub-space width stays 8; the COUNT of sub-spaces follows the
         // artifact's actual embedding dim, so the leg works on any
@@ -5392,24 +5082,9 @@ object Similarity {
         }
         finally { vecs.unpersist(blocking = false); () }
       }
-    def encodeSpace(df: DataFrame): DataFrame = {
-      val e = encBase(df)
-      rot.map(r => e.select(col("cell"), col("vec_id"),
-        rotCol(r, col("embedding")).as("embedding"))).getOrElse(e)
-    }
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val codeCols = (0 until nSub).map { m =>
-      element_at(graft.functions.VectorQuantize.nearestCellsBiased(
-        expr(s"slice(enc, ${m * sub + 1}, $sub)"), cbs(m),
-        l2Biases(cbs(m)), 1), 1)
-        .as(s"c$m")
-    }
-    // residual codes read from the residual frame under the SAME
-    // column name the raw path reads, so one codeCols expression
-    // serves both encodings
-    encodeSpace(base).withColumnRenamed("embedding", "enc")
-      .select(col("cell") +: col("vec_id") +: codeCols: _*)
+    val codec = Pq(cbs, if (mode) Some(cents) else None, rot)
+    val rows = base.select(col("cell"), col("vec_id"), col("embedding"))
+    codec.encode(rows)
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/codes")
     // the codebook UNIT (codebooks + baseline + mode marker) is
@@ -5443,7 +5118,8 @@ object Similarity {
       // in ROTATED space — that is the reconstruction its ADC reads) —
       // inside the unit, before the markers, so a stale baseline can
       // never pair with fresh codebooks
-      pqDistortionStats(encodeSpace(base), cbs, "base")
+      pqDistortionStats(rows.select(col("cell"), col("vec_id"),
+          codec.space(col("embedding")).as("embedding")), cbs, "base")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_baseline")
       // markers land LAST, `_residual` very last: readResidualMode's
       // completeness doctrine keys on it, so a crash anywhere inside
@@ -5576,37 +5252,38 @@ object Similarity {
   def annServeFromPqIndex(spark: SparkSession, dir: String,
                           queries: DataFrame, nProbe: Int = 4, k: Int = 5,
                           shortlistFactor: Int = 0): DataFrame = {
-    val (cand, q, all) = pqAdcCandidates(spark, dir, queries, nProbe, k,
-      shortlistFactor)
-    rankTopK(
-      cand
-        .join(all.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("e_c"), col("nrm").as("n_c")),
-          Seq("neighbor_id"))
-        .join(broadcast(q), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-            col("n_c")).as("cos")),
-      k)
-  }
-
-  /** The PQ leg's CANDIDATE machinery, shared by the top-k serve
-    * ([[annServeFromPqIndex]]) and the MMR-over-ADC form
-    * ([[annMmrPqFromIndex]]): every staleness/mode/rotation guard, the
-    * ADC scan of the probed `codes/` cells cut to a bounded TopK, and
-    * live deltas routed straight to the exact stage (fresh-buffer
-    * semantics). Returns (candidates (query_id, neighbor_id),
-    * q (query_id, e_q, n_q), assigned-with-deltas) — the exact stage
-    * differs per caller (rank-k vs rescore-then-greedy), the bill that
-    * touches the corpus does not. */
-  private def pqAdcCandidates(spark: SparkSession, dir: String,
-                              queries: DataFrame, nProbe: Int, k: Int,
-                              shortlistFactor: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    requireRawIndex(spark, dir)
     require(shortlistFactor >= 0,
       s"shortlistFactor must be positive (or 0 = mode-aware default): " +
         s"$shortlistFactor")
+    // mode-aware default: residual ADC holds raw-f=8 recall at f=4
+    // (pqShortlistSweepResidual), so the residual leg's default
+    // gathers half the candidates for the same answer quality
+    servePqLeg(spark, dir, queries, nProbe)(pq => TopK(k,
+      if (shortlistFactor > 0) shortlistFactor
+      else if (pq.residualCentroids.isDefined) 4 else 8))
+  }
+
+  /** The stored PQ codebook unit as a codec: codebooks, the residual
+    * mode (a torn unit refuses here) and the OPQ rotation member. */
+  private def storedPqCodec(spark: SparkSession, dir: String,
+                            cents: Array[Array[Double]]): Pq = {
+    val cbs = readPqCodebooks(spark, dir)
+    val residual = readResidualMode(spark, dir)
+    Pq(cbs, if (residual) Some(cents) else None,
+      if (readPqRotationMode(spark, dir)) Some(readPqRotation(spark, dir))
+      else None)
+  }
+
+  /** The PQ leg's serving, shared by the top-k serve
+    * ([[annServeFromPqIndex]]) and the MMR-over-ADC form
+    * ([[annMmrPqFromIndex]]): every staleness/mode/rotation guard, then
+    * [[serve]] over the `codes/` cells with live deltas as the fresh
+    * rows (codes never cover `stream/`, so the two legs are disjoint)
+    * and the exact gather from `assigned/` ∪ deltas. */
+  private def servePqLeg(spark: SparkSession, dir: String,
+                         queries: DataFrame, nProbe: Int)
+                        (rank: Pq => Rank): DataFrame = {
+    requireRawIndex(spark, dir)
     import graft.streaming.StreamIO
     val conf = spark.sparkContext.hadoopConfiguration
     val (fs, codesPath) = StreamIO.fsFor(s"$dir/codes", conf)
@@ -5628,65 +5305,13 @@ object Similarity {
         "miss vectors compaction folded into the base. Re-run " +
         "ivfPqIndexAdd (map-only re-encode with the stored codebooks).")
     val cents = readIvfCentroids(spark, dir)
-    val cbs = readPqCodebooks(spark, dir)
-    // encoding mode travels with the codebooks: a residual leg's ADC
-    // adds the per-(query, probed-cell) centroid dot back (recon =
-    // c + codewords); a torn codebook unit refuses here
-    val residualMode = readResidualMode(spark, dir)
-    // so does the rotation (OPQ) member: ADC must score in the space
-    // the codes were trained in, so the query is rotated ONCE per
-    // query (broadcast model state) and the sub-space dots read the
-    // rotated slices — dot(R·q, cw) = dot(q, Rᵀ·cw), the exact term
-    // the rotated reconstruction contributes. The exact re-rank stays
-    // in the ORIGINAL space (rotation preserves cosine).
-    val rot: Option[Array[Array[Double]]] =
-      if (readPqRotationMode(spark, dir)) Some(readPqRotation(spark, dir))
-      else None
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    // mode-aware default: residual ADC holds raw-f=8 recall at f=4
-    // (pqShortlistSweepResidual), so the residual leg's default
-    // gathers half the candidates for the same answer quality
-    val shortlist = (if (shortlistFactor > 0) shortlistFactor
-                     else if (residualMode) 4 else 8) * k
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("e_q"), l2norm(col("embedding")).as("n_q"))
-    val probes = q
-      .withColumn("e_s",
-        rot.map(r => rotCol(r, col("e_q"))).getOrElse(col("e_q")))
-      .select(col("query_id"), col("e_q"), col("e_s"),
-        explode(graft.functions.VectorQuantize.nearestCells(
-          col("e_q"), cents, nProbe)).as("cell"))
-    val subDots = (0 until nSub).map { m =>
-      graft.functions.VectorFunctions.dot(
-        expr(s"slice(e_s, ${m * sub + 1}, $sub)"),
-        element_at(typedLit(cbs(m).map(_.toSeq).toSeq), col(s"c$m") + 1))
-    }
-    val score =
-      (if (residualMode)
-         graft.functions.VectorFunctions.dot(col("e_q"),
-           element_at(typedLit(cents.map(_.toSeq).toSeq),
-             col("cell") + 1)) +: subDots
-       else subDots).reduceLeft(_ + _)
-    val short = spark.read.parquet(s"$dir/codes")
-      .withColumnRenamed("vec_id", "neighbor_id")
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), score.as("score"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("score"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("neighbor_id"))
-    // fresh path: live deltas in probed cells go straight to the exact
-    // stage (codes cover the base only, so the two legs are disjoint)
+    val codec = storedPqCodec(spark, dir, cents)
     val all = readIvfAssignedWithBatchId(spark, dir)
-    val fresh = all.filter(col("batch_id").isNotNull)
-      .select(col("cell"), col("vec_id").as("neighbor_id"))
-      .join(broadcast(probes.select("cell", "query_id")), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id")
-    (short.unionByName(fresh), q, all)
+    serve(spark.read.parquet(s"$dir/codes")
+        .withColumnRenamed("vec_id", "neighbor_id"),
+      fullRows(all), queryRows(queries), Some(cents), nProbe, codec,
+      rank(codec), Some(all.filter(col("batch_id").isNotNull)
+        .select(col("cell"), col("vec_id").as("neighbor_id"))))
   }
 
   /** MMR with its stage-1 shortlist from the ADC SCAN of the PQ leg
@@ -5712,24 +5337,29 @@ object Similarity {
     require(shortlistFactor > 0 && preFactor > 0,
       s"MMR needs explicit positive factors: f=$shortlistFactor, " +
         s"pre=$preFactor")
-    val (cand, q, all) = pqAdcCandidates(spark, dir, queryFrame, nProbe,
-      k, preFactor * shortlistFactor)
-    val cEmb = all.select(col("vec_id").as("cand_id"),
-      col("embedding").as("e_c"), col("nrm").as("n_c"))
-    val short = cand
-      .select(col("query_id"), col("neighbor_id").as("cand_id"))
-      .join(cEmb, Seq("cand_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-          col("n_c")).as("cosq"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("cand_id"), col("cosq"), shortlistFactor * k).as("top"))
-      .select(col("query_id"), explode(col("top")).as("e"))
-      .select(col("query_id"), col("e.neighbor_id").as("cand_id"),
-        col("e.cos").as("cosq"))
-    mmrRerank(short, cEmb, k, lambda)
+    servePqLeg(spark, dir, queryFrame, nProbe)(_ =>
+      Mmr(k, shortlistFactor, lambda, preFactor))
+  }
+
+  /** Train the coarse quantizer plus a PQ model once on the fixture,
+    * build the IVF artifact + its PQ leg in a scratch dir
+    * (`ivfPqIndexAdd(codebooks, …)` as `addPq` states it), and serve
+    * the standard query set — the shared body of the §2
+    * `ann_*pq*_indexed` queries. */
+  private def pqServedFromScratch[M](spark: SparkSession, sfDir: String,
+                                     nQueries: Int)
+      (train: (DataFrame, Array[Array[Double]]) => M)
+      (addPq: (String, M) => Unit)
+      (serveFrom: (String, DataFrame) => DataFrame): DataFrame = {
+    val v = vectors(spark, sfDir)
+    val (cents, model) = withTrainCache(v) { vc =>
+      val c = trainCentroids(vc, 16)
+      (c, train(vc, c))
+    }
+    servedFromScratch(spark, sfDir, "ivfpq-index", nQueries) { dir =>
+      ivfIndexBuild(spark, v.select("vec_id", "embedding"), dir, cents)
+      addPq(dir, model)
+    }(serveFrom)
   }
 
   /** §2 #254 — MMR OVER THE ADC SCAN, FROM THE ARTIFACT: train both
@@ -5742,21 +5372,12 @@ object Similarity {
   def annMmrPqIndexed(spark: SparkSession, sfDir: String,
                       nProbe: Int = 4, nQueries: Int = 10, k: Int = 5,
                       shortlistFactor: Int = 8, lambda: Double = 0.7,
-                      preFactor: Int = 2): DataFrame = {
-    val v = vectors(spark, sfDir)
-    val (cents, cbs) =
-      withTrainCache(v)(vc => (trainCentroids(vc, 16),
-        trainPqCodebooks(vc)))
-    val dir = ExportImport.scratch(
-      s"ivfpq-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexBuild(spark, v.select("vec_id", "embedding"), dir, cents)
-    ivfPqIndexAdd(spark, dir, Some(cbs))
-    annMmrPqFromIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k, shortlistFactor, lambda, preFactor)
-  }
+                      preFactor: Int = 2): DataFrame =
+    pqServedFromScratch(spark, sfDir, nQueries)((vc, _) =>
+      trainPqCodebooks(vc))(
+      (dir, cbs) => ivfPqIndexAdd(spark, dir, Some(cbs)))(
+      annMmrPqFromIndex(spark, _, _, nProbe, k, shortlistFactor, lambda,
+        preFactor))
 
   /** §2 #222 — IVFADC serving FROM THE ARTIFACT: train both models
     * once (the [[annIvfPq]] doctrine), build the IVF artifact + its PQ
@@ -5766,23 +5387,10 @@ object Similarity {
     * [[ivfPqTrainedOracle]] and SimilaritySpec both pin (the
     * [[annIvfIndexed]] pattern, one level up the compression stack). */
   def annIvfPqIndexed(spark: SparkSession, sfDir: String, nProbe: Int = 4,
-                      nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val v = vectors(spark, sfDir)
-    val (cents, cbs) =
-      withTrainCache(v)(vc => (trainCentroids(vc, 16),
-        trainPqCodebooks(vc)))
-    // per-run UUID subdir: concurrent runs must not overwrite each
-    // other's artifact mid-read (the annIvfIndexed stance)
-    val dir = ExportImport.scratch(
-      s"ivfpq-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexBuild(spark, v.select("vec_id", "embedding"), dir, cents)
-    ivfPqIndexAdd(spark, dir, Some(cbs))
-    annServeFromPqIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k)
-  }
+                      nQueries: Int = 10, k: Int = 5): DataFrame =
+    pqServedFromScratch(spark, sfDir, nQueries)((vc, _) =>
+      trainPqCodebooks(vc))((dir, cbs) => ivfPqIndexAdd(spark, dir, Some(cbs)))(
+      annServeFromPqIndex(spark, _, _, nProbe, k))
 
   /** §2 #228 — RESIDUAL IVFADC serving FROM THE ARTIFACT: the
     * [[annIvfPqIndexed]] lifecycle with a residual-encoded PQ leg
@@ -5796,28 +5404,16 @@ object Similarity {
     * branching on encoding. */
   def annIvfPqResidualIndexed(spark: SparkSession, sfDir: String,
                               nProbe: Int = 4, nQueries: Int = 10,
-                              k: Int = 5): DataFrame = {
-    val v = vectors(spark, sfDir)
-    val (cents, cbsR) = withTrainCache(v) { vc =>
-      val cents = trainCentroids(vc, 16)
-      (cents, trainPqCodebooks(
-        residualAssigned(vc, cents).select(col("vec_id"),
-          col("res").as("embedding"))))
-    }
-    val dir = ExportImport.scratch(
-      s"ivfpq-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexBuild(spark, v.select("vec_id", "embedding"), dir, cents)
-    ivfPqIndexAdd(spark, dir, Some(cbsR), residual = Some(true))
-    // factor pinned to the inline pipeline's 8: this query PROVES
-    // artifact serving ≡ the inline residual pipeline at the same
-    // operating point (shared oracle). The mode-aware serving default
-    // (residual → 4) is spec-pinned separately in SimilaritySpec.
-    annServeFromPqIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k, shortlistFactor = 8)
-  }
+                              k: Int = 5): DataFrame =
+    pqServedFromScratch(spark, sfDir, nQueries)((vc, cents) =>
+      trainPqCodebooks(residualAssigned(vc, cents).select(col("vec_id"),
+        col("res").as("embedding"))))((dir, cbsR) =>
+      ivfPqIndexAdd(spark, dir, Some(cbsR), residual = Some(true)))(
+      // factor pinned to the inline pipeline's 8: this query PROVES
+      // artifact serving ≡ the inline residual pipeline at the same
+      // operating point (shared oracle). The mode-aware serving default
+      // (residual → 4) is spec-pinned separately in SimilaritySpec.
+      annServeFromPqIndex(spark, _, _, nProbe, k, shortlistFactor = 8))
 
   /** Oracle for [[annIvfPq]]: both trained models inlined (the
     * [[ivfTrainedOracle]] stance); coarse assignment, probing, PQ
@@ -6055,16 +5651,8 @@ object Similarity {
       val cbs = trainPqCodebooks(rotatedFrame(v, r), m, k, sub)
       // reconstruction of R·x under the current codebooks: encode the
       // rotated vector, concatenate the selected codewords
-      val rotCol = array(r.map(row => dot(col("embedding"),
-        typedLit(row.toSeq))): _*)
-      val coded = v
-        .select(col("embedding").cast("array<double>").as("x"),
-          rotCol.as("re"))
-        .select(col("x") +: (0 until m).map { mi =>
-          element_at(graft.functions.VectorQuantize.nearestCellsBiased(
-            expr(s"slice(re, ${mi * sub + 1}, $sub)"), cbs(mi),
-            l2Biases(cbs(mi)), 1), 1).as(s"c$mi")
-        }: _*)
+      val coded = Pq(cbs, rotation = Some(r)).encode(v.select(
+        col("embedding").cast("array<double>").as("x"), col("embedding")))
       val xy = coded.select(col("x"),
         flatten(array((0 until m).map(mi =>
           element_at(typedLit(cbs(mi).map(_.toSeq).toSeq),
@@ -6115,17 +5703,8 @@ object Similarity {
                nQueries: Int = 10, k: Int = 5): DataFrame = {
     val v = vectors(spark, sfDir)
     val (r, cbs) = withTrainCache(v)(trainOpqRotation(_))
-    annPqOpqWith(v, r, cbs, nQueries, k)
+    serveFirst(v, nQueries, None, 0, Pq(cbs, rotation = Some(r)), TopK(k))
   }
-
-  private def annPqOpqWith(v: DataFrame, r: Array[Array[Double]],
-                           cbs: Array[Array[Array[Double]]],
-                           nQueries: Int, k: Int,
-                           shortlistFactor: Int = 8): DataFrame =
-    pqExactRerank(
-      pqShortlistOf(pqAdcScored(rotatedFrame(v, r), cbs, nQueries),
-        shortlistFactor * k),
-      v, nQueries, k)
 
   /** DuckDB oracle for [[annPqOpq]]: the trained rotation AND
     * codebooks inlined; the rotation replayed as one dot per output
@@ -6875,9 +6454,11 @@ object Similarity {
     // shared state — concurrent branch jobs (Branches scaladoc)
     Branches.unionAllConcurrent(Seq(
         one("brute_raw", annBruteforce(spark, sfDir, nQueries, k)),
-        one("ivf_whitened", ivfServe(w, wq, centsW, 4, k)),
-        one("sq8_whitened", annSq8With(w, nQueries, k)),
-        one("pq_opq_whitened", annPqOpqWith(w, rW, cbsWO, nQueries, k))))
+        one("ivf_whitened", serveFrames(w, wq, Some(centsW), 4, Exact,
+          TopK(k))),
+        one("sq8_whitened", serveFirst(w, nQueries, None, 0, Sq8, TopK(k))),
+        one("pq_opq_whitened", serveFirst(w, nQueries, None, 0,
+          Pq(cbsWO, rotation = Some(rW)), TopK(k)))))
       .orderBy("variant")
   }
 
@@ -7168,10 +6749,9 @@ object Similarity {
                                 queries: DataFrame, nProbe: Int = 4,
                                 k: Int = 5): DataFrame = {
     val (mu, pc) = readWhitenModel(spark, dir)
-    serveFromIndexUnchecked(spark, dir,
-      whitenVectors(queries.select(col("vec_id"), col("embedding")),
-        mu, pc),
-      nProbe, k)
+    serveIndex(spark, dir, whitenVectors(
+      queries.select(col("vec_id"), col("embedding")), mu, pc), nProbe,
+      Exact, TopK(k))
   }
 
   /** Incremental maintenance of the whitened artifact: a RAW delta
@@ -7201,16 +6781,10 @@ object Similarity {
     * hand-wired by the pipeline. */
   def annIvfWhitenedIndexed(spark: SparkSession, sfDir: String,
                             nProbe: Int = 4, nQueries: Int = 10,
-                            k: Int = 5): DataFrame = {
-    val dir = ExportImport.scratch(
-      s"ivf-whiten-index/run-${java.util.UUID.randomUUID()}")
-    ivfWhitenIndexToDir(spark, sfDir, dir)
-    annServeWhitenedFromIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k)
-  }
+                            k: Int = 5): DataFrame =
+    servedFromScratch(spark, sfDir, "ivf-whiten-index", nQueries)(
+      ivfWhitenIndexToDir(spark, sfDir, _))(
+      annServeWhitenedFromIndex(spark, _, _, nProbe, k))
 
   /** DuckDB oracle for [[annIvfWhitenedIndexed]]: μ/pc and the
     * whitened-space centroids inlined as trained literals (all

@@ -394,11 +394,12 @@ class SimilaritySpec extends SparkSpec {
   test("ann_ivfsq8_indexed: artifact-served sq8 equals the inline " +
       "pipeline under the shared static quantizer") {
     import org.apache.spark.sql.functions.col
-    val inline = Similarity.annIvfSq8With(
+    val inline = Similarity.serveFirst(
       Tables.load(spark, sf, "embeddings")
         .selectExpr("vec_id", "label", "embedding",
           "sqrt(aggregate(transform(embedding, x -> double(x) * double(x)), 0D, (a, b) -> a + b)) AS nrm"),
-      Similarity.staticCentroids(), nProbe = 4, nQueries = 10, k = 5)
+      nQueries = 10, Some(Similarity.staticCentroids()), nProbe = 4,
+      Similarity.Sq8, Similarity.TopK(5))
       .collect().map(_.toString).toSeq
     val indexed = Similarity.annIvfSq8Indexed(spark, sf)
       .collect().map(_.toString).toSeq
@@ -725,18 +726,28 @@ class SimilaritySpec extends SparkSpec {
     Similarity.staticCentroids().zipWithIndex.toSeq
       .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+    // a PQ leg over the base: the append must extend it too. Both
+    // sides encode with the same explicit codebooks.
+    val cbs = Similarity.trainPqCodebooks(embs)
+    Similarity.ivfPqIndexAdd(spark, dir, Some(cbs))
     Similarity.ivfIndexAppend(spark, dir, embs.filter(isDelta))
 
-    val queries = embs.filter(col("vec_id") < 10)
-    val appended = Similarity.annServeFromIndex(spark, dir, queries)
-      .collect().map(_.toString).toSeq
     // rebuild from scratch over the full vector set
     val full = graft.operators.ExportImport.scratch("ivf-index-full")
     Similarity.ivfIndexToDir(spark, sf, full)
-    val rebuilt = Similarity.annServeFromIndex(spark, full, queries)
-      .collect().map(_.toString).toSeq
-    assert(appended == rebuilt,
-      "append must serve identically to a full rebuild")
+    Similarity.ivfPqIndexAdd(spark, full, Some(cbs))
+    val queries = embs.filter(col("vec_id") < 10)
+    Seq[(String, String => org.apache.spark.sql.DataFrame)](
+      "raw" -> (Similarity.annServeFromIndex(spark, _, queries)),
+      "sq8" -> (Similarity.annServeSq8FromIndex(spark, _, queries)),
+      "mmr" -> (Similarity.annMmrFromIndex(spark, _, queries)),
+      "pq" -> (Similarity.annServeFromPqIndex(spark, _, queries))
+    ).foreach { case (codec, serve) =>
+      val appended = serve(dir).collect().map(_.toString).toSeq
+      val rebuilt = serve(full).collect().map(_.toString).toSeq
+      assert(appended.nonEmpty && appended == rebuilt,
+        s"$codec: append must serve identically to a full rebuild")
+    }
   }
 
   test("ivfIndexCompact: serving identical before/after, deltas folded, " +
@@ -972,7 +983,8 @@ class SimilaritySpec extends SparkSpec {
 
     // delta fresh path: exact duplicates of the query vectors appended
     // as live deltas must surface as top-1 (cos = 1) — never
-    // ADC-approximated away, never shortlist-pruned
+    // ADC-approximated away, never shortlist-pruned (the cos tie with
+    // the +60000 copies breaks to the lower id)
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = graft.operators.ExportImport.scratch("ivfpq-index-spec")
     graft.streaming.StreamIO.deleteRecursively(dir, conf)
@@ -981,6 +993,17 @@ class SimilaritySpec extends SparkSpec {
     Similarity.ivfIndexBuild(spark, embs, dir)
     Similarity.ivfPqIndexAdd(spark, dir)
     val queries = embs.filter(col("vec_id") < 5)
+    // vectors added by ivfIndexAppend join the PQ leg: exact duplicates
+    // of the queries must rank first through both PQ serves
+    Similarity.ivfIndexAppend(spark, dir, queries.select(
+      (col("vec_id") + 60000).as("vec_id"), col("embedding")))
+    Seq(Similarity.annServeFromPqIndex(spark, dir, queries),
+        Similarity.annMmrPqFromIndex(spark, dir, queries)).foreach { df =>
+      val top = df.filter(col("rnk") === 1).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap
+      (0L until 5L).foreach(q => assert(top.get(q).contains(q + 60000),
+        s"query $q: an appended exact duplicate must rank first, got $top"))
+    }
     val dup = queries.select((col("vec_id") + 50000).as("vec_id"),
       col("embedding"))
     graft.streaming.StreamIvfIndex.applyBatch(dup, 0L, dir)
@@ -1032,7 +1055,8 @@ class SimilaritySpec extends SparkSpec {
         "sqrt(aggregate(transform(embedding, x -> double(x) * double(x)), 0D, (a, b) -> a + b)) AS nrm")
     val cents = Similarity.trainCentroids(v, 16)
     val (rO, cbsO) = Similarity.trainOpqRotation(v)
-    val inline = Similarity.annIvfPqOpqWith(v, cents, rO, cbsO, 4, 10, 5)
+    val inline = Similarity.serveFirst(v, 10, Some(cents), 4,
+        Similarity.Pq(cbsO, rotation = Some(rO)), Similarity.TopK(5))
       .collect().map(_.toString).toSeq
     val indexed = Similarity.annIvfPqOpqIndexed(spark, sf)
       .collect().map(_.toString).toSeq
@@ -1416,7 +1440,8 @@ class SimilaritySpec extends SparkSpec {
       Similarity.whitenVectors(df, mu, pc).withColumn("nrm",
         graft.functions.VectorFunctions.l2norm(col("embedding")))
     val live = Similarity
-      .ivfServe(whitened(raw), whitened(queries), cents, 4, 5)
+      .serveFrames(whitened(raw), whitened(queries), Some(cents), 4,
+        Similarity.Exact, Similarity.TopK(5))
       .collect().map(_.toString).toSeq
     assert(served == live && served.nonEmpty,
       "artifact round-trip must not change a single ranked row")
@@ -1464,7 +1489,8 @@ class SimilaritySpec extends SparkSpec {
       Similarity.whitenVectors(df, mu, pc).withColumn("nrm",
         graft.functions.VectorFunctions.l2norm(col("embedding")))
     val truth = Similarity
-      .ivfServe(whitened(raw), whitened(queries), cents, 4, 5)
+      .serveFrames(whitened(raw), whitened(queries), Some(cents), 4,
+        Similarity.Exact, Similarity.TopK(5))
       .collect().map(_.toString).toSeq
     assert(appended == truth,
       "append must serve identically to combined assignment under the " +

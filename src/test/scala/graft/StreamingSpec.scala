@@ -558,7 +558,10 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.Similarity
     val root = graft.operators.ExportImport.scratch("stream-ann-whiten")
     val (dir, outDir, ckpt) = (root + "/idx", root + "/out", root + "/ckpt")
-    Seq(dir, outDir, ckpt).foreach(d =>
+    // the raw-artifact leg's dirs too: a checkpoint left by an earlier
+    // run resumes its uncommitted batch instead of serving the new one
+    Seq(dir, outDir, ckpt, root + "/raw-idx", root + "/out2",
+        root + "/ckpt2").foreach(d =>
       graft.streaming.StreamIO.deleteRecursively(d,
         spark.sparkContext.hadoopConfiguration))
     Similarity.ivfWhitenIndexToDir(spark, sf, dir)
