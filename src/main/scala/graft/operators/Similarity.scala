@@ -1736,23 +1736,22 @@ object Similarity {
   }
 
   /** PER-JVM SHARED TRAIN CACHE — the memo the training scaladocs
-    * promise ("one training per corpus per JVM", the [[sharedKnnEdgesDir]]
-    * / [[graft.operators.TextAnalysis.sharedUnigramModelDir]] doctrine
-    * applied to model ARRAYS instead of artifact directories). Keyed by
-    * the training input's CANONICALIZED logical plan plus the
-    * hyper-params: two trainings share a model iff they read the same
-    * source through the same transformations with the same knobs —
-    * parquet relations compare by root path, LocalRelations by their
-    * rows, ad-hoc RDD-backed frames never compare equal (always train
-    * fresh). Training is deterministic by contract (init by first ids,
-    * per-iteration 1e-6 mean quantization), so a memo hit returns
-    * bit-identical model state to a fresh run — callers, specs and
-    * oracles cannot observe the difference, only the wall clock can
-    * (a session was re-paying the identical k-means/Procrustes bill
-    * once per query; a deployment trains once per corpus version). */
-  private val trainedModels = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, String),
-    AnyRef]()
+    * promise ("one training per corpus per JVM"), held in
+    * [[ArtifactState]] (single-flight, bounded LRU). Keyed by the
+    * training input's CANONICALIZED logical plan, its data fingerprint
+    * ([[inputFingerprint]]) and the hyper-params: two trainings share a
+    * model iff they read the same source version through the same
+    * transformations with the same knobs — parquet relations compare by
+    * root path, LocalRelations by their rows, ad-hoc RDD-backed frames
+    * never compare equal (always train fresh). Training is
+    * deterministic by contract (init by first ids, per-iteration 1e-6
+    * mean quantization), so a memo hit returns bit-identical model
+    * state to a fresh run — only the wall clock can tell. Nested
+    * trainings (OPQ trains PQ codebooks mid-build) use their own keys. */
+  private def memoModel[T <: AnyRef](v: DataFrame, params: String)
+                                    (train: => T): T =
+    ArtifactState.memo((v.queryExecution.analyzed.canonicalized,
+      inputFingerprint(v), params))(train)
 
   /** Data fingerprint of a training frame's file-backed inputs:
     * (path, length, mtime) of every input file, hashed. Folded into the
@@ -1777,28 +1776,6 @@ object Similarity {
       }
       java.util.UUID
         .nameUUIDFromBytes(parts.mkString("\n").getBytes("UTF-8")).toString
-    }
-  }
-
-  private def memoModel[T <: AnyRef](v: DataFrame, params: String)
-                                    (train: => T): T = {
-    // get/put, NOT computeIfAbsent: the OPQ trainer calls the PQ
-    // trainer on its rotated frame mid-computation, and nested updates
-    // of one ConcurrentHashMap throw "Recursive update". A concurrent
-    // duplicate training is harmless — training is deterministic, both
-    // threads produce the identical model and last-put wins.
-    val key = (v.queryExecution.analyzed.canonicalized, inputFingerprint(v),
-      params)
-    val hit = trainedModels.get(key)
-    if (hit != null) hit.asInstanceOf[T]
-    else {
-      val m = train
-      // BOUNDED (ADVICE-r19): the memo pins canonicalized plans for the
-      // JVM lifetime — past 64 distinct trainings, drop the lot rather
-      // than grow without bound (re-training is always correct).
-      if (trainedModels.size >= 64) trainedModels.clear()
-      trainedModels.put(key, m)
-      m
     }
   }
 
@@ -1911,16 +1888,33 @@ object Similarity {
     * probes its `nProbe` nearest cells — an equi-join, and since cells
     * partition the corpus the pairs are unique without a distinct;
     * without one (`cents = None`) every candidate meets every query, the
-    * flat scan. Self-matches are dropped either way. */
+    * flat scan. Self-matches are dropped either way. When the query
+    * frame is local (a LocalRelation after optimization) its probe
+    * cells are computed on the driver — no job — and the candidates
+    * also carry them as a filter, which prunes the cell-partitioned
+    * read to the probed directories (dynamic partition pruning never
+    * fires here: the broadcast probe side has no selective filter).
+    * The filter is implied by the join, so results are unchanged. It is
+    * `array_contains`, not `IN`: constraint inference copies it onto
+    * the probe side, where an `IN` reads as selective and adds a
+    * dynamic-pruning subquery the static filter makes redundant. */
   private def probed(cand: DataFrame, queries: DataFrame,
                      cents: Option[Array[Array[Double]]], nProbe: Int,
                      codec: Codec): DataFrame = {
     val q = queries.select(col("*") +: codec.queryCols: _*)
     cents match {
       case Some(c) =>
-        cand.join(broadcast(q.withColumn("cell", explode(
-            graft.functions.VectorQuantize.nearestCells(col("e_q"), c,
-              nProbe)))), Seq("cell"))
+        val cells = graft.functions.VectorQuantize.nearestCells(col("e_q"),
+          c, nProbe)
+        val local = queries.select(cells)
+        val pruned = local.queryExecution.optimizedPlan match {
+          case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+            cand.filter(array_contains(typedLit(local.collect()
+              .flatMap(_.getSeq[Int](0)).distinct.sorted.toSeq), col("cell")))
+          case _ => cand
+        }
+        pruned.join(broadcast(q.withColumn("cell", explode(cells))),
+            Seq("cell"))
           .filter(col("query_id") =!= col("neighbor_id"))
       case None =>
         cand.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
@@ -2031,12 +2025,15 @@ object Similarity {
 
   /** The MATERIALIZED IVF index artifact: centroids + the corpus's cell
     * assignment written ONCE as parquet, inverted-list style. The
-    * `assigned/` table is PARTITIONED BY cell, so serving reads only the
-    * probed cell directories — static partition pruning for a fixed
-    * probe set, Spark's dynamic partition pruning for the broadcast
-    * probe join. At 100 TB the index build (train + assign) runs once
-    * per corpus version and every query then touches ~nProbe/nCells of
-    * the corpus BY LAYOUT, not by filter luck — the ANN analog of
+    * `assigned/` table is PARTITIONED BY cell, so a serve whose query
+    * frame is local (a LocalRelation — a client's request) reads only
+    * the probed cell directories: [[probed]] computes the probe cells on
+    * the driver and adds them as a static partition filter on the
+    * candidate scan. Other query frames scan every cell (dynamic
+    * partition pruning does not fire: the broadcast probe side carries
+    * no selective filter), and the exact gather of the sq8/PQ codecs
+    * reads by id across cells. At 100 TB the index build (train +
+    * assign) runs once per corpus version — the ANN analog of
     * [[graft.operators.Dedup.verifiedPairsToDir]]'s asymmetric
     * build-once/serve-many split. */
   def ivfIndexToDir(spark: SparkSession, sfDir: String, dir: String,
@@ -2108,17 +2105,20 @@ object Similarity {
       l2norm(col("embedding")).as("nrm"))
 
   /** Centroid matrix back from an [[ivfIndexToDir]] artifact (bounded:
-    * nCells × dim doubles — model state, never data). Existence
-    * resolves through the Hadoop FileSystem of the path's scheme (the
-    * [[Sketches.readSketchStates]] stance) — the index a cluster
-    * deployment maintains lives on a DFS. */
+    * nCells × dim doubles — model state, never data), collected once per
+    * version of `centroids/` ([[ArtifactState]]; the arrays are shared,
+    * read-only). Existence resolves through the Hadoop FileSystem of the
+    * path's scheme (the [[Sketches.readSketchStates]] stance) — the
+    * index a cluster deployment maintains lives on a DFS. */
   def readIvfCentroids(spark: SparkSession, dir: String): Array[Array[Double]] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/centroids")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p),
       s"no IVF index artifact at $dir — run ivfIndexToDir first")
-    spark.read.parquet(s"$dir/centroids").orderBy("cell")
-      .collect().map(_.getAs[Seq[Double]]("centroid").toArray)
+    ArtifactState.ofMember(spark, "centroids", s"$dir/centroids") {
+      spark.read.parquet(s"$dir/centroids").orderBy("cell")
+        .collect().map(_.getAs[Seq[Double]]("centroid").toArray)
+    }
   }
 
   /** INCREMENTAL index maintenance: assign a batch of new
@@ -3168,7 +3168,7 @@ object Similarity {
     * delta delete pending) must not double-count them. */
   private[graft] def readIvfAssignedWithBatchId(spark: SparkSession,
                                                 dir: String): DataFrame = {
-    val base = spark.read.parquet(s"$dir/assigned")
+    val base = readMember(spark, s"$dir/assigned")
       .withColumn("batch_id", lit(null).cast("long"))
     val deltaRoot = new org.apache.hadoop.fs.Path(s"$dir/stream")
     val fs = deltaRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -3177,7 +3177,7 @@ object Similarity {
     val hasDeltas = fs.exists(deltaRoot) && fs.listStatus(deltaRoot)
       .exists(_.getPath.getName.startsWith("batch_id="))
     if (hasDeltas) {
-      val deltas = spark.read.parquet(s"$dir/stream")
+      val deltas = readMember(spark, s"$dir/stream")
         .withColumn("batch_id", col("batch_id").cast("long"))
       val folded = graft.streaming.StreamIO.readMarker(
         s"$dir/assigned", "_compacted_through",
@@ -3187,6 +3187,14 @@ object Similarity {
       base.unionByName(live.select(base.columns.map(col).toSeq: _*))
     } else base
   }
+
+  /** A parquet member of an index artifact, read under its schema
+    * inferred once per member version ([[ArtifactState]]); the read
+    * itself lists the member's files per call, so appended files are
+    * always seen. */
+  private def readMember(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(ArtifactState.ofMember(spark, "schema", path)(
+      spark.read.parquet(path).schema)).parquet(path)
 
   /** Refuse RAW-SPACE access to a whitened artifact: an
     * [[ivfWhitenIndexToDir]] build stores every inverted-list row in
@@ -3440,7 +3448,8 @@ object Similarity {
     * bill drops to ~nProbe/nCells of the corpus BY LAYOUT.
     *
     * Scale shape: broadcast probes against cell-partitioned inverted
-    * lists (partition-pruned scan), bounded TopK shortlist, then the
+    * lists (partition-pruned for a local query frame — [[probed]]),
+    * bounded TopK shortlist, then the
     * greedy rounds over persisted KB-sized frames — the corpus is
     * touched once, in its cheapest indexed form. */
   def annMmrFromIndex(spark: SparkSession, dir: String, queryFrame: DataFrame,
@@ -5214,21 +5223,25 @@ object Similarity {
       s"PQ unit at $dir carries _rotation = 1 but rotation/ is missing " +
         "— the unit is torn. Re-run ivfPqIndexAdd(retrain = true, " +
         "opq = Some(true)).")
-    spark.read.parquet(s"$dir/rotation").orderBy("j").collect()
-      .map(_.getAs[Seq[Double]]("rv").toArray)
+    ArtifactState.ofMember(spark, "rotation", s"$dir/rotation") {
+      spark.read.parquet(s"$dir/rotation").orderBy("j").collect()
+        .map(_.getAs[Seq[Double]]("rv").toArray)
+    }
   }
 
   /** PQ codebooks back from an artifact's `codebooks/` (bounded:
-    * m × k × sub doubles — model state, never data). */
+    * m × k × sub doubles — model state, never data), collected once per
+    * version of `codebooks/` (shared, read-only). */
   def readPqCodebooks(spark: SparkSession,
-                      dir: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(s"$dir/codebooks")
-      .orderBy("m", "cell").collect()
-    rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, rs) =>
-      rs.sortBy(_.getInt(1))
-        .map(_.getAs[Seq[Double]]("codeword").toArray)
-    }.toArray
-  }
+                      dir: String): Array[Array[Array[Double]]] =
+    ArtifactState.ofMember(spark, "codebooks", s"$dir/codebooks") {
+      val rows = spark.read.parquet(s"$dir/codebooks")
+        .orderBy("m", "cell").collect()
+      rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, rs) =>
+        rs.sortBy(_.getInt(1))
+          .map(_.getAs[Seq[Double]]("codeword").toArray)
+      }.toArray
+    }
 
   /** IVFADC serving FROM THE ARTIFACT: ADC shortlist over the probed
     * cells of the compressed `codes/` table (8 ints per candidate —
@@ -5307,7 +5320,7 @@ object Similarity {
     val cents = readIvfCentroids(spark, dir)
     val codec = storedPqCodec(spark, dir, cents)
     val all = readIvfAssignedWithBatchId(spark, dir)
-    serve(spark.read.parquet(s"$dir/codes")
+    serve(readMember(spark, s"$dir/codes")
         .withColumnRenamed("vec_id", "neighbor_id"),
       fullRows(all), queryRows(queries), Some(cents), nProbe, codec,
       rank(codec), Some(all.filter(col("batch_id").isNotNull)

@@ -704,6 +704,214 @@ class SimilaritySpec extends SparkSpec {
     one.collect()
   }
 
+  /** Spark jobs `body` submits from this thread: a listener counts the
+    * job starts of a private job group up to a sentinel job of the same
+    * group (listener events arrive in submission order). */
+  private def jobsSubmitted(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(String.valueOf(
+            e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "body")
+    try {
+      body
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      Iterator.continually(
+          seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile { d =>
+          assert(d != null, "the sentinel job never reached the listener")
+          d != "sentinel"
+        }.size
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The first `n` fixture vectors as a local (vec_id, embedding) frame —
+    * the shape a serving client sends. */
+  private def localQueries(n: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val q = Tables.load(spark, sf, "embeddings").filter(col("vec_id") < n)
+      .select("vec_id", "embedding")
+    spark.createDataFrame(
+      java.util.Arrays.asList(q.orderBy("vec_id").collect(): _*), q.schema)
+  }
+
+  test("artifact state: a warm serve submits no Spark job before its " +
+      "action, and the probe cells prune its candidate scans") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    val dir = graft.operators.ExportImport.scratch("ivf-state-warm")
+    graft.streaming.StreamIO.deleteRecursively(dir,
+      spark.sparkContext.hadoopConfiguration)
+    Similarity.ivfIndexBuild(spark, Tables.load(spark, sf, "embeddings")
+      .select(col("vec_id"), col("embedding")), dir)
+    Similarity.ivfPqIndexAdd(spark, dir)
+    val local = localQueries(4)
+    Seq[(String, DataFrame => DataFrame, String)](
+      ("raw", Similarity.annServeFromIndex(spark, dir, _), "assigned"),
+      ("sq8", Similarity.annServeSq8FromIndex(spark, dir, _), "assigned"),
+      ("pq", Similarity.annServeFromPqIndex(spark, dir, _), "codes")
+    ).foreach { case (codec, serve, member) =>
+      serve(local).collect() // the cold call resolves the artifact state
+      var df: DataFrame = null
+      assert(jobsSubmitted { df = serve(local) } == 0,
+        s"$codec: a warm serve must submit no job before its action")
+      val plan = planOf(df)
+      val scans = plan.split("\n")
+        .filter(l => l.contains("FileScan") && l.contains(s"/$member]"))
+      // the candidate scan is pruned; sq8/PQ's exact gather by id is not
+      assert(scans.exists(
+          _.matches(".*PartitionFilters: \\[[^]]*array_contains\\(.*")),
+        s"$codec: the $member scan must carry the probe-cell partition " +
+          s"filter:\n$plan")
+      // the filter is implied by the probe join: a non-local query frame
+      // (served unpruned) returns the same rows
+      assert(df.collect().map(_.toString).toSeq ==
+        serve(local.repartition(1)).collect().map(_.toString).toSeq,
+        s"$codec: pruning must not change a served row")
+    }
+  }
+
+  test("artifact state: a rebuilt, retrained, appended or late-built " +
+      "artifact serves its current version") {
+    import org.apache.spark.sql.functions.col
+    val conf = spark.sparkContext.hadoopConfiguration
+    def fresh(name: String) = {
+      val d = graft.operators.ExportImport.scratch(name)
+      graft.streaming.StreamIO.deleteRecursively(d, conf)
+      d
+    }
+    val embs = Tables.load(spark, sf, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    val local = localQueries(4)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSeq
+    val dir = fresh("ivf-state-version")
+    Similarity.ivfIndexBuild(spark, embs, dir)
+    rows(Similarity.annServeFromIndex(spark, dir, local))
+
+    // a rebuild under other centroids over the same dir
+    val cents = Similarity.trainCentroids(embs, 8)
+    Similarity.ivfIndexBuild(spark, embs, dir, cents)
+    val ref = fresh("ivf-state-fresh")
+    Similarity.ivfIndexBuild(spark, embs, ref, cents)
+    assert(Similarity.readIvfCentroids(spark, dir).map(_.toSeq).toSeq ==
+      cents.map(_.toSeq).toSeq, "a rebuild must serve its new centroids")
+    assert(rows(Similarity.annServeFromIndex(spark, dir, local)) ==
+      rows(Similarity.annServeFromIndex(spark, ref, local)),
+      "a rebuilt dir must serve what a fresh dir serves")
+
+    // a PQ retrain replaces the codebooks the serve reads
+    val stale = Similarity.trainPqCodebooks(embs, iters = 1)
+    Similarity.ivfPqIndexAdd(spark, dir, Some(stale))
+    rows(Similarity.annServeFromPqIndex(spark, dir, local))
+    Similarity.ivfPqIndexAdd(spark, dir, retrain = true)
+    Similarity.ivfPqIndexAdd(spark, ref)
+    val retrained = Similarity.readPqCodebooks(spark, dir)
+    assert(retrained.map(_.map(_.toSeq).toSeq).toSeq !=
+      stale.map(_.map(_.toSeq).toSeq).toSeq &&
+      retrained.map(_.map(_.toSeq).toSeq).toSeq ==
+      Similarity.readPqCodebooks(spark, ref).map(_.map(_.toSeq).toSeq).toSeq,
+      "a retrain must serve its new codebooks")
+    assert(rows(Similarity.annServeFromPqIndex(spark, dir, local)) ==
+      rows(Similarity.annServeFromPqIndex(spark, ref, local)))
+
+    // appended exact duplicates of the queries rank first through every
+    // codec, after each codec has served (and resolved) the old version
+    val serves = Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)](
+      "raw" -> (Similarity.annServeFromIndex(spark, dir, _)),
+      "sq8" -> (Similarity.annServeSq8FromIndex(spark, dir, _)),
+      "pq" -> (Similarity.annServeFromPqIndex(spark, dir, _)))
+    serves.foreach { case (_, serve) => rows(serve(local)) }
+    Similarity.ivfIndexAppend(spark, dir, local.select(
+      (col("vec_id") + 70000).as("vec_id"), col("embedding")))
+    serves.foreach { case (codec, serve) =>
+      val top = serve(local).filter(col("rnk") === 1).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap
+      (0L until 4L).foreach(q => assert(top.get(q).contains(q + 70000),
+        s"$codec: query $q's appended duplicate must rank first: $top"))
+    }
+
+    // a read that failed before the artifact existed succeeds after
+    val late = fresh("ivf-state-late")
+    intercept[IllegalArgumentException] {
+      Similarity.readIvfCentroids(spark, late)
+    }
+    Similarity.ivfIndexBuild(spark, embs, late)
+    assert(Similarity.readIvfCentroids(spark, late).map(_.toSeq).toSeq ==
+      Similarity.staticCentroids().map(_.toSeq).toSeq)
+    // ... and a build that failed is not cached
+    val key = ("spec-failed-build", java.util.UUID.randomUUID)
+    intercept[IllegalStateException] {
+      graft.operators.ArtifactState.memo[String](key)(
+        throw new IllegalStateException("build failed"))
+    }
+    assert(graft.operators.ArtifactState.memo(key)("built") == "built")
+  }
+
+  test("artifact state: concurrent first touches of one key build once; " +
+      "the bound evicts one entry at a time") {
+    import graft.operators.ArtifactState
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    val pool = Executors.newFixedThreadPool(2)
+    def async[T](f: => T) =
+      pool.submit(new java.util.concurrent.Callable[T] { def call(): T = f })
+    try {
+      // a build in flight: the second caller waits for it, no rebuild
+      val key = ("spec-single-flight", java.util.UUID.randomUUID)
+      val entered, release = new CountDownLatch(1)
+      val first = async(ArtifactState.memo(key) {
+        entered.countDown(); release.await(); new Object
+      })
+      assert(entered.await(60, TimeUnit.SECONDS))
+      val second = async(ArtifactState.memo(key)(new Object))
+      Thread.sleep(200)
+      assert(!second.isDone, "the second touch must wait for the first")
+      release.countDown()
+      assert(first.get(60, TimeUnit.SECONDS) eq
+        second.get(60, TimeUnit.SECONDS))
+
+      // memoModel: two threads first-touching one training key train once
+      import spark.implicits._
+      val rnd = new scala.util.Random(System.nanoTime)
+      val v = Seq.tabulate(200)(i =>
+          (i.toLong, Seq.fill(8)(rnd.nextGaussian().toFloat)))
+        .toDF("vec_id", "embedding")
+      val start = new CountDownLatch(1)
+      val before = ArtifactState.builds.get
+      val trainings = (1 to 2).map(_ => async {
+        start.await(); Similarity.trainCentroids(v, 4)
+      })
+      start.countDown()
+      val models = trainings.map(_.get(5, TimeUnit.MINUTES))
+      assert(ArtifactState.builds.get - before == 1,
+        "two concurrent first touches must train once")
+      assert(models(0) eq models(1))
+    } finally pool.shutdown()
+
+    // LRU: past the bound the least recently used entry goes, only it
+    val tag = java.util.UUID.randomUUID
+    (0 to ArtifactState.Bound).foreach(i =>
+      ArtifactState.memo(("spec-lru", tag, i))(Integer.valueOf(i)))
+    val before = ArtifactState.builds.get
+    ArtifactState.memo(("spec-lru", tag, 1))(Integer.valueOf(-1))
+    assert(ArtifactState.builds.get == before, "entry 1 must survive")
+    assert(ArtifactState.memo(("spec-lru", tag, 0))(Integer.valueOf(-1)) ==
+      -1, "entry 0, least recently used, must be evicted")
+  }
+
   test("ivfIndexAppend: appended index serves identically to a rebuild") {
     import org.apache.spark.sql.functions.col
     val embs = Tables.load(spark, sf, "embeddings")
