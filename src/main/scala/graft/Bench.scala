@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs the headline queries at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A failed query reports an "err" entry (and is
@@ -299,6 +300,12 @@ object Bench {
       (cpuNs.get, taskGcMs.get, shufBytes.get)
   }
 
+  /** Runs `df` to its full result and discards the rows: a `noop`-sink
+    * write computes every output column, where `.count()` lets Catalyst
+    * prune projected work (and whole union branches of aggregates). */
+  private def materialize(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -395,8 +402,8 @@ object Bench {
       val pre = acc.snapshot
       val t0 = System.nanoTime()
       val res =
-        try { SparkEntry.queries(name)(spark, sfDir).count(); None }
-        catch { case e: Throwable => Some(e.toString.takeWhile(_ != '\n')) }
+        try { materialize(SparkEntry.queries(name)(spark, sfDir)); None }
+        catch { case NonFatal(e) => Some(e.toString.takeWhile(_ != '\n')) }
       val t = (System.nanoTime() - t0) / 1e9
       if (annNames.lastOption.contains(name)) {
         annPost = jvmHealth(); annPostC = jvmHealthCompact()
@@ -453,9 +460,9 @@ object Bench {
       .map { case (worst, first) =>
         val t0 = System.nanoTime()
         val again =
-          try { SparkEntry.queries(worst)(spark, sfDir).count()
+          try { materialize(SparkEntry.queries(worst)(spark, sfDir))
                 (System.nanoTime() - t0) / 1e9 }
-          catch { case _: Throwable => -1.0 }
+          catch { case NonFatal(_) => -1.0 }
         operators.TransientCaches.release()
         spark.catalog.clearCache()
         System.gc()
@@ -559,7 +566,7 @@ object Bench {
       m
     }
   } catch {
-    case scala.util.control.NonFatal(e) =>
+    case NonFatal(e) =>
       System.err.println(s"[bench] priors unreadable (${e.getMessage}) " +
         "— retry selection degrades to rank-based")
       Map.empty

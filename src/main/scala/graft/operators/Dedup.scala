@@ -276,14 +276,10 @@ object Dedup {
       dedupNgramExactjoinFrom(docs, tau).select("id_a", "id_b")
         .persist(StorageLevel.MEMORY_AND_DISK))
     truth.count()
-    // three independent 1-row geometry branches over the two eagerly
-    // materialized caches — concurrent branch jobs (r20 opt, guide
-    // §2.6; rows identical to the sequential union)
-    Branches.unionAllConcurrent(Seq((8, 8), (16, 4), (32, 2)).map {
-      case (b, r) =>
-        evalRow(krBandCandidates(docs, b, r), truth)
-          .select(lit(s"b${b}r$r").as("geometry"), col("*"))
-    }).orderBy("geometry")
+    Seq((8, 8), (16, 4), (32, 2)).map { case (b, r) =>
+      evalRow(krBandCandidates(docs, b, r), truth)
+        .select(lit(s"b${b}r$r").as("geometry"), col("*"))
+    }.reduce(_ unionByName _).orderBy("geometry")
   }
 
   /** DuckDB oracle for [[dedupEvalSweep]]: three full replays (the
@@ -1036,17 +1032,6 @@ object Dedup {
     * seam — the pointer-halving loop should stay at O(log diameter)). */
   @volatile private[graft] var lastPropagationRounds: Int = 0
 
-  /** Serializes the propagation loop's session-conf override window —
-    * see the comment at the mutation site in [[clustersFromPairs]]. */
-  private val propagationConfLock =
-    new java.util.concurrent.locks.ReentrantLock
-
-  /** Profiler seam (graft.tools.ProfilePropagation): when false, the
-    * loop keeps the session's AQE setting (the pre-r20 behaviour) so
-    * the stage-job reduction of the in-loop AQE-off window can be
-    * measured A/B in one JVM. Production path never touches this. */
-  @volatile private[graft] var propagationAqeOff: Boolean = true
-
   /** @param checkpointDir when set, each propagation round is cut with
     *   a RELIABLE `checkpoint()` into this directory instead of the
     *   in-memory LogicalRDD leaf — the fault-tolerant form a multi-hour
@@ -1090,15 +1075,6 @@ object Dedup {
     // recompute the (expensive) pair lineage — eager-populating once
     // makes every later consumer a cache read
     val edgeCnt = edgesWide.count()
-    // SCALE-ADAPTIVE round partitioning (guide §2: derive partitioning
-    // from input size, never a constant): every per-round frame is
-    // bounded by the edge set, so plan the rounds' shuffles at
-    // ~1M edge rows per task instead of the session default — a tiny
-    // near-dup graph propagates in single-task rounds (the session
-    // default sprayed each KB-sized round over defaultParallelism
-    // tasks), while a 100 TB pair table still gets one task per ~1M
-    // rows. Scoped to THIS loop's plan-time and restored in the
-    // finally below; the returned frame plans lazily after restore.
     val sess = pairs.sparkSession
     // DRIVER FAST PATH (r19 opt, guide §1.2/§5): connected components
     // over a BOUNDED long-id edge set are model-state work — the
@@ -1157,46 +1133,24 @@ object Dedup {
           lit(1L).as("n_members"), lit(true).as("is_canonical"))
       return clusteredLocal.unionByName(singletons).orderBy("doc_id")
     }
-    // The loop's session-conf overrides (round width + AQE off) are
-    // snapshot/restored in the finally below. Serialized under a JVM
-    // lock so two interleaved propagation runs on one session cannot
-    // restore each other's values out of order (ADVICE-r19) — cluster
-    // formation is a bounded model-state loop, not a concurrency
-    // surface, so the serialization costs nothing in practice.
-    propagationConfLock.lock()
-    val prevShufflePartitions = sess.conf.get("spark.sql.shuffle.partitions")
-    // AQE OFF for the rounds (r20 opt, VERDICT-r19 #5): every per-round
-    // frame is bounded by the edge set and the round partitioning below
-    // is already derived from measured size, so AQE has nothing to
-    // coalesce — but it turns each of the ~4 exchanges per round into
-    // its own materialized stage-job (~11 scheduled jobs/round of KB
-    // frames, measured ~33 jobs per 3-round converge). With AQE off a
-    // round is ONE pipelined job. Restored in the finally.
-    val prevAdaptive = sess.conf.get("spark.sql.adaptive.enabled")
-    if (propagationAqeOff)
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
+    // round width derived from the measured edge count (~1M edge rows
+    // per task), never a constant: a tiny graph rounds in one partition,
+    // a 100 TB pair table in one per ~1M rows
     val roundPartitions = math.max(1L,
       math.min(edgeCnt / 1000000L + 1L, 200000L)).toInt
-    sess.conf.set("spark.sql.shuffle.partitions", roundPartitions)
-    // format: off — the try guarantees the conf restore + lock release
-    // no matter how the loop exits; the body keeps its indentation. The
-    // returned frame is CONSTRUCTED inside the try but executes after
-    // the restore — shuffle width and AQE are read at action time, so
-    // only the loop's own actions see the overrides.
+    // format: off — the try guarantees the checkpoint-dir restore no
+    // matter how the loop exits; the body keeps its indentation.
     try {
-    // the edge cache inherits the pair plan's partitioning (one tiny
-    // block per session-default shuffle partition); every round scans
-    // it several times, so when it is far wider than the round
-    // partitioning, re-persist it compacted — each later scan then
-    // launches roundPartitions tasks instead of the pair plan's width
-    val edges =
-      if (edgesWide.rdd.getNumPartitions > roundPartitions * 4) {
-        val e = edgesWide.repartition(roundPartitions)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        e.count()
-        edgesWide.unpersist(blocking = false)
-        e
-      } else edgesWide
+    // the edge cache and each round's in-memory labels are hashed the
+    // same way (src / id into roundPartitions), so a round's edges ⋈
+    // labels join plans no exchange: on a 2.2M-edge chain (local[4])
+    // that is 7.6 instead of 10.6 jobs per round and ~10% less wall
+    // time. The edge cache leaves the pair plan's width (one tiny block
+    // per session-default shuffle partition) once, before the rounds.
+    val edges = edgesWide.repartition(roundPartitions, col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    edges.count()
+    edgesWide.unpersist(blocking = false)
     val touched = edges.select(col("src").as("id")).distinct()
     var labels = touched.select(col("id"), col("id").as("lbl"))
     var prevCached: Option[DataFrame] = None
@@ -1247,7 +1201,7 @@ object Dedup {
       val next = checkpointDir match {
         case Some(_) => next0.checkpoint(eager = false)
         case None => org.apache.spark.sql.graftbridge.CatalystBridge
-          .internalLeaf(next0)
+          .internalLeaf(next0, "id", roundPartitions)
           .persist(StorageLevel.MEMORY_AND_DISK)
       }
       val curSum = Option(
@@ -1289,13 +1243,6 @@ object Dedup {
       // before, the per-run dir stays set — still isolated per run,
       // and its files are reaped by the ContextCleaner.)
       if (checkpointDir.isDefined) prevCheckpointDir.foreach(sc.setCheckpointDir)
-      // restore the session's shuffle partitioning and AQE the same way
-      // — the scale-adaptive round value and the AQE-off window are for
-      // the loop's actions only (the returned frame executes after this
-      // restore)
-      sess.conf.set("spark.sql.shuffle.partitions", prevShufflePartitions)
-      sess.conf.set("spark.sql.adaptive.enabled", prevAdaptive)
-      propagationConfLock.unlock()
     }
     // format: on
   }

@@ -316,13 +316,7 @@ object Similarity {
   def annRecallEval(spark: SparkSession, sfDir: String,
                     nQueries: Int = 10, k: Int = 5): DataFrame = {
     val key = Seq("query_id", "neighbor_id")
-    // persisted + eager: the concurrent variant branches below all scan
-    // the O(N²) truth (Branches scaladoc)
-    val truth = TransientCaches.register(
-      annBruteforce(spark, sfDir, nQueries, k)
-        .select(key.head, key.tail: _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    truth.count()
+    val truth = annBruteforce(spark, sfDir, nQueries, k).select(key.head, key.tail: _*)
     def one(variant: String, edges: DataFrame): DataFrame = {
       val hits = edges.select(key.head, key.tail: _*).join(truth, key)
       truth.agg(count(lit(1)).as("n_truth"))
@@ -330,14 +324,10 @@ object Similarity {
         .select(lit(variant).as("variant"), col("n_truth"), col("n_hit"),
           round(col("n_hit") / col("n_truth"), 4).as("recall"))
     }
-    // independent 1-row rungs — concurrent branch jobs (Branches
-    // scaladoc; same rows as the sequential union)
-    Branches.unionAllConcurrent(Seq(
-        one("ann_ivf_static",
-          annIvfStatic(spark, sfDir, nQueries = nQueries, k = k)),
-        one("ann_lsh", annLsh(spark, sfDir, nQueries = nQueries, k = k)),
-        one("ann_sign_sketch",
-          annSignSketch(spark, sfDir, nQueries = nQueries, k = k))))
+    one("ann_ivf_static", annIvfStatic(spark, sfDir, nQueries = nQueries, k = k))
+      .unionByName(one("ann_lsh", annLsh(spark, sfDir, nQueries = nQueries, k = k)))
+      .unionByName(one("ann_sign_sketch",
+        annSignSketch(spark, sfDir, nQueries = nQueries, k = k)))
       .orderBy("variant")
   }
 
@@ -356,35 +346,21 @@ object Similarity {
                     k: Int = 5): DataFrame = {
     val cents = staticCentroids()
     val v = vectors(spark, sfDir)
-    // CONCURRENT BRANCH JOBS (r20 opt, guide §2.6 / VERDICT-r19 #4):
-    // the 16 per-probe branches are independent 1-row aggregates, but a
-    // single union action ran them as ~90 SEQUENTIAL single-task AQE
-    // stage-jobs — mostly idle cores at any parallelism. Each branch is
-    // now submitted as its own job from a small driver thread pool so a
-    // branch's tail back-fills the scheduler with the next branch's
-    // tasks. With separate jobs the old single-action ReusedExchange
-    // sharing of the truth subplan no longer applies, so the shared
-    // frames (brute truth, cell populations) are persisted once —
-    // bounded model-state tables, freed at the session boundary. The
-    // branches therefore execute at construction time (the mmrRerank
-    // eager-boundary doctrine) and the returned frame is their rows.
-    // Row content and schema are UNCHANGED (same branch plans, same
-    // values — each branch is deterministic).
-    import org.apache.spark.storage.StorageLevel
-    val truth = graft.operators.TransientCaches.register(
-      annBruteforce(spark, sfDir, nQueries, k)
-        .select(col("query_id"), col("neighbor_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    truth.count()
+    // NOTE (r19 opt round): persisting this truth across the 16
+    // branches was tried and MEASURED NEUTRAL-TO-WORSE — the single
+    // final action already shares the identical truth subplan across
+    // branches via ReusedExchange (the crossPairsFrom doctrine), so a
+    // cache only adds a materialization barrier + per-branch cache
+    // scans (90 -> 170 jobs, wall unchanged at sf0.1).
+    val truth = annBruteforce(spark, sfDir, nQueries, k)
+      .select(col("query_id"), col("neighbor_id"))
     val key = Seq("query_id", "neighbor_id")
     def cellsOf(n: Int) =
       graft.functions.VectorQuantize.nearestCells(col("embedding"), cents, n)
-    val cellCounts = graft.operators.TransientCaches.register(v
+    val cellCounts = v
       .select(element_at(cellsOf(1), 1).as("cell"))
       .groupBy("cell").agg(count(lit(1)).as("cnt"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    cellCounts.count()
-    def branch(p: Int): DataFrame = {
+    (1 to cents.length).map { p =>
       val edges = serveFirst(v, nQueries, Some(cents), p, Exact, TopK(k))
         .select(key.head, key.tail: _*)
       val probes = v.filter(col("vec_id") < nQueries)
@@ -399,10 +375,7 @@ object Similarity {
         .select(lit(p).as("n_probe"), col("n_truth"), col("n_hit"),
           round(col("n_hit") / col("n_truth"), 4).as("recall"),
           col("n_candidates"))
-    }
-    graft.operators.Branches
-      .unionAllConcurrent((1 to cents.length).map(branch))
-      .orderBy("n_probe")
+    }.reduce(_ unionByName _).orderBy("n_probe")
   }
 
   /** DuckDB oracle for [[ivfProbeSweep]]: the static-IVF CTE machinery
@@ -505,10 +478,7 @@ object Similarity {
         Exact.score.as("cos"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     TransientCaches.register(rer)
-    // eager: the concurrent factor branches below scan both caches
-    // (Branches scaladoc — lazy sibling scans recompute the lineage)
-    truth.count(); rer.count()
-    Branches.unionAllConcurrent(factors.map { f =>
+    factors.map { f =>
       val edges = rankTopK(rer.filter(col("srnk") <= f * k)
         .select("query_id", "neighbor_id", "cos"), k)
         .select("query_id", "neighbor_id")
@@ -520,7 +490,7 @@ object Similarity {
             .as("n_rerank"),
           col("n_truth"), col("n_hit"),
           round(col("n_hit") / col("n_truth"), 4).as("recall"))
-    }).orderBy("shortlist_factor")
+    }.reduce(_ unionByName _).orderBy("shortlist_factor")
   }
 
   /** DuckDB oracle for [[pqShortlistSweep]]: the [[pqTrainedOracle]]
@@ -659,10 +629,7 @@ object Similarity {
         Exact.score.as("cos"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     TransientCaches.register(rer)
-    // eager: the concurrent factor branches below scan both caches
-    // (Branches scaladoc — lazy sibling scans recompute the lineage)
-    truth.count(); rer.count()
-    Branches.unionAllConcurrent(factors.map { f =>
+    factors.map { f =>
       val edges = rankTopK(rer.filter(col("srnk") <= f * k)
         .select("query_id", "neighbor_id", "cos"), k)
         .select("query_id", "neighbor_id")
@@ -674,7 +641,7 @@ object Similarity {
         .select(lit(f).as("shortlist_factor"), col("n_rerank"),
           col("n_truth"), col("n_hit"),
           round(col("n_hit") / col("n_truth"), 4).as("recall"))
-    }).orderBy("shortlist_factor")
+    }.reduce(_ unionByName _).orderBy("shortlist_factor")
   }
 
   /** DuckDB oracle for [[pqShortlistSweepResidual]]: the
@@ -819,20 +786,9 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     TransientCaches.register(truth)
-    // eager: the concurrent branches below share this cache (Branches
-    // scaladoc — lazy sibling scans would each re-pay the O(N²) truth)
-    truth.count()
-    // OVERLAPPED TRAININGS (r20 opt, guide §2.6): one codebook training
-    // per swept size, independent and deterministic — run them as
-    // concurrent job streams over the materialized train cache.
-    val models = withTrainCache(v) { vc =>
-      vc.count()
-      Branches.runConcurrent[AnyRef](
-        sizes.map(kk => () =>
-          (kk -> trainPqCodebooks(vc, k = kk)): AnyRef))
-        .map(_.asInstanceOf[(Int, Array[Array[Array[Double]]])])
-    }
-    Branches.unionAllConcurrent(models.map { case (kk, cbs) =>
+    val models = withTrainCache(v)(vc =>
+      sizes.map(kk => kk -> trainPqCodebooks(vc, k = kk)))
+    models.map { case (kk, cbs) =>
       // ceil, not round: a 10-codeword codebook needs 4 bits to
       // address, and understating the bill defeats the table's purpose
       val bits = 32 - Integer.numberOfLeadingZeros(kk - 1)
@@ -852,7 +808,7 @@ object Similarity {
           lit(cbs.length * bits).as("bits_per_vector"),
           col("mean_mse6"), col("n_truth"), col("n_hit"),
           round(col("n_hit") / col("n_truth"), 4).as("recall"))
-    }).orderBy("codebook_k")
+    }.reduce(_ unionByName _).orderBy("codebook_k")
   }
 
   /** DuckDB oracle for [[pqBitsSweep]]: one trained codebook set per
@@ -972,33 +928,19 @@ object Similarity {
   def annRecallEvalPq(spark: SparkSession, sfDir: String,
                       nQueries: Int = 10, k: Int = 5): DataFrame = {
     val v = vectors(spark, sfDir)
-    // OVERLAPPED TRAININGS (r20 opt, guide §2.6): three independent
-    // training streams — (k-means → residual PQ, which needs the
-    // centroids), OPQ, and raw PQ — each a deterministic driver loop of
-    // small jobs over the materialized train cache.
     val (cents, cbs, cbsR, rO, cbsO) = withTrainCache(v) { vc =>
-      vc.count()
-      val trained = Branches.runConcurrent[AnyRef](Seq(
-        () => {
-          val cents = trainCentroids(vc, 16)
-          (cents, trainPqCodebooks(residualAssigned(vc, cents)
-            .select(col("vec_id"), col("res").as("embedding"))))
-        },
-        () => trainOpqRotation(vc),
-        () => trainPqCodebooks(vc)))
-      val (cents, cbsR) = trained(0)
-        .asInstanceOf[(Array[Array[Double]], Array[Array[Array[Double]]])]
-      val (rO, cbsO) = trained(1)
-        .asInstanceOf[(Array[Array[Double]], Array[Array[Array[Double]]])]
-      (cents, trained(2).asInstanceOf[Array[Array[Array[Double]]]],
-        cbsR, rO, cbsO)
+      val cents = trainCentroids(vc, 16)
+      val (rO, cbsO) = trainOpqRotation(vc)
+      (cents, trainPqCodebooks(vc),
+        trainPqCodebooks(residualAssigned(vc, cents)
+          .select(col("vec_id"), col("res").as("embedding"))),
+        rO, cbsO)
     }
     val key = Seq("query_id", "neighbor_id")
     val truth = annBruteforce(spark, sfDir, nQueries, k)
       .select(key.head, key.tail: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     TransientCaches.register(truth)
-    truth.count()
     def one(variant: String, edges: DataFrame): DataFrame = {
       val hits = edges.select(key.head, key.tail: _*).join(truth, key)
       truth.agg(count(lit(1)).as("n_truth"))
@@ -1006,19 +948,17 @@ object Similarity {
         .select(lit(variant).as("variant"), col("n_truth"), col("n_hit"),
           round(col("n_hit") / col("n_truth"), 4).as("recall"))
     }
-    // six independent 1-row rungs over the persisted truth — concurrent
-    // branch jobs (Branches scaladoc)
-    Branches.unionAllConcurrent(Seq(
-        one("ann_pq", serveFirst(v, nQueries, None, 0, Pq(cbs), TopK(k))),
-        one("ann_pq_opq", serveFirst(v, nQueries, None, 0,
-          Pq(cbsO, rotation = Some(rO)), TopK(k))),
-        one("ann_ivfpq_opq", serveFirst(v, nQueries, Some(cents), 4,
-          Pq(cbsO, rotation = Some(rO)), TopK(k))),
-        one("ann_ivfpq", serveFirst(v, nQueries, Some(cents), 4, Pq(cbs),
-          TopK(k))),
-        one("ann_ivfpq_residual", serveFirst(v, nQueries, Some(cents), 4,
-          Pq(cbsR, Some(cents)), TopK(k))),
-        one("ann_sq8", serveFirst(v, nQueries, None, 0, Sq8, TopK(k)))))
+    one("ann_pq", serveFirst(v, nQueries, None, 0, Pq(cbs), TopK(k)))
+      .unionByName(one("ann_pq_opq", serveFirst(v, nQueries, None, 0,
+        Pq(cbsO, rotation = Some(rO)), TopK(k))))
+      .unionByName(one("ann_ivfpq_opq", serveFirst(v, nQueries, Some(cents),
+        4, Pq(cbsO, rotation = Some(rO)), TopK(k))))
+      .unionByName(one("ann_ivfpq", serveFirst(v, nQueries, Some(cents), 4,
+        Pq(cbs), TopK(k))))
+      .unionByName(one("ann_ivfpq_residual", serveFirst(v, nQueries,
+        Some(cents), 4, Pq(cbsR, Some(cents)), TopK(k))))
+      .unionByName(one("ann_sq8", serveFirst(v, nQueries, None, 0, Sq8,
+        TopK(k))))
       .orderBy("variant")
   }
 
@@ -6425,22 +6365,8 @@ object Similarity {
       .withColumn("nrm", l2norm(col("embedding")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     TransientCaches.register(w)
-    // eager: the two concurrent trainings below (and later the four
-    // concurrent rungs) scan this cache — lazy, each concurrent first
-    // scan would recompute the whitening lineage (sibling-scan gotcha)
-    w.count()
-    // OVERLAPPED TRAININGS (r20 opt, guide §2.6): the whitened k-means
-    // and the whitened OPQ/PQ training are independent driver loops
-    // issuing sequential small jobs — run them as two concurrent job
-    // streams so one's scheduling gaps are back-filled by the other.
-    // Both are deterministic and read the materialized cache; results
-    // are bit-identical to the sequential order.
-    val trained = Branches.runConcurrent[AnyRef](Seq(
-      () => trainCentroids(w, 16),
-      () => trainOpqRotation(w)))
-    val centsW = trained(0).asInstanceOf[Array[Array[Double]]]
-    val (rW, cbsWO) = trained(1)
-      .asInstanceOf[(Array[Array[Double]], Array[Array[Array[Double]]])]
+    val centsW = trainCentroids(w, 16)
+    val (rW, cbsWO) = trainOpqRotation(w)
     val wq = w.filter(col("vec_id") < nQueries)
     val key = Seq("query_id", "neighbor_id")
     val truth = rankTopK(
@@ -6455,7 +6381,6 @@ object Similarity {
       .select(key.head, key.tail: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     TransientCaches.register(truth)
-    truth.count()
     def one(variant: String, edges: DataFrame): DataFrame = {
       val hits = edges.select(key.head, key.tail: _*).join(truth, key)
       truth.agg(count(lit(1)).as("n_truth"))
@@ -6463,15 +6388,13 @@ object Similarity {
         .select(lit(variant).as("variant"), col("n_truth"), col("n_hit"),
           round(col("n_hit") / col("n_truth"), 4).as("recall"))
     }
-    // the four rungs are independent 1-row aggregates over persisted
-    // shared state — concurrent branch jobs (Branches scaladoc)
-    Branches.unionAllConcurrent(Seq(
-        one("brute_raw", annBruteforce(spark, sfDir, nQueries, k)),
-        one("ivf_whitened", serveFrames(w, wq, Some(centsW), 4, Exact,
-          TopK(k))),
-        one("sq8_whitened", serveFirst(w, nQueries, None, 0, Sq8, TopK(k))),
-        one("pq_opq_whitened", serveFirst(w, nQueries, None, 0,
-          Pq(cbsWO, rotation = Some(rW)), TopK(k)))))
+    one("brute_raw", annBruteforce(spark, sfDir, nQueries, k))
+      .unionByName(one("ivf_whitened", serveFrames(w, wq, Some(centsW), 4,
+        Exact, TopK(k))))
+      .unionByName(one("sq8_whitened", serveFirst(w, nQueries, None, 0, Sq8,
+        TopK(k))))
+      .unionByName(one("pq_opq_whitened", serveFirst(w, nQueries, None, 0,
+        Pq(cbsWO, rotation = Some(rW)), TopK(k))))
       .orderBy("variant")
   }
 

@@ -66,7 +66,7 @@ class CodegenSpec extends SparkSpec {
     // that evicted every round from whole-stage codegen.
     val labels0 = Seq((1L, 1L), (2L, 1L), (3L, 3L)).toDF("id", "lbl")
     val leaf = org.apache.spark.sql.graftbridge.CatalystBridge
-      .internalLeaf(labels0)
+      .internalLeaf(labels0, "id", 2)
     val hop = leaf.groupBy("id").agg(min("lbl").as("lbl"))
     val round = hop.as("h")
       .join(hop.select(col("id").as("lid"), col("lbl").as("lbl2")).as("g"),

@@ -260,6 +260,45 @@ class DedupSpec extends SparkSpec {
     assert(wrote > 0, "reliable checkpoint must write files")
   }
 
+  test("dedup_clusters: the distributed loop over hashed label leaves " +
+      "equals the driver union-find") {
+    import spark.implicits._
+    // int ids skip the long-id driver fast path, so the same graph runs
+    // the in-memory distributed loop, whose per-round label leaf declares
+    // its hash partitioning (joins and aggregates on id plan no exchange)
+    val edges = (0 until 300).filter(_ % 5 != 0)
+      .map(i => (i % 200, (i * 7 + 3) % 200))
+      .filter { case (a, b) => a != b } ++ Seq((250, 251), (251, 252))
+    val nodes = (0 until 260).toDF("doc_id")
+    val pairs = edges.toDF("id_a", "id_b")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.get(0).toString.toLong, r.get(1).toString.toLong,
+        r.getLong(2), r.getBoolean(3))).toSeq
+    val distributed = rows(Dedup.clustersFromPairs(nodes, pairs, 40))
+    assert(Dedup.lastPropagationRounds > 0, "must run the distributed loop")
+    val driver = rows(Dedup.clustersFromPairs(
+      nodes.select(col("doc_id").cast("long")),
+      pairs.select(col("id_a").cast("long"), col("id_b").cast("long")), 40))
+    assert(Dedup.lastPropagationRounds == 0, "must take the driver path")
+    assert(distributed == driver)
+    assert(distributed.map(_._2).distinct.size < 260, "graph must merge")
+  }
+
+  test("internalLeaf: its declared hash partitioning holds — an aggregate " +
+      "on the key plans no exchange and sees each key once") {
+    import spark.implicits._
+    val df = (0 until 1000).map(i => (i % 97, i)).toDF("id", "v")
+      .repartition(4)
+    val leaf = org.apache.spark.sql.graftbridge.CatalystBridge
+      .internalLeaf(df, "id", 3)
+    val agg = leaf.groupBy("id").agg(count(lit(1)).as("n"))
+    val plan = agg.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"no exchange expected:\n$plan")
+    val got = agg.collect().map(r => (r.getInt(0), r.getLong(1)))
+    assert(got.map(_._1).sorted.toSeq == (0 until 97))
+    assert(got.map(_._2).sum == 1000L)
+  }
+
   test("dedup_threshold_sweep: counts are monotone non-increasing in tau") {
     val rows = Dedup.dedupThresholdSweep(spark, sf).collect()
       .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2)))

@@ -706,8 +706,10 @@ class SimilaritySpec extends SparkSpec {
 
   /** Spark jobs `body` submits from this thread: a listener counts the
     * job starts of a private job group up to a sentinel job of the same
-    * group (listener events arrive in submission order). */
-  private def jobsSubmitted(body: => Unit): Int = {
+    * group (listener events arrive in submission order), except those
+    * whose call site `ignore` accepts. */
+  private def jobsSubmitted(body: => Unit,
+                            ignore: String => Boolean = _ => false): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val group = s"jobs-${java.util.UUID.randomUUID}"
@@ -717,7 +719,8 @@ class SimilaritySpec extends SparkSpec {
         if (e.properties != null &&
             e.properties.getProperty("spark.jobGroup.id") == group)
           seen.add(String.valueOf(
-            e.properties.getProperty("spark.job.description")))
+            e.properties.getProperty("spark.job.description")) + "\t" +
+            e.stageInfos.maxBy(_.stageId).name)
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "body")
@@ -729,8 +732,8 @@ class SimilaritySpec extends SparkSpec {
           seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
         .takeWhile { d =>
           assert(d != null, "the sentinel job never reached the listener")
-          d != "sentinel"
-        }.size
+          !d.startsWith("sentinel\t")
+        }.count(d => !ignore(d.split("\t", 2)(1)))
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -1562,6 +1565,48 @@ class SimilaritySpec extends SparkSpec {
     assert(full._4 == 1.0, full)
     val n = Tables.load(spark, sf, "embeddings").count()
     assert(full._5 == 10L * (n - 1), s"${full._5} vs ${10L * (n - 1)}")
+  }
+
+  test("sweeps: every sweep/eval frame is its lazy branch Union, not " +
+      "pre-collected rows; the training-free ones run no job before the " +
+      "action") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+      LogicalPlan, Union}
+    import graft.operators.Dedup
+    def arms(p: LogicalPlan): Int = p match {
+      case u: Union => u.children.map(arms).sum
+      case _ => 1
+    }
+    val nCells = Similarity.staticCentroids().length
+    Seq[(String, () => DataFrame, Int)](
+      ("ann_recall_eval", () => Similarity.annRecallEval(spark, sf), 3),
+      ("ivf_probe_sweep", () => Similarity.ivfProbeSweep(spark, sf), nCells),
+      ("pq_shortlist_sweep", () => Similarity.pqShortlistSweep(spark, sf), 4),
+      ("pq_shortlist_sweep_residual",
+        () => Similarity.pqShortlistSweepResidual(spark, sf), 4),
+      ("pq_bits_sweep", () => Similarity.pqBitsSweep(spark, sf), 3),
+      ("ann_recall_eval_pq", () => Similarity.annRecallEvalPq(spark, sf), 6),
+      ("whiten_recall_eval", () => Similarity.whitenRecallEval(spark, sf), 4),
+      ("dedup_eval_sweep", () => Dedup.dedupEvalSweep(spark, sf), 3)
+    ).foreach { case (name, build, branches) =>
+      val plan = build().queryExecution.analyzed
+      assert(plan.collectFirst { case l: LocalRelation => l }.isEmpty,
+        s"$name: the frame must not be a relation of pre-collected rows:\n" +
+          plan)
+      val top = plan.collectFirst { case u: Union => u }
+      assert(top.map(arms).contains(branches),
+        s"$name: the plan must union its $branches branches:\n$plan")
+    }
+    Seq[(String, () => DataFrame)](
+      ("ann_recall_eval", () => Similarity.annRecallEval(spark, sf)),
+      ("ivf_probe_sweep", () => Similarity.ivfProbeSweep(spark, sf))
+    ).foreach { case (name, build) =>
+      // spark.read.parquet reads each table's footer schema in a job of
+      // its own; that is table access, not query work
+      assert(jobsSubmitted(build(), _.startsWith("parquet at ")) == 0,
+        s"$name: construction must submit no Spark job")
+    }
   }
 
   test("embedding_pca: recovers a planted dominant direction exactly") {

@@ -40,28 +40,48 @@ class WindowLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     "operators/Quality.scala" -> 3,
     "operators/Analytics.scala" -> 1)
 
-  test("every unpartitioned Window chain is on the bounded allowlist") {
+  /** (path relative to src/main/scala/graft → text) of every Scala
+    * source under `sub`. */
+  private def sources(sub: String = ""): Map[String, String] = {
     val root = Paths.get("src/main/scala/graft")
+    val walk = Files.walk(root.resolve(sub))
+    try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString ->
+        new String(Files.readAllBytes(p), "UTF-8"))
+      .toMap
+    finally walk.close()
+  }
+
+  test("every unpartitioned Window chain is on the bounded allowlist") {
     val pat = java.util.regex.Pattern.compile(
       """Window\s*\.\s*(orderBy|rowsBetween|rangeBetween)\(""")
-    val walk = Files.walk(root)
-    val found =
-      try walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .flatMap { p =>
-          val text = new String(Files.readAllBytes(p), "UTF-8")
-          // frame-bound constants (Window.unboundedPreceding etc.) are
-          // not chain starts; the pattern above already excludes them
-          val m = pat.matcher(text)
-          var n = 0
-          while (m.find()) n += 1
-          if (n > 0) Some(root.relativize(p).toString -> n) else None
-        }.toMap
-      finally walk.close()
+    val found = sources().flatMap { case (path, text) =>
+      // frame-bound constants (Window.unboundedPreceding etc.) are
+      // not chain starts; the pattern above already excludes them
+      val m = pat.matcher(text)
+      var n = 0
+      while (m.find()) n += 1
+      if (n > 0) Some(path -> n) else None
+    }
     assert(found == allow,
       s"unpartitioned Window sites changed.\n  found: $found\n  " +
         s"allow: $allow\nA new single-partition window must either be " +
         "partitioned or argued bounded and added to the allowlist " +
         "with its justification.")
+  }
+
+  /** Operators run inside the caller's session and must leave it as
+    * they found it: a session-conf write is visible to every other
+    * query planned meanwhile in that session, and a query whose
+    * branches were collected eagerly on driver threads hides its plan
+    * and outlives a failure. Both are rejected at the source. */
+  test("no operator writes session conf or runs branches eagerly") {
+    val offending = sources("operators").collect {
+      case (path, text) if text.contains("conf.set(") ||
+          text.contains("Branches") => path
+    }
+    assert(offending.isEmpty,
+      s"operators writing session conf or using Branches: $offending")
   }
 }
