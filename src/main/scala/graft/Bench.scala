@@ -272,8 +272,11 @@ object Bench {
   }
 
   /** Cumulative task-metrics listener: executor CPU, task-attributed GC
-    * and shuffle bytes across every completed task. Per-query deltas of
-    * these three adjudicate a wall-time outlier from the tail alone: a
+    * and shuffle bytes across every completed task, plus the jobs,
+    * stages, tasks and summed task time that tell fixed scheduling cost
+    * from data cost (the per-query stderr line prints their deltas).
+    * Per-query deltas of the first three adjudicate a wall-time
+    * outlier from the tail alone: a
     * 17x wall number with flat CPU/GC/shuffle is box load or I/O wait
     * (environment), NOT a plan regression — exactly the distinction the
     * r10 dedup_survivorship 134s mystery lacked. Listener events are
@@ -286,8 +289,18 @@ object Bench {
     import java.util.concurrent.atomic.AtomicLong
     val cpuNs = new AtomicLong; val taskGcMs = new AtomicLong
     val shufBytes = new AtomicLong
+    val jobs = new AtomicLong; val stages = new AtomicLong
+    val tasks = new AtomicLong; val taskMs = new AtomicLong
+    override def onJobStart(
+        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageCompleted(
+        st: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+      stages.incrementAndGet()
     override def onTaskEnd(
         te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      if (te.taskInfo != null) taskMs.addAndGet(te.taskInfo.duration)
       val m = te.taskMetrics
       if (m != null) {
         cpuNs.addAndGet(m.executorCpuTime)
@@ -298,6 +311,8 @@ object Bench {
     }
     def snapshot: (Long, Long, Long) =
       (cpuNs.get, taskGcMs.get, shufBytes.get)
+    def scheduling: Seq[Long] =
+      Seq(jobs.get, stages.get, tasks.get, taskMs.get)
   }
 
   /** Runs `df` to its full result and discards the rows: a `noop`-sink
@@ -400,6 +415,7 @@ object Bench {
         annPre = jvmHealth(); annPreC = jvmHealthCompact(); annGcPre = gcMs()
       }
       val pre = acc.snapshot
+      val preSched = acc.scheduling
       val t0 = System.nanoTime()
       val res =
         try { materialize(SparkEntry.queries(name)(spark, sfDir)); None }
@@ -425,12 +441,14 @@ object Bench {
       // (observed 3-4x on the export round-trips at the end of a full
       // sweep). Equivalent to spark.cleaner.periodicGC on a cluster.
       System.gc()
-      locally {
-        val post = acc.snapshot
-        queryAdj(name) = (post._1 - pre._1, post._2 - pre._2,
-          post._3 - pre._3)
-      }
-      System.err.println(f"[bench] $name%-24s ${t}%8.2fs  ${jvmHealth()}")
+      val post = acc.snapshot
+      queryAdj(name) = (post._1 - pre._1, post._2 - pre._2,
+        post._3 - pre._3)
+      val Seq(jobs, stages, tasks, taskMs) =
+        acc.scheduling.zip(preSched).map { case (a, b) => a - b }
+      System.err.println(f"[bench] $name%-24s ${t}%8.2fs  jobs=$jobs%4d " +
+        f"stages=$stages%5d tasks=$tasks%6d " +
+        f"taskTime=${taskMs / 1000.0}%8.1fs  ${jvmHealth()}")
       (name, t, res)
     }
     // OUTLIER SELF-RETRY: re-run up to 3 suspicious successful queries

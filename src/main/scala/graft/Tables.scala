@@ -37,9 +37,18 @@ object Tables {
   }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = readParquet(spark, s"$sfDir/$name.parquet")
     if (name == "events") normalizeTs(df) else df
   }
+
+  /** The parquet at `path`, read under its schema inferred once per
+    * version of its files ([[operators.ArtifactState]]): inference is a
+    * Spark job of its own. The read itself lists the files per call, so
+    * files added since are always seen. */
+  private[graft] def readParquet(spark: SparkSession,
+                                 path: String): DataFrame =
+    spark.read.schema(operators.ArtifactState.ofInputs(spark, "schema",
+      Seq(path), ())(spark.read.parquet(path).schema)).parquet(path)
 
   /** The session settings every graft entrypoint (Verify/Bench/tests)
     * applies: UTC for oracle parity, nanos-tolerant parquet reads, AQE on. */

@@ -3,20 +3,24 @@ package graft.operators
 import java.util.concurrent.{ExecutionException, FutureTask}
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Per-JVM registry of state derived from an artifact or a training
   * input: model arrays collected off an index member, the parquet
-  * schema of a member read, trained models. Such state changes only
-  * when its input is rewritten, so a serving path resolves it once per
-  * input version instead of re-collecting it (Spark jobs) per call.
+  * schema of a member read, trained models, and directory artifacts
+  * built from a corpus (verified pairs, kNN edges, BM25 stats,
+  * tokenizer models, sketch states). Such state changes only when its
+  * input is rewritten, so a caller resolves it once per input version
+  * instead of re-building it (Spark jobs) per call.
   *
-  *  - Keyed by whatever pins the input version: for an artifact member,
-  *    (kind, member path, fingerprint) where the fingerprint hashes the
-  *    sorted (path, length, mtime) of every file under the member —
-  *    Spark names every part file with a per-write UUID, so any rewrite
-  *    changes it, even under coarse mtimes.
+  *  - Keyed by whatever pins the input version: (kind, qualified input
+  *    paths, [[fingerprint]] of their files, params). Spark names every
+  *    part file with a per-write UUID, so any rewrite changes the
+  *    fingerprint, even under coarse mtimes.
   *  - Single-flight: each key maps to a [[FutureTask]] run by the first
   *    caller outside the map's lock, so concurrent first touches build
   *    once and a build may itself resolve OTHER keys (the OPQ trainer
@@ -56,29 +60,61 @@ private[graft] object ArtifactState {
     }
   }
 
-  /** `build` over the artifact member at `path`, once per version of
-    * the member's files; a missing member is not cached (`build` runs
-    * and reports it). */
-  def ofMember[T <: AnyRef](spark: SparkSession, kind: String, path: String)
+  /** `build` over the files under `inputs`, once per (kind, params)
+    * and version of those files. A missing input keys as its path
+    * alone, so its build (which fails, and is not cached) re-runs until
+    * the input exists, and then keys by the input's files. */
+  def ofInputs[T <: AnyRef](spark: SparkSession, kind: String,
+                            inputs: Seq[String], params: Any)
                            (build: => T): T = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) build
-    else {
-      val q = fs.makeQualified(p)
-      memo((kind, q.toString, fingerprint(fs, q)))(build)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val qualified = inputs.map { s =>
+      val p = new Path(s)
+      p.getFileSystem(conf).makeQualified(p)
     }
+    memo((kind, qualified.map(_.toString), fingerprint(conf, qualified),
+      params))(build)
   }
 
-  /** Hash of the sorted (path, length, mtime) of every file under `p`.
+  /** Scopes every directory [[dirOf]] writes to this JVM: an artifact
+    * never outlives the process that built it. */
+  private lazy val namespace = java.util.UUID.randomUUID().toString
+  private val dirsWritten = new AtomicLong
+
+  /** The directory artifact `write` builds from the files under
+    * `inputs`, once per (kind, params) and version of those files. Each
+    * build writes a directory of its own, so a directory returned
+    * earlier is never overwritten: after an LRU eviction or an input
+    * rewrite, lazy frames over the old one still read what they
+    * planned. */
+  def dirOf(spark: SparkSession, kind: String, inputs: Seq[String],
+            params: Any)(write: String => Unit): String =
+    ofInputs(spark, kind, inputs, params) {
+      val dir = ExportImport.scratch(s"$kind/$namespace/" +
+        ExportImport.pathSlug(s"$params-${inputs.mkString(",")}") +
+        s"-${dirsWritten.incrementAndGet()}")
+      write(dir)
+      dir
+    }
+
+  /** Hash of the sorted (path, length, mtime) of every file under
+    * `paths` (a path may name a file or a directory); "" when there are
+    * none. A path that cannot be listed contributes itself.
     * `listStatus`, not `listFiles`: the located form looks up block
     * locations and permissions per file. */
-  private def fingerprint(fs: FileSystem, p: Path): String = {
-    def walk(d: Path): Seq[String] = fs.listStatus(d).toSeq.flatMap { st =>
-      if (st.isDirectory) walk(st.getPath)
-      else Seq(s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
+  def fingerprint(conf: Configuration, paths: Seq[Path]): String =
+    if (paths.isEmpty) ""
+    else {
+      def walk(fs: FileSystem, d: Path): Seq[String] =
+        fs.listStatus(d).toSeq.flatMap { st =>
+          if (st.isDirectory) walk(fs, st.getPath)
+          else Seq(s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
+        }
+      val files = paths.flatMap { p =>
+        try walk(p.getFileSystem(conf), p)
+        catch { case NonFatal(_) => Seq(p.toString) }
+      }
+      java.util.UUID.nameUUIDFromBytes(
+        files.sorted.mkString("\n").getBytes("UTF-8")).toString
     }
-    java.util.UUID.nameUUIDFromBytes(
-      walk(p).sorted.mkString("\n").getBytes("UTF-8")).toString
-  }
 }

@@ -1184,18 +1184,11 @@ object Curation {
       .orderBy(col("score").desc, col("doc_id")).limit(k)
   }
 
-  /** Per-session registry of BM25 stats artifacts (one corpus pass per
-    * sfDir per JVM — the [[Dedup.sharedVerifiedPairsDir]] pattern). */
-  private val sharedBm25Dirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private lazy val bm25Ns = java.util.UUID.randomUUID().toString
+  /** The session's BM25 stats artifact: one corpus pass per version of
+    * the corpus's documents ([[ArtifactState]]). */
   def sharedBm25StatsDir(spark: SparkSession, sfDir: String): String =
-    sharedBm25Dirs.computeIfAbsent(sfDir, { _ =>
-      val dir = ExportImport.scratch(
-        s"bm25-stats/$bm25Ns/${ExportImport.pathSlug(sfDir)}")
-      bm25StatsToDir(spark, sfDir, dir)
-      dir
-    })
+    ArtifactState.dirOf(spark, "bm25-stats",
+      Seq(s"$sfDir/documents.parquet"), ())(bm25StatsToDir(spark, sfDir, _))
 
   /** §2 #248 — BM25 IN ITS SERVING FORM: the #109 query served from
     * the session-shared stats artifact. Equal to [[bm25Search]] on the

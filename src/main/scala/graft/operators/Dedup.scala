@@ -206,20 +206,24 @@ object Dedup {
     dedupEvalFrom(docShingles(spark, sfDir).filter(col("doc_id") % 5 === 0),
       tau, bands, rowsPerBand)
 
-  /** Banded-bucket candidate pairs for the eval family: KR base hash
-    * mod p (so a*x+b stays under 2^62, same bound the murmur path
-    * relies on), the codegen'd 64-perm signature, then the b×r band
-    * bucket self-join — the production candidate generation replayed
-    * with SQL-expressible hashes. */
-  private def krBandCandidates(docs: DataFrame, bands: Int,
-                               rowsPerBand: Int): DataFrame = {
+  /** (doc_id, sig) for the eval family: KR base hash mod p (so
+    * a*x+b stays under 2^62, same bound the murmur path relies on),
+    * then the codegen'd 64-perm signature — the production signature
+    * replayed with SQL-expressible hashes. */
+  private def krSignatures(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftbridge.CatalystBridge
-    require(bands * rowsPerBand == perms.length,
-      s"bands*rowsPerBand must equal ${perms.length} permutations")
     val hr = CatalystBridge.column(graft.functions.KrHashArray(
       CatalystBridge.expression(col("sh")), graft.functions.KrHashF.B, P))
-    val sigs = docs.select(col("doc_id"),
+    docs.select(col("doc_id"),
       graft.functions.MinHash.minhashSignature(hr, perms, P).as("sig"))
+  }
+
+  /** Banded-bucket candidate pairs over [[krSignatures]]: the b×r band
+    * bucket self-join the production candidate generation runs. */
+  private def bandCandidates(sigs: DataFrame, bands: Int,
+                             rowsPerBand: Int): DataFrame = {
+    require(bands * rowsPerBand == perms.length,
+      s"bands*rowsPerBand must equal ${perms.length} permutations")
     val bnd = sigs.select(col("doc_id"), posexplode(expr(
       s"""transform(sequence(0, $bands - 1),
             i -> array_join(transform(slice(sig, i * $rowsPerBand + 1,
@@ -253,7 +257,7 @@ object Dedup {
   private[graft] def dedupEvalFrom(docsWithShingles: DataFrame, tau: Double,
                                    bands: Int, rowsPerBand: Int): DataFrame = {
     val docs = docsWithShingles.filter(size(col("sh")) > 0)
-    evalRow(krBandCandidates(docs, bands, rowsPerBand),
+    evalRow(bandCandidates(krSignatures(docs), bands, rowsPerBand),
       dedupNgramExactjoinFrom(docs, tau).select("id_a", "id_b"))
   }
 
@@ -262,8 +266,8 @@ object Dedup {
     * pipeline owner reads to pick b×r before committing the 100 TB
     * run (more bands = higher recall, lower precision; the sweep
     * quantifies the trade on THIS corpus). The expensive exact-truth
-    * prefix join runs ONCE and is cached; signatures share one pass
-    * per geometry over the cached slice. */
+    * prefix join runs ONCE and is cached, and so are the slice's
+    * signatures: every geometry bands the same cached (doc_id, sig). */
   def dedupEvalSweep(spark: SparkSession, sfDir: String,
                      tau: Double = 0.5): DataFrame = {
     import org.apache.spark.storage.StorageLevel
@@ -276,8 +280,10 @@ object Dedup {
       dedupNgramExactjoinFrom(docs, tau).select("id_a", "id_b")
         .persist(StorageLevel.MEMORY_AND_DISK))
     truth.count()
+    val sigs = TransientCaches.register(
+      krSignatures(docs).persist(StorageLevel.MEMORY_AND_DISK))
     Seq((8, 8), (16, 4), (32, 2)).map { case (b, r) =>
-      evalRow(krBandCandidates(docs, b, r), truth)
+      evalRow(bandCandidates(sigs, b, r), truth)
         .select(lit(s"b${b}r$r").as("geometry"), col("*"))
     }.reduce(_ unionByName _).orderBy("geometry")
   }
@@ -412,10 +418,10 @@ object Dedup {
     * SERVED FROM THE SESSION PAIR ARTIFACT (r20 opt, VERDICT-r19 #2):
     * every sfDir-level consumer of the corpus-scale prefix join —
     * this query plus clusters/survivorship/corpus/threshold-sweep/
-    * source-overlap/leakage-safe-split — now reads ONE per-session
-    * materialized pair table ([[sharedVerifiedPairsDir]], per-JVM
-    * UUID-namespaced scratch, dies with the process) instead of each
-    * re-paying the join. The FIRST toucher in a session executes the
+    * source-overlap/leakage-safe-split — now reads ONE materialized
+    * pair table per corpus version ([[sharedVerifiedPairsDir]], per-JVM
+    * scratch, dies with the process) instead of each re-paying the
+    * join. The FIRST toucher in a session executes the
     * full join (via [[verifiedPairsToDir]]) and its wall number prices
     * the build; every later standalone measures the production rollup
     * shape — one corpus-scale join per corpus version, exactly the
@@ -2053,27 +2059,18 @@ object Dedup {
     spark.read.parquet(dir)
   }
 
-  /** Per-session registry of [[verifiedPairsToDir]] artifacts: ONE build
-    * per (sfDir, tau) per JVM, every artifact consumer after the first
-    * reads the parquet. This is the in-process form of the production
-    * doctrine — one corpus-scale join per corpus version, every audit a
-    * rollup — so a sweep that runs [[dedupAuditComposed]] AND the
-    * composed split pays the join once, exactly as a pipeline would.
-    * The namespace UUID scopes dirs to this JVM: a artifact can never
-    * leak across test-data vintages (the driver regenerates parquet
-    * between rounds), and `computeIfAbsent` guarantees a single build
-    * with no mid-read clobber under concurrent first use. */
-  private val sharedPairsDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Double), String]()
-  private lazy val pairsNs = java.util.UUID.randomUUID().toString
+  /** The session's [[verifiedPairsToDir]] artifact: ONE build per
+    * version of the corpus's documents and tau ([[ArtifactState]]),
+    * every artifact consumer after the first reads the parquet. This is
+    * the in-process form of the production doctrine — one corpus-scale
+    * join per corpus version, every audit a rollup — so a sweep that
+    * runs [[dedupAuditComposed]] AND the composed split pays the join
+    * once, exactly as a pipeline would. */
   def sharedVerifiedPairsDir(spark: SparkSession, sfDir: String,
                              tau: Double = 0.3): String =
-    sharedPairsDirs.computeIfAbsent((sfDir, tau), { _ =>
-      val dir = ExportImport.scratch(
-        s"verified-pairs/$pairsNs/tau$tau-${ExportImport.pathSlug(sfDir)}")
-      verifiedPairsToDir(spark, sfDir, dir, tau)
-      dir
-    })
+    ArtifactState.dirOf(spark, "verified-pairs",
+      Seq(s"$sfDir/documents.parquet"), tau)(
+      verifiedPairsToDir(spark, sfDir, _, tau))
 
   /** §2 #151 — INCREMENTAL pair-artifact maintenance: the NEW verified
     * pairs a delta batch adds to an existing [[verifiedPairsToDir]]

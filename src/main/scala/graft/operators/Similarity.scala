@@ -1186,21 +1186,17 @@ object Similarity {
   }
 
   /** Session-shared exact k-NN EDGE ARTIFACT (docs/ARTIFACTS.md): the
-    * corpus-scale cell equi-join build runs ONCE per (session, sfDir,
-    * k) and lands as a (src, dst, rnk, cos, mutual) parquet; every graph
-    * consumer (pagerank's iterations, knn_communities' propagation)
-    * then reads the artifact — the same amortization doctrine as the
-    * verified-pair and BPE-rules artifacts. knn_graph itself stays the
-    * measured fresh build. Per-JVM namespace + computeIfAbsent: no
-    * stale reuse across driver rounds, single build under concurrency. */
-  private val sharedEdgeDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-  private lazy val edgesNs = java.util.UUID.randomUUID().toString
+    * corpus-scale cell equi-join build runs ONCE per (k, version of the
+    * embeddings table) ([[ArtifactState]]) and lands as a (src, dst,
+    * rnk, cos, mutual) parquet; every graph consumer (pagerank's
+    * iterations, knn_communities' propagation) then reads the artifact
+    * — the same amortization doctrine as the verified-pair and
+    * BPE-rules artifacts. knn_graph itself stays the measured fresh
+    * build. */
   def sharedKnnEdgesDir(spark: SparkSession, sfDir: String,
                         k: Int = 5): String =
-    sharedEdgeDirs.computeIfAbsent((sfDir, k), { _ =>
-      val dir = ExportImport.scratch(
-        s"knn-edges/$edgesNs/k$k-${ExportImport.pathSlug(sfDir)}")
+    ArtifactState.dirOf(spark, "knn-edges",
+      Seq(s"$sfDir/embeddings.parquet"), k) { dir =>
       // FULL-precision cos in the stored state (not the display
       // rounding): [[knnEdgesIncrementalFrom]] re-ranks stored edges
       // against freshly computed doubles, which is only exact when the
@@ -1209,8 +1205,7 @@ object Similarity {
         graft.Tables.load(spark, sfDir, "embeddings")
           .select(col("vec_id"), col("embedding")), k))
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
+    }
 
   /** EXACT kNN edges with full-precision scores over an explicit
     * (vec_id, embedding) frame — [[knnGraph]]'s cell equi-join plan
@@ -1678,45 +1673,29 @@ object Similarity {
   /** PER-JVM SHARED TRAIN CACHE — the memo the training scaladocs
     * promise ("one training per corpus per JVM"), held in
     * [[ArtifactState]] (single-flight, bounded LRU). Keyed by the
-    * training input's CANONICALIZED logical plan, its data fingerprint
-    * ([[inputFingerprint]]) and the hyper-params: two trainings share a
-    * model iff they read the same source version through the same
-    * transformations with the same knobs — parquet relations compare by
-    * root path, LocalRelations by their rows, ad-hoc RDD-backed frames
-    * never compare equal (always train fresh). Training is
-    * deterministic by contract (init by first ids, per-iteration 1e-6
-    * mean quantization), so a memo hit returns bit-identical model
-    * state to a fresh run — only the wall clock can tell. Nested
-    * trainings (OPQ trains PQ codebooks mid-build) use their own keys. */
+    * training input's CANONICALIZED logical plan, the fingerprint of
+    * its input files ([[ArtifactState.fingerprint]]) and the
+    * hyper-params: two trainings share a model iff they read the same
+    * source version through the same transformations with the same
+    * knobs — parquet relations compare by root path, LocalRelations by
+    * their rows, ad-hoc RDD-backed frames never compare equal (always
+    * train fresh). The fingerprint (ADVICE-r19) makes a corpus REBUILT
+    * at the same path inside a long-lived JVM retrain instead of
+    * silently serving a model trained on the old contents; frames with
+    * no file inputs fingerprint as "". Training is deterministic by
+    * contract (init by first ids, per-iteration 1e-6 mean
+    * quantization), so a memo hit returns bit-identical model state to
+    * a fresh run — only the wall clock can tell. Nested trainings (OPQ
+    * trains PQ codebooks mid-build) use their own keys. */
   private def memoModel[T <: AnyRef](v: DataFrame, params: String)
-                                    (train: => T): T =
-    ArtifactState.memo((v.queryExecution.analyzed.canonicalized,
-      inputFingerprint(v), params))(train)
-
-  /** Data fingerprint of a training frame's file-backed inputs:
-    * (path, length, mtime) of every input file, hashed. Folded into the
-    * memo key (ADVICE-r19) so a corpus REBUILT at the same path inside
-    * a long-lived JVM invalidates the memo instead of silently serving
-    * a model trained on the old contents. Non-file inputs contribute
-    * nothing extra: LocalRelations carry their rows in the canonicalized
-    * plan, and RDD-backed frames never compare equal (always fresh). */
-  private def inputFingerprint(v: DataFrame): String = {
+                                    (train: => T): T = {
     val files = try v.inputFiles catch {
       case scala.util.control.NonFatal(_) => Array.empty[String]
     }
-    if (files.isEmpty) ""
-    else {
-      val conf = v.sparkSession.sparkContext.hadoopConfiguration
-      val parts = files.sorted.map { f =>
-        try {
-          val p = new org.apache.hadoop.fs.Path(f)
-          val st = p.getFileSystem(conf).getFileStatus(p)
-          s"$f:${st.getLen}:${st.getModificationTime}"
-        } catch { case scala.util.control.NonFatal(_) => f }
-      }
-      java.util.UUID
-        .nameUUIDFromBytes(parts.mkString("\n").getBytes("UTF-8")).toString
-    }
+    val conf = v.sparkSession.sparkContext.hadoopConfiguration
+    ArtifactState.memo((v.queryExecution.analyzed.canonicalized,
+      ArtifactState.fingerprint(conf,
+        files.toSeq.map(new org.apache.hadoop.fs.Path(_))), params))(train)
   }
 
   /** §2 #66 — oracle-checked IVF variant: same map-only assignment and
@@ -2055,7 +2034,7 @@ object Similarity {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p),
       s"no IVF index artifact at $dir — run ivfIndexToDir first")
-    ArtifactState.ofMember(spark, "centroids", s"$dir/centroids") {
+    ArtifactState.ofInputs(spark, "centroids", Seq(s"$dir/centroids"), ()) {
       spark.read.parquet(s"$dir/centroids").orderBy("cell")
         .collect().map(_.getAs[Seq[Double]]("centroid").toArray)
     }
@@ -3108,7 +3087,7 @@ object Similarity {
     * delta delete pending) must not double-count them. */
   private[graft] def readIvfAssignedWithBatchId(spark: SparkSession,
                                                 dir: String): DataFrame = {
-    val base = readMember(spark, s"$dir/assigned")
+    val base = Tables.readParquet(spark, s"$dir/assigned")
       .withColumn("batch_id", lit(null).cast("long"))
     val deltaRoot = new org.apache.hadoop.fs.Path(s"$dir/stream")
     val fs = deltaRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -3117,7 +3096,7 @@ object Similarity {
     val hasDeltas = fs.exists(deltaRoot) && fs.listStatus(deltaRoot)
       .exists(_.getPath.getName.startsWith("batch_id="))
     if (hasDeltas) {
-      val deltas = readMember(spark, s"$dir/stream")
+      val deltas = Tables.readParquet(spark, s"$dir/stream")
         .withColumn("batch_id", col("batch_id").cast("long"))
       val folded = graft.streaming.StreamIO.readMarker(
         s"$dir/assigned", "_compacted_through",
@@ -3127,14 +3106,6 @@ object Similarity {
       base.unionByName(live.select(base.columns.map(col).toSeq: _*))
     } else base
   }
-
-  /** A parquet member of an index artifact, read under its schema
-    * inferred once per member version ([[ArtifactState]]); the read
-    * itself lists the member's files per call, so appended files are
-    * always seen. */
-  private def readMember(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(ArtifactState.ofMember(spark, "schema", path)(
-      spark.read.parquet(path).schema)).parquet(path)
 
   /** Refuse RAW-SPACE access to a whitened artifact: an
     * [[ivfWhitenIndexToDir]] build stores every inverted-list row in
@@ -5163,7 +5134,7 @@ object Similarity {
       s"PQ unit at $dir carries _rotation = 1 but rotation/ is missing " +
         "— the unit is torn. Re-run ivfPqIndexAdd(retrain = true, " +
         "opq = Some(true)).")
-    ArtifactState.ofMember(spark, "rotation", s"$dir/rotation") {
+    ArtifactState.ofInputs(spark, "rotation", Seq(s"$dir/rotation"), ()) {
       spark.read.parquet(s"$dir/rotation").orderBy("j").collect()
         .map(_.getAs[Seq[Double]]("rv").toArray)
     }
@@ -5174,7 +5145,8 @@ object Similarity {
     * version of `codebooks/` (shared, read-only). */
   def readPqCodebooks(spark: SparkSession,
                       dir: String): Array[Array[Array[Double]]] =
-    ArtifactState.ofMember(spark, "codebooks", s"$dir/codebooks") {
+    ArtifactState.ofInputs(spark, "codebooks", Seq(s"$dir/codebooks"),
+      ()) {
       val rows = spark.read.parquet(s"$dir/codebooks")
         .orderBy("m", "cell").collect()
       rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, rs) =>
@@ -5260,7 +5232,7 @@ object Similarity {
     val cents = readIvfCentroids(spark, dir)
     val codec = storedPqCodec(spark, dir, cents)
     val all = readIvfAssignedWithBatchId(spark, dir)
-    serve(readMember(spark, s"$dir/codes")
+    serve(Tables.readParquet(spark, s"$dir/codes")
         .withColumnRenamed("vec_id", "neighbor_id"),
       fullRows(all), queryRows(queries), Some(cents), nProbe, codec,
       rank(codec), Some(all.filter(col("batch_id").isNotNull)

@@ -692,22 +692,14 @@ object Sketches {
     spark.read.parquet(dir)
   }
 
-  /** Per-session registry of [[sketchStatesToDir]] artifacts: ONE build
-    * per (sfDir, k) per JVM — the in-process form of one-profile-pass-
-    * per-corpus-version, same doctrine as Dedup.sharedVerifiedPairsDir
-    * (JVM-scoped namespace so an artifact never survives a test-data
-    * vintage change; computeIfAbsent serializes the first build). */
-  private val sharedStatesDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-  private lazy val statesNs = java.util.UUID.randomUUID().toString
+  /** The session's [[sketchStatesToDir]] artifact: ONE build per (k,
+    * version of the corpus's documents) ([[ArtifactState]]) — the
+    * in-process form of one-profile-pass-per-corpus-version. */
   def sharedSketchStatesDir(spark: SparkSession, sfDir: String,
                             k: Int = 256): String =
-    sharedStatesDirs.computeIfAbsent((sfDir, k), { _ =>
-      val dir = ExportImport.scratch(
-        s"sketch-states/$statesNs/k$k-${ExportImport.pathSlug(sfDir)}")
-      sketchStatesToDir(spark, sfDir, dir, k)
-      dir
-    })
+    ArtifactState.dirOf(spark, "sketch-states",
+      Seq(s"$sfDir/documents.parquet"), k)(
+      sketchStatesToDir(spark, sfDir, _, k))
 
   /** §2 #215b — the ARTIFACT-FED form of [[sourceJaccardKmv]]: the
     * same bottom-k pair estimates (identical `sa, sb, k_union,

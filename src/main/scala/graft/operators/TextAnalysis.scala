@@ -1548,21 +1548,14 @@ object TextAnalysis {
     encodeWithRules(docs, rules)
   }
 
-  /** Per-session registry of rules artifacts — one train per
-    * (sfDir, nMerges, maxWords) per JVM (the in-process form of the
-    * versioned-vocab doctrine; same pattern as
-    * [[Dedup.sharedVerifiedPairsDir]]). */
-  private val sharedRulesDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), String]()
-  private lazy val rulesNs = java.util.UUID.randomUUID().toString
+  /** The session's rules artifact — one train per (nMerges, maxWords,
+    * version of the corpus's documents) ([[ArtifactState]]), the
+    * in-process form of the versioned-vocab doctrine. */
   def sharedBpeRulesDir(spark: SparkSession, sfDir: String,
                         nMerges: Int = 5, maxWords: Int = 2000): String =
-    sharedRulesDirs.computeIfAbsent((sfDir, nMerges, maxWords), { _ =>
-      val dir = ExportImport.scratch(
-        s"bpe-rules/$rulesNs/m$nMerges-w$maxWords-${math.abs(sfDir.hashCode)}")
-      bpeRulesToDir(spark, sfDir, dir, nMerges, maxWords)
-      dir
-    })
+    ArtifactState.dirOf(spark, "bpe-rules",
+      Seq(s"$sfDir/documents.parquet"), (nMerges, maxWords))(
+      bpeRulesToDir(spark, sfDir, _, nMerges, maxWords))
 
   /** Driver form of [[bpeEncodeFromRules]]: encode the corpus off the
     * session-shared rules artifact (oracle identical to bpe_encode by
@@ -1831,21 +1824,16 @@ object TextAnalysis {
       .orderBy(col("freq").desc, col("word")).limit(maxWords)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
 
-  /** One trained unigram model per (sfDir, params) per JVM — the
-    * in-process versioned-vocab doctrine, same as
-    * [[sharedBpeRulesDir]]. */
-  private val sharedUnigramModels = new java.util.concurrent
-    .ConcurrentHashMap[(String, Int, Int, Int, Int), Map[String, Long]]()
+  /** One trained unigram model per (params, version of the corpus's
+    * documents) ([[ArtifactState]]). */
   private def sharedUnigramLp(spark: SparkSession, sfDir: String,
                               vocabSize: Int, maxPieceLen: Int,
                               iters: Int, maxWords: Int): Map[String, Long] =
-    sharedUnigramModels.computeIfAbsent(
-      (sfDir, vocabSize, maxPieceLen, iters, maxWords), { _ =>
-        trainUnigram(
-          unigramWordFreqs(Tables.load(spark, sfDir, "documents"), maxWords),
-          vocabSize, maxPieceLen, iters)
-          .map { case (p, _, l) => p -> l }.toMap
-      })
+    ArtifactState.ofInputs(spark, "unigram-lp",
+      Seq(s"$sfDir/documents.parquet"),
+      (vocabSize, maxPieceLen, iters, maxWords))(
+      unigramTrainFrom(Tables.load(spark, sfDir, "documents"), vocabSize,
+        maxPieceLen, iters, maxWords))
 
   /** The MAP-ONLY corpus encode under a trained unigram model: one
     * integer-score Viterbi DP per word (the piece log-probs ride as a
@@ -1957,27 +1945,16 @@ object TextAnalysis {
     df.collect().map(r => r.getString(0) -> r.getLong(2)).toMap
   }
 
-  /** Per-session registry of unigram model artifacts (one train per
-    * (sfDir, params) per JVM — the versioned-vocab doctrine). */
-  private val sharedUnigramDirs = new java.util.concurrent
-    .ConcurrentHashMap[(String, Int, Int, Int, Int), String]()
-  private lazy val unigramNs = java.util.UUID.randomUUID().toString
+  /** The session's unigram model artifact — one train per (params,
+    * version of the corpus's documents) ([[ArtifactState]]). */
   def sharedUnigramModelDir(spark: SparkSession, sfDir: String,
                             vocabSize: Int = 120, maxPieceLen: Int = 4,
                             iters: Int = 2, maxWords: Int = 2000): String =
-    sharedUnigramDirs.computeIfAbsent(
-      (sfDir, vocabSize, maxPieceLen, iters, maxWords), { _ =>
-        // the directory name carries EVERY cache-key component
-        // (ADVICE-r18): maxWords included and sfDir as its sanitized
-        // path, not a hashCode — two distinct keys can never map to
-        // the same artifact directory and overwrite each other.
-        val dir = ExportImport.scratch(
-          s"unigram-model/$unigramNs/v$vocabSize-l$maxPieceLen-i$iters" +
-            s"-w$maxWords-${sfDir.replaceAll("[^A-Za-z0-9.]+", "_")}")
-        unigramModelToDir(spark, sfDir, dir, vocabSize, maxPieceLen,
-          iters, maxWords)
-        dir
-      })
+    ArtifactState.dirOf(spark, "unigram-model",
+      Seq(s"$sfDir/documents.parquet"),
+      (vocabSize, maxPieceLen, iters, maxWords))(
+      unigramModelToDir(spark, sfDir, _, vocabSize, maxPieceLen, iters,
+        maxWords))
 
   /** §2 #245 — UNIGRAM ENCODE FROM THE MODEL ARTIFACT: identical
     * output to [[unigramEncode]] (same DP, same model — the #122c

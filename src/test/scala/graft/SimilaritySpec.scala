@@ -706,10 +706,8 @@ class SimilaritySpec extends SparkSpec {
 
   /** Spark jobs `body` submits from this thread: a listener counts the
     * job starts of a private job group up to a sentinel job of the same
-    * group (listener events arrive in submission order), except those
-    * whose call site `ignore` accepts. */
-  private def jobsSubmitted(body: => Unit,
-                            ignore: String => Boolean = _ => false): Int = {
+    * group (listener events arrive in submission order). */
+  private def jobsSubmitted(body: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val group = s"jobs-${java.util.UUID.randomUUID}"
@@ -719,8 +717,7 @@ class SimilaritySpec extends SparkSpec {
         if (e.properties != null &&
             e.properties.getProperty("spark.jobGroup.id") == group)
           seen.add(String.valueOf(
-            e.properties.getProperty("spark.job.description")) + "\t" +
-            e.stageInfos.maxBy(_.stageId).name)
+            e.properties.getProperty("spark.job.description")))
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "body")
@@ -732,8 +729,8 @@ class SimilaritySpec extends SparkSpec {
           seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
         .takeWhile { d =>
           assert(d != null, "the sentinel job never reached the listener")
-          !d.startsWith("sentinel\t")
-        }.count(d => !ignore(d.split("\t", 2)(1)))
+          d != "sentinel"
+        }.size
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -913,6 +910,80 @@ class SimilaritySpec extends SparkSpec {
     assert(ArtifactState.builds.get == before, "entry 1 must survive")
     assert(ArtifactState.memo(("spec-lru", tag, 0))(Integer.valueOf(-1)) ==
       -1, "entry 0, least recently used, must be evicted")
+  }
+
+  test("Tables.load: a table's schema is inferred once per version") {
+    import org.apache.spark.sql.functions.lit
+    val dir = graft.operators.ExportImport.scratch("tables-load-schema")
+    graft.streaming.StreamIO.deleteRecursively(dir,
+      spark.sparkContext.hadoopConfiguration)
+    val docs = Tables.load(spark, sf, "documents")
+    docs.write.parquet(s"$dir/documents.parquet")
+    Tables.load(spark, dir, "documents")
+    assert(jobsSubmitted(Tables.load(spark, dir, "documents")) == 0,
+      "a second load of an unchanged table must submit no job")
+    docs.withColumn("extra", lit(1))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    var reloaded: org.apache.spark.sql.DataFrame = null
+    assert(jobsSubmitted {
+      reloaded = Tables.load(spark, dir, "documents")
+    } > 0, "a rewritten table must be re-inferred")
+    assert(reloaded.columns.toSeq == docs.columns.toSeq :+ "extra")
+    assert(reloaded.count() == docs.count())
+  }
+
+  test("artifact state: every corpus artifact serves the current version " +
+      "of its input table; an unchanged input builds nothing") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, translate, when}
+    import graft.operators.{ArtifactState, Curation, Dedup, Sketches,
+      TextAnalysis}
+    val conf = spark.sparkContext.hadoopConfiguration
+    def fresh(name: String) = {
+      val d = graft.operators.ExportImport.scratch(name)
+      graft.streaming.StreamIO.deleteRecursively(d, conf)
+      d
+    }
+    val docs = Tables.load(spark, sf, "documents")
+    val embs = Tables.load(spark, sf, "embeddings")
+    def write(dir: String, d: DataFrame, e: DataFrame): Unit = {
+      d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      e.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    }
+    // the new version drops a third of the rows and letter-shifts the
+    // even documents' text: new words, pairs, pieces and sketches
+    val docs2 = docs.filter(col("doc_id") % 3 =!= 0).withColumn("text",
+      when(col("doc_id") % 2 === 0, translate(col("text"),
+        "abcdefghijklmnopqrstuvwxyz", "bcdefghijklmnopqrstuvwxyza"))
+        .otherwise(col("text")))
+    val consumers = Seq[(String, String => DataFrame)](
+      ("verified pairs", Dedup.dedupAuditComposed(spark, _)),
+      ("bm25 stats", Curation.bm25Indexed(spark, _)),
+      ("bpe rules", TextAnalysis.bpeEncodeArtifact(spark, _)),
+      ("unigram model dir", TextAnalysis.unigramEncodeArtifact(spark, _)),
+      ("unigram model", TextAnalysis.unigramEncode(spark, _)),
+      ("sketch states", Sketches.sourceJaccardComposed(spark, _)),
+      ("knn edges", Similarity.knnTriangles(spark, _)))
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq
+    val dir = fresh("artifact-state-corpus")
+    write(dir, docs, embs)
+    val before = consumers.map { case (_, serve) => rows(serve(dir)) }
+    write(dir, docs2, embs.filter(col("vec_id") % 3 =!= 0))
+    val ref = fresh("artifact-state-corpus-fresh")
+    write(ref, docs2, embs.filter(col("vec_id") % 3 =!= 0))
+    val checks = consumers.zip(before).map { case ((name, serve), old) =>
+      val now = rows(serve(dir))
+      val built = ArtifactState.builds.get
+      rows(serve(dir))
+      val rebuilt = ArtifactState.builds.get != built
+      (name, now != old, now == rows(serve(ref)), !rebuilt)
+    }
+    def failing(f: ((String, Boolean, Boolean, Boolean)) => Boolean) =
+      checks.filterNot(f).map(_._1)
+    assert(failing(_._2).isEmpty, "the new rows must change the output")
+    assert(failing(_._3).isEmpty,
+      "a rewritten input must serve what a fresh build serves")
+    assert(failing(_._4).isEmpty, "an unchanged input must build nothing")
   }
 
   test("ivfIndexAppend: appended index serves identically to a rebuild") {
@@ -1602,9 +1673,7 @@ class SimilaritySpec extends SparkSpec {
       ("ann_recall_eval", () => Similarity.annRecallEval(spark, sf)),
       ("ivf_probe_sweep", () => Similarity.ivfProbeSweep(spark, sf))
     ).foreach { case (name, build) =>
-      // spark.read.parquet reads each table's footer schema in a job of
-      // its own; that is table access, not query work
-      assert(jobsSubmitted(build(), _.startsWith("parquet at ")) == 0,
+      assert(jobsSubmitted(build()) == 0,
         s"$name: construction must submit no Spark job")
     }
   }

@@ -84,4 +84,16 @@ class WindowLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(offending.isEmpty,
       s"operators writing session conf or using Branches: $offending")
   }
+
+  /** Artifact and model state derived from an input lives in ONE
+    * registry, `ArtifactState`, which keys it by the input's version;
+    * a hand-rolled map beside it would serve stale state after a
+    * rewrite. */
+  test("no operator keeps a registry of its own") {
+    val offending = sources("operators").collect {
+      case (path, text) if text.contains("ConcurrentHashMap") &&
+          path != "operators/ArtifactState.scala" => path
+    }
+    assert(offending.isEmpty, s"registries outside ArtifactState: $offending")
+  }
 }
