@@ -948,29 +948,16 @@ object Graft {
     * one call. */
   def maintainIvfIndex(spark: SparkSession, dir: String, nCells: Int = 0,
                        pqStaleRatio: Double = 1.5): IvfMaintenance = {
-    import graft.streaming.StreamIO
-    val conf = spark.sparkContext.hadoopConfiguration
-    def exists(sub: String): Boolean = {
-      val (fs, p) = StreamIO.fsFor(s"$dir/$sub", conf)
-      fs.exists(p)
-    }
     val w = graft.operators.Similarity.ivfIndexCompact(spark, dir)
-    val hasPq = exists("codes")
-    // capture the leg's encoding mode BEFORE any rebuild: the swap
-    // drops codebooks/ with its _residual marker, and the re-add must
-    // restate it or a residual deployment silently downgrades to raw
-    val pqMode: Option[Boolean] =
-      if (exists("codebooks"))
-        Some(graft.operators.Similarity.readResidualMode(spark, dir))
-      else None
-    // ... and its rotation (OPQ) mode, for the same reason: the re-add
-    // after a rebuild must restate it or an OPQ deployment silently
-    // downgrades to an unrotated leg (readResidualMode above is the
-    // completeness gate, so the marker read here is trustworthy)
-    val pqRotMode: Option[Boolean] =
-      if (exists("codebooks"))
-        Some(graft.operators.Similarity.readPqRotationMode(spark, dir))
-      else None
+    val ivf = graft.operators.Similarity.openIvf(spark, dir)
+    val hasPq = ivf.hasPq
+    // capture the leg's encoding modes BEFORE any rebuild: the swap
+    // drops codebooks/ with its markers, and the re-add must restate
+    // them or a residual or OPQ deployment silently downgrades (the
+    // residual read is the completeness gate, so the rotation marker
+    // read after it is trustworthy)
+    val pqMode = ivf.residualMode
+    val pqRotMode = ivf.rotationMode
     val drift = graft.operators.Similarity.ivfDriftFromIndex(spark, dir)
       .select("psi4", "is_shifted").head()
     val psi = if (drift.isNullAt(0)) 0.0 else drift.getDouble(0)
@@ -991,14 +978,11 @@ object Graft {
         retrained = true
       }
     } else if (hasPq) {
-      val synced = StreamIO.readMarker(s"$dir/codes", "_synced_to", conf)
-      val folded = StreamIO.readMarker(s"$dir/assigned",
-        "_compacted_through", conf).getOrElse(-1L)
-      if (!synced.contains(folded)) {
+      if (!ivf.pqInSync) {
         graft.operators.Similarity.ivfPqIndexAdd(spark, dir)
         resynced = true
       }
-      if (!exists("pq_baseline")) {
+      if (!ivf.hasPqBaseline) {
         // legacy pre-pq_drift artifact (no baseline; no _residual
         // marker reads back as raw by construction): one retrain
         // starts the monitor AND migrates to the marked layout. Mode

@@ -77,7 +77,8 @@ private[graft] object ArtifactState {
   }
 
   /** Scopes every directory [[dirOf]] writes to this JVM: an artifact
-    * never outlives the process that built it. */
+    * never outlives the process that built it (each is deleted when the
+    * JVM's FileSystems close at exit). */
   private lazy val namespace = java.util.UUID.randomUUID().toString
   private val dirsWritten = new AtomicLong
 
@@ -94,6 +95,11 @@ private[graft] object ArtifactState {
         ExportImport.pathSlug(s"$params-${inputs.mkString(",")}") +
         s"-${dirsWritten.incrementAndGet()}")
       write(dir)
+      // registered once written (deleteOnExit skips a missing path),
+      // with the JVM's namespace directory of this kind
+      val p = new Path(dir)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Seq(p, p.getParent).foreach(fs.deleteOnExit)
       dir
     }
 

@@ -1923,15 +1923,19 @@ object Similarity {
     serveFrames(v, v.filter(col("vec_id") < nQueries), cents, nProbe, codec,
       rank)
 
-  /** Serving from an index artifact's `assigned/` inverted lists (base +
-    * live deltas): broadcast probes join only their cell partitions. */
-  private def serveIndex(spark: SparkSession, dir: String,
+  /** Serving RAW (vec_id, embedding) queries from an index artifact's
+    * inverted lists (base + live deltas): broadcast probes join only
+    * their cell partitions. `raw` states the geometry the caller
+    * serves: a raw artifact, or a whitened one whose stored transform
+    * the queries take first; the other kind refuses. */
+  private def serveIndex(ivf: IvfArtifact, raw: Boolean,
                          queries: DataFrame, nProbe: Int, codec: Codec,
                          rank: Rank): DataFrame = {
-    val cents = readIvfCentroids(spark, dir)
-    val rows = readIvfAssigned(spark, dir)
+    if (raw) ivf.requireRaw() else ivf.requireWhitened()
+    val rows = ivf.rows.drop("batch_id")
     serve(codec.encode(rows.withColumnRenamed("vec_id", "neighbor_id")),
-      fullRows(rows), queryRows(queries), Some(cents), nProbe, codec, rank)
+      fullRows(rows), queryRows(ivf.toSpace(queries)), Some(ivf.centroids),
+      nProbe, codec, rank)
   }
 
   /** Batch twin for the streaming ANN path: serve an explicit
@@ -2007,8 +2011,7 @@ object Similarity {
     * for a pre-versioning artifact. */
   def readIvfQuantizerVersion(spark: SparkSession,
                               dir: String): Option[Long] =
-    graft.streaming.StreamIO.readMarker(dir, "_quantizer_version",
-      spark.sparkContext.hadoopConfiguration)
+    openIvf(spark, dir).quantizerVersion
 
   /** Cell assignment of (vec_id, embedding) rows under a given centroid
     * matrix — the map-only inverted-list row shape (cell, vec_id,
@@ -2029,14 +2032,287 @@ object Similarity {
     * read-only). Existence resolves through the Hadoop FileSystem of the
     * path's scheme (the [[Sketches.readSketchStates]] stance) — the
     * index a cluster deployment maintains lives on a DFS. */
-  def readIvfCentroids(spark: SparkSession, dir: String): Array[Array[Double]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/centroids")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no IVF index artifact at $dir — run ivfIndexToDir first")
-    ArtifactState.ofInputs(spark, "centroids", Seq(s"$dir/centroids"), ()) {
-      spark.read.parquet(s"$dir/centroids").orderBy("cell")
-        .collect().map(_.getAs[Seq[Double]]("centroid").toArray)
+  def readIvfCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
+    openIvf(spark, dir).centroids
+
+  /** The one handle on the IVF index artifact at `dir`. */
+  private[graft] def openIvf(spark: SparkSession, dir: String): IvfArtifact =
+    new IvfArtifact(spark, dir)
+
+  /** An IVF index artifact's layout. Every read of a member or marker
+    * and every write of index rows goes through this handle; the
+    * builders ([[ivfIndexBuild]], [[ivfWhitenIndexBuild]],
+    * [[ivfPqIndexAdd]]) and the swaps ([[ivfIndexCompact]],
+    * [[ivfIndexRebuild]]) beside it are the only other code that names
+    * a member:
+    * {{{
+    *   centroids/              the quantizer (cell, centroid)
+    *   assigned/               base inverted lists, PARTITIONED BY cell;
+    *                           `_compacted_through` = folded delta watermark
+    *   stream/batch_id=N/      live deltas, PARTITIONED BY cell
+    *   _quantizer_version      1 at build, +1 per rebuild
+    *   _whiten + whiten/       whitened artifact: rows in whitened space, μ/pc
+    *   codes/                  PQ scan table, PARTITIONED BY cell; `_synced_to`
+    *   codebooks/ (+ rotation/, pq_baseline/)
+    *                           the PQ unit; `_rotation`, then `_residual` last
+    * }}}
+    * Members and markers are read lazily, at most once per handle; a
+    * handle serves one verb, and a verb that rewrites what it read opens
+    * a new handle to read it again. */
+  private[graft] final class IvfArtifact(spark: SparkSession,
+                                         dir: String) {
+    import graft.streaming.StreamIO
+    private def conf = spark.sparkContext.hadoopConfiguration
+    private def exists(member: String): Boolean = {
+      val (fs, p) = StreamIO.fsFor(s"$dir/$member", conf)
+      fs.exists(p)
+    }
+    private def marker(member: String, name: String): Option[Long] =
+      StreamIO.readMarker(s"$dir/$member", name, conf)
+
+    lazy val centroids: Array[Array[Double]] = {
+      require(exists("centroids"),
+        s"no IVF index artifact at $dir — run ivfIndexToDir first")
+      ArtifactState.ofInputs(spark, "centroids", Seq(s"$dir/centroids"),
+        ()) {
+        spark.read.parquet(s"$dir/centroids").orderBy("cell")
+          .collect().map(_.getAs[Seq[Double]]("centroid").toArray)
+      }
+    }
+    lazy val quantizerVersion: Option[Long] =
+      StreamIO.readMarker(dir, "_quantizer_version", conf)
+    /** Base rows' compaction watermark: deltas at or below it are folded. */
+    lazy val compactedThrough: Option[Long] =
+      marker("assigned", "_compacted_through")
+
+    /** Whether the rows are stored in whitened space (`_whiten` = 1). */
+    lazy val whitened: Boolean =
+      StreamIO.readMarker(dir, "_whiten", conf).contains(1L)
+    /** The stored whitening model (μ + pc: two d-vectors — model state,
+      * never data). Refuses a raw artifact (no `_whiten` marker) and a
+      * torn one (`_whiten` = 1 but `whiten/` missing — only manual
+      * surgery can produce it given the build order, the [[rotation]]
+      * stance). */
+    lazy val whitenModel: (Array[Double], Array[Double]) = {
+      require(whitened,
+        s"index artifact at $dir carries no _whiten marker — its rows " +
+          "are raw-space; serve through annServeFromIndex, or build a " +
+          "whitened artifact with ivfWhitenIndexToDir.")
+      require(exists("whiten"),
+        s"index artifact at $dir carries _whiten = 1 but whiten/ is " +
+          "missing — the unit is torn. Rebuild with ivfWhitenIndexToDir.")
+      val rows = spark.read.parquet(s"$dir/whiten").collect()
+        .map(r => r.getAs[String]("kind") ->
+          r.getAs[Seq[Double]]("v").toArray).toMap
+      (rows("mu"), rows("pc"))
+    }
+    /** Refuse RAW-SPACE access to a whitened artifact: its rows are
+      * stored in whitened space, so scoring raw queries (or landing raw
+      * vectors) against it silently mixes two geometries — the failure
+      * the `_rotation` marker doctrine exists to prevent, one transform
+      * earlier in the pipeline. */
+    def requireRaw(): Unit =
+      require(!whitened,
+        s"index artifact at $dir carries _whiten = 1 (its rows are " +
+          "stored in whitened space) — raw-space serving or maintenance " +
+          "would silently mix geometries. Serve through " +
+          "annServeWhitenedFromIndex / append through " +
+          "ivfWhitenIndexAppend (they apply the stored transform).")
+    def requireWhitened(): Unit = { whitenModel; () }
+
+    /** RAW (vec_id, embedding) vectors in the rows' space: unchanged, or
+      * whitened with the stored model. */
+    def toSpace(vectors: DataFrame): DataFrame =
+      if (whitened) {
+        val (mu, pc) = whitenModel
+        whitenVectors(vectors, mu, pc)
+      } else vectors
+    /** RAW vectors as inverted-list rows (cell, vec_id, embedding, nrm)
+      * under the artifact's own transform and centroids. */
+    def assign(vectors: DataFrame): DataFrame =
+      assignWithCentroids(toSpace(vectors), centroids)
+
+    /** Batch ids of the live `stream/` deltas, listed on every call. */
+    def deltaIds(): Seq[Long] = {
+      val (fs, root) = StreamIO.fsFor(s"$dir/stream", conf)
+      if (!fs.exists(root)) Seq.empty
+      else fs.listStatus(root).toSeq.map(_.getPath.getName)
+        .filter(_.startsWith("batch_id="))
+        .map(_.stripPrefix("batch_id=").toLong)
+    }
+    /** Delete the given deltas, and the delta root once it is empty (an
+      * empty root would fail parquet schema inference on the next read). */
+    def dropDeltas(ids: Seq[Long]): Unit = {
+      val (fs, root) = StreamIO.fsFor(s"$dir/stream", conf)
+      ids.foreach(n =>
+        fs.delete(new org.apache.hadoop.fs.Path(root, s"batch_id=$n"), true))
+      if (fs.exists(root) && deltaIds().isEmpty) fs.delete(root, true)
+      ()
+    }
+
+    /** The full inverted-list table: base rows with a null `batch_id`,
+      * live delta rows with their partition's. Deltas at or below
+      * [[compactedThrough]] are EXCLUDED: their rows are already folded
+      * into the base by [[ivfIndexCompact]], and a crashed compaction
+      * (swap committed, delta delete pending) must not double-count
+      * them. Cell partition pruning holds on both legs. */
+    lazy val rows: DataFrame = {
+      val base = Tables.readParquet(spark, s"$dir/assigned")
+        .withColumn("batch_id", lit(null).cast("long"))
+      // bare existence is not enough: an emptied delta root (all
+      // batches folded) would fail parquet schema inference
+      if (deltaIds().nonEmpty) {
+        val deltas = Tables.readParquet(spark, s"$dir/stream")
+          .withColumn("batch_id", col("batch_id").cast("long"))
+        val live = compactedThrough
+          .map(w => deltas.filter(col("batch_id") > w)).getOrElse(deltas)
+        base.unionByName(live.select(base.columns.map(col).toSeq: _*))
+      } else base
+    }
+
+    /** THE index writer: append RAW vectors to the inverted lists under
+      * the stored transform and centroids. A PQ leg gets the delta's
+      * codes FIRST: a crash between the two writes leaves codes the
+      * exact gather drops (no assigned/ row to join), never assigned/
+      * rows the ADC scan silently misses. */
+    def append(vectors: DataFrame): Unit = {
+      val rows = assign(vectors)
+      if (hasPq)
+        pq.encode(rows)
+          .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
+      rows.write.mode("append").partitionBy("cell").parquet(s"$dir/assigned")
+    }
+    /** Whether a continuous maintainer's batch `batchId` is already
+      * folded into the base ([[StreamIO.foldedByCompaction]]: older ids
+      * fail loudly). */
+    def foldedByCompaction(batchId: Long): Boolean =
+      StreamIO.foldedByCompaction(s"$dir/assigned", batchId, conf)
+    /** Land RAW vectors as the cell-partitioned delta of stream batch
+      * `batchId`, overwriting that batch's own subtree so a replayed
+      * batch replaces its delta instead of duplicating it. An empty
+      * batch lands nothing: a fileless `batch_id` dir would trip schema
+      * inference on the stream root. */
+    def landDelta(batchId: Long, vectors: DataFrame): Unit =
+      if (!vectors.isEmpty)
+        assign(vectors).write.mode("overwrite").partitionBy("cell")
+          .parquet(s"$dir/stream/batch_id=$batchId")
+
+    lazy val hasPq: Boolean = exists("codes")
+    lazy val hasCodebooks: Boolean = exists("codebooks")
+    lazy val hasPqBaseline: Boolean = exists("pq_baseline")
+    /** The base watermark the `codes/` encode saw. */
+    lazy val pqSyncedTo: Option[Long] = marker("codes", "_synced_to")
+    /** Whether the codes cover the base as folded now. */
+    def pqInSync: Boolean = pqSyncedTo.contains(compactedThrough.getOrElse(-1L))
+    /** Refuse a PQ leg that is absent, whose encode did not complete, or
+      * that predates the base's compaction watermark. */
+    def requirePqSynced(): Unit = {
+      require(hasPq, s"no PQ leg at $dir/codes — run ivfPqIndexAdd first")
+      // the marker is REQUIRED, not defaulted: ivfPqIndexAdd writes it
+      // strictly after the codes land, so its absence means the encode
+      // crashed mid-write and the scan table may silently miss vectors
+      val synced = pqSyncedTo.getOrElse(throw new IllegalArgumentException(
+        s"PQ codes at $dir/codes carry no _synced_to marker — the " +
+          "encode did not complete (ivfPqIndexAdd writes the marker " +
+          "after the codes). Re-run ivfPqIndexAdd."))
+      val folded = compactedThrough.getOrElse(-1L)
+      require(synced == folded,
+        s"PQ codes at $dir/codes are synced to compaction watermark " +
+          s"$synced but the base is folded through $folded — the codes " +
+          "miss vectors compaction folded into the base. Re-run " +
+          "ivfPqIndexAdd (map-only re-encode with the stored codebooks).")
+    }
+    /** The `codes/` scan table. */
+    lazy val codes: DataFrame = Tables.readParquet(spark, s"$dir/codes")
+
+    /** The PQ unit's encoding mode; None without a unit. [[ivfPqIndexAdd]]
+      * writes the `_residual` marker strictly after the codebook unit it
+      * describes (codebooks + distortion baseline), so a missing marker
+      * means one of three things:
+      *
+      *  - `pq_baseline/` PRESENT: the (re)train crashed mid-unit
+      *    (between the baseline and the marker) and the stored pieces
+      *    may disagree — refuse rather than guess (a wrong guess scores
+      *    one space's codes under the other space's codebooks,
+      *    silently);
+      *  - `pq_baseline/` ABSENT, `codes/_synced_to` PRESENT: the LEGACY
+      *    pre-marker layout — those legs were trained before residual
+      *    encoding (or the baseline snapshot) existed and COMPLETED
+      *    (`_synced_to` is every add's final write, and the codes
+      *    overwrite clears it first), so the mode is raw by
+      *    construction, not a guess;
+      *  - `pq_baseline/` ABSENT, `codes/_synced_to` ABSENT: a first
+      *    (re)train crashed mid-write — the codebooks' encoding space is
+      *    unknown, so refuse. Serving would refuse on staleness anyway,
+      *    but the RE-SYNC path both consults the mode AND repairs the
+      *    staleness marker: a raw guess here would launder a torn
+      *    residual train into a consistent-looking, silently-wrong raw
+      *    leg.
+      */
+    lazy val residualMode: Option[Boolean] =
+      if (!hasCodebooks) None
+      else Some(marker("codebooks", "_residual") match {
+        case Some(v) => v == 1L
+        case None =>
+          if (hasPqBaseline) throw new IllegalArgumentException(
+            s"PQ codebooks at $dir/codebooks carry no _residual marker " +
+              "but a pq_baseline/ snapshot exists — the codebook " +
+              "(re)train crashed mid-unit (the marker lands after the " +
+              "codebooks and baseline), so the stored pieces may " +
+              "disagree and their encoding space is unknown. Re-run " +
+              "ivfPqIndexAdd(retrain = true, residual = Some(<intended " +
+              "mode>)).")
+          if (pqSyncedTo.isEmpty) throw new IllegalArgumentException(
+            s"PQ codebooks at $dir/codebooks carry no _residual marker, " +
+              "no pq_baseline/ snapshot, and codes/ has no _synced_to — " +
+              "a first (re)train crashed mid-write (a completed legacy " +
+              "pre-marker leg always carries _synced_to), so the " +
+              "encoding space is unknown. Re-run ivfPqIndexAdd(retrain " +
+              "= true, residual = Some(<intended mode>)).")
+          false // completed legacy pre-marker layout: raw by construction
+      })
+    /** Whether the PQ unit was trained under an OPQ rotation; None
+      * without a unit. [[ivfPqIndexAdd]] writes `_rotation` strictly
+      * BEFORE `_residual`, so on any COMPLETE unit (the only kind
+      * [[residualMode]] lets a caller past) an absent marker means a
+      * rotation-unaware vintage — unrotated by construction. */
+    lazy val rotationMode: Option[Boolean] =
+      if (!hasCodebooks) None
+      else Some(marker("codebooks", "_rotation").contains(1L))
+    /** PQ codebooks (bounded: m × k × sub doubles — model state, never
+      * data), collected once per version of `codebooks/` (shared,
+      * read-only). */
+    lazy val codebooks: Array[Array[Array[Double]]] =
+      ArtifactState.ofInputs(spark, "codebooks", Seq(s"$dir/codebooks"),
+        ()) {
+        val rows = spark.read.parquet(s"$dir/codebooks")
+          .orderBy("m", "cell").collect()
+        rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, rs) =>
+          rs.sortBy(_.getInt(1))
+            .map(_.getAs[Seq[Double]]("codeword").toArray)
+        }.toArray
+      }
+    /** The stored OPQ rotation (d×d doubles — model state). Refuses
+      * loudly when the `_rotation` marker promises one but `rotation/`
+      * is missing (a torn unit that escaped the marker doctrine, e.g. a
+      * partial manual delete): guessing identity would silently score
+      * rotated codes against unrotated queries. */
+    lazy val rotation: Array[Array[Double]] = {
+      require(exists("rotation"),
+        s"PQ unit at $dir carries _rotation = 1 but rotation/ is missing " +
+          "— the unit is torn. Re-run ivfPqIndexAdd(retrain = true, " +
+          "opq = Some(true)).")
+      ArtifactState.ofInputs(spark, "rotation", Seq(s"$dir/rotation"), ()) {
+        spark.read.parquet(s"$dir/rotation").orderBy("j").collect()
+          .map(_.getAs[Seq[Double]]("rv").toArray)
+      }
+    }
+    /** The stored PQ unit as a codec: codebooks, the residual mode (a
+      * torn unit refuses here) and the OPQ rotation member. */
+    lazy val pq: Pq = {
+      val cbs = codebooks
+      Pq(cbs, if (residualMode.contains(true)) Some(centroids) else None,
+        if (rotationMode.contains(true)) Some(rotation) else None)
     }
   }
 
@@ -2055,18 +2331,9 @@ object Similarity {
     * cadence). */
   def ivfIndexAppend(spark: SparkSession, dir: String,
                      vectors: DataFrame): Unit = {
-    requireRawIndex(spark, dir)
-    val cents = readIvfCentroids(spark, dir)
-    val rows = assignWithCentroids(vectors, cents)
-    // a PQ leg gets the delta's codes FIRST: a crash between the two
-    // writes leaves codes the exact gather drops (no assigned/ row to
-    // join), never assigned/ rows the ADC scan silently misses
-    val (fs, codes) = graft.streaming.StreamIO.fsFor(s"$dir/codes",
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(codes))
-      storedPqCodec(spark, dir, cents).encode(rows)
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
-    rows.write.mode("append").partitionBy("cell").parquet(s"$dir/assigned")
+    val ivf = openIvf(spark, dir)
+    ivf.requireRaw()
+    ivf.append(vectors)
   }
 
   /** ARTIFACT COMPACTION / delta GC for the IVF index: fold every
@@ -2088,7 +2355,7 @@ object Similarity {
     * folded batch and refuse older ids
     * ([[graft.streaming.StreamIO.foldedByCompaction]]), readers ignore
     * any delta at-or-below the watermark
-    * ([[readIvfAssignedWithBatchId]] — so a crash between the swap and
+    * ([[IvfArtifact.rows]] — so a crash between the swap and
     * the delta delete never double-counts), and an interrupted swap is
     * repaired on the next entry. Returns the folded watermark, None if
     * there was nothing to fold.
@@ -2108,34 +2375,21 @@ object Similarity {
     val staged = s"$dir/assigned.compact-staging"
     StreamIO.recoverInterruptedSwap(assignedDir, staged,
       "_compacted_through", conf)
-    val (fs, streamRoot) = StreamIO.fsFor(s"$dir/stream", conf)
+    val ivf = openIvf(spark, dir)
     // deltas already folded by a crashed run (watermark in the swapped
     // base, reads ignoring them) are garbage — collect them first
-    val w0 = StreamIO.readMarker(assignedDir, "_compacted_through", conf)
-    def deltaIds(): Seq[Long] =
-      if (!fs.exists(streamRoot)) Seq.empty
-      else fs.listStatus(streamRoot).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("batch_id="))
-        .map(_.stripPrefix("batch_id=").toLong)
-    w0.foreach { w =>
-      deltaIds().filter(_ <= w).foreach(n => fs.delete(
-        new org.apache.hadoop.fs.Path(streamRoot, s"batch_id=$n"), true))
-    }
-    val live = deltaIds()
+    ivf.compactedThrough.foreach(w =>
+      ivf.dropDeltas(ivf.deltaIds().filter(_ <= w)))
+    val live = ivf.deltaIds()
     if (live.isEmpty) return None
     val w = live.max
-    // one pass: base + live deltas (readIvfAssigned applies the w0
-    // filter) rewritten in the build-time cell layout
-    readIvfAssigned(spark, dir)
+    // one pass: base + live deltas (rows applies the old watermark)
+    // rewritten in the build-time cell layout
+    ivf.rows.drop("batch_id")
       .write.mode("overwrite").partitionBy("cell").parquet(staged)
     StreamIO.writeMarker(staged, "_compacted_through", w, conf)
     StreamIO.swapInto(staged, assignedDir, conf)
-    live.foreach(n => fs.delete(
-      new org.apache.hadoop.fs.Path(streamRoot, s"batch_id=$n"), true))
-    // drop the emptied delta root: an empty dir would fail parquet
-    // schema inference on the next read (and be re-created by the next
-    // delta write anyway)
-    if (deltaIds().isEmpty) fs.delete(streamRoot, true)
+    ivf.dropDeltas(live)
     Some(w)
   }
 
@@ -2188,7 +2442,8 @@ object Similarity {
     // trained on) and the swap below would drop the whiten/ member —
     // leaving whitened rows behind a raw-looking root. Rebuild those
     // from the raw corpus via ivfWhitenIndexToDir instead.
-    requireRawIndex(spark, dir)
+    val ivf = openIvf(spark, dir)
+    ivf.requireRaw()
     import graft.streaming.StreamIO
     val conf = spark.sparkContext.hadoopConfiguration
     val staged = s"$dir.rebuild-staging"
@@ -2197,9 +2452,8 @@ object Similarity {
     // nCells <= 0 (the default) KEEPS the artifact's current cell
     // count: a drift-triggered rebuild re-fits the centroids, it does
     // not silently re-provision a tuned index to some fixed size
-    val n = if (nCells > 0) nCells
-            else readIvfCentroids(spark, dir).length
-    val corpus = readIvfAssigned(spark, dir).select("vec_id", "embedding")
+    val n = if (nCells > 0) nCells else ivf.centroids.length
+    val corpus = ivf.rows.select("vec_id", "embedding")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val cents = trainCentroids(corpus, n, iters)
@@ -2207,19 +2461,10 @@ object Similarity {
       // live deltas are folded into the rebuilt base: advance the
       // compaction watermark so a replay of the last folded batch
       // skips and older ids fail loudly
-      val (fs, streamRoot) = StreamIO.fsFor(s"$dir/stream", conf)
-      val deltaMax =
-        if (!fs.exists(streamRoot)) None
-        else fs.listStatus(streamRoot).toSeq.map(_.getPath.getName)
-          .filter(_.startsWith("batch_id="))
-          .map(_.stripPrefix("batch_id=").toLong)
-          .maxOption
-      val w0 = StreamIO.readMarker(s"$dir/assigned", "_compacted_through",
-        conf)
-      (deltaMax ++ w0).maxOption.foreach(w =>
+      (ivf.deltaIds() ++ ivf.compactedThrough).maxOption.foreach(w =>
         StreamIO.writeMarker(s"$staged/assigned", "_compacted_through",
           w, conf))
-      val v = readIvfQuantizerVersion(spark, dir).getOrElse(0L) + 1
+      val v = ivf.quantizerVersion.getOrElse(0L) + 1
       StreamIO.writeMarker(staged, "_quantizer_version", v, conf)
       // completion witness LAST: recoverInterruptedSwap only installs
       // a staging tree that carries it
@@ -2366,8 +2611,9 @@ object Similarity {
     * SimilaritySpec proves the equality to [[ivfDriftFrom]] on the
     * same frames). */
   def ivfDriftFromIndex(spark: SparkSession, dir: String): DataFrame = {
-    val cents = readIvfCentroids(spark, dir)
-    val all = readIvfAssignedWithBatchId(spark, dir)
+    val ivf = openIvf(spark, dir)
+    val cents = ivf.centroids
+    val all = ivf.rows
     val cur = all.select("vec_id", "embedding")
     val snap = new org.apache.hadoop.fs.Path(s"$dir/drift_baseline")
     val fs = snap.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2532,8 +2778,9 @@ object Similarity {
   private[graft] def ivfImpactFromIndex(spark: SparkSession, dir: String,
                                         queries: DataFrame, nQueries: Int,
                                         k: Int, nProbe: Int): DataFrame = {
-    val cents = readIvfCentroids(spark, dir)
-    val assigned = readIvfAssigned(spark, dir)
+    val ivf = openIvf(spark, dir)
+    val cents = ivf.centroids
+    val assigned = ivf.rows
     val q = queries.select(col("vec_id"), col("embedding"),
       l2norm(col("embedding")).as("nrm"))
     val qf = q.select(col("vec_id").as("query_id"),
@@ -3032,37 +3279,20 @@ object Similarity {
     * the one-call cadence by [[graft.api.Graft.maintainIvfIndex]]. */
   def pqDriftFromIndex(spark: SparkSession, dir: String,
                        staleRatio: Double = 1.5): DataFrame = {
-    import graft.streaming.StreamIO
-    val conf = spark.sparkContext.hadoopConfiguration
-    val (fs, p) = StreamIO.fsFor(s"$dir/pq_baseline", conf)
-    require(fs.exists(p),
+    val ivf = openIvf(spark, dir)
+    require(ivf.hasPqBaseline,
       s"no PQ distortion baseline at $dir/pq_baseline — ivfPqIndexAdd " +
         "pins it when it trains codebooks; a pre-pq_drift artifact " +
         "needs one retrain (ivfPqIndexAdd(retrain = true)) to start " +
         "monitoring")
-    val cbs = readPqCodebooks(spark, dir)
-    // measure distortion in the leg's ENCODING space: a residual leg's
-    // codes approximate e − c(e), an OPQ leg's approximate R·enc — that
-    // is the reconstruction whose error degrades its ADC shortlist
-    // (and the space the baseline was pinned in); a torn codebook unit
-    // refuses
-    val residualMode = readResidualMode(spark, dir)
-    val cur0 =
-      if (residualMode) {
-        val centArr = typedLit(
-          readIvfCentroids(spark, dir).map(_.toSeq).toSeq)
-        readIvfAssigned(spark, dir).select(col("vec_id"),
-          zip_with(col("embedding"), element_at(centArr, col("cell") + 1),
-            (x, c) => x.cast("double") - c).as("embedding"))
-      } else readIvfAssigned(spark, dir).select("vec_id", "embedding")
-    val cur =
-      if (readPqRotationMode(spark, dir))
-        cur0.select(col("vec_id"),
-          rotCol(readPqRotation(spark, dir), col("embedding"))
-            .as("embedding"))
-      else cur0
+    // measure distortion in the leg's ENCODING space — the space the
+    // baseline was pinned in and whose reconstruction error degrades
+    // its ADC shortlist; a torn codebook unit refuses
+    val pq = ivf.pq
     pqDriftFromStats(spark.read.parquet(s"$dir/pq_baseline"),
-      cur, cbs, staleRatio)
+      ivf.rows.select(col("vec_id"),
+        pq.space(col("embedding")).as("embedding")),
+      pq.cbs, staleRatio)
   }
 
   /** The full inverted-list table of an index artifact: the base build
@@ -3075,64 +3305,15 @@ object Similarity {
     * both legs: `cell` is a partition column of the base AND of every
     * delta batch. */
   def readIvfAssigned(spark: SparkSession, dir: String): DataFrame =
-    readIvfAssignedWithBatchId(spark, dir).drop("batch_id")
-
-  /** [[readIvfAssigned]] keeping the delta provenance: base rows carry
-    * a null `batch_id`, delta rows their partition's — the column the
-    * replay-exclusion reads of the continuous maintainers
-    * ([[graft.streaming.StreamSemanticDedup]]) filter on. Deltas at or
-    * below the base's `_compacted_through` watermark are EXCLUDED:
-    * their rows are already folded into the base by
-    * [[ivfIndexCompact]], and a crashed compaction (swap committed,
-    * delta delete pending) must not double-count them. */
-  private[graft] def readIvfAssignedWithBatchId(spark: SparkSession,
-                                                dir: String): DataFrame = {
-    val base = Tables.readParquet(spark, s"$dir/assigned")
-      .withColumn("batch_id", lit(null).cast("long"))
-    val deltaRoot = new org.apache.hadoop.fs.Path(s"$dir/stream")
-    val fs = deltaRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // bare existence is not enough: an emptied delta root (all batches
-    // folded) would fail parquet schema inference
-    val hasDeltas = fs.exists(deltaRoot) && fs.listStatus(deltaRoot)
-      .exists(_.getPath.getName.startsWith("batch_id="))
-    if (hasDeltas) {
-      val deltas = Tables.readParquet(spark, s"$dir/stream")
-        .withColumn("batch_id", col("batch_id").cast("long"))
-      val folded = graft.streaming.StreamIO.readMarker(
-        s"$dir/assigned", "_compacted_through",
-        spark.sparkContext.hadoopConfiguration)
-      val live = folded.map(w => deltas.filter(col("batch_id") > w))
-        .getOrElse(deltas)
-      base.unionByName(live.select(base.columns.map(col).toSeq: _*))
-    } else base
-  }
-
-  /** Refuse RAW-SPACE access to a whitened artifact: an
-    * [[ivfWhitenIndexToDir]] build stores every inverted-list row in
-    * whitened space, so scoring raw queries (or appending raw
-    * vectors) against it silently mixes two geometries — the exact
-    * failure the `_rotation` marker doctrine exists to prevent, one
-    * transform earlier in the pipeline. Raw artifacts (no `_whiten`
-    * marker) pass untouched; whitened callers go through
-    * [[annServeWhitenedFromIndex]] / [[ivfWhitenIndexAppend]], which
-    * apply the stored transform. */
-  private def requireRawIndex(spark: SparkSession, dir: String): Unit =
-    require(!graft.streaming.StreamIO.readMarker(dir, "_whiten",
-        spark.sparkContext.hadoopConfiguration).contains(1L),
-      s"index artifact at $dir carries _whiten = 1 (its rows are " +
-        "stored in whitened space) — raw-space serving or maintenance " +
-        "would silently mix geometries. Serve through " +
-        "annServeWhitenedFromIndex / append through " +
-        "ivfWhitenIndexAppend (they apply the stored transform).")
+    openIvf(spark, dir).rows.drop("batch_id")
 
   /** Serve (vec_id, embedding) queries straight from the index
     * artifact: no re-train, no corpus re-assignment — broadcast probes
     * join the cell-partitioned inverted lists. */
   def annServeFromIndex(spark: SparkSession, dir: String, queries: DataFrame,
-                        nProbe: Int = 4, k: Int = 5): DataFrame = {
-    requireRawIndex(spark, dir)
-    serveIndex(spark, dir, queries, nProbe, Exact, TopK(k))
-  }
+                        nProbe: Int = 4, k: Int = 5): DataFrame =
+    serveIndex(openIvf(spark, dir), raw = true, queries, nProbe, Exact,
+      TopK(k))
 
   /** Build an index artifact in a fresh per-run scratch dir (concurrent
     * runs must not overwrite each other's artifact mid-read), then serve
@@ -3172,10 +3353,9 @@ object Similarity {
     * train, snapshot, or drift-monitor — the whole point of the rung). */
   def annServeSq8FromIndex(spark: SparkSession, dir: String,
                            queries: DataFrame, nProbe: Int = 4, k: Int = 5,
-                           shortlistFactor: Int = 8): DataFrame = {
-    requireRawIndex(spark, dir)
-    serveIndex(spark, dir, queries, nProbe, Sq8, TopK(k, shortlistFactor))
-  }
+                           shortlistFactor: Int = 8): DataFrame =
+    serveIndex(openIvf(spark, dir), raw = true, queries, nProbe, Sq8,
+      TopK(k, shortlistFactor))
 
   /** §2 #237 — IVF-SQ8 serving FROM THE ARTIFACT: build the standard
     * IVF index once (static quantizer, the [[annIvfIndexed]] stance),
@@ -3365,11 +3545,9 @@ object Similarity {
     * touched once, in its cheapest indexed form. */
   def annMmrFromIndex(spark: SparkSession, dir: String, queryFrame: DataFrame,
                       nProbe: Int = 4, k: Int = 5, shortlistFactor: Int = 8,
-                      lambda: Double = 0.7): DataFrame = {
-    requireRawIndex(spark, dir)
-    serveIndex(spark, dir, queryFrame, nProbe, Exact,
+                      lambda: Double = 0.7): DataFrame =
+    serveIndex(openIvf(spark, dir), raw = true, queryFrame, nProbe, Exact,
       Mmr(k, shortlistFactor, lambda))
-  }
 
   /** MMR with its stage-1 shortlist from the SQ8 SCAN (VERDICT-r18
     * #4 — compose the diversity re-rank with the cheap scan leg): the
@@ -3386,11 +3564,9 @@ object Similarity {
                          queryFrame: DataFrame, nProbe: Int = 4,
                          k: Int = 5, shortlistFactor: Int = 8,
                          lambda: Double = 0.7,
-                         preFactor: Int = 2): DataFrame = {
-    requireRawIndex(spark, dir)
-    serveIndex(spark, dir, queryFrame, nProbe, Sq8,
+                         preFactor: Int = 2): DataFrame =
+    serveIndex(openIvf(spark, dir), raw = true, queryFrame, nProbe, Sq8,
       Mmr(k, shortlistFactor, lambda, preFactor))
-  }
 
   /** §2 #250 — MMR OVER THE SQ8 SCAN, FROM THE ARTIFACT: the standard
     * IVF build (static quantizer) served through
@@ -4902,14 +5078,13 @@ object Similarity {
                     opq: Option[Boolean] = None)
       : Unit = {
     // the PQ serving path scores RAW queries (annServeFromPqIndex is
-    // requireRawIndex-guarded); a PQ leg over a whitened artifact
-    // would be unreachable by construction — refuse the build, not
-    // just the serve
-    requireRawIndex(spark, dir)
+    // raw-only); a PQ leg over a whitened artifact would be
+    // unreachable by construction — refuse the build, not just the serve
+    val ivf = openIvf(spark, dir)
+    ivf.requireRaw()
     import graft.streaming.StreamIO
     val conf = spark.sparkContext.hadoopConfiguration
     val base = spark.read.parquet(s"$dir/assigned")
-    val (fs, cbPath) = StreamIO.fsFor(s"$dir/codebooks", conf)
     require(!(opq.contains(false) && rotation.isDefined),
       "opq = Some(false) contradicts an explicit rotation")
     require(rotation.isEmpty || codebooks.isDefined,
@@ -4917,30 +5092,26 @@ object Similarity {
         "codebooks are trained in the rotated space — passing one " +
         "half would pair models from two spaces)")
     val reuseStored = codebooks.isEmpty && rotation.isEmpty && !retrain &&
-      fs.exists(cbPath)
+      ivf.hasCodebooks
     // resolve the encoding mode BEFORE touching anything: stored mode
-    // when a consistent leg exists (readResidualMode REFUSES a torn
+    // when a consistent leg exists (residualMode REFUSES a torn
     // codebook unit — consulted lazily, so a retrain that states its
     // mode recovers a torn leg instead of tripping on it), else the
     // caller's choice, else raw
-    def storedMode(): Option[Boolean] =
-      if (fs.exists(cbPath)) Some(readResidualMode(spark, dir)) else None
     val mode: Boolean =
       if (reuseStored) {
-        val m = storedMode().getOrElse(false)
+        val m = ivf.residualMode.getOrElse(false)
         require(residual.forall(_ == m),
           s"PQ leg at $dir is ${if (m) "residual" else "raw"}-encoded; " +
             "a re-sync cannot change the encoding (codes from one " +
             "space under another space's codebooks are silently " +
             "wrong). Pass retrain = true to re-train in the new mode.")
         m
-      } else residual.orElse(storedMode()).getOrElse(false)
+      } else residual.orElse(ivf.residualMode).getOrElse(false)
     // the rotation (OPQ) mode resolves by the SAME doctrine: stored on
     // a pure re-sync (a contradicting `opq` refuses — rotated-space
     // codes under unrotated scoring are silently wrong, and vice
     // versa), else the caller's choice, else the stored mode, else off
-    def storedRotMode(): Option[Boolean] =
-      if (fs.exists(cbPath)) Some(readPqRotationMode(spark, dir)) else None
     val rotMode: Boolean =
       if (codebooks.isDefined) {
         // an explicit model pair IS the unit: its rotation mode is
@@ -4955,31 +5126,30 @@ object Similarity {
             "together with its codebooks (they are one unit), or drop " +
             "the opq flag")
         require(rotation.isDefined || opq.isDefined ||
-            !storedRotMode().getOrElse(false),
+            !ivf.rotationMode.getOrElse(false),
           s"PQ leg at $dir is OPQ-rotated but the explicit codebooks " +
             "came without a rotation — refusing the silent downgrade. " +
             "Pass rotation = Some(R) to stay OPQ, or opq = Some(false) " +
             "to deliberately re-key unrotated.")
         rotation.isDefined
       } else if (reuseStored) {
-        val m = storedRotMode().getOrElse(false)
+        val m = ivf.rotationMode.getOrElse(false)
         require(opq.forall(_ == m),
           s"PQ leg at $dir is ${if (m) "OPQ-rotated" else "unrotated"}; " +
             "a re-sync cannot change the rotation mode. Pass retrain = " +
             "true to re-train in the new mode.")
         m
-      } else opq.orElse(storedRotMode()).getOrElse(false)
+      } else opq.orElse(ivf.rotationMode).getOrElse(false)
     // residual mode subtracts the artifact's own centroid per the
     // STORED cell assignment — the exact quantity serving adds back
-    lazy val cents = readIvfCentroids(spark, dir)
+    lazy val cents = ivf.centroids
     // resolve (rotation, codebooks) TOGETHER — OPQ codebooks only make
     // sense in their rotation's space, so the pair travels as a unit
     val (rot, cbs): (Option[Array[Array[Double]]],
                      Array[Array[Array[Double]]]) =
       if (codebooks.isDefined) (rotation, codebooks.get)
       else if (reuseStored)
-        (if (rotMode) Some(readPqRotation(spark, dir)) else None,
-          readPqCodebooks(spark, dir))
+        (if (rotMode) Some(ivf.rotation) else None, ivf.codebooks)
       else {
         // the trainers see the residual/raw space; OPQ learns its
         // rotation on top of it
@@ -5012,7 +5182,7 @@ object Similarity {
     // and leaves the unit byte-for-byte alone, so no crash window in
     // a re-sync can tear it. On a (re)train the marker lands LAST:
     // a crash inside the unit write leaves no marker and every
-    // reader ([[readResidualMode]]) refuses rather than pairing
+    // reader ([[IvfArtifact.residualMode]]) refuses rather than pairing
     // codebooks with a guessed encoding space or a stale baseline.
     if (!reuseStored) {
       import spark.implicits._
@@ -5024,7 +5194,8 @@ object Similarity {
       // model state), before the baseline and markers; a unit trained
       // WITHOUT a rotation removes any stale member from a previous
       // OPQ vintage (readers key on the marker, but a dead member
-      // invites exactly the manual-surgery tear readPqRotation guards)
+      // invites exactly the manual-surgery tear IvfArtifact.rotation
+      // guards)
       rot match {
         case Some(r) =>
           r.zipWithIndex.map { case (row, j) => (j, row.toSeq) }.toSeq
@@ -5041,7 +5212,7 @@ object Similarity {
       pqDistortionStats(rows.select(col("cell"), col("vec_id"),
           codec.space(col("embedding")).as("embedding")), cbs, "base")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_baseline")
-      // markers land LAST, `_residual` very last: readResidualMode's
+      // markers land LAST, `_residual` very last: residualMode's
       // completeness doctrine keys on it, so a crash anywhere inside
       // the unit (including between the two markers) leaves a unit
       // every reader refuses — the rotation can never be half-adopted
@@ -5053,91 +5224,7 @@ object Similarity {
     // pin the coverage: codes encode the base as of this compaction
     // watermark — serving compares and refuses a stale scan table
     StreamIO.writeMarker(s"$dir/codes", "_synced_to",
-      StreamIO.readMarker(s"$dir/assigned", "_compacted_through", conf)
-        .getOrElse(-1L), conf)
-  }
-
-  /** The PQ leg's encoding mode. [[ivfPqIndexAdd]] writes the
-    * `_residual` marker strictly after the codebook unit it describes
-    * (codebooks + distortion baseline), so a missing marker means one
-    * of two things, distinguished by the baseline's presence:
-    *
-    *  - marker absent, `pq_baseline/` PRESENT: the (re)train crashed
-    *    mid-unit (between the baseline and the marker) and the stored
-    *    pieces may disagree — refuse rather than guess (a wrong guess
-    *    scores one space's codes under the other space's codebooks,
-    *    silently);
-    *  - marker absent, `pq_baseline/` ABSENT, `codes/_synced_to`
-    *    PRESENT: the LEGACY pre-marker layout — those legs were
-    *    trained before residual encoding (or the baseline snapshot)
-    *    existed and COMPLETED (`_synced_to` is every add's final
-    *    write, and the codes overwrite clears it first), so the mode
-    *    is raw by construction, not a guess. Returns `false`;
-    *  - marker absent, `pq_baseline/` ABSENT, `codes/_synced_to`
-    *    ABSENT: a first (re)train crashed mid-write — the codebooks'
-    *    encoding space is unknown, so refuse. Serving would refuse on
-    *    staleness anyway, but the RE-SYNC path both consults the mode
-    *    AND repairs the staleness marker: a raw guess here would
-    *    launder a torn residual train into a consistent-looking,
-    *    silently-wrong raw leg.
-    */
-  private[graft] def readResidualMode(spark: SparkSession,
-                                      dir: String): Boolean = {
-    import graft.streaming.StreamIO
-    val conf = spark.sparkContext.hadoopConfiguration
-    StreamIO.readMarker(s"$dir/codebooks", "_residual", conf) match {
-      case Some(v) => v == 1L
-      case None =>
-        val (fs, bl) = StreamIO.fsFor(s"$dir/pq_baseline", conf)
-        if (fs.exists(bl)) throw new IllegalArgumentException(
-          s"PQ codebooks at $dir/codebooks carry no _residual marker " +
-            "but a pq_baseline/ snapshot exists — the codebook " +
-            "(re)train crashed mid-unit (the marker lands after the " +
-            "codebooks and baseline), so the stored pieces may " +
-            "disagree and their encoding space is unknown. Re-run " +
-            "ivfPqIndexAdd(retrain = true, residual = Some(<intended " +
-            "mode>)).")
-        if (StreamIO.readMarker(s"$dir/codes", "_synced_to", conf).isEmpty)
-          throw new IllegalArgumentException(
-            s"PQ codebooks at $dir/codebooks carry no _residual marker, " +
-              "no pq_baseline/ snapshot, and codes/ has no _synced_to — " +
-              "a first (re)train crashed mid-write (a completed legacy " +
-              "pre-marker leg always carries _synced_to), so the " +
-              "encoding space is unknown. Re-run ivfPqIndexAdd(retrain " +
-              "= true, residual = Some(<intended mode>)).")
-        false // completed legacy pre-marker layout: raw by construction
-    }
-  }
-
-  /** Whether the PQ leg's codebooks were trained under an OPQ rotation.
-    * [[ivfPqIndexAdd]] writes the `_rotation` marker strictly BEFORE
-    * `_residual`, so on any COMPLETE unit (the only kind
-    * [[readResidualMode]]'s doctrine lets a caller past) an absent
-    * `_rotation` marker means a rotation-unaware vintage — unrotated by
-    * construction, not a guess. Consult [[readResidualMode]] first: it
-    * is the completeness gate for the whole unit. */
-  private[graft] def readPqRotationMode(spark: SparkSession,
-                                        dir: String): Boolean =
-    graft.streaming.StreamIO.readMarker(s"$dir/codebooks", "_rotation",
-      spark.sparkContext.hadoopConfiguration).contains(1L)
-
-  /** The stored OPQ rotation (d×d doubles — model state). Refuses
-    * loudly when the `_rotation` marker promises one but `rotation/`
-    * is missing (a torn unit that escaped the marker doctrine, e.g. a
-    * partial manual delete): guessing identity would silently score
-    * rotated codes against unrotated queries. */
-  private[graft] def readPqRotation(spark: SparkSession,
-                                    dir: String): Array[Array[Double]] = {
-    val (fs, rp) = graft.streaming.StreamIO.fsFor(s"$dir/rotation",
-      spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(rp),
-      s"PQ unit at $dir carries _rotation = 1 but rotation/ is missing " +
-        "— the unit is torn. Re-run ivfPqIndexAdd(retrain = true, " +
-        "opq = Some(true)).")
-    ArtifactState.ofInputs(spark, "rotation", Seq(s"$dir/rotation"), ()) {
-      spark.read.parquet(s"$dir/rotation").orderBy("j").collect()
-        .map(_.getAs[Seq[Double]]("rv").toArray)
-    }
+      ivf.compactedThrough.getOrElse(-1L), conf)
   }
 
   /** PQ codebooks back from an artifact's `codebooks/` (bounded:
@@ -5145,15 +5232,7 @@ object Similarity {
     * version of `codebooks/` (shared, read-only). */
   def readPqCodebooks(spark: SparkSession,
                       dir: String): Array[Array[Array[Double]]] =
-    ArtifactState.ofInputs(spark, "codebooks", Seq(s"$dir/codebooks"),
-      ()) {
-      val rows = spark.read.parquet(s"$dir/codebooks")
-        .orderBy("m", "cell").collect()
-      rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, rs) =>
-        rs.sortBy(_.getInt(1))
-          .map(_.getAs[Seq[Double]]("codeword").toArray)
-      }.toArray
-    }
+    openIvf(spark, dir).codebooks
 
   /** IVFADC serving FROM THE ARTIFACT: ADC shortlist over the probed
     * cells of the compressed `codes/` table (8 ints per candidate —
@@ -5188,17 +5267,6 @@ object Similarity {
       else if (pq.residualCentroids.isDefined) 4 else 8))
   }
 
-  /** The stored PQ codebook unit as a codec: codebooks, the residual
-    * mode (a torn unit refuses here) and the OPQ rotation member. */
-  private def storedPqCodec(spark: SparkSession, dir: String,
-                            cents: Array[Array[Double]]): Pq = {
-    val cbs = readPqCodebooks(spark, dir)
-    val residual = readResidualMode(spark, dir)
-    Pq(cbs, if (residual) Some(cents) else None,
-      if (readPqRotationMode(spark, dir)) Some(readPqRotation(spark, dir))
-      else None)
-  }
-
   /** The PQ leg's serving, shared by the top-k serve
     * ([[annServeFromPqIndex]]) and the MMR-over-ADC form
     * ([[annMmrPqFromIndex]]): every staleness/mode/rotation guard, then
@@ -5208,34 +5276,13 @@ object Similarity {
   private def servePqLeg(spark: SparkSession, dir: String,
                          queries: DataFrame, nProbe: Int)
                         (rank: Pq => Rank): DataFrame = {
-    requireRawIndex(spark, dir)
-    import graft.streaming.StreamIO
-    val conf = spark.sparkContext.hadoopConfiguration
-    val (fs, codesPath) = StreamIO.fsFor(s"$dir/codes", conf)
-    require(fs.exists(codesPath),
-      s"no PQ leg at $dir/codes — run ivfPqIndexAdd first")
-    // the marker is REQUIRED, not defaulted: ivfPqIndexAdd writes it
-    // strictly after the codes land, so its absence means the encode
-    // crashed mid-write and the scan table may silently miss vectors
-    val synced = StreamIO.readMarker(s"$dir/codes", "_synced_to", conf)
-      .getOrElse(throw new IllegalArgumentException(
-        s"PQ codes at $dir/codes carry no _synced_to marker — the " +
-          "encode did not complete (ivfPqIndexAdd writes the marker " +
-          "after the codes). Re-run ivfPqIndexAdd."))
-    val folded = StreamIO.readMarker(s"$dir/assigned",
-      "_compacted_through", conf).getOrElse(-1L)
-    require(synced == folded,
-      s"PQ codes at $dir/codes are synced to compaction watermark " +
-        s"$synced but the base is folded through $folded — the codes " +
-        "miss vectors compaction folded into the base. Re-run " +
-        "ivfPqIndexAdd (map-only re-encode with the stored codebooks).")
-    val cents = readIvfCentroids(spark, dir)
-    val codec = storedPqCodec(spark, dir, cents)
-    val all = readIvfAssignedWithBatchId(spark, dir)
-    serve(Tables.readParquet(spark, s"$dir/codes")
-        .withColumnRenamed("vec_id", "neighbor_id"),
-      fullRows(all), queryRows(queries), Some(cents), nProbe, codec,
-      rank(codec), Some(all.filter(col("batch_id").isNotNull)
+    val ivf = openIvf(spark, dir)
+    ivf.requireRaw()
+    ivf.requirePqSynced()
+    val all = ivf.rows
+    serve(ivf.codes.withColumnRenamed("vec_id", "neighbor_id"),
+      fullRows(all), queryRows(queries), Some(ivf.centroids), nProbe, ivf.pq,
+      rank(ivf.pq), Some(all.filter(col("batch_id").isNotNull)
         .select(col("cell"), col("vec_id").as("neighbor_id"))))
   }
 
@@ -6586,12 +6633,12 @@ object Similarity {
     * `whiten/` present) refuses raw serving on the missing centroids
     * and whitened serving on the missing marker; marker + no
     * centroids refuses raw serving on the marker
-    * ([[annServeFromIndex]]'s requireRawIndex) and whitened serving
+    * ([[annServeFromIndex]]'s requireRaw) and whitened serving
     * on the missing centroids.
     *
     * Maintenance contract (v1): whitened serve + whitened append +
     * compaction. Rebuild and the PQ leg refuse
-    * (requireRawIndex): a whitened artifact's honest retrain re-fits
+    * (requireRaw): a whitened artifact's honest retrain re-fits
     * μ/pc from the raw corpus — [[ivfWhitenIndexToDir]] again — and
     * the PQ serving path scores raw queries by construction.
     *
@@ -6628,26 +6675,10 @@ object Similarity {
 
   /** The stored whitening model (μ + pc: two d-vectors — model state,
     * never data). Refuses a raw artifact (no `_whiten` marker) and a
-    * torn one (`_whiten` = 1 but `whiten/` missing — only manual
-    * surgery can produce it given the build order, the
-    * [[readPqRotation]] stance). */
+    * torn one (`_whiten` = 1 but `whiten/` missing). */
   def readWhitenModel(spark: SparkSession,
-                      dir: String): (Array[Double], Array[Double]) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    require(graft.streaming.StreamIO.readMarker(dir, "_whiten", conf)
-        .contains(1L),
-      s"index artifact at $dir carries no _whiten marker — its rows " +
-        "are raw-space; serve through annServeFromIndex, or build a " +
-        "whitened artifact with ivfWhitenIndexToDir.")
-    val (fs, wp) = graft.streaming.StreamIO.fsFor(s"$dir/whiten", conf)
-    require(fs.exists(wp),
-      s"index artifact at $dir carries _whiten = 1 but whiten/ is " +
-        "missing — the unit is torn. Rebuild with ivfWhitenIndexToDir.")
-    val rows = spark.read.parquet(s"$dir/whiten").collect()
-      .map(r => r.getAs[String]("kind") ->
-        r.getAs[Seq[Double]]("v").toArray).toMap
-    (rows("mu"), rows("pc"))
-  }
+                      dir: String): (Array[Double], Array[Double]) =
+    openIvf(spark, dir).whitenModel
 
   /** Serve RAW (vec_id, embedding) queries from a whitened artifact:
     * the stored μ/pc transform the query batch (map-only over two
@@ -6655,12 +6686,9 @@ object Similarity {
     * whitened space — the caller never touches the transform. */
   def annServeWhitenedFromIndex(spark: SparkSession, dir: String,
                                 queries: DataFrame, nProbe: Int = 4,
-                                k: Int = 5): DataFrame = {
-    val (mu, pc) = readWhitenModel(spark, dir)
-    serveIndex(spark, dir, whitenVectors(
-      queries.select(col("vec_id"), col("embedding")), mu, pc), nProbe,
-      Exact, TopK(k))
-  }
+                                k: Int = 5): DataFrame =
+    serveIndex(openIvf(spark, dir), raw = false, queries, nProbe, Exact,
+      TopK(k))
 
   /** Incremental maintenance of the whitened artifact: a RAW delta
     * batch is whitened with the STORED model (the transform is
@@ -6671,13 +6699,9 @@ object Similarity {
     * untouched. */
   def ivfWhitenIndexAppend(spark: SparkSession, dir: String,
                            vectors: DataFrame): Unit = {
-    val (mu, pc) = readWhitenModel(spark, dir)
-    val cents = readIvfCentroids(spark, dir)
-    assignWithCentroids(
-      whitenVectors(vectors.select(col("vec_id"), col("embedding")),
-        mu, pc), cents)
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$dir/assigned")
+    val ivf = openIvf(spark, dir)
+    ivf.requireWhitened()
+    ivf.append(vectors)
   }
 
   /** §2 #253 — WHITENED IVF SERVING FROM THE ARTIFACT: build the

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Similarity
 
@@ -39,23 +38,39 @@ object StreamAnn {
     * directly to prove replay idempotence. */
   private[graft] def applyBatch(batch: DataFrame, batchId: Long,
                                 corpusDir: String, outDir: String,
-                                nProbe: Int, k: Int): Unit = {
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    Similarity.annServe(spark, corpusDir, batch, nProbe, k)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-  }
+                                nProbe: Int, k: Int): Unit =
+    land(batch, batchId, outDir)(b =>
+      Similarity.annServe(b.sparkSession, corpusDir, b, nProbe, k))
+
+  /** Write `serveBatch(batch)` over the batch's own `batch_id=N`
+    * partition of `outDir`; an idle batch writes nothing. `release`
+    * frees the per-batch frames the serve persisted, after the write. */
+  private def land(batch: DataFrame, batchId: Long, outDir: String,
+                   release: Boolean = false)
+                  (serveBatch: DataFrame => DataFrame): Unit =
+    if (!batch.isEmpty) {
+      serveBatch(batch)
+        .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+      if (release) graft.operators.TransientCaches.release()
+    }
+
+  /** Start a stream that [[land]]s each micro-batch of `queries`. */
+  private def serveEach(queries: DataFrame, outDir: String,
+                        checkpoint: String, release: Boolean = false)
+                       (serveBatch: DataFrame => DataFrame): StreamingQuery =
+    queries.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        land(batch, batchId, outDir, release)(serveBatch)
+      }
+      .start()
 
   /** Start continuous serving of `queries` (needs vec_id, embedding). */
   def applyStream(queries: DataFrame, corpusDir: String, outDir: String,
                   checkpoint: String, nProbe: Int = 4,
                   k: Int = 5): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, corpusDir, outDir, nProbe, k)
-      }
-      .start()
+    serveEach(queries, outDir, checkpoint)(b =>
+      Similarity.annServe(b.sparkSession, corpusDir, b, nProbe, k))
 
   /** Start continuous serving FROM THE INDEX ARTIFACT (built by
     * [[Similarity.ivfIndexToDir]], possibly growing live under
@@ -77,16 +92,9 @@ object StreamAnn {
   def applyStreamFromIndex(queries: DataFrame, indexDir: String,
                            outDir: String, checkpoint: String,
                            nProbe: Int = 4, k: Int = 5): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          Similarity.annServeFromIndex(batch.sparkSession, indexDir,
-              batch, nProbe, k)
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+    serveEach(queries, outDir, checkpoint)(b =>
+      Similarity.annServeFromIndex(b.sparkSession, indexDir, b, nProbe,
+        k))
 
   /** Continuous IVF-SQ8 serving: each query micro-batch scores the
     * probed cells through [[Similarity.annServeSq8FromIndex]]'s
@@ -99,16 +107,9 @@ object StreamAnn {
   def applyStreamSq8FromIndex(queries: DataFrame, indexDir: String,
                               outDir: String, checkpoint: String,
                               nProbe: Int = 4, k: Int = 5): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          Similarity.annServeSq8FromIndex(batch.sparkSession, indexDir,
-              batch, nProbe, k)
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+    serveEach(queries, outDir, checkpoint)(b =>
+      Similarity.annServeSq8FromIndex(b.sparkSession, indexDir, b, nProbe,
+        k))
 
   /** Continuous IVFADC serving from the artifact's PQ leg
     * ([[Similarity.ivfPqIndexAdd]]): each query micro-batch ADC-scans
@@ -125,16 +126,9 @@ object StreamAnn {
   def applyStreamFromPqIndex(queries: DataFrame, indexDir: String,
                              outDir: String, checkpoint: String,
                              nProbe: Int = 4, k: Int = 5): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          Similarity.annServeFromPqIndex(batch.sparkSession, indexDir,
-              batch, nProbe, k)
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+    serveEach(queries, outDir, checkpoint)(b =>
+      Similarity.annServeFromPqIndex(b.sparkSession, indexDir, b, nProbe,
+        k))
 
   /** Continuous WHITENED serving from a whitened artifact
     * ([[Similarity.ivfWhitenIndexToDir]]): each micro-batch of RAW
@@ -150,16 +144,9 @@ object StreamAnn {
                                    outDir: String, checkpoint: String,
                                    nProbe: Int = 4,
                                    k: Int = 5): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          Similarity.annServeWhitenedFromIndex(batch.sparkSession,
-              indexDir, batch, nProbe, k)
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+    serveEach(queries, outDir, checkpoint)(b =>
+      Similarity.annServeWhitenedFromIndex(b.sparkSession, indexDir, b, nProbe,
+        k))
 
   /** Continuous MMR serving from the artifact: each query micro-batch
     * takes its shortlist from the probed inverted lists and runs the
@@ -177,16 +164,7 @@ object StreamAnn {
                               outDir: String, checkpoint: String,
                               nProbe: Int = 4, k: Int = 5,
                               lambda: Double = 0.7): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          Similarity.annMmrFromIndex(batch.sparkSession, indexDir,
-              batch, nProbe, k, lambda = lambda)
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-          graft.operators.TransientCaches.release()
-        }
-        ()
-      }
-      .start()
+    serveEach(queries, outDir, checkpoint, release = true)(b =>
+      Similarity.annMmrFromIndex(b.sparkSession, indexDir, b, nProbe, k,
+        lambda = lambda))
 }

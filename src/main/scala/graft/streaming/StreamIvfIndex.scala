@@ -43,8 +43,11 @@ object StreamIvfIndex {
   private[graft] def applyBatch(batch: DataFrame, batchId: Long,
                                 dir: String,
                                 pinnedVersion: Option[Long] = None): Unit = {
+    val ivf = Similarity.openIvf(batch.sparkSession, dir)
+    // raw batch vectors never land in a whitened artifact's lists
+    ivf.requireRaw()
     pinnedVersion.foreach { v0 =>
-      val v = Similarity.readIvfQuantizerVersion(batch.sparkSession, dir)
+      val v = ivf.quantizerVersion
       if (!v.contains(v0))
         throw new IllegalStateException(
           s"IVF index at $dir is at quantizer version ${v.orNull} but " +
@@ -54,18 +57,8 @@ object StreamIvfIndex {
     }
     // replay of a batch ivfIndexCompact already folded into the base:
     // its vectors are in assigned/ — skip (older ids fail loudly)
-    if (StreamIO.foldedByCompaction(s"$dir/assigned", batchId,
-        batch.sparkSession.sparkContext.hadoopConfiguration)) return
-    // idle micro-batch: nothing to land (an empty partitionBy write
-    // would leave a fileless batch_id dir for readers to trip on)
-    if (!batch.isEmpty) {
-      val cents = Similarity.readIvfCentroids(batch.sparkSession, dir)
-      Similarity.assignWithCentroids(
-          batch.select("vec_id", "embedding"), cents)
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/stream/batch_id=$batchId")
-    }
-    ()
+    if (!ivf.foldedByCompaction(batchId))
+      ivf.landDelta(batchId, batch.select("vec_id", "embedding"))
   }
 
   /** Start continuous maintenance of the index at `dir` (built once by
@@ -76,8 +69,8 @@ object StreamIvfIndex {
     // pin the quantizer version for the life of this stream: every
     // batch must assign under the SAME centroids or the deltas mix
     // two quantizers' cell meanings (applyBatch enforces it)
-    val pinned = Similarity.readIvfQuantizerVersion(
-      vectors.sparkSession, dir)
+    val pinned = Similarity.openIvf(vectors.sparkSession, dir)
+      .quantizerVersion
     vectors.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

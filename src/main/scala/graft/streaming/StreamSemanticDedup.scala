@@ -39,36 +39,29 @@ object StreamSemanticDedup {
                                 dir: String, outDir: String,
                                 tau: Double): Unit = {
     val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
+    val ivf = Similarity.openIvf(spark, dir)
+    // the kept corpus is raw-space: a whitened artifact refuses
+    ivf.requireRaw()
     // replay of a compaction-folded batch: kept vectors are in the
     // folded assigned/ base and decisions in the folded log — skip
     // (older ids fail loudly, StreamIO.foldedByCompaction)
-    if (StreamIO.foldedByCompaction(s"$dir/assigned", batchId, conf)
-        || StreamIO.foldedByCompaction(outDir, batchId, conf)) return
+    if (ivf.foldedByCompaction(batchId) || StreamIO.foldedByCompaction(
+        outDir, batchId, spark.sparkContext.hadoopConfiguration)) return
     val b = batch.select(col("vec_id"), col("embedding"))
-    val cents = Similarity.readIvfCentroids(spark, dir)
-    val base = {
-      val all = Similarity.readIvfAssignedWithBatchId(spark, dir)
-      all.filter(coalesce(col("batch_id") =!= batchId, lit(true)))
-        .drop("batch_id")
-    }
+    val base = ivf.rows.filter(coalesce(col("batch_id") =!= batchId,
+      lit(true))).drop("batch_id")
     // persist: the decision frame feeds both the log write and the
     // kept filter — without the cache the assignment + cell join would
     // execute twice
     val decisions = Similarity
-      .semanticDedupIncrementalFrom(base, b, cents, tau)
+      .semanticDedupIncrementalFrom(base, b, ivf.centroids, tau)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     decisions.select("vec_id", "cell", "decision")
       .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    val kept = Similarity.assignWithCentroids(
-      b.join(decisions.filter(col("decision") === "kept")
-        .select("vec_id"), "vec_id"), cents)
-    // an all-near batch lands no delta: a fileless batch_id dir would
-    // trip schema inference on the stream root, and the decision is
+    // an all-near batch lands no delta, and the decision is
     // deterministic so a replay recomputes the same emptiness
-    if (!kept.isEmpty)
-      kept.write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/stream/batch_id=$batchId")
+    ivf.landDelta(batchId, b.join(decisions.filter(col("decision") ===
+      "kept").select("vec_id"), "vec_id"))
     decisions.unpersist()
     ()
   }

@@ -986,6 +986,19 @@ class SimilaritySpec extends SparkSpec {
     assert(failing(_._4).isEmpty, "an unchanged input must build nothing")
   }
 
+  test("artifact state: a directory artifact is registered for deletion " +
+      "when its JVM exits") {
+    import graft.operators.ArtifactState
+    val input = graft.operators.ExportImport.scratch("dirof-exit-input")
+    val dir = ArtifactState.dirOf(spark, "spec-exit", Seq(input),
+      java.util.UUID.randomUUID().toString)(_ => ())
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(p) && fs.cancelDeleteOnExit(p),
+      s"$dir must be registered for deletion at exit")
+    fs.deleteOnExit(p)
+  }
+
   test("ivfIndexAppend: appended index serves identically to a rebuild") {
     import org.apache.spark.sql.functions.col
     val embs = Tables.load(spark, sf, "embeddings")
@@ -1354,6 +1367,12 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"))
     Similarity.ivfIndexBuild(spark, embs, dir)
     Similarity.ivfPqIndexAdd(spark, dir, opq = Some(true))
+    // a fresh leg with no deltas reads the baseline's own encoding
+    // space: every sub-space sees the same rows at the same distortion
+    assert(Similarity.pqDriftFromIndex(spark, dir).collect().forall(r =>
+      r.getAs[Long]("cur_cnt") == r.getAs[Long]("base_cnt")
+        && r.getAs[Double]("ratio4") == 1.0),
+      "OPQ drift must read the rotated baseline space")
     def rotMarker(): Long = graft.streaming.StreamIO.readMarker(
       s"$dir/codebooks", "_rotation", conf).getOrElse(0L)
     assert(rotMarker() == 1L, "the rotation marker must pin the mode")
@@ -1444,6 +1463,12 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"))
     Similarity.ivfIndexBuild(spark, embs, dir)
     Similarity.ivfPqIndexAdd(spark, dir, residual = Some(true))
+    // a fresh leg with no deltas reads the baseline's own encoding
+    // space: every sub-space sees the same rows at the same distortion
+    assert(Similarity.pqDriftFromIndex(spark, dir).collect().forall(r =>
+      r.getAs[Long]("cur_cnt") == r.getAs[Long]("base_cnt")
+        && r.getAs[Double]("ratio4") == 1.0),
+      "residual drift must read the residual baseline space")
     def mode(): Long = graft.streaming.StreamIO.readMarker(
       s"$dir/codebooks", "_residual", conf).getOrElse(0L)
     assert(mode() == 1L, "the residual marker must pin the mode")
@@ -1773,11 +1798,17 @@ class SimilaritySpec extends SparkSpec {
         Similarity.annServeFromIndex(spark, dir, queries).collect()),
       "append" -> (() => Similarity.ivfIndexAppend(spark, dir, queries)),
       "pq-leg" -> (() => Similarity.ivfPqIndexAdd(spark, dir)),
-      "rebuild" -> (() => Similarity.ivfIndexRebuild(spark, dir))
+      "rebuild" -> (() => Similarity.ivfIndexRebuild(spark, dir)),
+      "stream-maintainer" -> (() =>
+        graft.streaming.StreamIvfIndex.applyBatch(queries, 0L, dir)),
+      "stream-dedup" -> (() => graft.streaming.StreamSemanticDedup
+        .applyBatch(queries, 0L, dir, s"$dir-dedup-log", 0.4))
     ).foreach { case (name, f) =>
       val e = intercept[IllegalArgumentException](f())
       assert(e.getMessage.contains("_whiten"), s"$name: ${e.getMessage}")
     }
+    val (sfs, sp) = graft.streaming.StreamIO.fsFor(s"$dir/stream", conf)
+    assert(!sfs.exists(sp), "a refused maintainer must land no delta")
     // ... and the whitened serve refuses a raw artifact
     val rawDir = graft.operators.ExportImport.scratch("ivf-raw-vs-whiten")
     graft.streaming.StreamIO.deleteRecursively(rawDir, conf)
@@ -1876,6 +1907,12 @@ class SimilaritySpec extends SparkSpec {
     val base = embs.filter(col("vec_id") % 5 =!= 0)
     Similarity.ivfIndexBuild(spark, base, dir)
     Similarity.ivfPqIndexAdd(spark, dir) // trains + pins pq_baseline/
+    // a fresh leg with no deltas reads the baseline's own encoding
+    // space: every sub-space sees the same rows at the same distortion
+    assert(Similarity.pqDriftFromIndex(spark, dir).collect().forall(r =>
+      r.getAs[Long]("cur_cnt") == r.getAs[Long]("base_cnt")
+        && r.getAs[Double]("ratio4") == 1.0),
+      "raw drift must read the raw baseline space")
     val baseline0 = spark.read.parquet(s"$dir/pq_baseline")
       .collect().map(_.toString).toSeq.sorted
     // freshly trained: the monitor reads the trained fit (ratio ≈ 1)
@@ -2003,7 +2040,7 @@ class SimilaritySpec extends SparkSpec {
     graft.streaming.StreamIO.deleteRecursively(s"$dir/pq_baseline", conf)
     // legacy is raw BY CONSTRUCTION, not a guess: serving works and
     // returns exactly what the marked raw leg served
-    assert(Similarity.readResidualMode(spark, dir) == false)
+    assert(Similarity.openIvf(spark, dir).residualMode == Some(false))
     assert(Similarity.annServeFromPqIndex(spark, dir, queries)
       .collect().map(_.toString).toSeq == marked,
       "a legacy leg must serve as the raw leg it is")
@@ -2033,7 +2070,7 @@ class SimilaritySpec extends SparkSpec {
       s"$dir/codes/_synced_to", conf)
     sfs.delete(sp, false)
     intercept[IllegalArgumentException] {
-      Similarity.readResidualMode(spark, dir)
+      Similarity.openIvf(spark, dir).residualMode
     }
     intercept[IllegalArgumentException] {
       Similarity.ivfPqIndexAdd(spark, dir) // the re-sync laundering path
@@ -2041,7 +2078,7 @@ class SimilaritySpec extends SparkSpec {
     // the stated-mode retrain is the recovery — it rebuilds the unit
     Similarity.ivfPqIndexAdd(spark, dir, retrain = true,
       residual = Some(false))
-    assert(Similarity.readResidualMode(spark, dir) == false)
+    assert(Similarity.openIvf(spark, dir).residualMode == Some(false))
     assert(Similarity.annServeFromPqIndex(spark, dir, queries)
       .collect().nonEmpty)
   }

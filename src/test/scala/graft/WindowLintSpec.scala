@@ -85,6 +85,24 @@ class WindowLintSpec extends org.scalatest.funsuite.AnyFunSuite {
       s"operators writing session conf or using Branches: $offending")
   }
 
+  /** The IVF index artifact's layout — its members and markers — is
+    * known to `Similarity`'s artifact handle alone: the API and the
+    * stream maintainers read and write an index through the handle, so
+    * no second module can re-derive a marker's meaning and get it
+    * wrong. `_compacted_through` stays allowed: the generic compaction
+    * helpers use it for every artifact kind. */
+  test("only the IVF artifact handle knows the index layout") {
+    val layout = Seq("\"_synced_to\"", "\"_residual\"", "\"_rotation\"",
+      "\"_whiten\"", "\"_quantizer_version\"", "/assigned\"", "/codes\"",
+      "stream/batch_id=$", "readResidualMode", "readPqRotationMode")
+    val offending = (sources("api") ++ sources("streaming")).collect {
+      case (path, text) if layout.exists(text.contains) =>
+        path -> layout.filter(text.contains)
+    }
+    assert(offending.isEmpty,
+      s"IVF layout named outside the artifact handle: $offending")
+  }
+
   /** Artifact and model state derived from an input lives in ONE
     * registry, `ArtifactState`, which keys it by the input's version;
     * a hand-rolled map beside it would serve stale state after a
