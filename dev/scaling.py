@@ -1,23 +1,17 @@
 #!/usr/bin/env python3
-"""Regenerate docs/SCALING.md from three graft.Bench JSON lines.
+"""Regenerate docs/SCALING.md from three graft.Bench result lines.
 
 Usage: python3 dev/scaling.py <sf0.001.json> <sf0.01.json> <sf0.1.json> \
-         [BENCH_rNN.json] [ORDER.md]
+         [BENCH_rNN.json]
 
-The optional fifth argument is the BENCH_ORDER.md VINTAGE that produced
-the driver bench (e.g. extracted from git history) — needed when the
-headline set changed since that round, so the driver's v_cs vector still
-decodes against the order it was emitted under (the order_fp check
-enforces the match either way).
-
-Each of the three inputs holds the single JSON line Bench prints
-(grep '"metric"'), and MUST come from a FULL-headline single-JVM sweep —
-the same conditions as the driver's per-round BENCH run — so the
+Each of the three inputs holds the result line Bench prints last on
+stdout (grep '"metric"'), and MUST come from a FULL-headline single-JVM
+sweep — the same conditions as the driver's per-round BENCH run — so the
 documented numbers are comparable with the graded ones. The optional
-fourth argument is the driver's own BENCH_rNN.json; its (truncated) tail
-is mined for per-query timings and shown as a comparison column where
-visible, so any builder-box vs driver-box discrepancy is published, not
-papered over.
+fourth argument is the driver's own BENCH_rNN.json; its per-query
+timings (`parsed.queries`, the driver's parse of that same result line)
+are shown as a comparison column, so any builder-box vs driver-box
+discrepancy is published, not papered over.
 """
 import json
 import re
@@ -35,77 +29,11 @@ names = sorted(set(q001) & set(q01) & set(q1))
 driver = {}
 driver_label = ""
 if len(sys.argv) > 4:
-    d = json.load(open(sys.argv[4]))
-    tail = d.get("tail", "") or ""
-    driver = {k: float(v) for k, v in re.findall(r'"(\w+)":([0-9.]+)', tail)}
-    # the regex also harvests Bench's envelope keys (value, total_s, n,
-    # n_err) — drop them, and drop the column entirely when the tail
-    # preserved no ACTUAL query timing (an all-dash column with a note
-    # claiming driver timings would mislead)
-    for k in ("value", "total_s", "n", "n_err", "emb_cold_s", "emb_warm_s",
-              "ann_gc_ms"):
-        driver.pop(k, None)
-    # round-10+ format: the compact final line carries EVERY query as a
-    # centisecond vector decoded by docs/BENCH_ORDER.md — prefer it
-    # (complete) over whatever named fragments survived truncation.
-    # Decode ONLY when the line's order_fp matches the md5-8 of the
-    # current BENCH_ORDER list: a same-length headline change between
-    # the vintage that produced the tail and this checkout would
-    # otherwise silently zip timings onto the wrong query names.
-    mv = re.search(r'"v_cs":\[([0-9,\- ]+)\]', tail)
-    mfp = re.search(r'"order_fp":"([0-9a-f]{8})"', tail)
-    if mv:
-        try:
-            import hashlib
-            order_path = sys.argv[5] if len(sys.argv) > 5 \
-                else "docs/BENCH_ORDER.md"
-            order = [re.match(r"^(\d+)\. (\S+)$", l.strip()).group(2)
-                     for l in open(order_path)
-                     if re.match(r"^\d+\. \S+$", l.strip())]
-            fp = hashlib.md5("\n".join(order).encode()).hexdigest()[:8]
-            vals = [int(x) for x in mv.group(1).split(",")]
-            fp_ok = (mfp is None) or (mfp.group(1) == fp)
-            if not fp_ok:
-                print(f"NOTE: tail order_fp {mfp.group(1)} != current "
-                      f"BENCH_ORDER fp {fp} — headline set changed since "
-                      "that bench; skipping v_cs decode")
-            if fp_ok and len(vals) == len(order):
-                driver = {n: v / 100.0 for n, v in zip(order, vals)
-                          if v >= 0}
-        except Exception:
-            pass
-    # round-13+ format: the FINAL tail-safe "g1" line re-encodes the
-    # wall vector at 2 chars/query (code = round(90*ln(1+centisec)),
-    # base36; "zz" = errored) so it ALWAYS survives the 2000-char
-    # tail. Preferred source when the decimal v_cs was truncated away.
-    mg = re.search(r'"enc":"g1".*"fp":"([0-9a-f]{8})","w":"([0-9a-z]+)"',
-                   tail)
-    if mg and not (set(names) & set(driver)):
-        try:
-            import hashlib
-            import math
-            order_path = sys.argv[5] if len(sys.argv) > 5 \
-                else "docs/BENCH_ORDER.md"
-            order = [re.match(r"^(\d+)\. (\S+)$", l.strip()).group(2)
-                     for l in open(order_path)
-                     if re.match(r"^\d+\. \S+$", l.strip())]
-            fp = hashlib.md5("\n".join(order).encode()).hexdigest()[:8]
-            if mg.group(1) != fp:
-                print(f"NOTE: g1 fp {mg.group(1)} != current BENCH_ORDER "
-                      f"fp {fp} — headline set changed; skipping g1 decode")
-            else:
-                A = "0123456789abcdefghijklmnopqrstuvwxyz"
-                w = mg.group(2)
-                codes = [A.index(w[2 * i]) * 36 + A.index(w[2 * i + 1])
-                         for i in range(len(w) // 2)]
-                if len(codes) == len(order):
-                    driver = {n: (math.exp(c / 90.0) - 1) / 100.0
-                              for n, c in zip(order, codes) if c < 1295}
-        except Exception:
-            pass
+    parsed = json.load(open(sys.argv[4])).get("parsed") or {}
+    driver = {n: float(v) for n, v in (parsed.get("queries") or {}).items()}
     if not set(names) & set(driver):
         driver = {}
-    m = re.search(r"BENCH_(r\d+)\.json", sys.argv[4])
+    m = re.search(r"BENCH_(r\d+(?:_c\d+)?)", sys.argv[4])
     driver_label = m.group(1) if m else "driver-bench"
 
 out = ["# Scaling sweep (local[32], generated by running graft.Bench at "
@@ -141,8 +69,7 @@ out = ["# Scaling sweep (local[32], generated by running graft.Bench at "
 if driver:
     out[out.index("graded sweep.")] = (
         f"graded sweep; the '{driver_label} driver' column shows "
-        "the driver's own timing where its truncated tail "
-        "preserves one.")
+        "the driver's own timing of the same query.")
 hdr_extra = f" {driver_label} driver (s) |" if driver else ""
 out += [f"| query | sf0.001 (s) | sf0.01 (s) | sf0.1 (s) | "
         f"sf0.1 / sf0.01 |{hdr_extra}",
@@ -156,50 +83,6 @@ tot = [sum(q.values()) for q in (q001, q01, q1)]
 out += ["",
         f"Totals: sf0.001 {tot[0]:.1f} s, sf0.01 {tot[1]:.1f} s, "
         f"sf0.1 {tot[2]:.1f} s over {len(names)} queries.", "",
-        "## Driver-vs-builder drift, and how the bench adjudicates it",
-        "",
-        "Two rounds of the same pattern: the r9 driver sweep timed the "
-        "embeddings-reading",
-        "family ~2-3x over the builder's same-vintage numbers (plans "
-        "unchanged) and fully",
-        "recovered by itself in the r10 driver sweep; the r10 driver "
-        "sweep then timed the",
-        "standalone prefix-join dedup family 2.2-2.5x over (and "
-        "dedup_survivorship at",
-        "133.99 s, ~17x this table), again with plans unchanged — and "
-        "the builder's r11",
-        "full sweep lands that family back at this table's level "
-        "(survivorship ~7 s,",
-        "clusters ~7 s, leakage_safe_split ~7 s, budget_select ~1.5 s). "
-        "Since neither code",
-        "nor plan differs, Bench emits adjudicators INSIDE the "
-        "truncation-surviving final",
-        "line so any future outlier is classified from the tail alone:",
-        "",
-        "- aq_cpu_cs / aq_gc_ms / aq_sh_mb: per-query executor-"
-        "CPU, task-attributed",
-        "  GC, and shuffle-byte deltas for EVERY timed query "
-        "(benchOrder order; r11's",
-        "  dq_* covered only the dedup family). A wall "
-        "outlier with flat CPU and",
-        "  flat shuffle is box load / IO wait, not a plan regression.",
-        "- retries: the TOP-3 slowest queries re-measured once each at "
-        "sweep end (first",
-        "  vs again centiseconds; single-slot until r13, widened "
-        "because outliers arrive",
-        "  as a family — r13's one slot caught dedup_survivorship "
-        "48.6->10.7 s live while",
-        "  leakage_safe_split 37.6 s went unretried). Transient box "
-        "noise shows 'again'",
-        "  back at normal; a real regression repeats. Builder "
-        "reference (r13):",
-        "  leakage_safe_split 8.5/7.4 s — stable.",
-        "- the embeddings cold/warm scan probe at startup plus GC/code-"
-        "cache snapshots",
-        "  bracketing the ANN block (builder reference at sf0.1: "
-        "emb_cold ~0.5 s,",
-        "  emb_warm ~0.23 s, ann_gc 2.6-4.2 s).",
-        "",
         "Production note: dedup_survivorship_composed (#142b) makes the "
         "artifact-fed form",
         "the measured headline (~2 s at sf0.1), so the standalone's "
@@ -226,9 +109,7 @@ out += ["",
         "  r12 lands dedup_clusters_composed (#46b) so the production "
         "form — clusters as",
         "  a rollup over the session pair artifact — is the measured "
-        "one, and the all-",
-        "  query aq_* vectors now classify any recurrence from the "
-        "tail alone.",
+        "one.",
         "- ann_lsh 5.04 s / ann_recall_eval 4.43 s (r11 driver): "
         "builder re-measures",
         "  0.8 s / 1.6 s, plans unchanged; previously unadjudicable "
@@ -264,14 +145,10 @@ out += ["",
         "  the builder's r13 full sweeps re-measure the same plan at "
         "7-8 s with a",
         "  flat 3-SF curve (6.5/5.2/10.8 s final sweep). Box-side, as "
-        "predicted. Two structural",
-        "  fixes land this round so the question cannot recur: the g1 "
-        "tail line keeps",
-        "  EVERY adjudicator inside the 2000-char window, and "
-        "dedup_corpus_composed",
-        "  (#70b, ~2.0 s at sf0.1 off the session pair artifact) is "
-        "now the family's",
-        "  production headline.",
+        "predicted.",
+        "  dedup_corpus_composed (#70b, ~2.0 s at sf0.1 off the "
+        "session pair artifact)",
+        "  is now the family's production headline.",
         "- mixture_sample 2.39 s (r12 driver, watch-only): builder r13 "
         "re-measures",
         "  0.87 s wall on flat task-GC / 0 MB shuffle with a FLAT "
@@ -313,9 +190,6 @@ out += ["",
         "dedup_survivorship",
         "  (48.6 -> 10.7 s in r13's own retry pair). Box-side; weak "
         "count back to 0.",
-        "  The retry adjudicator now covers the TOP-3 outliers so a "
-        "family-wide",
-        "  recurrence is classified live from the tail alone.",
         "- retry-pair reading note (new with the 3 slots): for queries "
         "that build a",
         "  session-shared artifact on first touch (pagerank's kNN edge "
@@ -362,17 +236,7 @@ out += ["",
         "no r14/r15 code",
         "  change touches knnGraphAnn. Box-side scheduling/IO stall; "
         "weak count back",
-        "  to 0. Structural fix landed so the gap class cannot recur: "
-        "retry slots are",
-        "  now selected RATIO-FIRST (wall > 2.5x the prior driver "
-        "round's value for",
-        "  the same query, worst ratio first, rank-based fill for the "
-        "rest) against",
-        "  docs/BENCH_PRIOR.json, the per-query priors the builder "
-        "re-decodes from",
-        "  the latest BENCH_rN g1 tail each round — a 2.5x regression "
-        "at ANY rank",
-        "  now gets a live retry pair.",
+        "  to 0.",
         "- ivf_rebuild (new #221, 9.1/8.5/8.7 s this sweep): "
         "FLAT across the",
         "  100x data span — the wall is ~30 scheduled jobs and ~8 "

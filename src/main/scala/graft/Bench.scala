@@ -1,19 +1,25 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.CatalystBridge
+import scala.util.Try
 import scala.util.control.NonFatal
 
-/** Benchmark main: runs the headline queries at SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line. A failed query reports an "err" entry (and is
-  * excluded from the total) instead of masquerading as a timing. */
+/** Benchmark main: times the headline queries at SPARK_GRAFT_SF_DIR.
+  * Each query runs under its own Spark job group (its name) and leaves
+  * one `[bench] {…}` JSON record on stderr ([[Record]]); the last stdout
+  * line is the `{"metric":"total",…}` result ([[resultLine]]). A failed
+  * query reports an "errors" entry (and is excluded from the total)
+  * instead of masquerading as a timing. Query names as args time a
+  * subset. */
 object Bench {
 
-  /** Headline set grouped into FAMILIES — the unit the final
-    * truncation-proof line subtotals, so a grader can localize a
-    * regression (and adjudicate environment drift) from the tail alone.
-    * Family membership is by dominant input: `ann` = every
-    * embeddings-reading query (the family the r9 driver sweep showed
-    * 3× off the builder's same-vintage numbers). */
+  /** Headline set grouped into families by dominant input (`ann` =
+    * every embeddings-reading query); each record names its family, so
+    * family totals sum from the records. */
   val families: Seq[(String, Seq[String])] = Seq(
     "analytics" -> Seq(
       "q1_agg", "q5_region_revenue", "dim_flatten", "window_rank",
@@ -123,119 +129,63 @@ object Bench {
       "json_props",
       "import_validation", "import_errors", "package_apply"))
 
-  /** Flat headline order (= concatenated family order). Anything not
-    * implemented yet is silently skipped (set ∩ queries). */
+  /** Flat headline order (= concatenated family order). */
   val headline: Seq[String] = families.flatMap(_._2)
+  private val familyOf: Map[String, String] =
+    families.flatMap { case (f, ns) => ns.map(_ -> f) }.toMap
 
-  /** The names a full run times, in run order — `v_cs[i]` in the final
-    * compact line is benchOrder()(i), and docs/BENCH_ORDER.md pins the
-    * same list (BenchOrderSpec keeps file and code in lockstep). */
-  def benchOrder(): Seq[String] = headline.filter(SparkEntry.queries.contains)
+  /** One timed query. `constructNs` builds the DataFrame (eager artifact
+    * builds, trainings and collects run here), `actionNs` is its `noop`
+    * write, `wallNs` both; the counters are Spark's deltas over the query
+    * ([[Meter]]) and `jvm` the code-cache/metaspace reading after it (a
+    * full code cache silently disables JIT). */
+  final case class Record(q: String, constructNs: Long, actionNs: Long,
+                          wallNs: Long, jobs: Long, stages: Long,
+                          tasks: Long, taskMs: Long, cpuNs: Long,
+                          gcMs: Long, shuffleBytes: Long, jvm: String,
+                          err: Option[String]) {
+    def wallS: Double = wallNs / 1e9
+    def json: String = {
+      import org.json4s.JsonDSL._
+      import org.json4s.jackson.JsonMethods.{compact, render}
+      def s(ns: Long): Double = math.round(ns / 1e6) / 1e3
+      compact(render(("q" -> q) ~ ("family" -> familyOf.get(q)) ~
+        ("construct_s" -> s(constructNs)) ~ ("action_s" -> s(actionNs)) ~
+        ("wall_s" -> s(wallNs)) ~ ("jobs" -> jobs) ~ ("stages" -> stages) ~
+        ("tasks" -> tasks) ~ ("task_s" -> s(taskMs * 1000000L)) ~
+        ("cpu_s" -> s(cpuNs)) ~ ("gc_ms" -> gcMs) ~
+        ("shuffle_mb" -> math.round(shuffleBytes / 1e4) / 1e2) ~
+        ("jvm" -> jvm) ~ ("err" -> err)))
+    }
+  }
 
-  /** 8-hex fingerprint of a name list. Emitted as `order_fp` (full
-    * line) / `fp` (tail line) next to the per-query vectors so a
-    * decoder (dev/scaling.py) can refuse to zip a vector from one
-    * vintage onto another vintage's BENCH_ORDER.md — a same-length
-    * headline change would otherwise misattribute every timing between
-    * the edit points with no warning. */
-  def orderFingerprint(names: Seq[String]): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(names.mkString("\n").getBytes("UTF-8"))
-      .take(4).map(b => f"$b%02x").mkString
-
-  /** Tail-safe vector codec ("g1") for the FINAL bench line.
-    *
-    * The driver keeps only the LAST ~2000 chars of this process's
-    * output (BENCH_r12.json proved it: the decimal compact line grew
-    * to ~4.4k chars at 193 queries and the truncation cut exactly the
-    * adjudicator vectors built to classify wall outliers). Decimal
-    * centisecond vectors cost ~5 chars/query; at 4 vectors × 200
-    * queries that can never fit. This codec spends a FIXED 2 chars
-    * per query on the two precise vectors (wall, CPU) and 1 char on
-    * the two flat-vs-big vectors (GC, shuffle), so the whole
-    * adjudication payload is 6N + ~350 chars — under 1650 at N=210,
-    * asserted by BenchOrderSpec against an 1800-char budget.
-    *
-    * - 2-char base36 log code: code = round(90·ln(1+v)), v in
-    *   centiseconds, clamped to [0,1294]; "zz" (1295) = errored/
-    *   missing. Uniform relative step e^(1/90)−1 ≈ 1.1% — far inside
-    *   the ±15% box noise the numbers adjudicate — max encodable
-    *   value e^(1294/90)−1 ≈ 1.76e6 cs ≈ 4.9 h/query.
-    * - 1-char base36 log2 bucket: code = round(log2(1+v)), clamped to
-    *   [0,34]; "z" (35) = errored/missing. Factor-2 resolution: GC/
-    *   shuffle adjudication asks "flat or inflated", not "how much
-    *   exactly" (7.8 s GC vs 20 ms is 9 buckets apart).
-    * Vectors are contiguous strings (no separators) in benchOrder()
-    * order — docs/BENCH_ORDER.md names index i, `fp` guards vintage. */
-  object TailCodec {
-    private val A = "0123456789abcdefghijklmnopqrstuvwxyz"
-    val K = 90.0
-    val Err2 = "zz"
-    val Err1 = "z"
-
-    def enc2(vCs: Double): String = {
-      val code = math.min(1294L,
-        math.max(0L, math.round(K * math.log1p(math.max(0.0, vCs)))))
-      s"${A((code / 36).toInt)}${A((code % 36).toInt)}"
+  /** Cumulative counters over every job, stage and task the session
+    * runs: jobs, stages, tasks, summed task ms, executor CPU ns,
+    * task-attributed GC ms and shuffle read + write bytes. A query's
+    * record holds their deltas, which tell fixed scheduling cost from
+    * data cost, and box load (wall up, CPU/GC/shuffle flat) from a plan
+    * change. */
+  private[graft] final class Meter extends SparkListener {
+    private val jobs, stages, tasks, taskMs, cpuNs, gcMs, shuffleBytes =
+      new AtomicLong
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageCompleted(st: SparkListenerStageCompleted): Unit =
+      stages.incrementAndGet()
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      if (te.taskInfo != null) taskMs.addAndGet(te.taskInfo.duration)
+      val m = te.taskMetrics
+      if (m != null) {
+        cpuNs.addAndGet(m.executorCpuTime)
+        gcMs.addAndGet(m.jvmGCTime)
+        shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead +
+          m.shuffleWriteMetrics.bytesWritten)
+      }
     }
-    /** None = the Err2 sentinel. */
-    def dec2(s: String): Option[Double] = {
-      val code = A.indexOf(s(0)) * 36 + A.indexOf(s(1))
-      if (code >= 1295) None else Some(math.expm1(code / K))
-    }
-    def enc1(v: Long): String = {
-      val code = math.min(34L, math.max(0L,
-        math.round(math.log1p(math.max(0L, v).toDouble) / math.log(2.0))))
-      A(code.toInt).toString
-    }
-    /** None = the Err1 sentinel; Some(≈2^code) otherwise. */
-    def dec1(c: Char): Option[Long] = {
-      val code = A.indexOf(c)
-      if (code >= 35) None else Some(if (code == 0) 0L else 1L << code)
-    }
-
-    /** The final tail-safe line. Field order is least→most important
-      * (truncation eats from the LEFT): probes / family subtotals /
-      * retry / totals first, then shuffle, GC, CPU, the order
-      * fingerprint, and LAST the wall vector — so even a pathological
-      * overflow loses the least diagnostic fields first. All four
-      * vectors share benchOrder() order and the g1 codec above. */
-    def buildLine(names: Seq[String], wallCs: Map[String, Double],
-                  adj: Map[String, (Long, Long, Long)],
-                  fam: Seq[(String, Double)],
-                  retry: Seq[(String, Long, Long)],
-                  embColdS: Double, embWarmS: Double, annGcMs: Long,
-                  annJvm: String, nErr: Int, totalS: Double,
-                  orderLabel: String, fp: String): String = {
-      def v2(f: String => Option[Double]) =
-        names.map(n => f(n).map(enc2).getOrElse(Err2)).mkString
-      def v1(f: String => Option[Long]) =
-        names.map(n => f(n).map(enc1).getOrElse(Err1)).mkString
-      val famS = fam.map { case (f, s) => f"$f=$s%.1f" }.mkString("|")
-      // up to 3 retry triples, ";"-joined (r14: outliers arrive as a
-      // family — one slot left r13's second outlier unadjudicated).
-      // COMPACT FORM (r18, the line hit its budget at 228 queries):
-      // `i<order-index>|<enc2 first cs>|<enc2 retry cs>` — the index
-      // resolves through docs/BENCH_ORDER.md exactly like the vectors
-      // (fp-guarded), and the g1 2-char code's ~1.1% step is far
-      // inside the noise the retry adjudicates. ~11 chars/slot vs the
-      // old ~43 (full query name + decimal centiseconds).
-      // name→index resolved once through a map (ADVICE-r18): a retried
-      // query absent from the order list is a codec bug — fail loudly
-      // here instead of silently encoding 'i-1'
-      val nameIdx = names.zipWithIndex.toMap
-      val retryS = retry.map { case (q, f, a) =>
-        def e(v: Long) = if (v < 0) Err2 else enc2(v.toDouble)
-        val i = nameIdx.getOrElse(q, sys.error(
-          s"retry slot for '$q' — not in the bench order list"))
-        s"i$i|${e(f)}|${e(a)}"
-      }.mkString(";")
-      val sh = v1(n => adj.get(n).map(_._3 / 1000000L))
-      val gc = v1(n => adj.get(n).map(_._2))
-      val cpu = v2(n => adj.get(n).map(_._1 / 10000000.0))
-      val w = v2(wallCs.get)
-      f"""{"enc":"g1","aj":"$annJvm","ag":$annGcMs,"ec":$embColdS%.2f,"ew":$embWarmS%.2f,"fam":"$famS","retry":"$retryS","order":"$orderLabel","n":${names.size},"e":$nErr,"t":$totalS%.1f,"sh":"$sh","gc":"$gc","cpu":"$cpu","fp":"$fp","w":"$w"}"""
-    }
+    /** The counters in the order the class comment lists them. */
+    def snapshot: Seq[Long] =
+      Seq(jobs, stages, tasks, taskMs, cpuNs, gcMs, shuffleBytes).map(_.get)
   }
 
   private def jvmHealth(): String = {
@@ -249,77 +199,66 @@ object Bench {
       }.mkString(" ")
   }
 
-  /** [[jvmHealth]] in tail-budget form: used/max MB per code-cache
-    * pool + metaspace, "+"-joined in bean order (~25 chars vs ~150).
-    * A full code cache (used ≈ max) silently disables JIT — the one
-    * JVM condition that masquerades as a whole-family slowdown. */
-  private def jvmHealthCompact(): String = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(p => p.getName.contains("CodeHeap") ||
-        p.getName.contains("CodeCache") || p.getName == "Metaspace")
-      .map { p =>
-        val u = p.getUsage
-        f"${u.getUsed / 1e6}%.0f/${u.getMax / 1e6}%.0f"
-      }.mkString("+")
-  }
-
-  /** Cumulative GC milliseconds across all collectors. */
-  private def gcMs(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime.max(0L)).sum
-  }
-
-  /** Cumulative task-metrics listener: executor CPU, task-attributed GC
-    * and shuffle bytes across every completed task, plus the jobs,
-    * stages, tasks and summed task time that tell fixed scheduling cost
-    * from data cost (the per-query stderr line prints their deltas).
-    * Per-query deltas of the first three adjudicate a wall-time
-    * outlier from the tail alone: a
-    * 17x wall number with flat CPU/GC/shuffle is box load or I/O wait
-    * (environment), NOT a plan regression — exactly the distinction the
-    * r10 dedup_survivorship 134s mystery lacked. Listener events are
-    * posted async; snapshots are taken after the inter-query cleanup
-    * (cache release + System.gc), by which time the bus has drained —
-    * attribution is approximate at the ~ms level, which is fine for a
-    * seconds-scale adjudicator. */
-  private final class TaskMetricsAccumulator
-      extends org.apache.spark.scheduler.SparkListener {
-    import java.util.concurrent.atomic.AtomicLong
-    val cpuNs = new AtomicLong; val taskGcMs = new AtomicLong
-    val shufBytes = new AtomicLong
-    val jobs = new AtomicLong; val stages = new AtomicLong
-    val tasks = new AtomicLong; val taskMs = new AtomicLong
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      jobs.incrementAndGet()
-    override def onStageCompleted(
-        st: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-      stages.incrementAndGet()
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      tasks.incrementAndGet()
-      if (te.taskInfo != null) taskMs.addAndGet(te.taskInfo.duration)
-      val m = te.taskMetrics
-      if (m != null) {
-        cpuNs.addAndGet(m.executorCpuTime)
-        taskGcMs.addAndGet(m.jvmGCTime)
-        shufBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead
-          + m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    def snapshot: (Long, Long, Long) =
-      (cpuNs.get, taskGcMs.get, shufBytes.get)
-    def scheduling: Seq[Long] =
-      Seq(jobs.get, stages.get, tasks.get, taskMs.get)
-  }
-
   /** Runs `df` to its full result and discards the rows: a `noop`-sink
     * write computes every output column, where `.count()` lets Catalyst
     * prune projected work (and whole union branches of aggregates). */
   private def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  /** Times query `name` under job group `name`, from construction
+    * through its `noop` write, then resets the session so the next query
+    * starts from the same state; `meter` must be registered on the
+    * session. */
+  private[graft] def timeQuery(spark: SparkSession, sfDir: String,
+                               name: String, meter: Meter): Record = {
+    val sc = spark.sparkContext
+    val pre = meter.snapshot
+    sc.setJobGroup(name, name)
+    val t0 = System.nanoTime()
+    val (t1, res) =
+      try {
+        val built = Try(SparkEntry.queries(name)(spark, sfDir))
+        val t1 = System.nanoTime()
+        (t1, built.map(materialize))
+      } finally sc.clearJobGroup()
+    val t2 = System.nanoTime()
+    // outside the timed region: free operator-transient caches and
+    // anything else pinned in the block manager — leaked storage blocks
+    // crowd out execution memory, so later heavy queries would measure
+    // spill, not their own plan (observed 14x on dedup_simhash at sf0.1).
+    // Broadcast and shuffle blocks are reaped by the ContextCleaner only
+    // when driver GC collects their handles, hence the forced GC (3-4x
+    // observed on the export round-trips at the end of a full sweep).
+    operators.TransientCaches.release()
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    System.gc()
+    CatalystBridge.drainListeners(sc)
+    val Seq(jobs, stages, tasks, taskMs, cpuNs, gcMs, shuffle) =
+      meter.snapshot.zip(pre).map { case (a, b) => a - b }
+    Record(name, t1 - t0, t2 - t1, t2 - t0, jobs, stages, tasks, taskMs,
+      cpuNs, gcMs, shuffle, jvmHealth(),
+      res.failed.toOption.map(_.toString.takeWhile(_ != '\n')))
+  }
+
+  /** The result line: successful queries' wall seconds and their sum,
+    * failed queries' first error line. */
+  def resultLine(records: Seq[Record], sfDir: String): String = {
+    val ok = records.filter(_.err.isEmpty)
+    val qs = ok.map(r => "\"" + r.q + "\":" + f"${r.wallS}%.3f")
+      .mkString("{", ",", "}")
+    val errs = records.flatMap(r => r.err.map { e =>
+      "\"" + r.q + "\":\"" + e.replace("\\", "\\\\").replace("\"", "'") + "\""
+    }).mkString("{", ",", "}")
+    val total = ok.map(_.wallS).sum
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
+  }
+
+  private def warmup(what: String)(body: => Unit): Unit =
+    try body
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] warmup $what failed: $e")
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -335,264 +274,50 @@ object Bench {
     // query measures the query, not session start-up
     spark.range(1000000).selectExpr("sum(id)").collect()
     Tables.load(spark, sfDir, "region").count()
-    // STORAGE-HEALTH PROBE for the ANN drift adjudication: the whole
-    // vector family reads embeddings.parquet, and a cold page cache (or
-    // a loaded driver box) shows up here as cold >> warm. If the final
-    // line's ann subtotal is ~3x the builder's same-vintage sweep while
-    // emb_cold_s is ALSO inflated, the gap is I/O environment, not plan.
-    // sum(size(embedding)) — NOT count(*) — so the scan actually
-    // decompresses the vector column's data pages (count(*) answers
-    // from row-group footers and would read ~KB, blinding the probe).
-    val embCold = time(Tables.load(spark, sfDir, "embeddings")
-      .selectExpr("sum(size(embedding))").collect())
-    val embWarm = time(Tables.load(spark, sfDir, "embeddings")
-      .selectExpr("sum(size(embedding))").collect())
     // the composed dedup pipeline generates the largest codegen classes
     // in the suite (~8 s of one-time Janino compilation) — compile them
-    // against a 60-doc in-memory frame so the timed queries measure
-    // throughput, not first-compile latency
-    locally {
+    // against a 60-doc in-memory frame
+    warmup("dedup codegen") {
       import spark.implicits._
       val warmDocs = (1 to 60)
         .map(i => (i.toLong, Seq.tabulate(12)(j => s"w${(i * 7 + j) % 19}")
           .mkString(" ")))
         .toDF("doc_id", "text")
-      try operators.Dedup.dedupCorpusKept(warmDocs, 0.3).count()
-      catch { case _: Throwable => () }
+      operators.Dedup.dedupCorpusKept(warmDocs, 0.3).count()
     }
-    // JIT pre-touch for the dedup family (VERDICT-r18 #7): run the
-    // honest shingle→prefix→verify join once over a ~0.1% slice of the
-    // REAL table so every class in the hot path is JIT-compiled against
-    // the real parquet schema before timing. The r19 full-table
-    // sum(length(text)) scan that preceded this was DROPPED (VERDICT-r19
-    // #7): page-cache-warming the whole documents table goes beyond JIT
-    // warmup and flattered every scan-bound query at bench SF — the
-    // slice below still opens real text pages for the codegen classes,
-    // which is all the warmup was prescribed to do.
-    try {
+    // the shingle→prefix→verify join once over a ~0.1% slice of the real
+    // documents table, so its hot path is JIT-compiled against the real
+    // parquet schema; a slice, not a full scan, so the page cache is
+    // not warmed for the scan-bound queries
+    warmup("dedup documents slice") {
       operators.Dedup.dedupCorpusKept(
         Tables.load(spark, sfDir, "documents")
           .filter("doc_id % 997 = 0"), 0.3).count()
-    } catch { case _: Throwable => () }
+    }
     // the JPEG kernel (javax.imageio encode + the SOF walk + the lossy
-    // decode) JIT-compiles a large codec surface on first use —
-    // media_jpeg_stats spiked to 2-4x on its first run in r13 and r17
-    // while its retry always cleared. local mode shares one JVM, so a
-    // few driver-side cycles compile the same code the executor
-    // threads run; 16x16 keeps the warm under ~50 ms.
-    locally {
+    // decode) JIT-compiles a large codec surface on first use; local
+    // mode shares one JVM, so a few 16x16 driver-side cycles compile the
+    // code the executor threads run
+    warmup("jpeg codec") {
       val rgb = Array.tabulate(16 * 16 * 3)(i => (i * 37 % 251).toByte)
-      try (1 to 3).foreach { _ =>
+      (1 to 3).foreach { _ =>
         val jpg = graft.sources.JpegCodec.encodeJpeg(16, 16, rgb)
         graft.sources.JpegCodec.parseSof(jpg)
         graft.sources.JpegCodec.decodeJpeg(jpg)
       }
-      catch { case _: Throwable => () }
     }
 
     // optional args restrict to a subset (dev loop); driver passes none
     val names = (if (args.nonEmpty) headline.filter(args.toSet) else headline)
       .filter(SparkEntry.queries.contains)
-    val famOf = families.flatMap { case (f, ns) => ns.map(_ -> f) }.toMap
-    val annNames = names.filter(n => famOf(n) == "ann")
-    // JVM snapshots bracketing the ANN block (see jvmHealth: a full
-    // code cache silently disables JIT and masquerades as slow
-    // operators; GC delta localizes memory-pressure drift): emitted in
-    // the truncation-proof final line so the driver tail can adjudicate
-    // builder-vs-driver bench gaps without the stderr log.
-    var annPre = ""; var annPost = ""
-    var annPreC = ""; var annPostC = ""
-    var annGcPre = 0L; var annGcPost = 0L
-    // per-query adjudicators for EVERY query (r10's dedup-only gating
-    // left the r11 ANN regression unadjudicable — the hole is now
-    // closed by recording CPU/GC/shuffle deltas for the whole order):
-    // emitted as vectors in benchOrder order, same decoder as v_cs.
-    val acc = new TaskMetricsAccumulator
-    spark.sparkContext.addSparkListener(acc)
-    val queryAdj = scala.collection.mutable.Map[String, (Long, Long, Long)]()
-    val timed = names.map { name =>
-      if (annNames.headOption.contains(name)) {
-        annPre = jvmHealth(); annPreC = jvmHealthCompact(); annGcPre = gcMs()
-      }
-      val pre = acc.snapshot
-      val preSched = acc.scheduling
-      val t0 = System.nanoTime()
-      val res =
-        try { materialize(SparkEntry.queries(name)(spark, sfDir)); None }
-        catch { case NonFatal(e) => Some(e.toString.takeWhile(_ != '\n')) }
-      val t = (System.nanoTime() - t0) / 1e9
-      if (annNames.lastOption.contains(name)) {
-        annPost = jvmHealth(); annPostC = jvmHealthCompact()
-        annGcPost = gcMs()
-      }
-      // session boundary BETWEEN queries (outside the timed region):
-      // free operator-transient caches and anything else pinned in the
-      // block manager so query N+1 starts from the same clean state
-      // query N did — without this, leaked storage blocks crowd out
-      // execution memory and the later heavy queries measure spill,
-      // not their own plan (observed 14x on dedup_simhash at sf0.1).
-      operators.TransientCaches.release()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // broadcast and shuffle blocks are reaped by the ContextCleaner
-      // only when driver GC collects their handles — force it so ~90
-      // queries of accumulated blocks don't slow the tail of the run
-      // (observed 3-4x on the export round-trips at the end of a full
-      // sweep). Equivalent to spark.cleaner.periodicGC on a cluster.
-      System.gc()
-      val post = acc.snapshot
-      queryAdj(name) = (post._1 - pre._1, post._2 - pre._2,
-        post._3 - pre._3)
-      val Seq(jobs, stages, tasks, taskMs) =
-        acc.scheduling.zip(preSched).map { case (a, b) => a - b }
-      System.err.println(f"[bench] $name%-24s ${t}%8.2fs  jobs=$jobs%4d " +
-        f"stages=$stages%5d tasks=$tasks%6d " +
-        f"taskTime=${taskMs / 1000.0}%8.1fs  ${jvmHealth()}")
-      (name, t, res)
+    val meter = new Meter
+    spark.sparkContext.addSparkListener(meter)
+    val records = names.map { name =>
+      val r = timeQuery(spark, sfDir, name, meter)
+      System.err.println(s"[bench] ${r.json}")
+      r
     }
-    // OUTLIER SELF-RETRY: re-run up to 3 suspicious successful queries
-    // once each and report both timings. A cheap re-measurement
-    // separates box noise (retry ~normal) from a real plan regression
-    // (retry ~first) — the adjudication the r10 134s outlier had no
-    // data for. Selection is RATIO-FIRST against the prior driver
-    // round (docs/BENCH_PRIOR.json, decoded from the last BENCH_rN
-    // g1 tail): any query >2.5x its prior wall, worst ratio first —
-    // rank-based top-3 missed r14's knn_graph_ann (2.5x but only
-    // 8th-slowest) exactly the way the r13 single slot missed
-    // leakage_safe_split. Remaining slots fill rank-based (top
-    // slowest), which also covers a missing/stale priors file.
-    val prior = priorQuerySeconds()
-    val succeeded = timed.collect { case (n, s, None) => (n, s) }
-    val byRatio = succeeded
-      .flatMap { case (n, s) =>
-        prior.get(n).filter(_ > 0.0).map(p => (n, s, s / p)) }
-      .filter(_._3 > 2.5).sortBy(-_._3).take(3)
-    byRatio.foreach { case (n, s, r) =>
-      System.err.println(f"[bench] retry-select $n: ${s}%.2fs = ${r}%.1fx prior")
-    }
-    val ratioNames = byRatio.map(_._1).toSet
-    val fill = succeeded.filterNot(t => ratioNames(t._1))
-      .sortBy(-_._2).take(3 - byRatio.size)
-    val retryList = (byRatio.map(t => (t._1, t._2)) ++ fill)
-      .map { case (worst, first) =>
-        val t0 = System.nanoTime()
-        val again =
-          try { materialize(SparkEntry.queries(worst)(spark, sfDir))
-                (System.nanoTime() - t0) / 1e9 }
-          catch { case NonFatal(_) => -1.0 }
-        operators.TransientCaches.release()
-        spark.catalog.clearCache()
-        System.gc()
-        System.err.println(f"[bench] retry $worst: first ${first}%.2fs, again ${again}%.2fs")
-        (worst, math.round(first * 100), math.round(again * 100))
-      }
-    val retry = if (retryList.isEmpty) "" else retryList.map {
-      case (q, f, a) => s"""{"q":"$q","first_cs":$f,"again_cs":$a}"""
-    }.mkString("\"retries\":[", ",", "],")
-    val ok = timed.collect { case (n, s, None) => (n, s) }
-    val qs = ok.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val errs = timed.collect { case (n, _, Some(e)) =>
-      "\"" + n + "\":\"" + e.replace("\\", "\\\\").replace("\"", "'") + "\""
-    }.mkString("{", ",", "}")
-    val total = ok.map(_._2).sum
-    println(
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir"}""")
-    // The driver captures only the last ~2000 chars of this process's
-    // output. Two compact lines follow:
-    //  1. the DECIMAL line below — full-precision per-query vectors for
-    //    builder-side logs (dev/scaling.py's primary input). At ~190+
-    //    queries it is ~4.4k chars and does NOT survive the driver
-    //    tail (BENCH_r12 lost aq_cpu_cs/retry/fam/total_s to exactly
-    //    this truncation);
-    //  2. the FINAL g1 line (TailCodec.buildLine) — the SAME payload
-    //    re-encoded at 6 chars/query + ~350 overhead so wall, CPU,
-    //    GC, shuffle, family subtotals, retry, probes and the order
-    //    fingerprint ALL decode from the tail alone. BenchOrderSpec
-    //    asserts the worst-case line fits an 1800-char budget.
-    val okMap = ok.toMap
-    val famTotals = families.map { case (f, _) =>
-      val sub = timed.collect { case (n, s, None) if famOf(n) == f => s }.sum
-      "\"" + f + "\":" + f"$sub%.1f"
-    }.mkString("{", ",", "}")
-    val vcs = names.map { n =>
-      okMap.get(n).map(s => math.round(s * 100).toString).getOrElse("-1")
-    }.mkString("[", ",", "]")
-    // subset dev runs are labeled as such so the vector is never
-    // decoded against the full-run order doc; order_fp fingerprints
-    // the ACTUAL name list timed either way
-    val order = if (args.isEmpty) "docs/BENCH_ORDER.md" else "subset"
-    // ALL-QUERY adjudicator vectors, one entry per timed query in
-    // benchOrder order (same decoder as v_cs): executor-CPU
-    // centiseconds, task-attributed GC ms, shuffle read+write MB. A
-    // wall outlier in v_cs with flat vectors here = environment, not
-    // plan. (r11's dq_* covered only the dedup family; the ANN block's
-    // unexplained 5x needed exactly these and had none.)
-    def dvec(f: ((Long, Long, Long)) => Long) = names.map(n =>
-      queryAdj.get(n).map(f(_).toString).getOrElse("-1"))
-      .mkString("[", ",", "]")
-    val dq = s""""aq_cpu_cs":${dvec(m => m._1 / 10000000L)},"aq_gc_ms":${
-        dvec(_._2)},"aq_sh_mb":${dvec(m => m._3 / 1000000L)},"""
-    println(f"""{"total_s":$total%.3f,"n":${ok.size},"n_err":${timed.size - ok.size},"fam":$famTotals,$retry$dq"emb_cold_s":$embCold%.2f,"emb_warm_s":$embWarm%.2f,"ann_gc_ms":${annGcPost - annGcPre},"ann_jvm_pre":"$annPre","ann_jvm_post":"$annPost","order":"$order","order_fp":"${orderFingerprint(names)}","v_cs":$vcs}""")
-    val famSeq = families.map { case (f, _) =>
-      f -> timed.collect { case (n, s, None) if famOf(n) == f => s }.sum
-    }
-    val wallCs = okMap.map { case (k, s) => k -> s * 100.0 }
-    println(TailCodec.buildLine(names, wallCs, queryAdj.toMap, famSeq,
-      retryList, embCold, embWarm, annGcPost - annGcPre,
-      s"$annPreC>$annPostC", timed.size - ok.size, total, order,
-      orderFingerprint(names)))
+    println(resultLine(records, sfDir))
     spark.stop()
-  }
-
-  /** Prior driver round's per-query wall seconds
-    * (docs/BENCH_PRIOR.json — the builder re-decodes it each round
-    * from the latest BENCH_rN.json g1 tail). Empty map when the file
-    * is absent/unreadable: retry selection then degrades to the pure
-    * rank-based fill, never fails the bench. */
-  private def priorQuerySeconds(): Map[String, Double] = try {
-    // resolve against -Dgraft.repo.root when set, so a bench launched
-    // from another CWD keeps its ratio-first retries (ADVICE r15) —
-    // and say so on stderr when the priors are missing, instead of
-    // silently degrading to rank-based retry selection
-    val root = sys.props.get("graft.repo.root").getOrElse(".")
-    val f = new java.io.File(root, "docs/BENCH_PRIOR.json")
-    if (!f.isFile) {
-      System.err.println(s"[bench] no priors at ${f.getPath} — retry " +
-        "selection degrades to rank-based (set -Dgraft.repo.root or " +
-        "run from the repo root for ratio-first retries)")
-      Map.empty
-    }
-    else {
-      import org.json4s._
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      val j = try org.json4s.jackson.JsonMethods.parse(src.mkString)
-        finally src.close()
-      val m: Map[String, Double] = j \ "queries" match {
-        case JObject(fields) => fields.collect {
-          case (k, JDouble(v)) => k -> v
-          case (k, JInt(v)) => k -> v.toDouble
-          case (k, JDecimal(v)) => k -> v.toDouble
-          case (k, JLong(v)) => k -> v.toDouble
-        }.toMap
-        case _ => Map.empty
-      }
-      if (m.isEmpty)
-        System.err.println(s"[bench] priors at ${f.getPath} parsed " +
-          "empty — retry selection degrades to rank-based")
-      m
-    }
-  } catch {
-    case NonFatal(e) =>
-      System.err.println(s"[bench] priors unreadable (${e.getMessage}) " +
-        "— retry selection degrades to rank-based")
-      Map.empty
-  }
-
-  private def time(body: => Unit): Double = {
-    val t0 = System.nanoTime()
-    body
-    (System.nanoTime() - t0) / 1e9
   }
 }

@@ -2089,7 +2089,8 @@ object Similarity {
     lazy val whitened: Boolean =
       StreamIO.readMarker(dir, "_whiten", conf).contains(1L)
     /** The stored whitening model (μ + pc: two d-vectors — model state,
-      * never data). Refuses a raw artifact (no `_whiten` marker) and a
+      * never data), collected once per version of `whiten/` (shared,
+      * read-only). Refuses a raw artifact (no `_whiten` marker) and a
       * torn one (`_whiten` = 1 but `whiten/` missing — only manual
       * surgery can produce it given the build order, the [[rotation]]
       * stance). */
@@ -2101,10 +2102,12 @@ object Similarity {
       require(exists("whiten"),
         s"index artifact at $dir carries _whiten = 1 but whiten/ is " +
           "missing — the unit is torn. Rebuild with ivfWhitenIndexToDir.")
-      val rows = spark.read.parquet(s"$dir/whiten").collect()
-        .map(r => r.getAs[String]("kind") ->
-          r.getAs[Seq[Double]]("v").toArray).toMap
-      (rows("mu"), rows("pc"))
+      ArtifactState.ofInputs(spark, "whiten", Seq(s"$dir/whiten"), ()) {
+        val rows = spark.read.parquet(s"$dir/whiten").collect()
+          .map(r => r.getAs[String]("kind") ->
+            r.getAs[Seq[Double]]("v").toArray).toMap
+        (rows("mu"), rows("pc"))
+      }
     }
     /** Refuse RAW-SPACE access to a whitened artifact: its rows are
       * stored in whitened space, so scoring raw queries (or landing raw

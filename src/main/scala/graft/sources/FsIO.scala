@@ -10,8 +10,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * files beside the parquet artifacts, and on a cluster those land on
   * HDFS/S3 where `java.nio.file` rejects the URI outright. Everything
   * here is a thin wrapper; the point is that NO format writer in the
-  * library speaks `java.nio.file` for artifact paths (local tooling —
-  * plan dumps, BENCH_ORDER regeneration — rightly still does).
+  * library speaks `java.nio.file` for artifact paths (local tooling
+  * such as the plan dumps rightly still does).
   */
 object FsIO {
 

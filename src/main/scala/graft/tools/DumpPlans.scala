@@ -14,26 +14,37 @@ import graft.{SparkEntry, Tables}
   * verdict's reviewability complaint). Args: optional family names
   * restrict the regen (`runMain graft.tools.DumpPlans dedup ann`); no
   * args regenerates everything. Flags -sf <dir> / -out <dir> override
-  * the data and output locations.
+  * the data and output locations. Before/after plan evidence for a
+  * change is this tool run on both commits plus a `git diff` of the
+  * family's file.
   */
 object DumpPlans {
+  /** (sf dir, out dir, family names): `-sf` and `-out` consume the arg
+    * after them, left to right; every other arg is a family name. */
+  private[graft] def parseArgs(
+      args: Seq[String]): (String, String, Set[String]) = {
+    @annotation.tailrec
+    def go(rest: List[String], sf: String, out: String,
+           fams: Set[String]): (String, String, Set[String]) = rest match {
+      case "-sf" :: v :: t => go(t, v, out, fams)
+      case "-out" :: v :: t => go(t, sf, v, fams)
+      case f :: Nil if f == "-sf" || f == "-out" =>
+        throw new IllegalArgumentException(s"$f needs a value")
+      case fam :: t => go(t, sf, out, fams + fam)
+      case Nil => (sf, out, fams)
+    }
+    go(args.toList, "/root/testdata/sf0.1",
+      sys.props("user.dir") + "/docs/plans", Set.empty)
+  }
+
   def main(args: Array[String]): Unit = {
-    def flag(name: String): Option[String] =
-      args.indexOf(name) match {
-        case -1 => None
-        case i => args.lift(i + 1)
-      }
-    val sfDir = flag("-sf").getOrElse("/root/testdata/sf0.1")
-    val outDir = flag("-out")
-      .getOrElse(sys.props("user.dir") + "/docs/plans")
-    val famFilter = args.filterNot(_.startsWith("-"))
-      .filterNot(a => Seq(flag("-sf"), flag("-out")).flatten.contains(a))
-      .toSet
+    val (sfDir, outDir, famFilter) = parseArgs(args.toSeq)
+    val known = graft.Bench.families.map(_._1)
+    require(famFilter.forall(known.contains),
+      s"unknown family in ${famFilter.mkString(", ")} — known: ${
+        known.mkString(", ")}")
     val families = graft.Bench.families
       .filter { case (f, _) => famFilter.isEmpty || famFilter(f) }
-    require(families.nonEmpty,
-      s"no family matches $famFilter — known: ${
-        graft.Bench.families.map(_._1).mkString(", ")}")
 
     val spark = Tables.configure(SparkSession.builder()
       .master("local[8]")

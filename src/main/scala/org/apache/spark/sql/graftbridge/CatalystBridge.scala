@@ -76,4 +76,11 @@ object CatalystBridge {
         classic.queryExecution.toRdd,
         HashPartitioning(Seq(expression(df(key))), numPartitions))(spark))
   }
+
+  /** Blocks until every listener has seen the events posted so far, or
+    * 10 s pass (the listener bus is private[spark]): a listener's
+    * counters then cover every job that has already returned. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    try sc.listenerBus.waitUntilEmpty(10000L)
+    catch { case _: java.util.concurrent.TimeoutException => () }
 }

@@ -757,11 +757,17 @@ class SimilaritySpec extends SparkSpec {
     Similarity.ivfIndexBuild(spark, Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding")), dir)
     Similarity.ivfPqIndexAdd(spark, dir)
+    val wdir = graft.operators.ExportImport.scratch("ivf-state-warm-whiten")
+    graft.streaming.StreamIO.deleteRecursively(wdir,
+      spark.sparkContext.hadoopConfiguration)
+    Similarity.ivfWhitenIndexToDir(spark, sf, wdir)
     val local = localQueries(4)
     Seq[(String, DataFrame => DataFrame, String)](
       ("raw", Similarity.annServeFromIndex(spark, dir, _), "assigned"),
       ("sq8", Similarity.annServeSq8FromIndex(spark, dir, _), "assigned"),
-      ("pq", Similarity.annServeFromPqIndex(spark, dir, _), "codes")
+      ("pq", Similarity.annServeFromPqIndex(spark, dir, _), "codes"),
+      ("whitened", Similarity.annServeWhitenedFromIndex(spark, wdir, _),
+        "assigned")
     ).foreach { case (codec, serve, member) =>
       serve(local).collect() // the cold call resolves the artifact state
       var df: DataFrame = null

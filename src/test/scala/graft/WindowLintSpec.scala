@@ -114,4 +114,17 @@ class WindowLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     }
     assert(offending.isEmpty, s"registries outside ArtifactState: $offending")
   }
+
+  /** A catch-all (`case _: Throwable`) also swallows interrupts and
+    * fatal errors; handlers catch `NonFatal` or a named exception.
+    * Verify's is the one exception: it is its failure report, writing
+    * every query's failure to `_verify_errors.json`. */
+  test("no catch-all Throwable handler outside Verify") {
+    val pat = """:\s*Throwable\s*=>""".r
+    val offending = sources().collect {
+      case (path, text) if pat.findFirstIn(text).isDefined &&
+          path != "Verify.scala" => path
+    }
+    assert(offending.isEmpty, s"catch-all Throwable handlers: $offending")
+  }
 }
