@@ -1815,7 +1815,7 @@ object TextAnalysis {
   /** The corpus word-frequency table the unigram trainer consumes —
     * the SAME one corpus-scale pass bpeTrain makes (top `maxWords`
     * alphabetic words by frequency, deterministic order). */
-  private def unigramWordFreqs(docs: DataFrame,
+  private[graft] def unigramWordFreqs(docs: DataFrame,
                                maxWords: Int): Seq[(String, Long)] =
     docs
       .select(explode(TextShingles.words(col("text"))).as("word"))

@@ -746,6 +746,22 @@ class TextAnalysisSpec extends SparkSpec {
     }
   }
 
+  test("trained tokenizer models are pinned at sf0.01: BPE merge rules " +
+      "and the unigram (piece, cnt, lp) table hash unchanged") {
+    // the oracles inline the models the engine trains, so the 250-query
+    // gate cannot see a training change; these hashes can
+    val sf01 = "/root/testdata/sf0.01"
+    def sha(rows: Seq[Any]) = java.security.MessageDigest
+      .getInstance("SHA-256")
+      .digest(rows.map(_.toString).mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+    val bpe = TextAnalysis.bpeTrain(spark, sf01).collect().toSeq
+    val uni = TextAnalysis.trainUnigram(TextAnalysis.unigramWordFreqs(
+      Tables.load(spark, sf01, "documents"), 2000))
+    assert(sha(bpe) == "f64e76238c6077693c21b62c06f65b02b5a22ce0aed10a81c3fe3ad21dec13e4", bpe.mkString(" "))
+    assert(sha(uni) == "1b5dc33152f09a83fdd973f67189234ef08535f184960a3d7e8f8ab808a26065", uni.take(10).mkString(" "))
+  }
+
   test("bpe rules artifact: encode off the artifact equals train-inline") {
     val dir = graft.operators.ExportImport.scratch("bpe-rules-spec")
     TextAnalysis.bpeRulesToDir(spark, sf, dir)
