@@ -137,37 +137,42 @@ object Bench {
   /** One timed query. `constructNs` builds the DataFrame (eager artifact
     * builds, trainings and collects run here), `actionNs` is its `noop`
     * write, `wallNs` both; the counters are Spark's deltas over the query
-    * ([[Meter]]) and `jvm` the code-cache/metaspace reading after it (a
-    * full code cache silently disables JIT). */
+    * ([[Meter]]), the artifact counts are [[operators.ArtifactState]]'s
+    * builds and hits over the query, and `jvm` the code-cache/metaspace
+    * reading after it (a full code cache silently disables JIT). */
   final case class Record(q: String, constructNs: Long, actionNs: Long,
                           wallNs: Long, jobs: Long, stages: Long,
                           tasks: Long, taskMs: Long, cpuNs: Long,
-                          gcMs: Long, shuffleBytes: Long, jvm: String,
-                          err: Option[String]) {
+                          gcMs: Long, shuffleBytes: Long, spillBytes: Long,
+                          artifactBuilds: Long, artifactHits: Long,
+                          jvm: String, err: Option[String]) {
     def wallS: Double = wallNs / 1e9
     def json: String = {
       import org.json4s.JsonDSL._
       import org.json4s.jackson.JsonMethods.{compact, render}
       def s(ns: Long): Double = math.round(ns / 1e6) / 1e3
+      def mb(bytes: Long): Double = math.round(bytes / 1e4) / 1e2
       compact(render(("q" -> q) ~ ("family" -> familyOf.get(q)) ~
         ("construct_s" -> s(constructNs)) ~ ("action_s" -> s(actionNs)) ~
         ("wall_s" -> s(wallNs)) ~ ("jobs" -> jobs) ~ ("stages" -> stages) ~
         ("tasks" -> tasks) ~ ("task_s" -> s(taskMs * 1000000L)) ~
         ("cpu_s" -> s(cpuNs)) ~ ("gc_ms" -> gcMs) ~
-        ("shuffle_mb" -> math.round(shuffleBytes / 1e4) / 1e2) ~
+        ("shuffle_mb" -> mb(shuffleBytes)) ~ ("spill_mb" -> mb(spillBytes)) ~
+        ("artifact_builds" -> artifactBuilds) ~
+        ("artifact_hits" -> artifactHits) ~
         ("jvm" -> jvm) ~ ("err" -> err)))
     }
   }
 
   /** Cumulative counters over every job, stage and task the session
     * runs: jobs, stages, tasks, summed task ms, executor CPU ns,
-    * task-attributed GC ms and shuffle read + write bytes. A query's
-    * record holds their deltas, which tell fixed scheduling cost from
-    * data cost, and box load (wall up, CPU/GC/shuffle flat) from a plan
-    * change. */
+    * task-attributed GC ms, shuffle read + write bytes and spilled
+    * (memory + disk) bytes. A query's record holds their deltas, which
+    * tell fixed scheduling cost from data cost, and box load (wall up,
+    * CPU/GC/shuffle flat) from a plan change. */
   private[graft] final class Meter extends SparkListener {
-    private val jobs, stages, tasks, taskMs, cpuNs, gcMs, shuffleBytes =
-      new AtomicLong
+    private val jobs, stages, tasks, taskMs, cpuNs, gcMs, shuffleBytes,
+      spillBytes = new AtomicLong
     override def onJobStart(j: SparkListenerJobStart): Unit =
       jobs.incrementAndGet()
     override def onStageCompleted(st: SparkListenerStageCompleted): Unit =
@@ -181,22 +186,28 @@ object Bench {
         gcMs.addAndGet(m.jvmGCTime)
         shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead +
           m.shuffleWriteMetrics.bytesWritten)
+        spillBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
       }
     }
     /** The counters in the order the class comment lists them. */
     def snapshot: Seq[Long] =
-      Seq(jobs, stages, tasks, taskMs, cpuNs, gcMs, shuffleBytes).map(_.get)
+      Seq(jobs, stages, tasks, taskMs, cpuNs, gcMs, shuffleBytes, spillBytes)
+        .map(_.get)
   }
+
+  /** One memory pool's reading: `name=used/maxMB`, or `name=usedMB` for
+    * a pool without a maximum (`max` = -1, e.g. Metaspace). */
+  private[graft] def poolUsage(name: String, used: Long, max: Long): String =
+    if (max < 0) f"$name=${used / 1e6}%.0fMB"
+    else f"$name=${used / 1e6}%.0f/${max / 1e6}%.0fMB"
 
   private def jvmHealth(): String = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
       .filter(p => p.getName.contains("CodeHeap") ||
         p.getName.contains("CodeCache") || p.getName == "Metaspace")
-      .map { p =>
-        val u = p.getUsage
-        f"${p.getName}=${u.getUsed / 1e6}%.0f/${u.getMax / 1e6}%.0fMB"
-      }.mkString(" ")
+      .map { p => poolUsage(p.getName, p.getUsage.getUsed, p.getUsage.getMax) }
+      .mkString(" ")
   }
 
   /** Runs `df` to its full result and discards the rows: a `noop`-sink
@@ -213,6 +224,8 @@ object Bench {
                                name: String, meter: Meter): Record = {
     val sc = spark.sparkContext
     val pre = meter.snapshot
+    val (builds0, hits0) =
+      (operators.ArtifactState.builds.get, operators.ArtifactState.hits.get)
     sc.setJobGroup(name, name)
     val t0 = System.nanoTime()
     val (t1, res) =
@@ -234,10 +247,12 @@ object Bench {
     sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     System.gc()
     CatalystBridge.drainListeners(sc)
-    val Seq(jobs, stages, tasks, taskMs, cpuNs, gcMs, shuffle) =
+    val Seq(jobs, stages, tasks, taskMs, cpuNs, gcMs, shuffle, spill) =
       meter.snapshot.zip(pre).map { case (a, b) => a - b }
     Record(name, t1 - t0, t2 - t1, t2 - t0, jobs, stages, tasks, taskMs,
-      cpuNs, gcMs, shuffle, jvmHealth(),
+      cpuNs, gcMs, shuffle, spill,
+      operators.ArtifactState.builds.get - builds0,
+      operators.ArtifactState.hits.get - hits0, jvmHealth(),
       res.failed.toOption.map(_.toString.takeWhile(_ != '\n')))
   }
 

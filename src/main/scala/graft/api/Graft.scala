@@ -205,11 +205,12 @@ object Graft {
       maxPieceLen, iters, maxWords)
 
   /** Encode ANY (doc_id, text) frame under a unigram model — one
-    * integer-exact Viterbi DP per word, map-only. */
+    * integer-exact Viterbi DP per word, map-only. A model without all
+    * 26 single-letter pieces is refused here, before any Spark job. */
   def unigramEncode(docs: DataFrame, lp: Map[String, Long],
                     maxPieceLen: Int = 4): DataFrame =
-    graft.operators.TextAnalysis.unigramEncodeWithModel(docs, lp,
-      maxPieceLen)
+    graft.operators.TextAnalysis.encode(docs,
+      graft.functions.Unigram(lp, maxPieceLen))
 
   /** Closed-form LSH banding S-curve table (s50 + collision
     * probability grid per (bands, rows) scheme) — read before choosing

@@ -34,8 +34,9 @@ import org.apache.spark.sql.SparkSession
 private[graft] object ArtifactState {
   private[graft] val Bound = 256
 
-  /** Builds run so far (misses), for specs. */
-  private[graft] val builds = new AtomicLong
+  /** Builds run so far (misses) and lookups that found their key
+    * present (hits), for the bench record and specs. */
+  private[graft] val builds, hits = new AtomicLong
 
   private val entries =
     new java.util.LinkedHashMap[Any, FutureTask[AnyRef]](64, 0.75f, true) {
@@ -52,6 +53,7 @@ private[graft] object ArtifactState {
       if (t != null) t else { entries.put(key, fresh); fresh }
     }
     if (task eq fresh) { builds.incrementAndGet(); fresh.run() }
+    else hits.incrementAndGet()
     try task.get().asInstanceOf[T]
     catch {
       case e: ExecutionException =>
@@ -76,30 +78,19 @@ private[graft] object ArtifactState {
       params))(build)
   }
 
-  /** Scopes every directory [[dirOf]] writes to this JVM: an artifact
-    * never outlives the process that built it (each is deleted when the
-    * JVM's FileSystems close at exit). */
-  private lazy val namespace = java.util.UUID.randomUUID().toString
-  private val dirsWritten = new AtomicLong
-
   /** The directory artifact `write` builds from the files under
     * `inputs`, once per (kind, params) and version of those files. Each
     * build writes a directory of its own, so a directory returned
     * earlier is never overwritten: after an LRU eviction or an input
     * rewrite, lazy frames over the old one still read what they
-    * planned. */
+    * planned. An artifact never outlives the process that built it
+    * ([[ExportImport.runScratch]]). */
   def dirOf(spark: SparkSession, kind: String, inputs: Seq[String],
             params: Any)(write: String => Unit): String =
     ofInputs(spark, kind, inputs, params) {
-      val dir = ExportImport.scratch(s"$kind/$namespace/" +
-        ExportImport.pathSlug(s"$params-${inputs.mkString(",")}") +
-        s"-${dirsWritten.incrementAndGet()}")
+      val dir = ExportImport.runScratch(s"$kind/" +
+        ExportImport.pathSlug(s"$params-${inputs.mkString(",")}"))
       write(dir)
-      // registered once written (deleteOnExit skips a missing path),
-      // with the JVM's namespace directory of this kind
-      val p = new Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Seq(p, p.getParent).foreach(fs.deleteOnExit)
       dir
     }
 

@@ -1209,8 +1209,7 @@ object Curation {
     * spec-claimed. */
   def bm25Incremental(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
-    val dir = ExportImport.scratch(
-      s"bm25-stats/incr-${java.util.UUID.randomUUID()}")
+    val dir = ExportImport.runScratch("bm25-stats/incr")
     bm25StatsBuild(spark, docs.filter(col("doc_id") % 10 < 8), dir)
     bm25StatsAppend(spark, dir, docs.filter(col("doc_id") % 10 >= 8))
     bm25FromIndex(spark, dir, Seq("data", "filter", "join"))

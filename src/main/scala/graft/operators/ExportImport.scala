@@ -35,6 +35,17 @@ object ExportImport {
     d
   }
 
+  /** A fresh directory `<scratch>/<name>/run-<uuid>` for one run's
+    * artifact: concurrent runs never share one, and it is deleted when
+    * the JVM's FileSystems close at exit, so per-run artifacts do not
+    * pile up across processes. */
+  def runScratch(name: String): String = {
+    val d = scratch(s"$name/run-${java.util.UUID.randomUUID()}")
+    val p = new org.apache.hadoop.fs.Path(d)
+    p.getFileSystem(graft.sources.FsIO.sessionConf).deleteOnExit(p)
+    d
+  }
+
   /** Collision-free filesystem slug for an arbitrary string (e.g. an
     * sfDir used to key a per-session artifact directory): sanitized
     * tail for readability + a sha-256 prefix for uniqueness. hashCode

@@ -2841,8 +2841,7 @@ object Similarity {
       transform(col("embedding"), x => x + lit(0.5f)).as("embedding"))
     // per-run UUID subdir: concurrent runs must not overwrite each
     // other's artifact mid-read (the annIvfIndexed stance)
-    val dir = ExportImport.scratch(
-      s"ivf-rebuild/run-${java.util.UUID.randomUUID()}")
+    val dir = ExportImport.runScratch("ivf-rebuild")
     ivfIndexBuild(spark, base, dir, staticCentroids())
     graft.streaming.StreamIvfIndex.applyBatch(shifted, 0L, dir)
     val queries = shifted.filter(col("vec_id") < nQueries * 5)
@@ -3327,8 +3326,7 @@ object Similarity {
                                (build: String => Unit)
                                (serveFrom: (String, DataFrame) => DataFrame)
       : DataFrame = {
-    val dir = ExportImport.scratch(
-      s"$kind/run-${java.util.UUID.randomUUID()}")
+    val dir = ExportImport.runScratch(kind)
     build(dir)
     serveFrom(dir, Tables.load(spark, sfDir, "embeddings")
       .filter(col("vec_id") < nQueries)

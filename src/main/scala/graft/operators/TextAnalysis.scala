@@ -1,17 +1,21 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
-import graft.functions.TextShingles
+import graft.functions.{Bpe, TextShingles, Tokenizer, Unigram}
 
 /** Text analysis for training-data pipelines: quality stats, language ID,
   * token counting, document fingerprinting, char-shingle profiles.
   *
   * All map-only (no shuffle except the final presentation sort): at
-  * 100 TB these run at scan speed, entirely inside whole-stage codegen
-  * (regexp + array built-ins, no UDFs).
+  * 100 TB these run at scan speed inside whole-stage codegen. Per-row
+  * work is regexp and array built-ins plus native expressions under
+  * `graft.functions` — the tokenizers' per-word kernel is one such
+  * expression ([[graft.functions.TokenCount]]) — with no UDFs. The one
+  * exception is the n-gram builders' `transform` lambdas (repetition,
+  * n-gram LM, word PMI, char shingles), which Spark runs interpreted.
   *
   * Cross-engine contract: every regex below uses constructs with
   * identical semantics in Java (Spark) and RE2 (DuckDB) — `\b`, `\s`,
@@ -1396,72 +1400,43 @@ object TextAnalysis {
        ORDER BY stage"""
 
   /** §2 #122 — BPE MERGE TRAINING (tokenizer induction, Sennrich et al.
-    * 2016) as distributed aggregation: the first `nMerges` merge rules a
-    * byte-pair-encoding tokenizer would learn from the corpus, each
-    * round = argmax over frequency-weighted adjacent-symbol-pair counts,
-    * greedy left-to-right merge application. Output: one row per merge
+    * 2016): the first `nMerges` merge rules a byte-pair-encoding
+    * tokenizer would learn from the corpus, each round = argmax over
+    * frequency-weighted adjacent-symbol-pair counts, greedy
+    * left-to-right merge application. Output: one row per merge
     * (step, left, right, pair_freq) — the artifact a tokenizer ships.
     *
-    * Scale shape: ONE corpus-scale aggregation (word frequencies);
-    * every training round then runs on the DISTINCT-WORD vocabulary
-    * (bounded: top `maxWords` by frequency — exactly how production BPE
-    * trainers cap their word lists), so round cost is independent of
-    * corpus size. Driver state per round is the 1-row argmax — the
-    * merge-rule literal broadcast into the next round's fold, bounded
-    * model state like the IVF centroids. Ties break (freq desc, left,
-    * right); the vocab is restricted to `^[a-z]+$` words so lexicographic
-    * order is byte-identical across engines. */
+    * Scale shape: ONE corpus-scale aggregation ([[wordFreqs]]: the top
+    * `maxWords` words by frequency — exactly how production BPE
+    * trainers cap their word lists); every round then runs on the
+    * driver over that bounded table, so round cost is independent of
+    * corpus size. Ties break (freq desc, left, right); the vocab is
+    * restricted to `^[a-z]+$` words so lexicographic order is
+    * byte-identical across engines. */
   def bpeTrain(spark: SparkSession, sfDir: String, nMerges: Int = 5,
                maxWords: Int = 2000): DataFrame =
     bpeTrainFrom(Tables.load(spark, sfDir, "documents"), nMerges, maxWords)
 
-  /** Generic core over ANY (doc_id, text) frame. */
+  /** Generic core over ANY (doc_id, text) frame: the [[wordFreqs]]
+    * table, then each round's argmax pair and [[Bpe.merge]] on the
+    * driver. */
   def bpeTrainFrom(docs: DataFrame, nMerges: Int,
                    maxWords: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // corpus-scale pass: frequency per alphabetic word, capped vocab
-    val vocab0 = docs
-      .select(explode(TextShingles.words(col("text"))).as("word"))
-      .filter(col("word").rlike("^[a-z]+$"))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .orderBy(col("freq").desc, col("word")).limit(maxWords)
-      .select(col("freq"),
-        expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))")
-          .as("syms"))
-    // the vocab is re-scanned every round — cache it (released at the
-    // session boundary), the corpus is never touched again
-    var vocab = TransientCaches.register(vocab0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    var vocab = wordFreqs(docs, maxWords)
+      .map { case (w, f) => (w.map(_.toString).toArray, f) }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     for (step <- 1 to nMerges) {
-      val top = vocab.filter(size(col("syms")) >= 2)
-        .select(explode(expr(
-          """transform(sequence(1, size(syms) - 1),
-               i -> struct(element_at(syms, i) AS l,
-                           element_at(syms, i + 1) AS r))""")).as("p"),
-          col("freq"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum("freq").as("cnt"))
-        .orderBy(col("cnt").desc, col("l"), col("r")).limit(1)
-        .collect()
-      if (top.nonEmpty) {
-        val (l, r, cnt) = (top(0).getString(0), top(0).getString(1),
-          top(0).getLong(2))
+      val pairs = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for ((syms, f) <- vocab; i <- 1 until syms.length) {
+        val p = (syms(i - 1), syms(i))
+        pairs(p) = pairs.getOrElse(p, 0L) + f
+      }
+      if (pairs.nonEmpty) {
+        val ((l, r), cnt) = pairs.minBy { case ((l, r), c) => (-c, l, r) }
         merges += ((step, l, r, cnt))
-        // greedy left-to-right merge of (l, r) in every word — the fold
-        // is the textbook BPE apply, replayed verbatim by the oracle
-        val next = vocab.select(col("freq"), expr(
-          s"""aggregate(syms, cast(array() as array<string>),
-                (acc, x) -> CASE WHEN size(acc) > 0
-                                  AND element_at(acc, -1) = '$l'
-                                  AND x = '$r'
-                  THEN concat(slice(acc, 1, size(acc) - 1), array('$l$r'))
-                  ELSE concat(acc, array(x)) END)""").as("syms"))
-        val cached = TransientCaches.register(next
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        cached.count()
-        vocab = cached
+        vocab = vocab.map { case (syms, f) => (Bpe.merge(syms, l, r), f) }
       }
     }
     merges.toSeq.toDF("step", "left", "right", "pair_freq")
@@ -1475,47 +1450,33 @@ object TextAnalysis {
     * tokenization run (train on the vocab, evaluate on the corpus).
     *
     * Scale shape: training is the bounded [[bpeTrainFrom]] pipeline
-    * (vocab-sized rounds); encoding is then MAP-ONLY — the k merge
-    * rules are string literals folded into one nested-aggregate
-    * expression per word, so the corpus pass rides a single scan with
-    * no joins and no shuffle beyond the per-doc aggregate. */
+    * (vocab-sized rounds); encoding is then MAP-ONLY ([[encode]]) — a
+    * single scan with no joins and no shuffle beyond the per-doc
+    * aggregate. */
   def bpeEncode(spark: SparkSession, sfDir: String, nMerges: Int = 5,
                 maxWords: Int = 2000): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
-    val rules = bpeTrainFrom(docs, nMerges, maxWords).collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
-    encodeWithRules(docs, rules)
+    bpeEncodeFromRules(docs, bpeTrainFrom(docs, nMerges, maxWords))
   }
 
-  /** The map-only encode pass given already-learned rules: chars →
-    * symbols, then each rule applied in order as one nested fold (all
-    * literals: codegen sees a constant pipeline). Shared by the
-    * train-inline ([[bpeEncode]]) and artifact-fed
-    * ([[bpeEncodeFromRules]]) forms — identical output by construction. */
-  private def encodeWithRules(docs: DataFrame,
-                              rules: Seq[(String, String)]): DataFrame = {
-    val encoded = rules.foldLeft(
-      "transform(sequence(1, length(word)), i -> substring(word, i, 1))") {
-      case (acc, (l, r)) =>
-        s"""aggregate($acc, cast(array() as array<string>),
-              (acc, x) -> CASE WHEN size(acc) > 0
-                                AND element_at(acc, -1) = '$l' AND x = '$r'
-                THEN concat(slice(acc, 1, size(acc) - 1), array('$l$r'))
-                ELSE concat(acc, array(x)) END)"""
-    }
+  /** The map-only corpus encode under any tokenizer: one [[TokenCount]]
+    * per `[a-z]+` word, per-doc word/char/token totals and the
+    * chars-per-token compression. Every batch encode (BPE and unigram,
+    * train-inline and artifact-fed) is this body, so their outputs
+    * compare row for row. */
+  private[graft] def encode(docs: DataFrame, tok: Tokenizer): DataFrame =
     docs
       .select(col("doc_id"),
         explode(TextShingles.words(col("text"))).as("word"))
       .filter(col("word").rlike("^[a-z]+$"))
       .select(col("doc_id"), length(col("word")).cast("long").as("n_chars"),
-        size(expr(encoded)).cast("long").as("n_toks"))
+        tok.tokens(col("word")).as("n_toks"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"), sum("n_chars").as("n_chars"),
         sum("n_toks").as("n_tokens"))
       .withColumn("compression",
         round(col("n_chars") / col("n_tokens").cast("double"), 4))
       .orderBy("doc_id")
-  }
 
   /** TOKENIZER ARTIFACT (the §8 artifact doctrine applied to the BPE
     * family): persist the learned merge rules as a tiny versioned
@@ -1537,16 +1498,18 @@ object TextAnalysis {
   }
 
   /** §2 #122c — ENCODE FROM THE RULES ARTIFACT: identical output to
-    * [[bpeEncode]] (same fold, same rules — TextAnalysisSpec proves
+    * [[bpeEncode]] (same kernel, same rules — TextAnalysisSpec proves
     * equality), but the training pass is replaced by a k-row artifact
     * read. This is the shape a production tokenization run has: the
     * vocabulary is versioned alongside the corpus, and a 100 TB encode
     * never re-trains. */
-  def bpeEncodeFromRules(docs: DataFrame, rulesDf: DataFrame): DataFrame = {
-    val rules = rulesDf.orderBy("step").collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
-    encodeWithRules(docs, rules)
-  }
+  def bpeEncodeFromRules(docs: DataFrame, rulesDf: DataFrame): DataFrame =
+    encode(docs, bpeOf(rulesDf))
+
+  /** The tokenizer a rules frame holds, rules in step order. */
+  private[graft] def bpeOf(rulesDf: DataFrame): Bpe =
+    Bpe(rulesDf.orderBy("step").collect()
+      .map(r => (r.getString(1), r.getString(2))).toSeq)
 
   /** The session's rules artifact — one train per (nMerges, maxWords,
     * version of the corpus's documents) ([[ArtifactState]]), the
@@ -1633,9 +1596,13 @@ object TextAnalysis {
     * Ratios derive from exact integer sums, rounded once. */
   def bpeFertility(spark: SparkSession, sfDir: String, nMerges: Int = 5,
                    maxWords: Int = 2000): DataFrame =
-    bpeEncode(spark, sfDir, nMerges, maxWords)
-      .join(Tables.load(spark, sfDir, "documents")
-        .select(col("doc_id"), col("lang")), "doc_id")
+    perLang(bpeEncode(spark, sfDir, nMerges, maxWords),
+      Tables.load(spark, sfDir, "documents")).orderBy("lang")
+
+  /** A per-doc [[encode]] rolled up by the docs' labeled language:
+    * doc/word/token/char totals, fertility and chars per token. */
+  private def perLang(enc: DataFrame, docs: DataFrame): DataFrame =
+    enc.join(docs.select(col("doc_id"), col("lang")), "doc_id")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_words").as("n_words"),
         sum("n_tokens").as("n_tokens"), sum("n_chars").as("n_chars"))
@@ -1643,7 +1610,6 @@ object TextAnalysis {
         round(col("n_tokens") / col("n_words").cast("double"), 4))
       .withColumn("chars_per_token",
         round(col("n_chars") / col("n_tokens").cast("double"), 4))
-      .orderBy("lang")
 
   /** DuckDB oracle for [[bpeFertility]]: the [[bpeEncodeOracle]] CTE
     * chain (same learned rules, same per-word fold) rolled up by the
@@ -1731,20 +1697,6 @@ object TextAnalysis {
                                   maxPieceLen: Int = 4,
                                   iters: Int = 2)
       : Seq[(String, Long, Long)] = {
-    // DRIVER-SIDE TRAINER, BOUNDED BY CONTRACT (VERDICT-r18 #8): the
-    // substring seed holds ~|word|·maxPieceLen pieces per table row —
-    // ~8 MB at the default 2 000 words, but a corpus-scale vocab pass
-    // (maxWords ~10⁶) would materialize GBs on the driver. The word
-    // TABLE is already the product of a distributed top-k (the one
-    // corpus pass, unigramWordFreqs); the trainer itself is model
-    // fitting over that bounded table, so it fails loudly past the
-    // bound (the TopKAggregate stance) instead of silently OOMing.
-    require(wordFreqs.size <= 20000,
-      s"unigram trainer seeds all substrings of the word table on the " +
-        s"driver — ${wordFreqs.size} words exceeds the 20000-word bound; " +
-        "train on a top-k word table (maxWords <= 20000) — beyond that " +
-        "the seed/count passes must move to DataFrame aggregates " +
-        "(the bpe_train shape)")
     val chars = ('a' to 'z').map(_.toString)
     val seed = scala.collection.mutable.HashMap.empty[String, Long]
     for ((w, f) <- wordFreqs; i <- 0 until w.length;
@@ -1765,7 +1717,7 @@ object TextAnalysis {
     var lp = lpOf(cnt)
     for (_ <- 1 to iters) {
       val usage = scala.collection.mutable.HashMap.empty[String, Long]
-      for ((w, f) <- wordFreqs; p <- viterbiPieces(w, lp, maxPieceLen))
+      for ((w, f) <- wordFreqs; p <- Unigram.viterbiPieces(w, lp, maxPieceLen))
         usage(p) = usage.getOrElse(p, 0L) + f
       cnt = cnt.flatMap { case (p, _) =>
         val u = usage.getOrElse(p, 0L)
@@ -1781,48 +1733,26 @@ object TextAnalysis {
       .sortBy { case (p, c, _) => (-c, p) }
   }
 
-  /** The trainer's Viterbi segmentation — the SAME integer-score DP
-    * the engine encode and the oracle replay: `d[i] = max_j d[j] +
-    * lp(word[j..i))`, ties → fewer pieces, then the smaller j (the
-    * longer final piece). All single characters are in the vocab, so
-    * every [a-z]+ word is segmentable. */
-  private[graft] def viterbiPieces(w: String, lp: Map[String, Long],
-                                   maxPieceLen: Int): Seq[String] = {
-    val n = w.length
-    val ds = new Array[Long](n + 1)
-    val dc = new Array[Long](n + 1)
-    val bk = new Array[Int](n + 1)
-    for (i <- 1 to n) {
-      var bs = Long.MinValue; var bc = 0L; var bj = -1
-      for (j <- math.max(0, i - maxPieceLen) until i) {
-        lp.get(w.substring(j, i)) match {
-          case Some(v) =>
-            val s = ds(j) + v; val c = dc(j) + 1
-            if (bj < 0 || s > bs || (s == bs && c < bc)) {
-              bs = s; bc = c; bj = j
-            }
-          case None => ()
-        }
-      }
-      ds(i) = bs; dc(i) = bc; bk(i) = bj
-    }
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    var i = n
-    while (i > 0) { out.prepend(w.substring(bk(i), i)); i = bk(i) }
-    out.toSeq
-  }
-
-  /** The corpus word-frequency table the unigram trainer consumes —
-    * the SAME one corpus-scale pass bpeTrain makes (top `maxWords`
-    * alphabetic words by frequency, deterministic order). */
-  private[graft] def unigramWordFreqs(docs: DataFrame,
-                               maxWords: Int): Seq[(String, Long)] =
+  /** The bounded word table both tokenizer trainers consume: the top
+    * `maxWords` `[a-z]+` words by frequency, (freq desc, word) order —
+    * the one corpus-scale pass of either training.
+    *
+    * Bounded by contract: the trainers fit on the driver (the unigram
+    * seed holds ~|word|·maxPieceLen substrings per row, ~8 MB at 2 000
+    * words), so a corpus-scale table fails loudly here (the
+    * TopKAggregate stance) instead of exhausting the driver. */
+  private[graft] def wordFreqs(docs: DataFrame,
+                               maxWords: Int): Seq[(String, Long)] = {
+    require(maxWords <= 20000,
+      s"tokenizer trainers fit on the driver; maxWords = $maxWords " +
+        "exceeds the 20000-word bound")
     docs
       .select(explode(TextShingles.words(col("text"))).as("word"))
       .filter(col("word").rlike("^[a-z]+$"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("word")).limit(maxWords)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+  }
 
   /** One trained unigram model per (params, version of the corpus's
     * documents) ([[ArtifactState]]). */
@@ -1835,69 +1765,6 @@ object TextAnalysis {
       unigramTrainFrom(Tables.load(spark, sfDir, "documents"), vocabSize,
         maxPieceLen, iters, maxWords))
 
-  /** The MAP-ONLY corpus encode under a trained unigram model: one
-    * integer-score Viterbi DP per word (the piece log-probs ride as a
-    * broadcast map literal), per-doc token totals and the
-    * chars-per-token compression — [[bpeEncode]]'s exact output shape,
-    * so the two tokenizers compare row for row. No joins, no shuffle
-    * beyond the per-doc aggregate. */
-  /** The integer Viterbi DP as a Column function of ANY word column —
-    * token count of the best segmentation under the piece micro-nat
-    * map. Column-API lambdas get fresh variable names, so this nests
-    * safely inside an outer fold (the streaming twin folds it over the
-    * per-doc word array). */
-  private[graft] def unigramDpTokens(lp: Map[String, Long],
-                                     maxPieceLen: Int = 4)
-                                    (word: Column): Column = {
-    val lpMap = typedLit(lp)
-    val dp = aggregate(
-      sequence(lit(1), length(word)),
-      array(struct(lit(0L).as("s"), lit(0L).as("c"))),
-      (acc, i) => {
-        val cands = filter(
-          transform(
-            sequence(greatest(lit(1), i - lit(maxPieceLen) + lit(1)), i),
-            j => struct(
-              (element_at(acc, j).getField("s")
-                + element_at(lpMap, word.substr(j, i - j + lit(1))))
-                .as("s"),
-              (element_at(acc, j).getField("c") + lit(1L)).as("c"),
-              j.cast("long").as("j"))),
-          c => c.getField("s").isNotNull)
-        val best = aggregate(
-          slice(cands, lit(2), size(cands)), element_at(cands, 1),
-          (p, q) => when(
-            q.getField("s") > p.getField("s")
-              || (q.getField("s") === p.getField("s")
-                && (q.getField("c") < p.getField("c")
-                  || (q.getField("c") === p.getField("c")
-                    && q.getField("j") < p.getField("j")))), q)
-            .otherwise(p))
-        concat(acc, array(struct(best.getField("s").as("s"),
-          best.getField("c").as("c"))))
-      })
-    element_at(dp, -1).getField("c")
-  }
-
-  private[graft] def unigramEncodeWithModel(docs: DataFrame,
-                                            lp: Map[String, Long],
-                                            maxPieceLen: Int = 4)
-      : DataFrame = {
-    docs
-      .select(col("doc_id"),
-        explode(TextShingles.words(col("text"))).as("word"))
-      .filter(col("word").rlike("^[a-z]+$"))
-      .select(col("doc_id"),
-        length(col("word")).cast("long").as("n_chars"),
-        unigramDpTokens(lp, maxPieceLen)(col("word")).as("n_toks"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_words"), sum("n_chars").as("n_chars"),
-        sum("n_toks").as("n_tokens"))
-      .withColumn("compression",
-        round(col("n_chars") / col("n_tokens").cast("double"), 4))
-      .orderBy("doc_id")
-  }
-
   /** §2 #243 — UNIGRAM-LM ENCODE: train the unigram tokenizer
     * (driver-side EM over the bounded vocab, one training per corpus
     * per JVM) and encode the whole corpus — [[bpeEncode]]'s twin, same
@@ -1906,10 +1773,9 @@ object TextAnalysis {
   def unigramEncode(spark: SparkSession, sfDir: String,
                     vocabSize: Int = 120, maxPieceLen: Int = 4,
                     iters: Int = 2, maxWords: Int = 2000): DataFrame =
-    unigramEncodeWithModel(Tables.load(spark, sfDir, "documents"),
-      sharedUnigramLp(spark, sfDir, vocabSize, maxPieceLen, iters,
-        maxWords),
-      maxPieceLen)
+    encode(Tables.load(spark, sfDir, "documents"),
+      Unigram(sharedUnigramLp(spark, sfDir, vocabSize, maxPieceLen, iters,
+        maxWords), maxPieceLen))
 
   /** [[trainUnigram]] over ANY (doc_id, text) frame, returning the
     * (piece → integer micro-nat log-prob) map the encode consumes —
@@ -1917,7 +1783,7 @@ object TextAnalysis {
   def unigramTrainFrom(docs: DataFrame, vocabSize: Int = 120,
                        maxPieceLen: Int = 4, iters: Int = 2,
                        maxWords: Int = 2000): Map[String, Long] =
-    trainUnigram(unigramWordFreqs(docs, maxWords), vocabSize,
+    trainUnigram(wordFreqs(docs, maxWords), vocabSize,
       maxPieceLen, iters).map { case (p, _, l) => p -> l }.toMap
 
   /** TOKENIZER ARTIFACT for the unigram family ([[bpeRulesToDir]]'s
@@ -1930,7 +1796,7 @@ object TextAnalysis {
                         iters: Int = 2, maxWords: Int = 2000): Unit = {
     import spark.implicits._
     trainUnigram(
-      unigramWordFreqs(Tables.load(spark, sfDir, "documents"), maxWords),
+      wordFreqs(Tables.load(spark, sfDir, "documents"), maxWords),
       vocabSize, maxPieceLen, iters)
       .toDF("piece", "cnt", "lp")
       .coalesce(1).write.mode("overwrite").parquet(dir)
@@ -1942,7 +1808,9 @@ object TextAnalysis {
     val df = spark.read.parquet(dir)
     require(df.columns.toSeq == Seq("piece", "cnt", "lp"),
       s"not a unigram model artifact: ${df.columns.mkString(", ")}")
-    df.collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+    val lp = df.collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+    Unigram.requireLetters(lp)
+    lp
   }
 
   /** The session's unigram model artifact — one train per (params,
@@ -1964,12 +1832,11 @@ object TextAnalysis {
                             vocabSize: Int = 120, maxPieceLen: Int = 4,
                             iters: Int = 2,
                             maxWords: Int = 2000): DataFrame =
-    unigramEncodeWithModel(Tables.load(spark, sfDir, "documents"),
-      readUnigramModel(spark, sharedUnigramModelDir(spark, sfDir,
-        vocabSize, maxPieceLen, iters, maxWords)),
-      maxPieceLen)
+    encode(Tables.load(spark, sfDir, "documents"),
+      Unigram(readUnigramModel(spark, sharedUnigramModelDir(spark, sfDir,
+        vocabSize, maxPieceLen, iters, maxWords)), maxPieceLen))
 
-  /** The DuckDB CTE chain replaying [[unigramEncodeWithModel]] for a
+  /** The DuckDB CTE chain replaying the unigram [[encode]] for a
     * GIVEN model: words split identically, then the SAME integer
     * Viterbi DP as a list_reduce fold with the piece micro-nat scores
     * inlined as one CASE. Ends at `$encName` (doc_id, n_chars,
@@ -2013,19 +1880,25 @@ object TextAnalysis {
          WHERE regexp_matches(word, '^[a-z]+$$'))"""
   }
 
+  /** The model [[unigramEncode]] trains at the oracle's scale factor,
+    * for the oracles to inline. */
+  private def oracleLp(vocabSize: Int, maxPieceLen: Int, iters: Int,
+                       maxWords: Int): Map[String, Long] = {
+    val spark = SparkSession.getActiveSession.getOrElse(
+      graft.Tables.configure(SparkSession.builder().master("local[2]")
+        .config("spark.ui.enabled", "false")).getOrCreate())
+    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
+      "/root/testdata/sf0.01")
+    sharedUnigramLp(spark, sfDir, vocabSize, maxPieceLen, iters, maxWords)
+  }
+
   /** DuckDB oracle for [[unigramEncode]]: trains the SAME model (the
     * deterministic driver-side trainer — the ivfTrainedOracle stance)
     * and replays the corpus encode exactly via [[unigramEncCte]]. */
   def unigramTrainedOracle(vocabSize: Int = 120, maxPieceLen: Int = 4,
                            iters: Int = 2,
                            maxWords: Int = 2000): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val lp = sharedUnigramLp(spark, sfDir, vocabSize, maxPieceLen, iters,
-      maxWords)
+    val lp = oracleLp(vocabSize, maxPieceLen, iters, maxWords)
     s"""WITH ${unigramEncCte(lp, maxPieceLen, "uenc")}
        SELECT doc_id, count(*) AS n_words,
               CAST(sum(n_chars) AS BIGINT) AS n_chars,
@@ -2046,7 +1919,6 @@ object TextAnalysis {
                          vocabSize: Int = 120, maxPieceLen: Int = 4,
                          iters: Int = 2): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
-    val langs = docs.select(col("doc_id"), col("lang"))
     // skipped mass per language (VERDICT-r18 #5): both encodes admit
     // only lowercase-folded [a-z]+ words (TextShingles.words lowers,
     // so mixed case IS covered) — everything else (digits,
@@ -2060,24 +1932,16 @@ object TextAnalysis {
       .groupBy("lang")
       .agg(sum(when(col("word").rlike("^[a-z]+$"), 0L).otherwise(1L))
         .as("n_skipped_words"))
-    def roll(enc: DataFrame, name: String) = enc
-      .join(langs, "doc_id")
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"), sum("n_words").as("n_words"),
-        sum("n_tokens").as("n_tokens"), sum("n_chars").as("n_chars"))
-      .withColumn("tokenizer", lit(name))
+    def roll(enc: DataFrame, name: String) =
+      perLang(enc, docs).withColumn("tokenizer", lit(name))
     roll(bpeEncode(spark, sfDir, nMerges, maxWords), "bpe")
       .unionByName(roll(
         unigramEncode(spark, sfDir, vocabSize, maxPieceLen, iters,
           maxWords), "unigram"))
       .join(skipped, Seq("lang"))
       .select(col("lang"), col("tokenizer"), col("n_docs"),
-        col("n_words"), col("n_tokens"), col("n_chars"),
-        round(col("n_tokens") / col("n_words").cast("double"), 4)
-          .as("fertility"),
-        round(col("n_chars") / col("n_tokens").cast("double"), 4)
-          .as("chars_per_token"),
-        col("n_skipped_words"),
+        col("n_words"), col("n_tokens"), col("n_chars"), col("fertility"),
+        col("chars_per_token"), col("n_skipped_words"),
         round(col("n_skipped_words")
           / (col("n_skipped_words") + col("n_words")).cast("double"), 4)
           .as("skipped_share"))
@@ -2090,13 +1954,7 @@ object TextAnalysis {
   def tokenizerFertilityOracle(nMerges: Int = 5, maxWords: Int = 2000,
                                vocabSize: Int = 120, maxPieceLen: Int = 4,
                                iters: Int = 2): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val lp = sharedUnigramLp(spark, sfDir, vocabSize, maxPieceLen, iters,
-      maxWords)
+    val lp = oracleLp(vocabSize, maxPieceLen, iters, maxWords)
     def branch(encName: String, tok: String) =
       s"""SELECT d.lang, '$tok' AS tokenizer,
             count(*) AS n_docs,

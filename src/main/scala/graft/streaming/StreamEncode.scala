@@ -2,83 +2,51 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.{TextShingles, Tokenizer, Unigram}
+import graft.operators.TextAnalysis
 
-/** Continuous TOKENIZATION off the BPE rules artifact: arriving
-  * documents are encoded with the versioned merge rules
-  * ([[graft.operators.TextAnalysis.bpeRulesToDir]]) and report the
-  * same per-document (n_words, n_chars, n_tokens, compression) row the
-  * batch encode produces — the ingest-side token accounting a
-  * continuously-fed pipeline needs for budget/mixture decisions at
-  * arrival time, not after the next batch job.
+/** Continuous TOKENIZATION off a tokenizer artifact (the BPE rules,
+  * [[graft.operators.TextAnalysis.bpeRulesToDir]], or the unigram
+  * model, [[graft.operators.TextAnalysis.unigramModelToDir]]):
+  * arriving documents report the same per-document (n_words, n_chars,
+  * n_tokens, compression) row the batch encode produces — the
+  * ingest-side token accounting a continuously-fed pipeline needs for
+  * budget/mixture decisions at arrival time, not after the next batch
+  * job.
   *
   * STATELESS map-only, so append mode needs no watermark or state
-  * store: where the batch twin explodes words and re-aggregates per
+  * store: where the batch body explodes words and re-aggregates per
   * doc (fine for a scan, a stateful aggregation in a stream), this
-  * computes the identical counts as ONE per-row fold over the word
-  * array — the rules are string literals, so each micro-batch runs a
-  * constant codegen'd pipeline. StreamingSpec proves per-doc equality
-  * with [[graft.operators.TextAnalysis.bpeEncodeFromRules]] on the
+  * sums the same per-word kernel over each row's word array.
+  * StreamingSpec proves per-doc equality with the batch encode on the
   * same artifact.
   */
 object StreamEncode {
 
-  /** The per-word encode fold with alpha-renamed lambda variables so
-    * it can nest INSIDE an outer `aggregate` lambda (the batch form's
-    * `(acc, x)` names would shadow the outer binding). */
-  private def perWordFold(rules: Seq[(String, String)], w: String): String =
-    rules.foldLeft(
-      s"transform(sequence(1, length($w)), i2 -> substring($w, i2, 1))") {
-      case (acc, (l, r)) =>
-        s"""aggregate($acc, cast(array() as array<string>),
-              (a2, ch) -> CASE WHEN size(a2) > 0
-                                AND element_at(a2, -1) = '$l' AND ch = '$r'
-                THEN concat(slice(a2, 1, size(a2) - 1), array('$l$r'))
-                ELSE concat(a2, array(ch)) END)"""
-    }
+  /** Encode a (streaming or batch) (doc_id, text) frame off a BPE rules
+    * artifact frame. */
+  def encoded(docs: DataFrame, rulesDf: DataFrame): DataFrame =
+    encodedWith(docs, TextAnalysis.bpeOf(rulesDf))
 
-  /** Encode a (streaming or batch) (doc_id, text) frame off a rules
-    * artifact frame. Output schema and values match
-    * `bpeEncodeFromRules` row-for-row (docs with no alphabetic word
-    * are absent there too — the batch explode drops them). */
-  def encoded(docs: DataFrame, rulesDf: DataFrame): DataFrame = {
-    val rules = rulesDf.orderBy("step").collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
-    val fold = perWordFold(rules, "x")
-    docs
-      .withColumn("w", graft.functions.TextShingles.words(col("text")))
-      .withColumn("kept", expr("filter(w, x -> x rlike '^[a-z]+$')"))
-      .filter(size(col("kept")) > 0)
-      .select(col("doc_id"),
-        size(col("kept")).cast("long").as("n_words"),
-        expr("aggregate(kept, 0L, (a, x) -> a + length(x))").as("n_chars"),
-        expr(s"aggregate(kept, 0L, (a, x) -> a + size($fold))")
-          .as("n_tokens"))
-      .withColumn("compression",
-        round(col("n_chars") / col("n_tokens").cast("double"), 4))
-  }
-
-  /** Continuous tokenization off the UNIGRAM model artifact
-    * ([[graft.operators.TextAnalysis.unigramModelToDir]]) — the #243
-    * tokenizer's streaming twin, same stance as [[encoded]]: stateless
-    * map-only (append mode, no watermark, no state store), the batch
-    * explode+re-aggregate replaced by ONE per-row fold summing the
-    * integer Viterbi DP over the word array. StreamingSpec proves
-    * per-doc equality with `unigramEncodeWithModel` on the same
-    * artifact. */
+  /** Encode off a unigram model (piece → micro-nat log-prob). */
   def unigramEncoded(docs: DataFrame, lp: Map[String, Long],
-                     maxPieceLen: Int = 4): DataFrame = {
-    val dpOf = graft.operators.TextAnalysis
-      .unigramDpTokens(lp, maxPieceLen) _
+                     maxPieceLen: Int = 4): DataFrame =
+    encodedWith(docs, Unigram(lp, maxPieceLen))
+
+  /** Output schema and values match the batch encode row-for-row (docs
+    * with no alphabetic word are absent there too — the batch explode
+    * drops them). */
+  private def encodedWith(docs: DataFrame, tok: Tokenizer): DataFrame =
     docs
-      .withColumn("w", graft.functions.TextShingles.words(col("text")))
-      .withColumn("kept", expr("filter(w, x -> x rlike '^[a-z]+$')"))
+      .withColumn("kept",
+        filter(TextShingles.words(col("text")), _.rlike("^[a-z]+$")))
       .filter(size(col("kept")) > 0)
       .select(col("doc_id"),
         size(col("kept")).cast("long").as("n_words"),
-        expr("aggregate(kept, 0L, (a, x) -> a + length(x))").as("n_chars"),
-        aggregate(col("kept"), lit(0L), (a, x) => a + dpOf(x))
+        aggregate(col("kept"), lit(0L), (a, x) => a + length(x))
+          .as("n_chars"),
+        aggregate(col("kept"), lit(0L), (a, x) => a + tok.tokens(x))
           .as("n_tokens"))
       .withColumn("compression",
         round(col("n_chars") / col("n_tokens").cast("double"), 4))
-  }
 }

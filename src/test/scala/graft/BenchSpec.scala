@@ -17,7 +17,8 @@ class BenchSpec extends SparkSpec {
 
   private def record(q: String, wallS: Double, err: Option[String]) = {
     val ns = (wallS * 1e9).toLong
-    Bench.Record(q, 0L, ns, ns, 1L, 1L, 1L, 0L, 0L, 0L, 0L, "", err)
+    Bench.Record(q, 0L, ns, ns, 1L, 1L, 1L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, "",
+      err)
   }
 
   test("the result line: metric, value, unit, queries, errors and sf; " +
@@ -65,9 +66,35 @@ class BenchSpec extends SparkSpec {
     val JObject(fields) = j: @unchecked
     assert(fields.map(_._1) == Seq("q", "family", "construct_s", "action_s",
       "wall_s", "jobs", "stages", "tasks", "task_s", "cpu_s", "gc_ms",
-      "shuffle_mb", "jvm"), "a successful record carries no err field")
+      "shuffle_mb", "spill_mb", "artifact_builds", "artifact_hits", "jvm"),
+      "a successful record carries no err field")
     assert((j \ "q") == JString("q1_agg") &&
       (j \ "family") == JString("analytics"))
+  }
+
+  test("the record counts artifact builds, then hits on a repeat") {
+    // a private copy of the documents table, so no earlier spec in this
+    // JVM has built the rules artifact for it yet
+    val sfCopy = operators.ExportImport.runScratch("bench-spec-sf")
+    Tables.load(spark, sf, "documents").write
+      .parquet(s"$sfCopy/documents.parquet")
+    val meter = new Bench.Meter
+    val sc = spark.sparkContext
+    sc.addSparkListener(meter)
+    val Seq(first, second) =
+      try Seq.fill(2)(Bench.timeQuery(spark, sfCopy, "bpe_encode_artifact",
+        meter))
+      finally sc.removeSparkListener(meter)
+    assert(first.err.isEmpty && second.err.isEmpty, s"${first.err} ${second.err}")
+    assert(first.artifactBuilds >= 1, first.json)
+    assert(second.artifactBuilds == 0 && second.artifactHits >= 1,
+      second.json)
+  }
+
+  test("a memory pool without a maximum prints its use alone") {
+    assert(Bench.poolUsage("Metaspace", 160000000L, -1L) == "Metaspace=160MB")
+    assert(Bench.poolUsage("CodeHeap 'non-nmethods'", 2400000L, 7000000L) ==
+      "CodeHeap 'non-nmethods'=2/7MB")
   }
 
   test("DumpPlans consumes flag values left to right") {

@@ -37,6 +37,17 @@ class CodegenSpec extends SparkSpec {
     assertCodegen("char_entropy", TextAnalysis.charEntropy(spark, sf))
   }
 
+  test("tokenizer encodes run their per-word kernel inside whole-stage " +
+      "codegen") {
+    Seq("bpe" -> TextAnalysis.bpeEncodeArtifact(spark, sf),
+      "unigram" -> TextAnalysis.unigramEncodeArtifact(spark, sf))
+      .foreach { case (name, df) =>
+        assertCodegen(s"${name}_encode", df)
+        assert(df.queryExecution.executedPlan.toString
+          .contains("token_count"), s"$name encode lost its kernel")
+      }
+  }
+
   test("custom-expression pipelines stay inside whole-stage codegen") {
     assertCodegen("q1_agg", Analytics.q1Agg(spark, sf))
     assertCodegen("dedup_exact", Dedup.dedupExact(spark, sf))

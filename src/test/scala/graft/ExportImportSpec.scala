@@ -101,6 +101,20 @@ class ExportImportSpec extends SparkSpec {
     assert(a == ExportImport.pathSlug("/root/testdata/sf0.01"))
   }
 
+  test("runScratch: a fresh per-run directory, registered for deletion " +
+      "when its JVM exits") {
+    val a = ExportImport.runScratch("spec-run")
+    val b = ExportImport.runScratch("spec-run")
+    assert(a != b, "each run gets its own directory")
+    Seq(a, b).foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.exists(p) && fs.cancelDeleteOnExit(p),
+        s"$d must be registered for deletion at exit")
+      fs.delete(p, true)
+    }
+  }
+
   test("corpus_diff: planted doc mutations land in the right status buckets") {
     import graft.operators.MergeImport
     val rows = MergeImport.corpusDiff(spark, sf).collect()

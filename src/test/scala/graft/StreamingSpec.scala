@@ -1414,7 +1414,7 @@ class StreamingSpec extends SparkSpec {
       r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4))
     val got = spark.table("stream_unigram").collect().map(key).toMap
-    val batch = TextAnalysis.unigramEncodeWithModel(
+    val batch = graft.api.Graft.unigramEncode(
       Tables.load(spark, sf, "documents"), lp).collect().map(key).toMap
     assert(got == batch,
       s"per-doc mismatch: ${got.toSet.diff(batch.toSet).take(3)}")

@@ -657,7 +657,7 @@ class TextAnalysisSpec extends SparkSpec {
     // coverage: every single char survives EM, so ANY [a-z]+ word
     // segments — including one the trainer never saw
     ('a' to 'z').foreach(c => assert(lp.contains(c.toString), s"$c"))
-    val unseen = TextAnalysis.viterbiPieces("zzyzx", lp, 4)
+    val unseen = graft.functions.Unigram.viterbiPieces("zzyzx", lp, 4)
     assert(unseen.mkString == "zzyzx")
     // counts are positive and probs negative; multi-char pieces exist
     m1.foreach { case (p, c, l) => assert(c >= 1 && l < 0, s"$p") }
@@ -665,17 +665,17 @@ class TextAnalysisSpec extends SparkSpec {
       "EM must keep at least one multi-char piece on this corpus")
     // the trained model actually compresses: frequent words segment
     // into fewer pieces than characters
-    val pcs = TextAnalysis.viterbiPieces("thequick", lp, 4)
+    val pcs = graft.functions.Unigram.viterbiPieces("thequick", lp, 4)
     assert(pcs.mkString == "thequick" && pcs.length < 8, pcs.toString)
     // engine DP == trainer Viterbi token count, word for word
     import spark.implicits._
     val docs = wf.zipWithIndex
       .map { case ((w, _), i) => (i.toLong, w) }.toDF("doc_id", "text")
-    val got = TextAnalysis.unigramEncodeWithModel(docs, lp).collect()
+    val got = graft.api.Graft.unigramEncode(docs, lp).collect()
       .map(r => r.getLong(0) -> r.getLong(3)).toMap
     wf.zipWithIndex.foreach { case ((w, _), i) =>
       assert(got(i.toLong) ==
-        TextAnalysis.viterbiPieces(w, lp, 4).length.toLong,
+        graft.functions.Unigram.viterbiPieces(w, lp, 4).length.toLong,
         s"word $w: engine DP disagrees with the trainer's Viterbi")
     }
     // fixture form: bpe-comparable shape, sane metrics, deterministic
@@ -717,7 +717,7 @@ class TextAnalysisSpec extends SparkSpec {
       (2L, "the quick brown fox likes 42 data-sets"))
       .toDF("doc_id", "text")
     val lp = TextAnalysis.unigramTrainFrom(mixed)
-    val uni = TextAnalysis.unigramEncodeWithModel(mixed, lp).collect()
+    val uni = graft.api.Graft.unigramEncode(mixed, lp).collect()
       .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(uni(0) == uni(1),
       "mixed-case doc must encode identically to its lowercased twin")
@@ -756,10 +756,56 @@ class TextAnalysisSpec extends SparkSpec {
       .digest(rows.map(_.toString).mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     val bpe = TextAnalysis.bpeTrain(spark, sf01).collect().toSeq
-    val uni = TextAnalysis.trainUnigram(TextAnalysis.unigramWordFreqs(
+    val uni = TextAnalysis.trainUnigram(TextAnalysis.wordFreqs(
       Tables.load(spark, sf01, "documents"), 2000))
     assert(sha(bpe) == "f64e76238c6077693c21b62c06f65b02b5a22ce0aed10a81c3fe3ad21dec13e4", bpe.mkString(" "))
     assert(sha(uni) == "1b5dc33152f09a83fdd973f67189234ef08535f184960a3d7e8f8ab808a26065", uni.take(10).mkString(" "))
+  }
+
+  /** Runs `body` and returns the Spark jobs it started. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try body
+    finally {
+      org.apache.spark.sql.graftbridge.CatalystBridge.drainListeners(sc)
+      sc.removeSparkListener(l)
+    }
+    n.get
+  }
+
+  test("a unigram model without every single-letter piece is refused, " +
+      "naming the missing letter, before any Spark job") {
+    import spark.implicits._
+    // "cab" segments as ca·b, but "bc" cannot: no piece ends in c
+    val lp = ('a' to 'z').filter(_ != 'c').map(_.toString -> -3000000L)
+      .toMap + ("ca" -> -2000000L)
+    val docs = Seq((1L, "cab ab bc")).toDF("doc_id", "text")
+    var err: IllegalArgumentException = null
+    val jobs = jobsDuring {
+      err = intercept[IllegalArgumentException](
+        graft.api.Graft.unigramEncode(docs, lp).collect())
+    }
+    assert(err.getMessage.endsWith("missing: c"), err.getMessage)
+    assert(jobs == 0, s"$jobs Spark jobs ran before the refusal")
+  }
+
+  test("both tokenizer trainers refuse a word table over 20000 words " +
+      "before any Spark job") {
+    val docs = Tables.load(spark, sf, "documents")
+    val jobs = jobsDuring {
+      intercept[IllegalArgumentException](
+        TextAnalysis.bpeTrainFrom(docs, 5, maxWords = 20001))
+      intercept[IllegalArgumentException](
+        TextAnalysis.unigramTrainFrom(docs, maxWords = 20001))
+    }
+    assert(jobs == 0, s"$jobs Spark jobs ran before the refusal")
   }
 
   test("bpe rules artifact: encode off the artifact equals train-inline") {

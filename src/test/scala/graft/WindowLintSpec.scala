@@ -115,6 +115,19 @@ class WindowLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(offending.isEmpty, s"registries outside ArtifactState: $offending")
   }
 
+  /** A per-run scratch directory that no one deletes piles up on disk
+    * with every call; `ExportImport.runScratch` makes one and registers
+    * it for deletion at exit, so it is the only place a run id is put
+    * into a scratch path. */
+  test("per-run scratch directories come from the one helper") {
+    val pat = """scratch\(\s*s"[^"]*randomUUID""".r
+    val found = sources("operators").map { case (path, text) =>
+      path -> pat.findAllIn(text).size
+    }.filter(_._2 > 0)
+    assert(found == Map("operators/ExportImport.scala" -> 1),
+      s"per-run scratch paths built outside ExportImport.runScratch: $found")
+  }
+
   /** A catch-all (`case _: Throwable`) also swallows interrupts and
     * fatal errors; handlers catch `NonFatal` or a named exception.
     * Verify's is the one exception: it is its failure report, writing
