@@ -5,6 +5,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.CatalystBridge
+import graft.operators.ArtifactState
 import scala.util.Try
 import scala.util.control.NonFatal
 
@@ -224,8 +225,7 @@ object Bench {
                                name: String, meter: Meter): Record = {
     val sc = spark.sparkContext
     val pre = meter.snapshot
-    val (builds0, hits0) =
-      (operators.ArtifactState.builds.get, operators.ArtifactState.hits.get)
+    val (builds0, hits0) = (ArtifactState.builds.get, ArtifactState.hits.get)
     sc.setJobGroup(name, name)
     val t0 = System.nanoTime()
     val (t1, res) =
@@ -250,9 +250,8 @@ object Bench {
     val Seq(jobs, stages, tasks, taskMs, cpuNs, gcMs, shuffle, spill) =
       meter.snapshot.zip(pre).map { case (a, b) => a - b }
     Record(name, t1 - t0, t2 - t1, t2 - t0, jobs, stages, tasks, taskMs,
-      cpuNs, gcMs, shuffle, spill,
-      operators.ArtifactState.builds.get - builds0,
-      operators.ArtifactState.hits.get - hits0, jvmHealth(),
+      cpuNs, gcMs, shuffle, spill, ArtifactState.builds.get - builds0,
+      ArtifactState.hits.get - hits0, jvmHealth(),
       res.failed.toOption.map(_.toString.takeWhile(_ != '\n')))
   }
 

@@ -105,8 +105,8 @@ object Unigram {
 
 /** A word's token count under `tokenizer`, as a native expression: the
   * tokenizer rides into generated code as a reference object, so the
-  * per-word kernel runs inside whole-stage codegen. The higher-order
-  * SQL folds this replaces ran interpreted, outside it. */
+  * per-word kernel runs inside whole-stage codegen, where the same fold
+  * written with higher-order SQL functions would run interpreted. */
 case class TokenCount(child: Expression, tokenizer: Tokenizer)
     extends UnaryExpression {
 

@@ -1440,7 +1440,6 @@ object TextAnalysis {
       }
     }
     merges.toSeq.toDF("step", "left", "right", "pair_freq")
-      .orderBy("step")
   }
 
   /** §2 #122b — BPE ENCODE: apply the [[bpeTrain]]-learned merge rules
@@ -1454,10 +1453,9 @@ object TextAnalysis {
     * single scan with no joins and no shuffle beyond the per-doc
     * aggregate. */
   def bpeEncode(spark: SparkSession, sfDir: String, nMerges: Int = 5,
-                maxWords: Int = 2000): DataFrame = {
-    val docs = Tables.load(spark, sfDir, "documents")
-    bpeEncodeFromRules(docs, bpeTrainFrom(docs, nMerges, maxWords))
-  }
+                maxWords: Int = 2000): DataFrame =
+    bpeEncodeFromRules(Tables.load(spark, sfDir, "documents"),
+      bpeTrain(spark, sfDir, nMerges, maxWords))
 
   /** The map-only corpus encode under any tokenizer: one [[TokenCount]]
     * per `[a-z]+` word, per-doc word/char/token totals and the
@@ -1880,25 +1878,19 @@ object TextAnalysis {
          WHERE regexp_matches(word, '^[a-z]+$$'))"""
   }
 
-  /** The model [[unigramEncode]] trains at the oracle's scale factor,
-    * for the oracles to inline. */
-  private def oracleLp(vocabSize: Int, maxPieceLen: Int, iters: Int,
-                       maxWords: Int): Map[String, Long] = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    sharedUnigramLp(spark, sfDir, vocabSize, maxPieceLen, iters, maxWords)
-  }
-
   /** DuckDB oracle for [[unigramEncode]]: trains the SAME model (the
     * deterministic driver-side trainer — the ivfTrainedOracle stance)
     * and replays the corpus encode exactly via [[unigramEncCte]]. */
   def unigramTrainedOracle(vocabSize: Int = 120, maxPieceLen: Int = 4,
                            iters: Int = 2,
                            maxWords: Int = 2000): String = {
-    val lp = oracleLp(vocabSize, maxPieceLen, iters, maxWords)
+    val spark = SparkSession.getActiveSession.getOrElse(
+      graft.Tables.configure(SparkSession.builder().master("local[2]")
+        .config("spark.ui.enabled", "false")).getOrCreate())
+    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
+      "/root/testdata/sf0.01")
+    val lp = sharedUnigramLp(spark, sfDir, vocabSize, maxPieceLen, iters,
+      maxWords)
     s"""WITH ${unigramEncCte(lp, maxPieceLen, "uenc")}
        SELECT doc_id, count(*) AS n_words,
               CAST(sum(n_chars) AS BIGINT) AS n_chars,
@@ -1954,7 +1946,13 @@ object TextAnalysis {
   def tokenizerFertilityOracle(nMerges: Int = 5, maxWords: Int = 2000,
                                vocabSize: Int = 120, maxPieceLen: Int = 4,
                                iters: Int = 2): String = {
-    val lp = oracleLp(vocabSize, maxPieceLen, iters, maxWords)
+    val spark = SparkSession.getActiveSession.getOrElse(
+      graft.Tables.configure(SparkSession.builder().master("local[2]")
+        .config("spark.ui.enabled", "false")).getOrCreate())
+    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
+      "/root/testdata/sf0.01")
+    val lp = sharedUnigramLp(spark, sfDir, vocabSize, maxPieceLen, iters,
+      maxWords)
     def branch(encName: String, tok: String) =
       s"""SELECT d.lang, '$tok' AS tokenizer,
             count(*) AS n_docs,

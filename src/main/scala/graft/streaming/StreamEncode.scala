@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{TextShingles, Tokenizer, Unigram}
-import graft.operators.TextAnalysis
 
 /** Continuous TOKENIZATION off a tokenizer artifact (the BPE rules,
   * [[graft.operators.TextAnalysis.bpeRulesToDir]], or the unigram
@@ -26,7 +25,7 @@ object StreamEncode {
   /** Encode a (streaming or batch) (doc_id, text) frame off a BPE rules
     * artifact frame. */
   def encoded(docs: DataFrame, rulesDf: DataFrame): DataFrame =
-    encodedWith(docs, TextAnalysis.bpeOf(rulesDf))
+    encodedWith(docs, graft.operators.TextAnalysis.bpeOf(rulesDf))
 
   /** Encode off a unigram model (piece → micro-nat log-prob). */
   def unigramEncoded(docs: DataFrame, lp: Map[String, Long],

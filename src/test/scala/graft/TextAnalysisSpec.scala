@@ -750,7 +750,7 @@ class TextAnalysisSpec extends SparkSpec {
       "and the unigram (piece, cnt, lp) table hash unchanged") {
     // the oracles inline the models the engine trains, so the 250-query
     // gate cannot see a training change; these hashes can
-    val sf01 = "/root/testdata/sf0.01"
+    val sf01 = new java.io.File(sf).getParent + "/sf0.01"
     def sha(rows: Seq[Any]) = java.security.MessageDigest
       .getInstance("SHA-256")
       .digest(rows.map(_.toString).mkString("\n").getBytes("UTF-8"))
