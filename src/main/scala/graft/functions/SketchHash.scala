@@ -53,19 +53,4 @@ object SketchHash {
 
   /** 63-bit mixed sketch hash of a string column: KR fold then mix. */
   def sketchHash(text: Column): Column = mix63(KrHashF.krHash(text))
-
-  /** DuckDB replay of [[mix]] over a BIGINT SQL expression: the wrap
-    * Java gets for free needs HUGEINT width, then `% 2^63` keeps the
-    * same low 63 bits the Scala side masks. */
-  def duckdbMix(hExpr: String): String =
-    s"""CAST((CAST($hExpr AS HUGEINT) * 11400714819323198485)
-           % 9223372036854775808 AS BIGINT)"""
-
-  /** DuckDB replay of [[sketchHash]] over a VARCHAR SQL expression
-    * (KR fold per [[KrHashF.hashUtf8]], then the mix). */
-  def duckdbSketchHash(tExpr: String): String =
-    duckdbMix(
-      s"""list_reduce([CAST(unicode(($tExpr)[i]) AS BIGINT)
-            for i in range(1, CAST(len($tExpr) AS INTEGER) + 1)],
-            (a, c) -> (a * 257 + c) % 18014398509481984)""")
 }

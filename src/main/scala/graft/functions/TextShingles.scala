@@ -28,26 +28,4 @@ object TextShingles {
     val inter = size(array_intersect(a, b))
     inter / (size(a) + size(b) - inter)
   }
-
-  /** DuckDB fragment producing the same doc_id→shingle-set relation
-    * (the oracle side of the contract above). */
-  val duckdbShingleCte: String =
-    """WITH sh AS (
-         SELECT doc_id,
-                list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                               for i in range(1, len(w)-1)]) AS s
-         FROM (SELECT doc_id,
-                      string_split_regex(trim(lower(text)), '\s+') AS w
-               FROM documents))"""
-
-  /** DuckDB all-pairs verified-similarity oracle at threshold `tau`. */
-  def duckdbAllPairsOracle(tau: Double): String =
-    s"""$duckdbShingleCte
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                     / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 4) AS j4
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $tau
-        ORDER BY id_a, id_b"""
 }

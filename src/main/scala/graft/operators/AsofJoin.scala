@@ -36,26 +36,4 @@ object AsofJoin {
         datediff(col("o_orderdate"), col("prev_date")).as("gap_days"))
       .orderBy("o_orderkey")
   }
-
-  /** The DuckDB oracle uses a REAL ASOF JOIN — the engines reach the
-    * same answer through entirely different operators. */
-  val oracle: String =
-    """SELECT o_orderkey,
-        strftime(b.od, '%Y-%m-%d') AS prev_day,
-        CAST(date_diff('day', b.od, a.o_orderdate) AS INTEGER) AS gap_days
-       FROM orders a ASOF LEFT JOIN
-         (SELECT DISTINCT o_custkey AS ck, o_orderdate AS od FROM orders) b
-         ON a.o_custkey = b.ck AND a.o_orderdate > b.od
-       ORDER BY o_orderkey"""
-
-  /** DuckDB oracle for the FORWARD native as-of join — same shape with
-    * the comparator flipped (`lt < rt` picks the nearest later right). */
-  val forwardOracle: String =
-    """SELECT o_orderkey,
-        strftime(b.od, '%Y-%m-%d') AS next_day,
-        CAST(date_diff('day', a.o_orderdate, b.od) AS INTEGER) AS gap_days
-       FROM orders a ASOF LEFT JOIN
-         (SELECT DISTINCT o_custkey AS ck, o_orderdate AS od FROM orders) b
-         ON a.o_custkey = b.ck AND a.o_orderdate < b.od
-       ORDER BY o_orderkey"""
 }

@@ -187,14 +187,6 @@ object ExportImport {
       .orderBy("o_orderstatus")
   }
 
-  val fixedWidthRoundtripOracle: String =
-    """SELECT o_orderstatus, count(*) AS n,
-         CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT)
-           AS sum_price_c,
-         min(o_orderkey) AS min_key, max(o_orderkey) AS max_key,
-         CAST(0 AS BIGINT) AS n_badlen
-       FROM orders GROUP BY 1 ORDER BY 1"""
-
   /** §2 #94 — ORC round-trip: the columnar exchange format alternative
     * to parquet (Spark-native ORC source/sink — type-preserving, so no
     * corrupt-record channel is needed). Write lineitem columns to ORC,

@@ -86,44 +86,4 @@ object Graph {
         .select(col("src"), col("dst")),
       d, iters)
       .select(col("id").as("vec_id"), col("pr"))
-
-  /** DuckDB oracle for [[pagerank]]: the knn_graph edge CTE plus
-    * `iters` unrolled iterations of the identical decimal-summed
-    * arithmetic. `normCte` / `dotSql` are the shared vector helpers
-    * from the ANN oracle family. */
-  def pagerankOracle(normCte: String, dotSql: (String, String) => String,
-                     k: Int = 5, d: Double = 0.85, iters: Int = 5): String = {
-    val base =
-      s"""$normCte,
-          e AS (SELECT query_id AS src, neighbor_id AS dst FROM (
-            SELECT query_id, neighbor_id,
-              CAST(row_number() OVER (PARTITION BY query_id
-                ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rnk
-            FROM (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                    ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
-                  FROM n q JOIN n c ON c.vec_id <> q.vec_id))
-          WHERE rnk <= $k),
-          deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
-          nodes AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
-          nn AS (SELECT count(*) AS n FROM nodes),
-          pr0 AS (SELECT id, CAST(1 AS DOUBLE) / n AS pr
-                  FROM nodes CROSS JOIN nn)"""
-    val its = (1 to iters).map { i =>
-      s"""it$i AS (SELECT nodes.id,
-            round((CAST(1 AS DOUBLE) - CAST($d AS DOUBLE)) / nn.n
-              + CAST($d AS DOUBLE)
-                * CAST(coalesce(s.sc, 0) AS DOUBLE), 10) AS pr
-          FROM nodes CROSS JOIN nn
-          LEFT JOIN (SELECT e.dst AS id,
-                       sum(CAST(round(round(p.pr, 10) / deg.deg, 12)
-                         AS DECIMAL(28,12))) AS sc
-                     FROM e JOIN deg USING (src)
-                     JOIN ${if (i == 1) "pr0" else s"it${i - 1}"} p
-                       ON p.id = e.src
-                     GROUP BY 1) s ON s.id = nodes.id)"""
-    }.mkString(",\n          ")
-    s"""$base,
-          $its
-         SELECT id AS vec_id, pr FROM it$iters ORDER BY vec_id"""
-  }
 }

@@ -24,14 +24,4 @@ object JsonOps {
         sum("k_val").cast("long").as("sum_k"),
         min("k_val").as("min_k"), max("k_val").as("max_k"))
       .orderBy("event_type")
-
-  val oracle: String =
-    """SELECT event_type, count(*) AS n,
-        count(k_val) AS n_with_k,
-        CAST(sum(k_val) AS BIGINT) AS sum_k,
-        min(k_val) AS min_k, max(k_val) AS max_k
-       FROM (SELECT event_type,
-               CAST(json_extract_string(props, '$.k') AS INTEGER) AS k_val
-             FROM events)
-       GROUP BY 1 ORDER BY 1"""
 }

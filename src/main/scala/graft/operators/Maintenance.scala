@@ -94,17 +94,6 @@ object Maintenance {
       .orderBy("col_name")
   }
 
-  val schemaEvolutionOracle: String =
-    """SELECT channel, count(*) AS n,
-        CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT)
-          AS sum_price_c
-       FROM (SELECT o_totalprice,
-               CASE WHEN o_orderkey % 2 = 0 THEN 'unknown'
-                    WHEN o_orderkey % 3 = 0 THEN 'web'
-                    ELSE 'store' END AS channel
-             FROM orders)
-       GROUP BY 1 ORDER BY 1"""
-
   /** Bit-interleave term for a Morton (Z-order) value over two
     * `bits`-bit coordinates, rendered for either engine's integer
     * division operator. Pure 64-bit arithmetic — identical results in
@@ -162,32 +151,5 @@ object Maintenance {
     summarize(expr(s"z div ${(1L << (2 * bits)) / nFiles}"), "zorder")
       .unionByName(summarize(expr(s"x div ${n / nFiles}"), "linear"))
       .orderBy("layout")
-  }
-
-  /** DuckDB oracle for [[zorderLayout]]. */
-  def zorderLayoutOracle(bits: Int = 8, nFiles: Int = 64): String = {
-    val n = 1L << bits
-    def leg(fileExpr: String, name: String) =
-      s"""SELECT '$name' AS layout, count(*) AS n_files,
-            CAST(sum(c) AS BIGINT) AS n_rows,
-            round(avg(xs), 4) AS avg_x_span,
-            round(avg(ys), 4) AS avg_y_span,
-            round(avg(xs * ys), 4) AS avg_box
-          FROM (SELECT $fileExpr AS f, count(*) AS c,
-                  max(x) - min(x) + 1 AS xs, max(y) - min(y) + 1 AS ys
-                FROM z GROUP BY 1)"""
-    s"""WITH b AS (SELECT o_custkey AS xr,
-              epoch_us(o_orderdate) // 86400000000 AS yr FROM orders),
-        mm AS (SELECT min(xr) AS minx, max(xr) AS maxx,
-                      min(yr) AS miny, max(yr) AS maxy FROM b),
-        s AS (SELECT (xr - minx) * $n // (maxx - minx + 1) AS x,
-                     (yr - miny) * $n // (maxy - miny + 1) AS y
-              FROM b, mm),
-        z AS (SELECT x, y, ${mortonTerms(bits, "//")} AS z FROM s)
-       SELECT * FROM (
-         ${leg(s"z // ${(1L << (2 * bits)) / nFiles}", "zorder")}
-         UNION ALL
-         ${leg(s"x // ${n / nFiles}", "linear")})
-       ORDER BY layout"""
   }
 }

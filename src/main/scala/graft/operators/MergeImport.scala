@@ -90,15 +90,6 @@ object MergeImport {
       .orderBy("o_orderkey")
   }
 
-  val oracle: String =
-    """SELECT o_orderkey,
-        CASE WHEN o_orderkey % 10 = 0 THEN 'U' ELSE o_orderstatus END
-          AS o_orderstatus,
-        CAST(round(CASE WHEN o_orderkey % 10 = 0
-                        THEN o_totalprice + 1000.0
-                        ELSE o_totalprice END * 100) AS BIGINT) AS price_cents
-       FROM orders ORDER BY o_orderkey"""
-
   /** One table's outcome from an ordered package apply: the merged
     * frame plus the incoming rows the FK gate rejected (both lazy —
     * the caller decides what to aggregate/materialize). */
@@ -210,19 +201,6 @@ object MergeImport {
     }.reduce(_.unionAll(_)).orderBy("proc_order")
   }
 
-  val packageApplyOracle: String =
-    """SELECT * FROM (
-         SELECT 'customer' AS tab, 1 AS proc_order, count(*) AS n_rows,
-                count(CASE WHEN c_custkey % 7 = 0 THEN 1 END) AS n_changed,
-                CAST(0 AS BIGINT) AS n_rejected
-         FROM customer
-         UNION ALL
-         SELECT 'orders' AS tab, 2 AS proc_order, count(*) AS n_rows,
-                count(CASE WHEN o_orderkey % 10 = 0 THEN 1 END) AS n_changed,
-                CAST(0 AS BIGINT) AS n_rejected
-         FROM orders)
-       ORDER BY proc_order"""
-
   /** Generic snapshot diff: rows added/removed/changed between two
     * keyed snapshots — one co-partitioned full-outer join (the canonical
     * CDC shape: a single sort-merge exchange on the key at any scale). */
@@ -260,25 +238,6 @@ object MergeImport {
       .orderBy("o_orderkey", "change_type")
   }
 
-  val diffOracle: String =
-    """WITH src AS (SELECT o_orderkey AS k,
-             CAST(round(o_totalprice*100) AS BIGINT) AS price_c FROM orders),
-       new_snap AS (
-         SELECT k, CASE WHEN k % 113 = 0 THEN price_c + 11
-                        ELSE price_c END AS price_c
-         FROM src WHERE k % 127 <> 0
-         UNION ALL
-         SELECT k + 100000000, price_c FROM src WHERE k % 131 = 0)
-       SELECT * FROM (
-         SELECT coalesce(o.k, n.k) AS o_orderkey,
-           CASE WHEN o.k IS NULL THEN 'added'
-                WHEN n.k IS NULL THEN 'removed'
-                WHEN o.price_c <> n.price_c THEN 'changed'
-                ELSE 'same' END AS change_type,
-           o.price_c AS old_price_c, n.price_c AS new_price_c
-         FROM src o FULL OUTER JOIN new_snap n ON o.k = n.k)
-       WHERE change_type <> 'same' ORDER BY o_orderkey, change_type"""
-
   /** Generic core: SCD TYPE-2 interval build over ANY
     * (user_id, event_id, t, status) change stream — collapse
     * consecutive equal statuses and emit versioned validity intervals
@@ -314,25 +273,6 @@ object MergeImport {
     scd2IntervalsFrom(Tables.load(spark, sfDir, "events")
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("t"), col("event_type").as("status")))
-
-  /** DuckDB oracle for [[scd2Intervals]]. */
-  val scd2Oracle: String =
-    """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS t,
-            event_type AS status FROM events),
-        c AS (SELECT *,
-                lag(status) OVER (PARTITION BY user_id
-                                  ORDER BY t, event_id) AS prev
-              FROM e),
-        ch AS (SELECT * FROM c
-               WHERE prev IS NULL OR prev <> status)
-       SELECT user_id,
-              CAST(row_number() OVER w AS INTEGER) AS version,
-              status, t AS valid_from_us,
-              lead(t) OVER w AS valid_to_us,
-              lead(t) OVER w IS NULL AS is_current
-       FROM ch
-       WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id)
-       ORDER BY user_id, version"""
 
   /** Generic core: CORPUS VERSION DIFF over two (doc_id, source, text)
     * frames — per (source, status ∈ added|removed|changed|unchanged)
@@ -380,28 +320,4 @@ object MergeImport {
           col("text")))
     corpusDiffFrom(v1, v2)
   }
-
-  val corpusDiffOracle: String =
-    """WITH v1 AS (SELECT doc_id, source, text FROM documents),
-        v2 AS (SELECT doc_id, source,
-                 CASE WHEN doc_id % 17 = 0 THEN text || ' v2'
-                      ELSE text END AS text
-               FROM v1 WHERE doc_id % 13 <> 0
-               UNION ALL
-               SELECT -(doc_id + 1), source, text
-               FROM v1 WHERE doc_id % 19 = 0),
-        a AS (SELECT doc_id, source AS s1, sha256(text) AS f1,
-                CAST(len(text) AS BIGINT) AS c1 FROM v1),
-        b AS (SELECT doc_id, source AS s2, sha256(text) AS f2,
-                CAST(len(text) AS BIGINT) AS c2 FROM v2),
-        j AS (SELECT coalesce(s1, s2) AS source,
-                CASE WHEN f1 IS NULL THEN 'added'
-                     WHEN f2 IS NULL THEN 'removed'
-                     WHEN f1 <> f2 THEN 'changed'
-                     ELSE 'unchanged' END AS status,
-                coalesce(c2, c1) AS chars
-              FROM a FULL OUTER JOIN b USING (doc_id))
-       SELECT source, status, count(*) AS n_docs,
-         CAST(sum(chars) AS BIGINT) AS n_chars
-       FROM j GROUP BY 1, 2 ORDER BY 1, 2"""
 }

@@ -64,14 +64,4 @@ object PackageFilter {
       .select(col("o_orderkey"), col("o_orderstatus"),
         cents(col("o_totalprice")).as("price_cents"), col("o_orderpriority"))
       .orderBy("o_orderkey")
-
-  val oracle: String =
-    s"""SELECT o_orderkey, o_orderstatus,
-        CAST(round(o_totalprice*100) AS BIGINT) AS price_cents,
-        o_orderpriority
-        FROM orders
-        WHERE (o_orderstatus = 'F' OR o_orderstatus = 'O')
-          AND o_totalprice >= 10000 AND o_totalprice <= 400000
-          AND o_orderpriority <> '3-LOW'
-        ORDER BY o_orderkey"""
 }

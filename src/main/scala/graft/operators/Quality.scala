@@ -63,13 +63,6 @@ object Quality {
       pmod(a1 * KnuthA, lit(65536L)) * 65536L, lit(Mod32))
   }
 
-  /** DuckDB twin of [[knuth32]] (same split-multiply, same values). */
-  def knuthSql(key: String): String = {
-    val a = s"(($key) % 4294967296)"
-    s"((($a % 65536) * 2654435761) % 4294967296 + " +
-      s"((($a // 65536) * 2654435761) % 65536) * 65536) % 4294967296"
-  }
-
   /** Generic core: predicate keeping ~pct% of rows, membership a pure
     * function of the integer key column — map-only, pushdown-eligible,
     * engine-independent. */
@@ -295,29 +288,6 @@ object Quality {
       .orderBy("event_type")
   }
 
-  /** DuckDB oracle for [[outlierFences]] (quantile_disc ==
-    * percentile_disc, proven by pctile_value). */
-  val outlierOracle: String =
-    """WITH ev AS (SELECT event_type,
-           CAST(round(value*100) AS BIGINT) AS v_c FROM events),
-        f AS (SELECT event_type,
-           CAST(quantile_disc(v_c, 0.25) AS BIGINT) AS q1_c,
-           CAST(quantile_disc(v_c, 0.75) AS BIGINT) AS q3_c
-         FROM ev GROUP BY 1)
-       SELECT ev.event_type, count(*) AS n,
-         min(q1_c) AS q1_c, min(q3_c) AS q3_c,
-         CAST(sum(CASE WHEN v_c*2 < q1_c*2 - (q3_c-q1_c)*3
-                    OR v_c*2 > q3_c*2 + (q3_c-q1_c)*3
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-         min(CASE WHEN v_c*2 < q1_c*2 - (q3_c-q1_c)*3
-                    OR v_c*2 > q3_c*2 + (q3_c-q1_c)*3
-                  THEN v_c END) AS min_out_c,
-         max(CASE WHEN v_c*2 < q1_c*2 - (q3_c-q1_c)*3
-                    OR v_c*2 > q3_c*2 + (q3_c-q1_c)*3
-                  THEN v_c END) AS max_out_c
-       FROM ev JOIN f ON ev.event_type = f.event_type
-       GROUP BY 1 ORDER BY 1"""
-
   /** Generic core: ORDER-INDEPENDENT per-group integrity checksum — the
     * cheap cross-engine equality certificate a migration runs on source
     * and target (reference: the import-validation surface, 60000:283's
@@ -353,23 +323,6 @@ object Quality {
     integrityChecksumFrom(Tables.load(spark, sfDir, "orders"),
       rowText, col("o_orderstatus"))
   }
-
-  /** DuckDB oracle for [[integrityChecksum]]: same canonical text, same
-    * KR fold (the bloom_decontaminate-proven replay), same decimal sum. */
-  val integrityOracle: String =
-    """WITH t AS (SELECT o_orderstatus AS grp,
-           o_orderkey || '|' || o_custkey || '|' || o_orderstatus || '|' ||
-           CAST(round(o_totalprice*100) AS BIGINT) || '|' ||
-           strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') || '|' ||
-           o_orderpriority AS s
-         FROM orders)
-       SELECT grp, count(*) AS n_rows,
-         CAST(sum(CAST(list_reduce(
-           [CAST(unicode(s[i]) AS BIGINT)
-            for i in range(1, CAST(length(s) AS INTEGER) + 1)],
-           (a, c) -> (a * 257 + c) % 18014398509481984) AS HUGEINT))
-           % 2305843009213693951 AS BIGINT) AS checksum
-       FROM t GROUP BY grp ORDER BY grp"""
 
   /** §2 #118 — JOIN-SKEW diagnostics for a key column: the numbers
     * that decide whether a join/aggregation on this key needs salting
@@ -414,55 +367,6 @@ object Quality {
   def joinSkewReport(spark: SparkSession, sfDir: String): DataFrame =
     joinSkewReportFrom(Tables.load(spark, sfDir, "events"), "user_id")
 
-  /** DuckDB oracle for [[joinSkewReport]] (quantile_cont = Spark's
-    * interpolating percentile; explicit DOUBLE casts because DuckDB's
-    * `/` on integers is integer division). */
-  val joinSkewOracle: String =
-    """WITH c AS (SELECT user_id AS key, count(*) AS cnt
-                  FROM events GROUP BY 1),
-        a AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_rows,
-                     count(*) AS n_keys,
-                     quantile_cont(cnt, 0.5) AS p50,
-                     quantile_cont(cnt, 0.99) AS p99,
-                     max(cnt) AS max_rows
-              FROM c),
-        t AS (SELECT key AS top_key, cnt AS top_cnt
-              FROM c ORDER BY cnt DESC, key LIMIT 1)
-       SELECT n_rows, n_keys,
-         round(n_rows / CAST(n_keys AS DOUBLE), 4) AS avg_rows,
-         round(p50, 4) AS p50_rows,
-         round(p99, 4) AS p99_rows,
-         max_rows,
-         round(max_rows / (n_rows / CAST(n_keys AS DOUBLE)), 4)
-           AS skew_factor,
-         top_key,
-         round(top_cnt / CAST(n_rows AS DOUBLE), 4) AS top_share
-       FROM a, t"""
-
-  /** Oracle twin of [[profileTable]] (UNION ALL, one leg per column). */
-  val profileOracle: String = {
-    def leg(c: String, mn: String, mx: String) =
-      s"""SELECT '$c' AS col_name, count(*) AS n_rows,
-          count(CASE WHEN $c IS NULL THEN 1 END) AS n_nulls,
-          count(DISTINCT $c) AS n_distinct,
-          $mn AS min_txt, $mx AS max_txt FROM orders"""
-    val legs = Seq(
-      leg("o_orderkey", "CAST(min(o_orderkey) AS VARCHAR)",
-        "CAST(max(o_orderkey) AS VARCHAR)"),
-      leg("o_custkey", "CAST(min(o_custkey) AS VARCHAR)",
-        "CAST(max(o_custkey) AS VARCHAR)"),
-      leg("o_orderstatus", "CAST(min(o_orderstatus) AS VARCHAR)",
-        "CAST(max(o_orderstatus) AS VARCHAR)"),
-      leg("o_totalprice",
-        "CAST(CAST(round(min(o_totalprice)*100) AS BIGINT) AS VARCHAR)",
-        "CAST(CAST(round(max(o_totalprice)*100) AS BIGINT) AS VARCHAR)"),
-      leg("o_orderdate", "strftime(min(o_orderdate), '%Y-%m-%d %H:%M:%S')",
-        "strftime(max(o_orderdate), '%Y-%m-%d %H:%M:%S')"),
-      leg("o_orderpriority", "CAST(min(o_orderpriority) AS VARCHAR)",
-        "CAST(max(o_orderpriority) AS VARCHAR)"))
-    legs.mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY col_name")
-  }
-
   /** Generic core of [[kAnonymity]]: group sizes over the
     * quasi-identifier columns, summarized into one audit row. */
   def kAnonymityFrom(df: DataFrame, quasi: Seq[Column], k: Int): DataFrame =
@@ -496,22 +400,6 @@ object Quality {
       Seq(col("c_nationkey"), col("c_mktsegment"),
         floor(col("c_acctbal") / 1000d).as("bal_bucket")), k)
 
-  /** DuckDB oracle for [[kAnonymity]]. */
-  def kAnonymityOracle(k: Int = 5): String =
-    s"""WITH g AS (SELECT c_nationkey, c_mktsegment,
-                  floor(c_acctbal / 1000) AS bal_bucket, count(*) AS cnt
-           FROM customer GROUP BY 1, 2, 3)
-       SELECT $k AS k, CAST(sum(cnt) AS BIGINT) AS n_rows,
-         count(*) AS n_groups,
-         CAST(sum(CASE WHEN cnt < $k THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_risky_groups,
-         CAST(sum(CASE WHEN cnt < $k THEN cnt ELSE 0 END) AS BIGINT)
-           AS n_risky_rows,
-         round(sum(CASE WHEN cnt < $k THEN cnt ELSE 0 END)
-               / CAST(sum(cnt) AS DOUBLE), 4) AS risk_pct,
-         min(cnt) AS min_group, max(cnt) AS max_group
-       FROM g"""
-
   /** §2 #188 — BENFORD'S-LAW digit audit of order totals — the classic
     * fabricated-amounts screen (Nigrini 1996): organically-grown
     * magnitudes follow P(d) = log10(1 + 1/d); invented ones don't.
@@ -536,21 +424,6 @@ object Quality {
       .withColumn("flag_digit", col("dev4") > 0.02)
       .orderBy("digit")
   }
-
-  val benfordCheckOracle: String =
-    """WITH d AS (SELECT CAST(substr(CAST(CAST(round(o_totalprice*100)
-               AS BIGINT) AS VARCHAR), 1, 1) AS INTEGER) AS digit
-           FROM orders),
-        g AS (SELECT digit, count(*) AS n FROM d WHERE digit >= 1
-              GROUP BY 1)
-       SELECT digit, n,
-         round(n / CAST(sum(n) OVER () AS DOUBLE), 4) AS freq4,
-         round(log10(1 + 1.0 / digit), 4) AS benford4,
-         round(abs(round(n / CAST(sum(n) OVER () AS DOUBLE), 4)
-               - round(log10(1 + 1.0 / digit), 4)), 4) AS dev4,
-         round(abs(round(n / CAST(sum(n) OVER () AS DOUBLE), 4)
-               - round(log10(1 + 1.0 / digit), 4)), 4) > 0.02 AS flag_digit
-       FROM g ORDER BY digit"""
 
   /** Generic core of [[lDiversity]]: distinct-sensitive-value counts
     * per quasi-identifier group, summarized into one audit row. The
@@ -591,26 +464,6 @@ object Quality {
     lDiversityFrom(Tables.load(spark, sfDir, "customer"),
       Seq(col("c_nationkey"), col("c_mktsegment")),
       floor(col("c_acctbal") / 1000d), l)
-
-  /** DuckDB oracle for [[lDiversity]]. */
-  def lDiversityOracle(l: Int = 3): String =
-    s"""WITH gs AS (SELECT c_nationkey, c_mktsegment,
-                      floor(c_acctbal / 1000) AS s, count(*) AS cnt
-                    FROM customer GROUP BY 1, 2, 3),
-        g AS (SELECT c_nationkey, c_mktsegment,
-                count(*) AS n_sensitive, sum(cnt) AS cnt
-              FROM gs GROUP BY 1, 2)
-       SELECT $l AS l, CAST(sum(cnt) AS BIGINT) AS n_rows,
-         count(*) AS n_groups,
-         CAST(sum(CASE WHEN n_sensitive < $l THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_risky_groups,
-         CAST(sum(CASE WHEN n_sensitive < $l THEN cnt ELSE 0 END) AS BIGINT)
-           AS n_risky_rows,
-         round(sum(CASE WHEN n_sensitive < $l THEN cnt ELSE 0 END)
-               / CAST(sum(cnt) AS DOUBLE), 4) AS risk_pct,
-         min(n_sensitive) AS min_diversity,
-         max(n_sensitive) AS max_diversity
-       FROM g"""
 
   /** Generic core of [[tCloseness]]: per-QI-class total-variation
     * distance between the class's sensitive-value distribution and the
@@ -675,37 +528,6 @@ object Quality {
       Seq(col("c_nationkey"), col("c_mktsegment")),
       floor(col("c_acctbal") / 1000d), t)
 
-  /** DuckDB oracle for [[tCloseness]]: same observed-cell algebra,
-    * 8-dp decimal terms, 4-dp class distance. */
-  def tClosenessOracle(t: Double = 0.2): String =
-    s"""WITH cells AS (SELECT c_nationkey AS q0, c_mktsegment AS q1,
-                         floor(c_acctbal / 1000) AS s, count(*) AS cnt
-                       FROM customer GROUP BY 1, 2, 3),
-        cls AS (SELECT q0, q1, sum(cnt) AS n_c FROM cells GROUP BY 1, 2),
-        gdist AS (SELECT s, sum(cnt) AS g_s FROM cells GROUP BY 1),
-        tot AS (SELECT sum(cnt) AS n FROM cells),
-        tv AS (SELECT c.q0, c.q1, max(cl.n_c) AS n_c,
-                 round((1.0 + CAST(sum(CAST(round(
-                     abs(c.cnt / CAST(cl.n_c AS DOUBLE)
-                         - g.g_s / CAST(tot.n AS DOUBLE))
-                     - g.g_s / CAST(tot.n AS DOUBLE), 8)
-                   AS DECIMAL(18, 8))) AS DOUBLE)) / 2.0, 4) AS tv4
-               FROM cells c
-               JOIN cls cl ON cl.q0 = c.q0 AND cl.q1 = c.q1
-               JOIN gdist g ON g.s = c.s, tot
-               GROUP BY c.q0, c.q1)
-       SELECT CAST($t AS DOUBLE) AS t,
-         CAST(sum(n_c) AS BIGINT) AS n_rows,
-         count(*) AS n_groups,
-         CAST(sum(CASE WHEN tv4 > $t THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_risky_groups,
-         CAST(sum(CASE WHEN tv4 > $t THEN n_c ELSE 0 END) AS BIGINT)
-           AS n_risky_rows,
-         round(sum(CASE WHEN tv4 > $t THEN n_c ELSE 0 END)
-               / CAST(sum(n_c) AS DOUBLE), 4) AS risk_pct,
-         min(tv4) AS min_tv4, max(tv4) AS max_tv4
-       FROM tv"""
-
   /** §2 #138 — PARENT/CHILD TOTALS RECONCILIATION: order headers vs
     * the sum of their lines (extended price net of discount, plus
     * tax), bucketed by integer-basis-point relative error — the
@@ -754,30 +576,6 @@ object Quality {
       .crossJoin(broadcast(
         orphans.agg(count(lit(1)).as("n_orphan_line_keys"))))
   }
-
-  /** DuckDB oracle for [[totalsReconcile]]. */
-  val totalsReconcileOracle: String =
-    """WITH l AS (SELECT l_orderkey,
-              CAST(sum(CAST(round(l_extendedprice * (1 - l_discount)
-                    * (1 + l_tax) * 100) AS BIGINT)) AS BIGINT) AS lc
-            FROM lineitem GROUP BY 1),
-        j AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS oc, lc
-              FROM orders LEFT JOIN l ON l_orderkey = o_orderkey),
-        orph AS (SELECT count(*) AS n_orphan_line_keys FROM l
-                 WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders))
-       SELECT count(*) AS n_orders,
-         CAST(sum(CASE WHEN lc IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_no_lines,
-         CAST(sum(CASE WHEN lc = oc THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_exact,
-         CAST(sum(CASE WHEN abs(lc - oc) * 10000 <= oc * 100
-           THEN 1 ELSE 0 END) AS BIGINT) AS n_within_1pct,
-         CAST(sum(CASE WHEN abs(lc - oc) * 10000 <= oc * 1000
-           THEN 1 ELSE 0 END) AS BIGINT) AS n_within_10pct,
-         round(quantile_cont(abs(lc - oc) * 10000 // oc, 0.5), 4)
-           AS p50_err_bp,
-         (SELECT n_orphan_line_keys FROM orph) AS n_orphan_line_keys
-       FROM j"""
 
   /** §2 #133 — CORPUS CONCENTRATION report: Gini coefficient and
     * top-1%/top-10% character share of the document length
@@ -834,37 +632,10 @@ object Quality {
     corpusConcentrationFrom(Tables.load(spark, sfDir, "documents"),
       col("n_chars"))
 
-  /** DuckDB oracle for [[corpusConcentration]] — same histogram
-    * regrouping, same int64 arithmetic, same final divisions. */
-  val corpusConcentrationOracle: String =
-    """WITH hist AS (SELECT n_chars AS v, count(*) AS c
-                     FROM documents GROUP BY 1),
-        tot AS (SELECT CAST(sum(c) AS BIGINT) AS n,
-                       CAST(sum(v * c) AS BIGINT) AS t_chars FROM hist),
-        w AS (SELECT v, c,
-                coalesce(sum(c) OVER (ORDER BY v ASC
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  AS s_lt,
-                sum(c) OVER (ORDER BY v DESC
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cc
-              FROM hist),
-        k AS (SELECT n, t_chars,
-                greatest(n // 100, 1) AS k1, greatest(n // 10, 1) AS k10
-              FROM tot)
-       SELECT max(n) AS n_docs, max(t_chars) AS total_chars,
-         round(2.0 * sum(v * (c * s_lt + c * (c + 1) // 2))
-                 / (max(n) * max(t_chars))
-               - (max(n) + 1) / CAST(max(n) AS DOUBLE), 6) AS gini6,
-         round(sum(v * (least(cc, k1) - least(cc - c, k1)))
-               / CAST(max(t_chars) AS DOUBLE), 6) AS top1_share,
-         round(sum(v * (least(cc, k10) - least(cc - c, k10)))
-               / CAST(max(t_chars) AS DOUBLE), 6) AS top10_share
-       FROM w, k"""
-
   /** The lineitem metric columns [[corrMatrix]] profiles, in the
     * lexicographic order that defines the output's (col_x, col_y)
     * pairing. */
-  private val corrCols =
+  private[graft] val corrCols =
     Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax")
 
   /** §2 #212 — PEARSON CORRELATION MATRIX over the fact table's metric
@@ -923,35 +694,5 @@ object Quality {
       .select(col("p.col_x").as("col_x"), col("p.col_y").as("col_y"),
         col("p.n").as("n"), col("p.corr6").as("corr6"))
       .orderBy("col_x", "col_y")
-  }
-
-  /** DuckDB oracle for [[corrMatrix]]: the same cents quantization,
-    * exact-integer sufficient statistics, and closed-form correlation
-    * — deliberately NOT DuckDB's corr() (whose streaming update order
-    * is not part of any cross-engine contract). */
-  def corrMatrixOracle(): String = {
-    def d(e: String) = s"CAST(sum($e) AS DOUBLE)"
-    val pairs = for {
-      i <- corrCols.indices; j <- corrCols.indices if i < j
-    } yield (corrCols(i), corrCols(j))
-    val sums =
-      (corrCols.map(c => s"${d(s"q_$c")} AS s_$c") ++
-        corrCols.map(c => s"${d(s"q_$c * q_$c")} AS ss_$c") ++
-        pairs.map { case (a, b) => s"${d(s"q_$a * q_$b")} AS sp_${a}_$b" })
-        .mkString(",\n              ")
-    val rows = pairs.map { case (a, b) =>
-      s"""SELECT '$a' AS col_x, '$b' AS col_y, n,
-            round((n * sp_${a}_$b - s_$a * s_$b)
-              / sqrt((n * ss_$a - s_$a * s_$a)
-                * (n * ss_$b - s_$b * s_$b)), 6) AS corr6 FROM s"""
-    }.mkString("\n        UNION ALL\n        ")
-    val quant = corrCols
-      .map(c => s"CAST(floor($c * 100 + 0.5) AS BIGINT) AS q_$c")
-      .mkString(",\n              ")
-    s"""WITH qv AS (SELECT $quant FROM lineitem),
-        s AS (SELECT CAST(count(*) AS BIGINT) AS n,
-              $sums
-            FROM qv)
-       SELECT * FROM ($rows) ORDER BY col_x, col_y"""
   }
 }

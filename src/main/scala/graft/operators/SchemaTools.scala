@@ -50,56 +50,6 @@ object SchemaTools {
         .groupBy("tab", "n_cols").agg(count(lit(1)).as("n_rows"))
     }.reduce(_.unionAll(_)).select("tab", "n_rows", "n_cols").orderBy("tab")
 
-  /** The asserted expectation for schemaGen's oracle: hand-maintained,
-    * so the oracle is independent of the code that derives the answer. */
-  val expectedSchema: Seq[(String, String, String)] = Seq(
-    ("region", "r_regionkey", "xsd:integer"), ("region", "r_name", "xsd:string"),
-    ("nation", "n_nationkey", "xsd:integer"), ("nation", "n_name", "xsd:string"),
-    ("nation", "n_regionkey", "xsd:integer"),
-    ("customer", "c_custkey", "xsd:integer"), ("customer", "c_name", "xsd:string"),
-    ("customer", "c_nationkey", "xsd:integer"),
-    ("customer", "c_acctbal", "xsd:double"),
-    ("customer", "c_mktsegment", "xsd:string"),
-    ("supplier", "s_suppkey", "xsd:integer"), ("supplier", "s_name", "xsd:string"),
-    ("supplier", "s_nationkey", "xsd:integer"),
-    ("supplier", "s_acctbal", "xsd:double"),
-    ("part", "p_partkey", "xsd:integer"), ("part", "p_name", "xsd:string"),
-    ("part", "p_brand", "xsd:string"), ("part", "p_type", "xsd:string"),
-    ("part", "p_size", "xsd:integer"), ("part", "p_retailprice", "xsd:double"),
-    ("orders", "o_orderkey", "xsd:integer"), ("orders", "o_custkey", "xsd:integer"),
-    ("orders", "o_orderstatus", "xsd:string"),
-    ("orders", "o_totalprice", "xsd:double"),
-    ("orders", "o_orderdate", "xsd:dateTime"),
-    ("orders", "o_orderpriority", "xsd:string"),
-    ("lineitem", "l_orderkey", "xsd:integer"),
-    ("lineitem", "l_partkey", "xsd:integer"),
-    ("lineitem", "l_suppkey", "xsd:integer"),
-    ("lineitem", "l_linenumber", "xsd:integer"),
-    ("lineitem", "l_quantity", "xsd:double"),
-    ("lineitem", "l_extendedprice", "xsd:double"),
-    ("lineitem", "l_discount", "xsd:double"),
-    ("lineitem", "l_tax", "xsd:double"),
-    ("lineitem", "l_returnflag", "xsd:string"),
-    ("lineitem", "l_linestatus", "xsd:string"),
-    ("lineitem", "l_shipdate", "xsd:dateTime"),
-    ("events", "event_id", "xsd:integer"), ("events", "ts", "xsd:dateTime"),
-    ("events", "user_id", "xsd:integer"), ("events", "event_type", "xsd:string"),
-    ("events", "value", "xsd:double"), ("events", "props", "xsd:string"),
-    ("documents", "doc_id", "xsd:integer"), ("documents", "text", "xsd:string"),
-    ("documents", "lang", "xsd:string"), ("documents", "source", "xsd:string"),
-    ("documents", "n_chars", "xsd:integer"),
-    ("embeddings", "vec_id", "xsd:integer"),
-    ("embeddings", "embedding", "xsd:string"),
-    ("embeddings", "label", "xsd:integer"))
-
-  def schemaGenOracle: String =
-    expectedSchema
-      .map { case (t, c, x) => s"('$t','$c','$x')" }
-      .mkString(
-        "SELECT tab, col_name, xsd_type FROM (VALUES ",
-        ", ",
-        ") AS t(tab, col_name, xsd_type) ORDER BY tab, col_name")
-
   /** Tables exported by the schema-only template (fixed, so the oracle
     * literal below can be hand-maintained). */
   val templateTables: Seq[String] = Seq("customer", "orders")
@@ -209,29 +159,6 @@ object SchemaTools {
       .toDF("pos", "element", "xsd_type")
       .orderBy("pos")
   }
-
-  def xsdExportOracle: String =
-    xmlOrdersElements.zipWithIndex
-      .map { case ((n, t), i) => s"(${i + 1},'$n','$t')" }
-      .mkString("SELECT pos, element, xsd_type FROM (VALUES ", ", ",
-        ") AS t(pos, element, xsd_type) ORDER BY pos")
-
-  def templateExportOracle: String = {
-    val rows = templateTables.flatMap { t =>
-      expectedSchema.filter(_._1 == t).zipWithIndex.map {
-        case ((_, c, x), i) => (t, i + 1, c, s"Type: $x")
-      }
-    }
-    rows.map { case (t, p, c, cm) => s"('$t',$p,'$c','$cm')" }
-      .mkString(
-        "SELECT tab, col_pos, col_name, col_comment FROM (VALUES ", ", ",
-        ") AS t(tab, col_pos, col_name, col_comment) ORDER BY tab, col_pos")
-  }
-
-  def packageCountsOracle(tables: Seq[String], nCols: Map[String, Int]): String =
-    tables.sorted.map { t =>
-      s"SELECT '$t' AS tab, CAST(count(*) AS BIGINT) AS n_rows, ${nCols(t)} AS n_cols FROM $t"
-    }.mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY tab")
 
   val tableCols: Map[String, Int] = Map(
     "region" -> 2, "nation" -> 3, "customer" -> 5, "supplier" -> 4,

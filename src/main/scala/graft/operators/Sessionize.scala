@@ -36,32 +36,6 @@ object Sessionize {
       .orderBy("user_id", "session_idx")
   }
 
-  /** `newSessionOp` is the gap comparator: ">" replays [[sessionize]]'s
-    * strict boundary, ">=" replays the native window's half-open one. */
-  def oracle(gapMinutes: Int = 30, newSessionOp: String = ">"): String = {
-    val gapUs = gapMinutes.toLong * 60 * 1000000
-    s"""SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-         count(*) AS n_events,
-         min(ts_us) AS start_us,
-         max(ts_us) - min(ts_us) AS duration_us
-        FROM (
-          SELECT user_id, ts_us,
-            sum(is_new) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                              ROWS UNBOUNDED PRECEDING) AS session_idx
-          FROM (
-            SELECT user_id, event_id, ts_us,
-              CASE WHEN prev_us IS NULL OR ts_us - prev_us $newSessionOp $gapUs
-                   THEN 1 ELSE 0 END AS is_new
-            FROM (
-              SELECT user_id, event_id,
-                epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-                lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER
-                  (PARTITION BY user_id ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id)
-                  AS prev_us
-              FROM events)))
-        GROUP BY 1, 2 ORDER BY 1, 2"""
-  }
-
   /** §2 #185 — sessionization via Spark's NATIVE `session_window`
     * operator (the declarative twin of the lag/cumsum islands above,
     * and the batch face of the same operator Structured Streaming
@@ -88,10 +62,4 @@ object Sessionize {
         col("start_us"), col("duration_us"))
       .orderBy("user_id", "session_idx")
   }
-
-  /** DuckDB oracle for [[sessionizeNative]] — the same islands replay
-    * as [[sessionize]] (the inclusive native boundary IS the strict->
-    * break; `newSessionOp = ">="` is kept available for engines whose
-    * session windows are half-open). */
-  def nativeOracle(gapMinutes: Int = 30): String = oracle(gapMinutes)
 }

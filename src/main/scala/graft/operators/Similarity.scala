@@ -21,7 +21,7 @@ import graft.functions.VectorFunctions._
 object Similarity {
 
   /** vec_id + embedding + precomputed L2 norm (map-only). */
-  private def vectors(spark: SparkSession, sfDir: String): DataFrame =
+  private[graft] def vectors(spark: SparkSession, sfDir: String): DataFrame =
     Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"),
         l2norm(col("embedding")).as("nrm"))
@@ -173,46 +173,6 @@ object Similarity {
             .as("cos")), k))
   }
 
-  /** DuckDB oracle for [[knnGraphAnn]]: static centroids inlined,
-    * assignment/probing/ranking replayed (the [[ivfStaticOracle]]
-    * machinery with every vector as a query) plus the mutual
-    * self-join. */
-  def knnGraphAnnOracle(nProbe: Int = 6, k: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = staticCentroids().zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        cents(cell, cv) AS (VALUES $centRows),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM n v, cents c),
-        assigned AS (SELECT cell, vec_id AS neighbor_id, embedding AS e_c,
-                       nrm AS n_c FROM ranked WHERE crnk = 1),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q,
-                     nrm AS n_q FROM ranked WHERE crnk <= $nProbe),
-        e AS (
-          SELECT query_id, neighbor_id, rnk, cos FROM (
-            SELECT p.query_id, a.neighbor_id,
-              ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cos,
-              CAST(row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
-                a.neighbor_id) AS INTEGER) AS rnk
-            FROM probes p JOIN assigned a ON p.cell = a.cell
-            WHERE p.query_id <> a.neighbor_id)
-          WHERE rnk <= $k)
-        SELECT e.query_id AS src_id, e.neighbor_id AS dst_id, e.rnk AS rnk,
-               round(e.cos, 6) AS cos6, (r.query_id IS NOT NULL) AS mutual
-        FROM e LEFT JOIN e r ON r.query_id = e.neighbor_id
-                            AND r.neighbor_id = e.query_id
-        ORDER BY src_id, e.rnk"""
-  }
-
   /** §2 #136 — LABEL SPREAD: semi-supervised label propagation from a
     * seed registry — every unlabeled vector takes the MAJORITY label of
     * its k nearest seeds (cosine; vote ties break on the smaller
@@ -262,41 +222,6 @@ object Similarity {
       .select(col("label"), col("n_seed"), col("n_eval"), col("n_correct"),
         round(col("n_correct") / col("n_eval").cast("double"), 4).as("acc4"))
       .orderBy("label")
-  }
-
-  /** DuckDB oracle for [[labelSpread]]: the same rank/vote/argmax
-    * chain replayed with window functions. */
-  def labelSpreadOracle(k: Int = 5, seedMod: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    s"""WITH n AS (SELECT vec_id, label, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        sd AS (SELECT * FROM n WHERE vec_id % $seedMod = 0),
-        qs AS (SELECT * FROM n WHERE vec_id % $seedMod <> 0),
-        e AS (SELECT query_id, nb_label FROM (
-            SELECT q.vec_id AS query_id, s.label AS nb_label,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "s.embedding")} / (q.nrm * s.nrm) DESC,
-                s.vec_id) AS rnk
-            FROM qs q JOIN sd s ON true)
-          WHERE rnk <= $k),
-        votes AS (SELECT query_id, nb_label, count(*) AS c
-                  FROM e GROUP BY 1, 2),
-        pred AS (SELECT query_id, nb_label AS pred_label FROM (
-            SELECT query_id, nb_label, row_number() OVER (
-              PARTITION BY query_id ORDER BY c DESC, nb_label) AS vr
-            FROM votes) WHERE vr = 1),
-        ev AS (SELECT q.label AS label,
-                 count(*) AS n_eval,
-                 CAST(sum(CASE WHEN p.pred_label = q.label THEN 1 ELSE 0 END)
-                   AS BIGINT) AS n_correct
-               FROM qs q JOIN pred p ON p.query_id = q.vec_id
-               GROUP BY 1),
-        sc AS (SELECT label, count(*) AS n_seed FROM sd GROUP BY 1)
-       SELECT label, n_seed, n_eval, n_correct,
-              round(n_correct / CAST(n_eval AS DOUBLE), 4) AS acc4
-       FROM ev JOIN sc USING (label) ORDER BY label"""
   }
 
   /** §2 #119 — ANN RECALL evaluation: recall@k of the two fully
@@ -378,63 +303,6 @@ object Similarity {
     }.reduce(_ unionByName _).orderBy("n_probe")
   }
 
-  /** DuckDB oracle for [[ivfProbeSweep]]: the static-IVF CTE machinery
-    * with one branch per probe setting, all off shared CTEs. */
-  def ivfProbeSweepOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val cents = staticCentroids()
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    val pers = (1 to cents.length).map { p =>
-      s"""SELECT $p AS n_probe,
-           (SELECT count(*) FROM truth) AS n_truth,
-           (SELECT count(*)
-            FROM (SELECT pr.query_id, a.neighbor_id,
-                    row_number() OVER (PARTITION BY pr.query_id ORDER BY
-                      ${dot("pr.e_q", "a.e_c")} / (pr.n_q * a.n_c) DESC,
-                      a.neighbor_id) AS rnk
-                  FROM (SELECT cell, vec_id AS query_id, embedding AS e_q,
-                          nrm AS n_q
-                        FROM ranked
-                        WHERE crnk <= $p AND vec_id < $nQueries) pr
-                  JOIN assigned a ON pr.cell = a.cell
-                  WHERE pr.query_id <> a.neighbor_id) i
-            JOIN truth t ON t.query_id = i.query_id
-                        AND t.neighbor_id = i.neighbor_id
-            WHERE i.rnk <= $k) AS n_hit,
-           (SELECT CAST(sum(cc.cnt) AS BIGINT) - $nQueries
-            FROM (SELECT cell FROM ranked
-                  WHERE crnk <= $p AND vec_id < $nQueries) pp
-            JOIN cc USING (cell)) AS n_candidates"""
-    }.mkString("\n          UNION ALL\n          ")
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        cents(cell, cv) AS (VALUES $centRows),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM n v, cents c),
-        assigned AS (SELECT cell, vec_id AS neighbor_id, embedding AS e_c,
-                       nrm AS n_c FROM ranked WHERE crnk = 1),
-        cc AS (SELECT cell, count(*) AS cnt FROM assigned GROUP BY 1),
-        truth AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-                c.vec_id) AS rnk
-            FROM n q JOIN n c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE rnk <= $k)
-       SELECT n_probe, n_truth, n_hit,
-         round(n_hit / n_truth, 4) AS recall, n_candidates
-       FROM ($pers)
-       ORDER BY n_probe"""
-  }
-
   /** §2 #224 — `pq_shortlist_sweep`: the tuning table for the PQ
     * family's knob. For each shortlist factor f: recall@k of the
     * ADC-shortlist(f·k) + exact-rerank pipeline vs brute truth, and
@@ -491,96 +359,6 @@ object Similarity {
           col("n_truth"), col("n_hit"),
           round(col("n_hit") / col("n_truth"), 4).as("recall"))
     }.reduce(_ unionByName _).orderBy("shortlist_factor")
-  }
-
-  /** DuckDB oracle for [[pqShortlistSweep]]: the [[pqTrainedOracle]]
-    * machinery (trained codebooks + biases inlined, code pivot, ADC
-    * sum in fixed sub-space order) with the candidates ADC-ranked once
-    * in a shared CTE and one branch per factor — each filters its
-    * rank-prefix, exact-reranks, and scores against the shared brute
-    * truth. */
-  def pqShortlistSweepOracle(nQueries: Int = 10, k: Int = 5,
-                             factors: Seq[Int] = Seq(1, 2, 4, 8)): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val cbs = withTrainCache(vectors(spark, sfDir))(trainPqCodebooks(_))
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val cbRows = (for {
-      m <- 0 until nSub
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})")
-      .mkString(", ")
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    val adc = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    val branches = factors.map { f =>
-      s"""SELECT $f AS shortlist_factor,
-           (SELECT least(${f.toLong * k}, count(*) - 1) * $nQueries
-            FROM embeddings) AS n_rerank,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM (SELECT s.query_id, s.neighbor_id,
-                    row_number() OVER (PARTITION BY s.query_id ORDER BY
-                      ${dot("qv.embedding", "cv.embedding")}
-                        / (qv.nrm * cv.nrm) DESC, s.neighbor_id) AS rnk
-                  FROM (SELECT query_id, neighbor_id FROM adcr
-                        WHERE r <= ${f * k}) s
-                  JOIN nv qv ON qv.vec_id = s.query_id
-                  JOIN nv cv ON cv.vec_id = s.neighbor_id) i
-            JOIN truth t ON t.query_id = i.query_id
-                        AND t.neighbor_id = i.neighbor_id
-            WHERE i.rnk <= $k) AS n_hit"""
-    }.mkString("\n          UNION ALL\n          ")
-    s"""WITH cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM embeddings,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        adcr AS (SELECT query_id, neighbor_id, r FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
-            FROM embeddings q, codes n, cbl
-            WHERE q.vec_id < $nQueries AND n.vec_id <> q.vec_id)
-          WHERE r <= ${factors.max * k}),
-        truth AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-                c.vec_id) AS rnk
-            FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE rnk <= $k)
-       SELECT shortlist_factor, n_rerank, n_truth, n_hit,
-         round(n_hit / CAST(n_truth AS DOUBLE), 4) AS recall
-       FROM ($branches)
-       ORDER BY shortlist_factor"""
   }
 
   /** §2 #231 — `pq_shortlist_sweep_residual`: the shortlist-budget
@@ -644,125 +422,6 @@ object Similarity {
     }.reduce(_ unionByName _).orderBy("shortlist_factor")
   }
 
-  /** DuckDB oracle for [[pqShortlistSweepResidual]]: the
-    * [[ivfPqResidualTrainedOracle]] machinery (both trained models
-    * inlined, double residual subtract, residual encode,
-    * centroid-first ADC) with the probed-cell candidates ranked once
-    * in a shared CTE and one branch per factor — rank-prefix filter,
-    * exact re-rank, hit count vs the shared brute truth, and the
-    * measured prefix count as the gather bill. */
-  def pqShortlistSweepResidualOracle(nQueries: Int = 10, k: Int = 5,
-                                     nProbe: Int = 4,
-                                     factors: Seq[Int] = Seq(1, 2, 4, 8))
-      : String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
-    val (cents, cbs) = withTrainCache(v) { vc =>
-      val cents = trainCentroids(vc, 16)
-      (cents, trainPqCodebooks(
-        residualAssigned(vc, cents).select(col("vec_id"),
-          col("res").as("embedding"))))
-    }
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    val cbRows = (for {
-      m <- 0 until nSub
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})")
-      .mkString(", ")
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    val adc = (s"${dot("p.e_q", "ct.cv")}" +: (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"p.e_q[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }).mkString(" + ")
-    val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    val branches = factors.map { f =>
-      s"""SELECT $f AS shortlist_factor,
-           (SELECT CAST(count(*) AS BIGINT) FROM adcr
-            WHERE r <= ${f * k}) AS n_rerank,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM (SELECT s.query_id, s.neighbor_id,
-                    row_number() OVER (PARTITION BY s.query_id ORDER BY
-                      ${dot("qv.embedding", "cv.embedding")}
-                        / (qv.nrm * cv.nrm) DESC, s.neighbor_id) AS rnk
-                  FROM (SELECT query_id, neighbor_id FROM adcr
-                        WHERE r <= ${f * k}) s
-                  JOIN nv qv ON qv.vec_id = s.query_id
-                  JOIN nv cv ON cv.vec_id = s.neighbor_id) i
-            JOIN truth t ON t.query_id = i.query_id
-                        AND t.neighbor_id = i.neighbor_id
-            WHERE i.rnk <= $k) AS n_hit"""
-    }.mkString("\n          UNION ALL\n          ")
-    s"""WITH cents(cell, cv) AS (VALUES $centRows),
-        cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        resid AS (SELECT r.vec_id, r.cell,
-            list_transform(list_zip(r.embedding, c.cv),
-              x -> CAST(x[1] AS DOUBLE) - x[2]) AS re
-          FROM (SELECT vec_id, embedding, cell FROM ranked WHERE crnk = 1) r
-          JOIN cents c ON c.cell = r.cell),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  re[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM resid,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        acodes AS (SELECT a.cell, c.* FROM codes c
-                   JOIN (SELECT vec_id, cell FROM resid) a
-                     ON a.vec_id = c.vec_id),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q
-                   FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries),
-        adcr AS (SELECT query_id, neighbor_id, r FROM (
-            SELECT p.query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
-            FROM probes p, cents ct, acodes n, cbl
-            WHERE ct.cell = p.cell AND n.cell = p.cell
-              AND n.vec_id <> p.query_id)
-          WHERE r <= ${factors.max * k}),
-        truth AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-                c.vec_id) AS rnk
-            FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE rnk <= $k)
-       SELECT shortlist_factor, n_rerank, n_truth, n_hit,
-         round(n_hit / CAST(n_truth AS DOUBLE), 4) AS recall
-       FROM ($branches)
-       ORDER BY shortlist_factor"""
-  }
-
   /** §2 #230 — `pq_bits_sweep`: the CODEBOOK-SIZE tuning table — the
     * third and last knob of the PQ serving family after probe count
     * (`ivf_probe_sweep`) and shortlist budget (`pq_shortlist_sweep`).
@@ -809,103 +468,6 @@ object Similarity {
           col("mean_mse6"), col("n_truth"), col("n_hit"),
           round(col("n_hit") / col("n_truth"), 4).as("recall"))
     }.reduce(_ unionByName _).orderBy("codebook_k")
-  }
-
-  /** DuckDB oracle for [[pqBitsSweep]]: one trained codebook set per
-    * size inlined; shared sub-vector slices and brute truth; per size —
-    * the code argmin (keeping s/cv/bias for the three-term 8-dp decimal
-    * error), the code pivot, the ADC shortlist, and the exact re-rank
-    * hit count, all the proven replay machinery. */
-  def pqBitsSweepOracle(sizes: Seq[Int] = Seq(4, 16, 64),
-                        nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
-    val models = withTrainCache(v)(vc =>
-      sizes.map(kk => kk -> trainPqCodebooks(vc, k = kk)))
-    val nSub = models.head._2.length
-    val sub = models.head._2.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    val perSize = models.map { case (sz, cbs) =>
-      val cbRows = (for {
-        m <- 0 until nSub
-        kk <- cbs(m).indices
-      } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-        s"${l2Biases(cbs(m))(kk)})")
-        .mkString(", ")
-      val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-        .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-      val adc = (0 until nSub).map { m =>
-        val lo = m * sub + 1
-        val hi = (m + 1) * sub
-        s"${dot(s"q.embedding[$lo:$hi]", s"k${sz}_cbl.cb[${m + 1}][n.c$m + 1]")}"
-      }.mkString(" + ")
-      s"""k${sz}_cb(m, kk, cv, bias) AS (VALUES $cbRows),
-         k${sz}_cbl AS (SELECT $cbLit AS cb),
-         k${sz}_coded AS (SELECT vec_id, m, kk, s, cv, bias FROM (
-             SELECT sub.vec_id, sub.m, cb.kk, sub.s, cb.cv, cb.bias,
-               row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                 ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                   cb.kk) AS r
-             FROM sub JOIN k${sz}_cb cb ON cb.m = sub.m) WHERE r = 1),
-         k${sz}_codes AS (SELECT vec_id, $codePivot
-                          FROM k${sz}_coded GROUP BY 1),
-         k${sz}_short AS (SELECT query_id, neighbor_id FROM (
-             SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 ($adc) DESC, n.vec_id) AS r
-             FROM embeddings q, k${sz}_codes n, k${sz}_cbl
-             WHERE q.vec_id < $nQueries AND n.vec_id <> q.vec_id)
-           WHERE r <= ${8 * k})"""
-    }.mkString(",\n        ")
-    val branches = models.map { case (sz, cbs) =>
-      val bits = 32 - Integer.numberOfLeadingZeros(sz - 1)
-      s"""SELECT $sz AS codebook_k, $bits AS bits_per_code,
-           ${cbs.length * bits} AS bits_per_vector,
-           (SELECT round(CAST(sum(CAST(round(${dot("s", "s")}
-              - 2 * ${dot("s", "cv")} - 2 * bias, 8) AS DECIMAL(18,8)))
-              AS DOUBLE) / count(*), 6) FROM k${sz}_coded) AS mean_mse6,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM (SELECT s.query_id, s.neighbor_id,
-                    row_number() OVER (PARTITION BY s.query_id ORDER BY
-                      ${dot("qv.embedding", "cv.embedding")}
-                        / (qv.nrm * cv.nrm) DESC, s.neighbor_id) AS rnk
-                  FROM k${sz}_short s
-                  JOIN nv qv ON qv.vec_id = s.query_id
-                  JOIN nv cv ON cv.vec_id = s.neighbor_id) i
-            JOIN truth t ON t.query_id = i.query_id
-                        AND t.neighbor_id = i.neighbor_id
-            WHERE i.rnk <= $k) AS n_hit"""
-    }.mkString("\n          UNION ALL\n          ")
-    s"""WITH sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM embeddings,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        truth AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-                c.vec_id) AS rnk
-            FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE rnk <= $k),
-        $perSize
-       SELECT codebook_k, bits_per_code, bits_per_vector, mean_mse6,
-         n_truth, n_hit,
-         round(n_hit / CAST(n_truth AS DOUBLE), 4) AS recall
-       FROM ($branches)
-       ORDER BY codebook_k"""
   }
 
   /** §2 #226 — `ann_recall_eval_pq`: the recall table for the
@@ -960,229 +522,6 @@ object Similarity {
       .unionByName(one("ann_sq8", serveFirst(v, nQueries, None, 0, Sq8,
         TopK(k))))
       .orderBy("variant")
-  }
-
-  /** DuckDB oracle for [[annRecallEvalPq]]: the [[pqTrainedOracle]] and
-    * [[ivfPqTrainedOracle]] machinery merged onto SHARED CTEs (one code
-    * pivot, one truth) with one counting branch per variant. */
-  def annRecallEvalPqOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
-    val (cents, cbs, cbsR, rO, cbsO) = withTrainCache(v) { vc =>
-      val cents = trainCentroids(vc, 16)
-      val (rO, cbsO) = trainOpqRotation(vc)
-      (cents, trainPqCodebooks(vc),
-        trainPqCodebooks(residualAssigned(vc, cents)
-          .select(col("vec_id"), col("res").as("embedding"))),
-        rO, cbsO)
-    }
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val nProbe = 4
-    val dotE = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    val (cbRows, cbLit) = pqCbLits(cbs)
-    val (cbrRows, cbrLit) = pqCbLits(cbsR)
-    val (cboRows, cboLit) = pqCbLits(cbsO)
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    def adc(qE: String) = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dotE(s"$qE[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    // OPQ ADC: the rotated query's slices off the OPQ codebooks
-    val adcO = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dotE(s"q.embedding[$lo:$hi]", s"cbol.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    // IVF×OPQ ADC: same rotated-query slices, probed cells only
-    val adcIO = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dotE(s"p.e_s[$lo:$hi]", s"cbol.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    // residual ADC: centroid term FIRST (the engine's reduceLeft order),
-    // then the per-sub-space codeword dots off the RESIDUAL codebooks
-    val adcR = (s"${dotE("p.e_q", "ct.cv")}" +: (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dotE(s"p.e_q[$lo:$hi]", s"cbrl.cb[${m + 1}][n.c$m + 1]")}"
-    }).mkString(" + ")
-    // one branch per variant: shortlist CTE name in, hit count out
-    def hitCount(shortCte: String) =
-      s"""(SELECT CAST(count(*) AS BIGINT)
-            FROM (SELECT s.query_id, s.neighbor_id,
-                    row_number() OVER (PARTITION BY s.query_id ORDER BY
-                      ${dotE("qv.embedding", "cv.embedding")}
-                        / (qv.nrm * cv.nrm) DESC, s.neighbor_id) AS rnk
-                  FROM $shortCte s
-                  JOIN nv qv ON qv.vec_id = s.query_id
-                  JOIN nv cv ON cv.vec_id = s.neighbor_id) i
-            JOIN truth t ON t.query_id = i.query_id
-                        AND t.neighbor_id = i.neighbor_id
-            WHERE i.rnk <= $k)"""
-    s"""WITH cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        cbr(m, kk, cv, bias) AS (VALUES $cbrRows),
-        cbrl AS (SELECT $cbrLit AS cb),
-        cbo(m, kk, cv, bias) AS (VALUES $cboRows),
-        cbol AS (SELECT $cboLit AS cb),
-        ${opqRotCte(rO)},
-        subo AS (SELECT vec_id, mm.m AS m,
-                   embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                 FROM rot,
-                      (SELECT unnest(range(0, $nSub)) AS m) mm),
-        codedo AS (SELECT vec_id, m, kk FROM (
-                     SELECT subo.vec_id, subo.m, cbo.kk,
-                       row_number() OVER (PARTITION BY subo.vec_id, subo.m
-                         ORDER BY (${dotE("subo.s", "cbo.cv")} + cbo.bias)
-                           DESC, cbo.kk) AS r
-                     FROM subo JOIN cbo ON cbo.m = subo.m)
-                   WHERE r = 1),
-        codeso AS (SELECT vec_id, $codePivot FROM codedo GROUP BY 1),
-        cents(cell, cv) AS (VALUES $centRows),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dotE("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM embeddings,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dotE("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dotE("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        acodes AS (SELECT a.cell, c.* FROM codes c
-                   JOIN (SELECT vec_id, cell FROM ranked WHERE crnk = 1) a
-                     ON a.vec_id = c.vec_id),
-        resid AS (SELECT r.vec_id, r.cell,
-            list_transform(list_zip(r.embedding, c.cv),
-              x -> CAST(x[1] AS DOUBLE) - x[2]) AS re
-          FROM (SELECT vec_id, embedding, cell FROM ranked WHERE crnk = 1) r
-          JOIN cents c ON c.cell = r.cell),
-        subr AS (SELECT vec_id, mm.m AS m,
-                   re[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                 FROM resid,
-                      (SELECT unnest(range(0, $nSub)) AS m) mm),
-        codedr AS (SELECT vec_id, m, kk FROM (
-                     SELECT subr.vec_id, subr.m, cbr.kk,
-                       row_number() OVER (PARTITION BY subr.vec_id, subr.m
-                         ORDER BY (${dotE("subr.s", "cbr.cv")} + cbr.bias)
-                           DESC, cbr.kk) AS r
-                     FROM subr JOIN cbr ON cbr.m = subr.m)
-                   WHERE r = 1),
-        codesr AS (SELECT vec_id, $codePivot FROM codedr GROUP BY 1),
-        acodesr AS (SELECT a.cell, c.* FROM codesr c
-                    JOIN (SELECT vec_id, cell FROM resid) a
-                      ON a.vec_id = c.vec_id),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q
-                   FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries),
-        acodeso AS (SELECT a.cell, c.* FROM codeso c
-                    JOIN (SELECT vec_id, cell FROM ranked WHERE crnk = 1) a
-                      ON a.vec_id = c.vec_id),
-        probeso AS (SELECT p.cell, p.query_id, rt.embedding AS e_s
-                    FROM probes p JOIN rot rt ON rt.vec_id = p.query_id),
-        truth AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dotE("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-                c.vec_id) AS rnk
-            FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE rnk <= $k),
-        short_pq AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                (${adc("q.embedding")}) DESC, n.vec_id) AS r
-            FROM embeddings q, codes n, cbl
-            WHERE q.vec_id < $nQueries AND n.vec_id <> q.vec_id)
-          WHERE r <= ${8 * k}),
-        short_pq_opq AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ($adcO) DESC, n.vec_id) AS r
-            FROM rot q, codeso n, cbol
-            WHERE q.vec_id < $nQueries AND n.vec_id <> q.vec_id)
-          WHERE r <= ${8 * k}),
-        short_ivfpq AS (SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                (${adc("p.e_q")}) DESC, n.vec_id) AS r
-            FROM probes p, acodes n, cbl
-            WHERE n.cell = p.cell AND n.vec_id <> p.query_id)
-          WHERE r <= ${8 * k}),
-        short_ivfpq_opq AS (SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ($adcIO) DESC, n.vec_id) AS r
-            FROM probeso p, acodeso n, cbol
-            WHERE n.cell = p.cell AND n.vec_id <> p.query_id)
-          WHERE r <= ${8 * k}),
-        short_ivfpq_r AS (SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ($adcR) DESC, n.vec_id) AS r
-            FROM probes p, cents ct, acodesr n, cbrl
-            WHERE ct.cell = p.cell AND n.cell = p.cell
-              AND n.vec_id <> p.query_id)
-          WHERE r <= ${8 * k}),
-        dqz AS (${sq8DequantCteBody}),
-        short_sq8 AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                (${dotE("q.embedding", "n.d")}
-                   / (sqrt(${dotE("q.embedding", "q.embedding")})
-                      * sqrt(${dotE("n.d", "n.d")}))) DESC,
-                n.vec_id) AS r
-            FROM embeddings q JOIN dqz n ON n.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE r <= ${8 * k})
-       SELECT variant, n_truth, n_hit,
-         round(n_hit / CAST(n_truth AS DOUBLE), 4) AS recall
-       FROM (
-         SELECT 'ann_ivfpq' AS variant,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           ${hitCount("short_ivfpq")} AS n_hit
-         UNION ALL
-         SELECT 'ann_ivfpq_opq' AS variant,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           ${hitCount("short_ivfpq_opq")} AS n_hit
-         UNION ALL
-         SELECT 'ann_ivfpq_residual' AS variant,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           ${hitCount("short_ivfpq_r")} AS n_hit
-         UNION ALL
-         SELECT 'ann_pq' AS variant,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           ${hitCount("short_pq")} AS n_hit
-         UNION ALL
-         SELECT 'ann_pq_opq' AS variant,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           ${hitCount("short_pq_opq")} AS n_hit
-         UNION ALL
-         SELECT 'ann_sq8' AS variant,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           ${hitCount("short_sq8")} AS n_hit)
-       ORDER BY variant"""
   }
 
   /** Session-shared exact k-NN EDGE ARTIFACT (docs/ARTIFACTS.md): the
@@ -1423,52 +762,6 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** DuckDB oracle for [[knnTriangles]]: the exact knn CTE + mutual
-    * filter + the same oriented triangle join and per-corner
-    * attribution. */
-  def knnTrianglesOracle(k: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        e0 AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-                c.vec_id) AS rnk
-            FROM n q JOIN n c ON c.vec_id <> q.vec_id)
-          WHERE rnk <= $k),
-        mutual AS (SELECT e.query_id AS id_a, e.neighbor_id AS id_b
-                   FROM e0 e JOIN e0 r ON r.query_id = e.neighbor_id
-                                      AND r.neighbor_id = e.query_id
-                   WHERE e.query_id < e.neighbor_id),
-        deg AS (SELECT id, count(*) AS degree FROM (
-            SELECT id_a AS id FROM mutual
-            UNION ALL SELECT id_b FROM mutual) GROUP BY id),
-        tris AS (SELECT e1.id_a AS x, e1.id_b AS y, e2.id_b AS z
-                 FROM mutual e1
-                 JOIN mutual e2 ON e2.id_a = e1.id_a
-                               AND e2.id_b > e1.id_b
-                 JOIN mutual e3 ON e3.id_a = e1.id_b
-                               AND e3.id_b = e2.id_b),
-        tpn AS (SELECT id, count(*) AS triangles FROM (
-            SELECT x AS id FROM tris
-            UNION ALL SELECT y FROM tris
-            UNION ALL SELECT z FROM tris) GROUP BY id)
-       SELECT v.vec_id,
-              CAST(coalesce(d.degree, 0) AS BIGINT) AS degree,
-              CAST(coalesce(t.triangles, 0) AS BIGINT) AS triangles,
-              CASE WHEN coalesce(d.degree, 0) >= 2
-                   THEN round(2.0 * coalesce(t.triangles, 0)
-                        / (d.degree * (d.degree - 1)), 4)
-                   ELSE 0.0 END AS coeff4
-       FROM embeddings v
-       LEFT JOIN deg d ON d.id = v.vec_id
-       LEFT JOIN tpn t ON t.id = v.vec_id
-       ORDER BY v.vec_id"""
-  }
-
   /** §2 #189 — SEMANTIC COMMUNITIES: connected components over the
     * MUTUAL k-NN graph (mutual edges only — the standard symmetric
     * sparsification that keeps hub vectors from welding unrelated
@@ -1504,49 +797,6 @@ object Similarity {
         col("m.lab").as("majority_label"),
         round((-col("m.neg")) / col("n_members"), 4).as("purity4"))
       .orderBy("community_id")
-  }
-
-  /** DuckDB oracle for [[knnCommunities]]: the exact knn edge CTE +
-    * mutual filter + recursive-CTE transitive closure + the identical
-    * majority/purity arithmetic. */
-  def knnCommunitiesOracle(k: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    s"""WITH RECURSIVE n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        e0 AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-                c.vec_id) AS rnk
-            FROM n q JOIN n c ON c.vec_id <> q.vec_id)
-          WHERE rnk <= $k),
-        mutual AS (SELECT e.query_id AS id_a, e.neighbor_id AS id_b
-                   FROM e0 e JOIN e0 r ON r.query_id = e.neighbor_id
-                                      AND r.neighbor_id = e.query_id
-                   WHERE e.query_id < e.neighbor_id),
-        edges AS (SELECT id_a AS src, id_b AS dst FROM mutual
-                  UNION ALL SELECT id_b, id_a FROM mutual),
-        reach(id, lbl) AS (
-          SELECT vec_id, vec_id FROM embeddings
-          UNION
-          SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id),
-        lab AS (SELECT id, min(lbl) AS community_id FROM reach GROUP BY 1),
-        mem AS (SELECT lab.community_id, emb.label
-                FROM lab JOIN embeddings emb ON emb.vec_id = lab.id),
-        bl AS (SELECT community_id, label, count(*) AS cnt
-               FROM mem GROUP BY 1, 2),
-        sel AS (SELECT community_id, label AS majority_label,
-                  cnt AS maj_cnt FROM (
-            SELECT *, row_number() OVER (PARTITION BY community_id
-              ORDER BY cnt DESC, label) AS rn FROM bl) WHERE rn = 1),
-        tot AS (SELECT community_id, CAST(sum(cnt) AS BIGINT) AS n_members,
-                  count(*) AS n_labels FROM bl GROUP BY 1)
-       SELECT t.community_id, t.n_members, t.n_labels, s.majority_label,
-         round(s.maj_cnt / CAST(t.n_members AS DOUBLE), 4) AS purity4
-       FROM tot t JOIN sel s USING (community_id)
-       ORDER BY community_id"""
   }
 
   /** Shared final ranking for every ANN variant: one hash aggregate with
@@ -1665,7 +915,7 @@ object Similarity {
     * source — which is also the only honest option at 100 TB, where the
     * vectors don't fit in cache and a leaked MEMORY_AND_DISK footprint
     * would crowd out every later job's execution memory. */
-  private def withTrainCache[M](v: DataFrame)(train: DataFrame => M): M = {
+  private[graft] def withTrainCache[M](v: DataFrame)(train: DataFrame => M): M = {
     v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try train(v) finally v.unpersist(blocking = false)
   }
@@ -2694,84 +1944,6 @@ object Similarity {
       .orderBy("scenario")
   }
 
-  /** DuckDB oracle for [[ivfDriftImpact]]: per-scenario corpus CTEs,
-    * the ranked-assignment replay, brute truth, probe serve, and the
-    * probed-cell population sum — unioned. */
-  def ivfDriftImpactOracle(nQueries: Int = 10, k: Int = 5,
-                           nProbe: Int = 4): String = {
-    val cents = staticCentroids()
-    val dotE = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    val qCap = nQueries * 5
-    def scen(tag: String, deltaSrc: String) =
-      s"""${tag}_n AS (SELECT vec_id, embedding,
-             sqrt(${dotE("embedding", "embedding")}) AS nrm
-           FROM (SELECT * FROM base UNION ALL SELECT * FROM $deltaSrc)),
-         ${tag}_ranked AS (
-           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-               ${dotE("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-           FROM ${tag}_n v, cents c),
-         ${tag}_assigned AS (SELECT cell, vec_id AS neighbor_id,
-             embedding AS e_c, nrm AS n_c
-           FROM ${tag}_ranked WHERE crnk = 1),
-         ${tag}_cc AS (SELECT cell, count(*) AS cnt
-           FROM ${tag}_assigned GROUP BY 1),
-         ${tag}_truth AS (SELECT query_id, neighbor_id FROM (
-             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 ${dotE("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
-                   DESC, c.vec_id) AS rnk
-             FROM ${tag}_n q JOIN ${tag}_n c ON c.vec_id <> q.vec_id
-             WHERE q.vec_id % 5 = 0 AND q.vec_id < $qCap)
-           WHERE rnk <= $k)"""
-    def sel(tag: String) =
-      s"""SELECT '$tag' AS scenario,
-           (SELECT CAST(count(*) AS BIGINT) FROM ${tag}_truth) AS n_truth,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM (SELECT pr.query_id, a.neighbor_id,
-                    row_number() OVER (PARTITION BY pr.query_id ORDER BY
-                      ${dotE("pr.e_q", "a.e_c")} / (pr.n_q * a.n_c) DESC,
-                      a.neighbor_id) AS rnk
-                  FROM (SELECT cell, vec_id AS query_id, embedding AS e_q,
-                          nrm AS n_q
-                        FROM ${tag}_ranked
-                        WHERE crnk <= $nProbe AND vec_id % 5 = 0
-                          AND vec_id < $qCap) pr
-                  JOIN ${tag}_assigned a ON pr.cell = a.cell
-                  WHERE pr.query_id <> a.neighbor_id) i
-            JOIN ${tag}_truth t ON t.query_id = i.query_id
-                               AND t.neighbor_id = i.neighbor_id
-            WHERE i.rnk <= $k) AS n_hit,
-           (SELECT CAST(sum(cc.cnt) AS BIGINT) - $nQueries
-            FROM (SELECT cell FROM ${tag}_ranked
-                  WHERE crnk <= $nProbe AND vec_id % 5 = 0
-                    AND vec_id < $qCap) pp
-            JOIN ${tag}_cc cc USING (cell)) AS n_candidates"""
-    s"""WITH cents(cell, cv) AS (VALUES $centRows),
-        base AS (SELECT vec_id, embedding FROM embeddings
-                 WHERE vec_id % 5 <> 0),
-        delta_stable AS (SELECT vec_id, embedding FROM embeddings
-                         WHERE vec_id % 5 = 0),
-        delta_shifted AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x + 0.5 AS FLOAT))
-              AS embedding
-          FROM embeddings WHERE vec_id % 5 = 0),
-        ${scen("stable", "delta_stable")},
-        ${scen("shifted", "delta_shifted")}
-       SELECT scenario, n_truth, n_hit,
-         round(n_hit / CAST(n_truth AS DOUBLE), 4) AS recall4,
-         n_candidates,
-         round(n_candidates / CAST($nQueries AS DOUBLE), 2)
-           AS cand_per_query2
-       FROM (${sel("stable")} UNION ALL ${sel("shifted")})
-       ORDER BY scenario"""
-  }
-
   /** Impact metrics ([[ivfDriftImpact]]'s measurement core) served
     * FROM a live artifact: brute truth over the artifact corpus, probe
     * hits through the stored cell layout, and the probed-cell
@@ -2864,233 +2036,6 @@ object Similarity {
         spark.sparkContext.parallelize(pre, 1), post.schema)
       .unionByName(post)
       .orderBy("phase")
-  }
-
-  /** DuckDB oracle for [[ivfRebuild]]: the pre phase replays the
-    * static-quantizer drift + impact formulas over the drifted corpus
-    * (baseline = the base-only rows of the same ranked assignment);
-    * the post phase replays them under the INLINED retrained
-    * centroids, with baseline = the corpus itself (the reset
-    * semantics, so every PSI term cancels to 0 exactly). Training is
-    * taken as given, the [[ivfTrainedOracle]] doctrine: deterministic
-    * seeds + per-iteration 1e-6 mean quantization make the k-means
-    * replayable from either the in-memory union or the artifact's
-    * parquet rows (float storage is exact). */
-  def ivfRebuildOracle(nQueries: Int = 10, k: Int = 5, nProbe: Int = 4,
-                       nCells: Int = 16): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir).select(col("vec_id"), col("embedding"))
-    val shifted = v.filter(col("vec_id") % 5 === 0).select(col("vec_id"),
-      transform(col("embedding"), x => x + lit(0.5f)).as("embedding"))
-    val postCents = trainCentroids(
-      v.filter(col("vec_id") % 5 =!= 0).unionByName(shifted), nCells)
-    val dotE = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    def centRows(cents: Array[Array[Double]]) =
-      cents.zipWithIndex.map { case (c, i) =>
-        s"(${i}, ${c.mkString("[", ", ", "]")})"
-      }.mkString(", ")
-    val qCap = nQueries * 5
-    // ranked assignment of the drifted corpus under one centroid table
-    def ranked(tag: String, cents: String) =
-      s"""${tag}_ranked AS (
-           SELECT v.vec_id, v.embedding, c.cell,
-             ${dotE("v.embedding", "c.cv")} AS dp,
-             sqrt(${dotE("v.embedding", "v.embedding")}) AS nrm,
-             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-               ${dotE("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-           FROM cur v, $cents c)"""
-    // per-cell (cnt, dsum) stats over a crnk=1 slice
-    def stat(tag: String, name: String, pre: String, where: String) =
-      s"""${name} AS (
-           SELECT cell, CAST(count(*) AS BIGINT) AS ${pre}_cnt,
-             sum(CAST(round(1.0 - dp / nrm, 8) AS DECIMAL(18,8)))
-               AS ${pre}_dsum
-           FROM ${tag}_ranked WHERE crnk = 1$where GROUP BY cell)"""
-    // PSI of cur vs baseline (the ivfDriftOracle formulas)
-    def psi(tag: String) =
-      s"""${tag}_j AS (SELECT b.base_cnt, c.cur_cnt
-           FROM ${tag}_bstat b FULL OUTER JOIN ${tag}_cstat c
-             ON b.cell = c.cell),
-         ${tag}_tot AS (SELECT CAST(sum(base_cnt) AS BIGINT) AS n_base,
-             CAST(sum(cur_cnt) AS BIGINT) AS n_cur FROM ${tag}_j),
-         ${tag}_summary AS (SELECT sum(term) AS psi_sum,
-             CAST(sum(CASE WHEN base_cnt IS NULL OR cur_cnt IS NULL
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_cells_onesided
-           FROM (SELECT base_cnt, cur_cnt,
-             CASE WHEN base_cnt IS NOT NULL AND cur_cnt IS NOT NULL THEN
-               CAST(round(
-                 (cur_cnt / CAST(n_cur AS DOUBLE)
-                   - base_cnt / CAST(n_base AS DOUBLE))
-                 * ln((cur_cnt / CAST(n_cur AS DOUBLE))
-                   / (base_cnt / CAST(n_base AS DOUBLE))), 8)
-                 AS DECIMAL(18,8)) END AS term
-             FROM ${tag}_j, ${tag}_tot))"""
-    // brute truth + probed-cell candidate bill over the same ranked CTE
-    def impact(tag: String) =
-      s"""${tag}_truth AS (SELECT query_id, neighbor_id FROM (
-             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 ${dotE("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
-                   DESC, c.vec_id) AS rnk
-             FROM ${tag}_ranked q
-             JOIN ${tag}_ranked c ON c.crnk = 1 AND c.vec_id <> q.vec_id
-             WHERE q.crnk = 1 AND q.vec_id % 5 = 0 AND q.vec_id < $qCap)
-           WHERE rnk <= $k),
-         ${tag}_cc AS (SELECT cell, count(*) AS cnt
-           FROM ${tag}_ranked WHERE crnk = 1 GROUP BY 1)"""
-    def sel(tag: String) =
-      s"""SELECT '$tag' AS phase,
-           round(CAST((SELECT psi_sum FROM ${tag}_summary) AS DOUBLE), 4)
-             AS psi4,
-           coalesce(CAST((SELECT psi_sum FROM ${tag}_summary) AS DOUBLE),
-             0.0) > 0.2 AS is_shifted,
-           (SELECT n_cells_onesided FROM ${tag}_summary)
-             AS n_cells_onesided,
-           (SELECT CAST(count(*) AS BIGINT) FROM ${tag}_truth) AS n_truth,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM (SELECT pr.query_id, a.neighbor_id,
-                    row_number() OVER (PARTITION BY pr.query_id ORDER BY
-                      ${dotE("pr.e_q", "a.e_c")} / (pr.n_q * a.n_c) DESC,
-                      a.neighbor_id) AS rnk
-                  FROM (SELECT cell, vec_id AS query_id,
-                          embedding AS e_q, nrm AS n_q
-                        FROM ${tag}_ranked
-                        WHERE crnk <= $nProbe AND vec_id % 5 = 0
-                          AND vec_id < $qCap) pr
-                  JOIN (SELECT cell, vec_id AS neighbor_id,
-                          embedding AS e_c, nrm AS n_c
-                        FROM ${tag}_ranked WHERE crnk = 1) a
-                    ON pr.cell = a.cell
-                  WHERE pr.query_id <> a.neighbor_id) i
-            JOIN ${tag}_truth t ON t.query_id = i.query_id
-                               AND t.neighbor_id = i.neighbor_id
-            WHERE i.rnk <= $k) AS n_hit,
-           (SELECT CAST(sum(cc.cnt) AS BIGINT) - $nQueries
-            FROM (SELECT cell FROM ${tag}_ranked
-                  WHERE crnk <= $nProbe AND vec_id % 5 = 0
-                    AND vec_id < $qCap) pp
-            JOIN ${tag}_cc cc USING (cell)) AS n_candidates"""
-    s"""WITH cents_pre(cell, cv) AS (VALUES ${centRows(staticCentroids())}),
-        cents_post(cell, cv) AS (VALUES ${centRows(postCents)}),
-        cur AS (SELECT vec_id, embedding FROM embeddings
-                WHERE vec_id % 5 <> 0
-                UNION ALL
-                SELECT vec_id,
-                  list_transform(embedding, x -> CAST(x + 0.5 AS FLOAT))
-                    AS embedding
-                FROM embeddings WHERE vec_id % 5 = 0),
-        ${ranked("pre", "cents_pre")},
-        ${ranked("post", "cents_post")},
-        ${stat("pre", "pre_bstat", "base", " AND vec_id % 5 <> 0")},
-        ${stat("pre", "pre_cstat", "cur", "")},
-        ${stat("post", "post_cstat", "cur", "")},
-        post_bstat AS (SELECT cell, cur_cnt AS base_cnt,
-            cur_dsum AS base_dsum FROM post_cstat),
-        ${psi("pre")},
-        ${psi("post")},
-        ${impact("pre")},
-        ${impact("post")}
-       SELECT phase, psi4, is_shifted, n_cells_onesided, n_truth, n_hit,
-         round(n_hit / CAST(n_truth AS DOUBLE), 4) AS recall4,
-         n_candidates,
-         round(n_candidates / CAST($nQueries AS DOUBLE), 2)
-           AS cand_per_query2
-       FROM (${sel("pre")} UNION ALL ${sel("post")})
-       ORDER BY phase"""
-  }
-
-  /** DuckDB oracle for [[ivfDrift]]: centroids inlined as VALUES, the
-    * ranked-assignment replay of [[ivfStaticOracle]], same 8-dp decimal
-    * terms, same one-sided-cell accounting, both scenarios replayed
-    * and unioned. */
-  def ivfDriftOracle(): String = {
-    val cents = staticCentroids()
-    val dotE = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    // ranked-assignment replay + per-cell count/distance rollup for one
-    // corpus CTE; columns named by `pre` so base stats join two
-    // scenario stats without collisions
-    def stats(src: String, tag: String, pre: String) =
-      s"""${tag}_scored AS (
-           SELECT v.vec_id, c.cell,
-             ${dotE("v.embedding", "c.cv")} AS dp,
-             sqrt(${dotE("v.embedding", "v.embedding")}) AS nrm,
-             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-               ${dotE("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-           FROM $src v, cents c),
-         ${tag}_stat AS (
-           SELECT cell, CAST(count(*) AS BIGINT) AS ${pre}_cnt,
-             sum(CAST(round(1.0 - dp / nrm, 8) AS DECIMAL(18,8)))
-               AS ${pre}_dsum
-           FROM ${tag}_scored WHERE crnk = 1 GROUP BY cell)"""
-    // per-scenario join/totals/shares/summary over base_stat + the
-    // scenario's cur stat
-    def scen(tag: String) =
-      s"""${tag}_j AS (SELECT coalesce(b.cell, c.cell) AS cell,
-             b.base_cnt, b.base_dsum, c.cur_cnt, c.cur_dsum
-           FROM base_stat b FULL OUTER JOIN ${tag}_stat c
-             ON b.cell = c.cell),
-         ${tag}_tot AS (SELECT CAST(sum(base_cnt) AS BIGINT) AS n_base,
-             CAST(sum(cur_cnt) AS BIGINT) AS n_cur,
-             sum(base_dsum) AS bd, sum(cur_dsum) AS cd FROM ${tag}_j),
-         ${tag}_shares AS (SELECT cell, base_cnt, cur_cnt,
-             base_cnt / CAST(n_base AS DOUBLE) AS base_share,
-             cur_cnt / CAST(n_cur AS DOUBLE) AS cur_share,
-             CASE WHEN base_cnt IS NOT NULL AND cur_cnt IS NOT NULL THEN
-               CAST(round(
-                 (cur_cnt / CAST(n_cur AS DOUBLE)
-                   - base_cnt / CAST(n_base AS DOUBLE))
-                 * ln((cur_cnt / CAST(n_cur AS DOUBLE))
-                   / (base_cnt / CAST(n_base AS DOUBLE))), 8)
-                 AS DECIMAL(18,8)) END AS term
-           FROM ${tag}_j, ${tag}_tot),
-         ${tag}_summary AS (SELECT sum(term) AS psi_sum,
-             CAST(sum(CASE WHEN base_cnt IS NULL OR cur_cnt IS NULL
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_cells_onesided
-           FROM ${tag}_shares)"""
-    def sel(tag: String, label: String) =
-      s"""SELECT '$label' AS scenario, CAST(s.cell AS INTEGER) AS cell,
-           coalesce(s.base_cnt, 0) AS base_cnt,
-           coalesce(s.cur_cnt, 0) AS cur_cnt,
-           round(s.base_share, 6) AS base_share6,
-           round(s.cur_share, 6) AS cur_share6,
-           CAST(s.term AS DOUBLE) AS term8,
-           round(CAST(m.psi_sum AS DOUBLE), 4) AS psi4,
-           m.n_cells_onesided,
-           round(CAST(t.bd AS DOUBLE) / t.n_base, 6) AS base_mdist6,
-           round(CAST(t.cd AS DOUBLE) / t.n_cur, 6) AS cur_mdist6,
-           coalesce(CAST(m.psi_sum AS DOUBLE), 0.0) > 0.2 AS is_shifted
-         FROM ${tag}_shares s, ${tag}_summary m, ${tag}_tot t"""
-    s"""WITH cents(cell, cv) AS (VALUES $centRows),
-        base AS (SELECT vec_id, embedding FROM embeddings
-                 WHERE vec_id % 5 <> 0),
-        delta AS (SELECT vec_id, embedding FROM embeddings
-                  WHERE vec_id % 5 = 0),
-        cur_stable AS (SELECT * FROM base UNION ALL SELECT * FROM delta),
-        cur_shifted AS (SELECT * FROM base UNION ALL
-          SELECT vec_id,
-            list_transform(embedding, x -> CAST(x + 0.5 AS FLOAT))
-              AS embedding
-          FROM delta),
-        ${stats("base", "base", "base")},
-        ${stats("cur_stable", "stable", "cur")},
-        ${stats("cur_shifted", "shifted", "cur")},
-        ${scen("stable")},
-        ${scen("shifted")}
-       ${sel("stable", "stable")}
-       UNION ALL
-       ${sel("shifted", "shifted")}
-       ORDER BY scenario, cell"""
   }
 
   /** PQ-DISTORTION rollup of one corpus under one codebook set: per
@@ -3196,78 +2141,6 @@ object Similarity {
       .orderBy("scenario", "m")
   }
 
-  /** DuckDB replay of [[pqDrift]]: trained codebooks + biases inlined
-    * (the [[pqTrainedOracle]] stance), per-corpus sub-vector explode,
-    * code argmin (biased dot DESC, code ASC), the SAME three-term 8-dp
-    * decimal error, and the shared-baseline join per scenario. */
-  def pqDriftOracle(staleRatio: Double = 1.5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir).select(col("vec_id"), col("embedding"))
-    val cbs = withTrainCache(v.filter(col("vec_id") % 5 =!= 0))(
-      trainPqCodebooks(_))
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val dotE = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val cbRows = (for {
-      m <- 0 until nSub
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})")
-      .mkString(", ")
-    def stats(src: String, tag: String, pre: String) =
-      s"""${tag}_sub AS (SELECT v.vec_id, mm.m AS m,
-             v.embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-           FROM $src v, (SELECT unnest(range(0, $nSub)) AS m) mm),
-         ${tag}_coded AS (SELECT vec_id, m, s, cv, bias FROM (
-             SELECT t.vec_id, t.m, t.s, cb.cv, cb.bias,
-               row_number() OVER (PARTITION BY t.vec_id, t.m
-                 ORDER BY (${dotE("t.s", "cb.cv")} + cb.bias) DESC,
-                   cb.kk) AS r
-             FROM ${tag}_sub t JOIN cb ON cb.m = t.m) WHERE r = 1),
-         ${tag}_stat AS (SELECT m, CAST(count(*) AS BIGINT) AS ${pre}_cnt,
-             sum(CAST(round(${dotE("s", "s")} - 2 * ${dotE("s", "cv")}
-               - 2 * bias, 8) AS DECIMAL(18,8))) AS ${pre}_esum
-           FROM ${tag}_coded GROUP BY m)"""
-    def scen(tag: String) =
-      s"""${tag}_row AS (SELECT b.m, b.base_cnt, c.cur_cnt,
-             round(CAST(b.base_esum AS DOUBLE) / b.base_cnt, 6)
-               AS base_mse6,
-             round(CAST(c.cur_esum AS DOUBLE) / c.cur_cnt, 6) AS cur_mse6
-           FROM base_stat b JOIN ${tag}_stat c USING (m))"""
-    def sel(tag: String, label: String) =
-      s"""SELECT '$label' AS scenario, CAST(m AS INTEGER) AS m,
-           base_cnt, cur_cnt, base_mse6, cur_mse6,
-           round(cur_mse6 / base_mse6, 4) AS ratio4,
-           round(cur_mse6 / base_mse6, 4) > $staleRatio AS is_stale
-         FROM ${tag}_row"""
-    s"""WITH cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        base AS (SELECT vec_id, embedding FROM embeddings
-                 WHERE vec_id % 5 <> 0),
-        delta AS (SELECT vec_id, embedding FROM embeddings
-                  WHERE vec_id % 5 = 0),
-        cur_stable AS (SELECT * FROM base UNION ALL SELECT * FROM delta),
-        cur_shifted AS (SELECT * FROM base UNION ALL
-          SELECT vec_id,
-            list_transform(embedding, x -> CAST(x + 0.5 AS FLOAT))
-              AS embedding
-          FROM delta),
-        ${stats("base", "base", "base")},
-        ${stats("cur_stable", "stable", "cur")},
-        ${stats("cur_shifted", "shifted", "cur")},
-        ${scen("stable")},
-        ${scen("shifted")}
-       ${sel("stable", "stable")}
-       UNION ALL
-       ${sel("shifted", "shifted")}
-       ORDER BY scenario, m"""
-  }
-
   /** [[pqDrift]] against a LIVE index artifact: baseline = the
     * `pq_baseline/` snapshot [[ivfPqIndexAdd]] pins whenever it TRAINS
     * codebooks (fresh add or `retrain = true` — never on a re-sync,
@@ -3371,12 +2244,6 @@ object Similarity {
     servedFromScratch(spark, sfDir, "ivf-index", nQueries)(
       ivfIndexToDir(spark, sfDir, _))(
       annServeSq8FromIndex(spark, _, _, nProbe, k))
-
-  /** Oracle for [[annIvfSq8Indexed]]: the [[ivfSq8TrainedOracle]]
-    * replay over the STATIC quantizer the artifact build pins. */
-  def ivfSq8StaticOracle(nProbe: Int = 4, nQueries: Int = 10, k: Int = 5,
-                         shortlistFactor: Int = 8): String =
-    ivfSq8OracleFor(staticCentroids(), nProbe, nQueries, k, shortlistFactor)
 
   /** §2 #238 — MMR DIVERSITY RE-RANK (Maximal Marginal Relevance,
     * Carbonell & Goldstein 1998): greedy top-k that trades relevance
@@ -3583,140 +2450,6 @@ object Similarity {
       ivfIndexToDir(spark, sfDir, _))(annMmrSq8FromIndex(spark, _, _,
         nProbe, k, shortlistFactor, lambda, preFactor))
 
-  /** DuckDB replay for [[annMmrSq8Indexed]]: [[mmrOracleOver]]'s
-    * greedy rounds fed by the sq8 two-stage shortlist — static-IVF
-    * assignment/probe CTEs, the shared sq8 dequant body scoring the
-    * pre-shortlist, exact rescore cut to f·k — every stage of the
-    * served form exact. */
-  def mmrSq8IndexedOracle(nProbe: Int = 4, nQueries: Int = 10,
-                          k: Int = 5, shortlistFactor: Int = 8,
-                          lambda: Double = 0.7,
-                          preFactor: Int = 2): String = {
-    val dot = mmrDotSql _
-    val centRows = staticCentroids().zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    mmrOracleOver(
-      s"""cents(cell, cv) AS (VALUES $centRows),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        assigned AS (SELECT cell, vec_id AS cand_id, embedding AS e_c,
-                       nrm AS n_c FROM ranked WHERE crnk = 1),
-        dq AS ($sq8DequantCteBody),
-        acand AS (SELECT a.cell, a.cand_id, d.d,
-                    sqrt(${dot("d.d", "d.d")}) AS n_d
-                  FROM assigned a JOIN dq d ON d.vec_id = a.cand_id),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q,
-                     nrm AS n_q
-                   FROM ranked WHERE crnk <= $nProbe
-                     AND vec_id < $nQueries),
-        pre AS (SELECT query_id, cand_id FROM (
-            SELECT p.query_id, n.cand_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                (${dot("p.e_q", "n.d")} / (p.n_q * n.n_d)) DESC,
-                n.cand_id) AS r
-            FROM probes p JOIN acand n ON n.cell = p.cell
-            WHERE n.cand_id <> p.query_id)
-          WHERE r <= ${preFactor * shortlistFactor * k}),
-        short AS (SELECT query_id, cand_id, cosq FROM (
-            SELECT pr.query_id, pr.cand_id,
-              ${dot("qv.embedding", "cv.embedding")}
-                / (qv.nrm * cv.nrm) AS cosq,
-              row_number() OVER (PARTITION BY pr.query_id ORDER BY
-                ${dot("qv.embedding", "cv.embedding")}
-                  / (qv.nrm * cv.nrm) DESC, pr.cand_id) AS r
-            FROM pre pr
-            JOIN nv qv ON qv.vec_id = pr.query_id
-            JOIN nv cv ON cv.vec_id = pr.cand_id)
-          WHERE r <= ${shortlistFactor * k})""", k, lambda)
-  }
-
-  /** DuckDB replay for [[annMmrPqIndexed]]: [[mmrOracleOver]]'s greedy
-    * rounds fed by the ADC two-stage shortlist — both trained models
-    * inlined (the [[ivfPqTrainedOracle]] stance), coarse assignment /
-    * probing / PQ encoding / ADC pre-shortlist / exact rescore cut to
-    * f·k, every stage of the served form exact. */
-  def mmrPqIndexedOracle(nCells: Int = 16, nProbe: Int = 4,
-                         nQueries: Int = 10, k: Int = 5,
-                         shortlistFactor: Int = 8,
-                         lambda: Double = 0.7,
-                         preFactor: Int = 2): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
-    val (cents, cbs) =
-      withTrainCache(v)(vc => (trainCentroids(vc, nCells),
-        trainPqCodebooks(vc)))
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val dot = mmrDotSql _
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    val (cbRows, cbLit) = pqCbLits(cbs)
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    val adc = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"p.e_s[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    mmrOracleOver(
-      s"""cents(cell, cv) AS (VALUES $centRows),
-        cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM embeddings,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS MATERIALIZED (SELECT vec_id, $codePivot
-                               FROM coded GROUP BY 1),
-        acodes AS (SELECT a.cell, c.* FROM codes c
-                   JOIN (SELECT vec_id, cell FROM ranked WHERE crnk = 1) a
-                     ON a.vec_id = c.vec_id),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_s
-               FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries),
-        pre AS MATERIALIZED (SELECT query_id, cand_id FROM (
-            SELECT p.query_id, n.vec_id AS cand_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
-            FROM probes p, acodes n, cbl
-            WHERE n.cell = p.cell AND n.vec_id <> p.query_id)
-          WHERE r <= ${preFactor * shortlistFactor * k}),
-        -- MATERIALIZED: the greedy skeleton references short/pairs once
-        -- per unrolled round; inlining would re-evaluate the full PQ
-        -- encode + ADC chain 2k+ times and exhaust the checker's memory
-        short AS MATERIALIZED (SELECT query_id, cand_id, cosq FROM (
-            SELECT pr.query_id, pr.cand_id,
-              ${dot("qv.embedding", "cv.embedding")}
-                / (qv.nrm * cv.nrm) AS cosq,
-              row_number() OVER (PARTITION BY pr.query_id ORDER BY
-                ${dot("qv.embedding", "cv.embedding")}
-                  / (qv.nrm * cv.nrm) DESC, pr.cand_id) AS r
-            FROM pre pr
-            JOIN nv qv ON qv.vec_id = pr.query_id
-            JOIN nv cv ON cv.vec_id = pr.cand_id)
-          WHERE r <= ${shortlistFactor * k})""", k, lambda)
-  }
-
   /** §2 #240 — MMR FROM THE ARTIFACT: build the standard IVF index once
     * (static quantizer, the [[annIvfIndexed]] stance), then MMR-select
     * the query set through [[annMmrFromIndex]] at production probes —
@@ -3728,127 +2461,6 @@ object Similarity {
     servedFromScratch(spark, sfDir, "ivf-index", nQueries)(
       ivfIndexToDir(spark, sfDir, _))(annMmrFromIndex(spark, _, _, nProbe,
         k, shortlistFactor, lambda))
-
-  /** DuckDB replay for [[annMmr]] — static SQL with the k greedy
-    * rounds UNROLLED (sel1..selK + cumulative selected sets): the same
-    * shortlist/pair arithmetic, the same `λ·cosq − (1−λ)·max` formula
-    * with the same literal λ, the same (mmr DESC, id) tie-break. */
-  /** The DuckDB dot-product fragment the MMR oracle builders share
-    * (the file's older oracles predate the helper and keep their local
-    * copies — consolidation tracked as cleanup, not a defect). */
-  private def mmrDotSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(list_zip($a, $b),
-        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-
-  def mmrOracle(nQueries: Int = 10, k: Int = 5, shortlistFactor: Int = 8,
-                lambda: Double = 0.7): String = {
-    val dot = mmrDotSql _
-    mmrOracleOver(
-      s"""short AS (SELECT query_id, cand_id, cosq FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-              ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosq,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-                c.vec_id) AS r
-            FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE r <= ${shortlistFactor * k})""", k, lambda)
-  }
-
-  /** DuckDB replay for [[annMmrIndexed]]: [[mmrOracle]]'s greedy rounds
-    * over the IVF-PROBED shortlist — the [[ivfStaticOracle]] assignment
-    * CTEs (static centroid VALUES, argmax assignment, nProbe probes)
-    * feeding the same top-(f·k) ranking, so every stage of the served
-    * form is replayed exactly. */
-  def mmrIndexedOracle(nProbe: Int = 4, nQueries: Int = 10, k: Int = 5,
-                       shortlistFactor: Int = 8,
-                       lambda: Double = 0.7): String = {
-    val dot = mmrDotSql _
-    val centRows = staticCentroids().zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    mmrOracleOver(
-      s"""cents(cell, cv) AS (VALUES $centRows),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        assigned AS (SELECT cell, vec_id AS cand_id, embedding AS e_c,
-                       nrm AS n_c FROM ranked WHERE crnk = 1),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q,
-                     nrm AS n_q
-                   FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries),
-        short AS (SELECT query_id, cand_id, cosq FROM (
-            SELECT p.query_id, a.cand_id,
-              ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cosq,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
-                a.cand_id) AS r
-            FROM probes p JOIN assigned a ON p.cell = a.cell
-            WHERE p.query_id <> a.cand_id)
-          WHERE r <= ${shortlistFactor * k})""", k, lambda)
-  }
-
-  /** The shared MMR-oracle skeleton: `nv` (normed vectors) + the
-    * caller's shortlist CTE chain (must define `short(query_id,
-    * cand_id, cosq)`) + the pair stage + the k UNROLLED greedy rounds —
-    * one definition, so the brute and artifact-served replays cannot
-    * drift in the selection arithmetic. */
-  private def mmrOracleOver(shortCtes: String, k: Int,
-                            lambda: Double): String = {
-    val dot = mmrDotSql _
-    val lam = lambda.toString
-    val oneMinus = (1.0 - lambda).toString
-    // k = 1 has no later rounds: emit NO trailing CTE (a dangling
-    // comma after sel1 is a parser error, not a wrong answer)
-    val rounds = (2 to k).map { r =>
-      s"""cum${r - 1} AS (${(1 until r)
-          .map(i => s"SELECT query_id, cand_id FROM sel$i")
-          .mkString(" UNION ALL ")}),
-        sel$r AS (SELECT query_id, cand_id, cosq, mmr FROM (
-            SELECT s.query_id, s.cand_id, s.cosq,
-              ($lam * s.cosq - $oneMinus * m.msim) AS mmr,
-              row_number() OVER (PARTITION BY s.query_id ORDER BY
-                ($lam * s.cosq - $oneMinus * m.msim) DESC, s.cand_id) AS r
-            FROM short s
-            JOIN (SELECT p.query_id, p.a_id, max(p.cab) AS msim
-                  FROM pairs p
-                  JOIN cum${r - 1} c ON c.query_id = p.query_id
-                                    AND c.cand_id = p.b_id
-                  GROUP BY 1, 2) m
-              ON m.query_id = s.query_id AND m.a_id = s.cand_id
-            WHERE NOT EXISTS (SELECT 1 FROM cum${r - 1} x
-                              WHERE x.query_id = s.query_id
-                                AND x.cand_id = s.cand_id))
-          WHERE r = 1)"""
-    }.mkString(",\n        ")
-    val unionAll = (1 to k)
-      .map(r => s"SELECT query_id, cand_id, $r AS rnk, cosq, mmr FROM sel$r")
-      .mkString(" UNION ALL ")
-    s"""WITH nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        $shortCtes,
-        pairs AS (SELECT a.query_id, a.cand_id AS a_id, b.cand_id AS b_id,
-            ${dot("ea.embedding", "eb.embedding")} / (ea.nrm * eb.nrm) AS cab
-          FROM short a
-          JOIN short b ON b.query_id = a.query_id
-                      AND b.cand_id <> a.cand_id
-          JOIN nv ea ON ea.vec_id = a.cand_id
-          JOIN nv eb ON eb.vec_id = b.cand_id),
-        sel1 AS (SELECT query_id, cand_id, cosq,
-            ($lam * cosq - $oneMinus * 0.0) AS mmr FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY
-              ($lam * cosq - $oneMinus * 0.0) DESC, cand_id) AS r
-            FROM short)
-          WHERE r = 1)${if (rounds.isEmpty) "" else ",\n        " + rounds}
-        SELECT query_id, cand_id AS neighbor_id, CAST(rnk AS INTEGER)
-            AS rnk,
-          round(cosq, 6) AS cos6, round(mmr, 6) AS mmr6
-        FROM ($unionAll)
-        ORDER BY query_id, rnk"""
-  }
 
   /** §2 #96b — INCREMENTAL semantic-dedup decisions: a delta batch of
     * (vec_id, embedding) vectors decided against an accumulated base of
@@ -3908,50 +2520,6 @@ object Similarity {
         when(coalesce(col("blocked"), lit(false)), lit("near"))
           .otherwise(lit("kept")).as("decision"))
       .orderBy("vec_id")
-  }
-
-  /** Oracle for [[semanticDedupIncremental]]: trained centroids
-    * inlined, ranked assignment, then the same order-free pairwise
-    * rule — EXISTS a same-cell cosine ≥ tau neighbor that is base or a
-    * smaller delta id. */
-  def semanticDedupIncrementalOracle(nCells: Int = 16,
-                                     tau: Double = 0.4): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val cents = withTrainCache(vectors(spark, sfDir))(
-      trainCentroids(_, nCells))
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        cents(cell, cv) AS (VALUES $centRows),
-        assigned AS (SELECT vec_id, embedding, nrm, cell,
-                            vec_id % 5 = 0 AS is_base FROM (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM n v, cents c) WHERE crnk = 1),
-        dup AS (SELECT a.vec_id
-                FROM assigned a JOIN assigned b
-                  ON a.cell = b.cell AND NOT a.is_base
-                  AND (b.is_base OR b.vec_id < a.vec_id)
-                  AND a.vec_id <> b.vec_id
-                WHERE ${dot("a.embedding", "b.embedding")}
-                        / (a.nrm * b.nrm) >= $tau
-                GROUP BY 1)
-        SELECT a.vec_id, a.cell,
-               CASE WHEN dup.vec_id IS NOT NULL THEN 'near'
-                    ELSE 'kept' END AS decision
-        FROM assigned a LEFT JOIN dup USING (vec_id)
-        WHERE NOT a.is_base
-        ORDER BY a.vec_id"""
   }
 
   /** §2 #100 — HARD-NEGATIVE mining for contrastive training: for each
@@ -4202,88 +2770,6 @@ object Similarity {
     decontaminateSemanticFrom(c, evalProbesOf(e, cents, nProbe), cents, tau)
   }
 
-  /** Oracle for [[decontaminateSemantic]]: trained centroids inlined;
-    * both splits' ranked assignment, the probe join, the tau gate, and
-    * the (cos DESC, id ASC) top-match replayed exactly. */
-  def decontaminateSemanticOracle(nCells: Int = 16, nProbe: Int = 4,
-                                  tau: Double = 0.4): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val cents = trainCentroids(vectors(spark, sfDir), nCells)
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        cents(cell, cv) AS (VALUES $centRows),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM n v, cents c),
-        corpus AS (SELECT vec_id, embedding, nrm, cell FROM ranked
-                   WHERE crnk = 1 AND vec_id % 10 <> 0),
-        probes AS (SELECT vec_id AS eval_id, embedding, nrm, cell
-                   FROM ranked WHERE crnk <= $nProbe AND vec_id % 10 = 0),
-        hits AS (SELECT c.vec_id, p.eval_id,
-                   ${dot("c.embedding", "p.embedding")} / (c.nrm * p.nrm)
-                     AS cos
-                 FROM corpus c JOIN probes p ON p.cell = c.cell
-                 WHERE ${dot("c.embedding", "p.embedding")}
-                         / (c.nrm * p.nrm) >= $tau),
-        verdicts AS (SELECT vec_id,
-                       CAST(count(*) AS BIGINT) AS n_matches,
-                       first(eval_id ORDER BY cos DESC, eval_id) AS eval_id,
-                       round(max(cos), 6) AS max_cos6
-                     FROM hits GROUP BY 1)
-        SELECT c.vec_id, v.n_matches IS NOT NULL AS contaminated,
-               coalesce(v.n_matches, 0) AS n_matches,
-               v.eval_id, v.max_cos6
-        FROM corpus c LEFT JOIN verdicts v ON v.vec_id = c.vec_id
-        ORDER BY c.vec_id"""
-  }
-
-  /** Oracle for [[semanticDedup]]: trained centroids inlined, ranked
-    * assignment + within-cell pairwise replay. */
-  def semanticDedupOracle(nCells: Int = 16, tau: Double = 0.4): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val cents = trainCentroids(vectors(spark, sfDir), nCells)
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        cents(cell, cv) AS (VALUES $centRows),
-        assigned AS (SELECT vec_id, embedding, nrm, cell FROM (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM n v, cents c) WHERE crnk = 1),
-        dup AS (SELECT b.vec_id, min(a.vec_id) AS dup_of
-                FROM assigned a JOIN assigned b
-                  ON a.cell = b.cell AND a.vec_id < b.vec_id
-                WHERE ${dot("a.embedding", "b.embedding")}
-                        / (a.nrm * b.nrm) >= $tau
-                GROUP BY 1)
-        SELECT s.vec_id, s.cell, dup.dup_of IS NOT NULL AS dropped,
-               dup.dup_of
-        FROM assigned s LEFT JOIN dup ON dup.vec_id = s.vec_id
-        ORDER BY s.vec_id"""
-  }
-
   /** §2 #233 — DECONTAMINATION-GATE RECALL PRICING: how much of the
     * brute-force contamination verdict does the cell-probed
     * [[decontaminateSemantic]] gate recover, per (nProbe, tau)
@@ -4356,225 +2842,16 @@ object Similarity {
       .orderBy("n_probe", "tau")
   }
 
-  /** DuckDB oracle for [[deconRecallEval]]: trained centroids inlined;
-    * ranked probe assignment, the reachable-pair frame, the bounded
-    * brute truth, and every (n_probe, tau) counting row replayed. */
-  def deconRecallEvalOracle(nCells: Int = 16,
-                            probeCounts: Seq[Int] = Seq(1, 2, 4),
-                            taus: Seq[Double] = Seq(0.3, 0.4),
-                            nEval: Int = 50): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val cents = trainCentroids(vectors(spark, sfDir), nCells)
-    val maxProbe = math.min(probeCounts.max, cents.length)
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    val gridRows = probeCounts.flatMap(np =>
-      taus.map(tau => s"($np, $tau)")).mkString(", ")
-    val minTau = taus.min
-    s"""WITH cents(cell, cv) AS (VALUES $centRows),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        corpus AS (SELECT vec_id, embedding, nrm, cell FROM ranked
-                   WHERE crnk = 1 AND vec_id % 10 <> 0),
-        evals AS (SELECT vec_id AS eval_id, embedding, nrm
-                  FROM nv WHERE vec_id % 10 = 0
-                    AND vec_id < ${nEval * 10}),
-        probes AS (SELECT vec_id AS eval_id, embedding, nrm, cell,
-                     crnk AS probe_rank
-                   FROM ranked WHERE crnk <= $maxProbe
-                     AND vec_id % 10 = 0 AND vec_id < ${nEval * 10}),
-        pairs AS (SELECT c.vec_id, p.probe_rank,
-                    ${dot("c.embedding", "p.embedding")} / (c.nrm * p.nrm)
-                      AS cos
-                  FROM corpus c JOIN probes p ON p.cell = c.cell
-                  WHERE ${dot("c.embedding", "p.embedding")}
-                          / (c.nrm * p.nrm) >= $minTau),
-        brute AS (SELECT c.vec_id,
-                    ${dot("c.embedding", "e.embedding")} / (c.nrm * e.nrm)
-                      AS cos
-                  FROM corpus c, evals e
-                  WHERE ${dot("c.embedding", "e.embedding")}
-                          / (c.nrm * e.nrm) >= $minTau),
-        grid(n_probe, tau) AS (VALUES $gridRows)
-       SELECT g.n_probe, CAST(g.tau AS DOUBLE) AS tau,
-         (SELECT CAST(count(DISTINCT vec_id) AS BIGINT) FROM brute
-          WHERE cos >= g.tau) AS n_brute,
-         (SELECT CAST(count(DISTINCT vec_id) AS BIGINT) FROM pairs
-          WHERE probe_rank <= g.n_probe AND cos >= g.tau) AS n_flagged,
-         round((SELECT count(DISTINCT vec_id) FROM pairs
-                WHERE probe_rank <= g.n_probe AND cos >= g.tau)
-           / CAST((SELECT count(DISTINCT vec_id) FROM brute
-                   WHERE cos >= g.tau) AS DOUBLE), 4) AS recall4
-       FROM grid g
-       ORDER BY g.n_probe, g.tau"""
-  }
-
   /** Random hyperplanes for LSH signatures: nBits × dim, fixed seed. */
   private[graft] def hyperplanes(nBits: Int, dim: Int): Seq[Seq[Double]] = {
     val rnd = new scala.util.Random(7)
     Seq.fill(nBits)(Seq.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** DuckDB oracle for [[annLsh]]. The hyperplanes are FIXED (seeded),
-    * so the whole pipeline — sign bits, banding, candidate pairs,
-    * cosine, ranking — is static SQL: the planes are inlined as list
-    * literals (Double.toString round-trips exactly, and the left-fold
-    * dot contract matches `VectorFunctions.dot` bit-for-bit, as already
-    * proven by the embedding_dedup oracle). This flips ann_lsh from a
-    * weak rows-only check to a full value-hash oracle match. */
-  def lshOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val planes = hyperplanes(16, 64)
-    val bitExprs = planes.map { p =>
-      val lit = p.mkString("[", ", ", "]")
-      s"CASE WHEN ${dot("embedding", lit)} > 0 THEN '1' ELSE '0' END"
-    }.mkString("concat(", ", ", ")")
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        bits AS (SELECT vec_id, embedding, nrm, $bitExprs AS bits FROM n),
-        banded AS (
-          SELECT vec_id, b.b || ':' || substring(bits, b.b * 2 + 1, 2)
-                   AS band_key
-          FROM bits, (SELECT unnest(range(0, 8)) AS b) b),
-        pair_ids AS (
-          SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-          FROM banded q JOIN banded c ON q.band_key = c.band_key
-          WHERE q.vec_id < $nQueries AND q.vec_id <> c.vec_id)
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT p.query_id, p.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
-            CAST(row_number() OVER (PARTITION BY p.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
-              p.neighbor_id) AS INTEGER) AS rnk
-          FROM pair_ids p
-          JOIN bits qv ON qv.vec_id = p.query_id
-          JOIN bits cv ON cv.vec_id = p.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
-  }
-
-  /** DuckDB oracle for [[annIvfStatic]]: centroid rows inlined as VALUES
-    * list literals; assignment/probing replayed with a ranked 16-way
-    * expansion (the ORACLE may brute-force what the engine does
-    * map-only — that asymmetry is the point). */
-  def ivfStaticOracle(nProbe: Int = 4, nQueries: Int = 10,
-                      k: Int = 5): String =
-    ivfOracleFor(staticCentroids(), nProbe, nQueries, k)
-
-  /** Oracle for the TRAINED IVF query: inlines the centroid matrix the
-    * engine deterministically trains on the verify SF (set by Verify via
-    * -Dgraft.oracle.sfdir), so everything downstream of training —
-    * assignment, probing, ranking — is oracle-checked exactly. Training
-    * itself is covered by the determinism/unit-norm property spec; the
-    * oracle takes the quantizer as given, as any oracle must for a
-    * data-dependent model. */
-  def ivfTrainedOracle(nCells: Int = 16, nProbe: Int = 4, nQueries: Int = 10,
-                       k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    ivfOracleFor(trainCentroids(vectors(spark, sfDir), nCells),
-      nProbe, nQueries, k)
-  }
-
-  private def ivfOracleFor(cents: Array[Array[Double]], nProbe: Int,
-                           nQueries: Int, k: Int): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        cents(cell, cv) AS (VALUES $centRows),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM n v, cents c),
-        assigned AS (SELECT cell, vec_id AS neighbor_id, embedding AS e_c,
-                       nrm AS n_c FROM ranked WHERE crnk = 1),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q,
-                     nrm AS n_q
-                   FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries)
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT p.query_id, a.neighbor_id,
-            ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cos,
-            CAST(row_number() OVER (PARTITION BY p.query_id ORDER BY
-              ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
-              a.neighbor_id) AS INTEGER) AS rnk
-          FROM probes p JOIN assigned a ON p.cell = a.cell
-          WHERE p.query_id <> a.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
-  }
-
   /** `−‖c‖²/2` per codeword: the bias that turns a dot-product argmax
     * into an L2 argmin over UNNORMALIZED codebooks. */
-  private def l2Biases(cb: Array[Array[Double]]): Array[Double] =
+  private[graft] def l2Biases(cb: Array[Array[Double]]): Array[Double] =
     cb.map(c => -0.5 * c.map(x => x * x).sum)
-
-  /** (VALUES rows, nested array literal) for a codebook set — the two
-    * inline forms every PQ-family oracle embeds; built HERE once so a
-    * multi-codebook oracle (the recall table prices raw + residual +
-    * OPQ off one statement) cannot drift between its copies. */
-  private def pqCbLits(cbs: Array[Array[Array[Double]]])
-      : (String, String) = {
-    val rows = (for {
-      m <- cbs.indices
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})").mkString(", ")
-    val lit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    (rows, lit)
-  }
-
-  /** The sq8 dequantized-corpus CTE body — embedding_quantize's exact
-    * per-element max-abs formula, defined ONCE and shared by every
-    * oracle that replays int8 serving ([[sq8Oracle]], the recall
-    * table, [[ivfSq8OracleFor]]), so the clamp/round arithmetic cannot
-    * drift between the variants it prices. */
-  // private[graft]: Curation's fused-retrieval oracle replays the sq8
-  // vector leg with the SAME clamp/round body (the shared-body stance)
-  private[graft] def sq8DequantCteBody: String =
-    sq8DequantCteBodyOver("embeddings")
-
-  /** [[sq8DequantCteBody]] over an arbitrary (vec_id, embedding)
-    * source CTE/table — the whitened-space replay reuses the exact
-    * clamp/round arithmetic over its transformed corpus. */
-  private def sq8DequantCteBodyOver(src: String): String =
-    s"""SELECT vec_id,
-                 list_transform(embedding,
-                   v -> least(greatest(
-                          round(CAST(v AS DOUBLE) * scale), -127.0),
-                          127.0) / scale) AS d
-               FROM (SELECT vec_id, embedding,
-                       CASE WHEN maxabs > 0 THEN 127.0 / maxabs
-                            ELSE 1.0 END AS scale
-                     FROM (SELECT vec_id, embedding,
-                             list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                               list_transform(embedding,
-                                 v -> abs(CAST(v AS DOUBLE)))),
-                               (a, b) -> greatest(a, b)) AS maxabs
-                           FROM $src))"""
 
   /** PQ codebooks: one k-means quantizer PER SUB-SPACE. Unlike the IVF
     * coarse quantizer these are PLAIN L2 k-means — codewords keep their
@@ -4683,41 +2960,6 @@ object Similarity {
       TopK(k, shortlistFactor))
   }
 
-  /** DuckDB replay for [[annSq8]] — static SQL: per-element max-abs
-    * quantize/clamp/dequantize (the embedding_quantize oracle's exact
-    * formula), stage-1 cosine as three left folds, the same
-    * shortlist-then-exact-re-rank tail as [[pqOracleFor]]. */
-  def sq8Oracle(nQueries: Int = 10, k: Int = 5,
-                shortlistFactor: Int = 8): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    s"""WITH nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        dq AS (${sq8DequantCteBody}),
-        short AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                (${dot("q.embedding", "n.d")}
-                   / (sqrt(${dot("q.embedding", "q.embedding")})
-                      * sqrt(${dot("n.d", "n.d")}))) DESC,
-                n.vec_id) AS r
-            FROM embeddings q JOIN dq n ON n.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE r <= ${shortlistFactor * k})
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
-            CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
-              s.neighbor_id) AS INTEGER) AS rnk
-          FROM short s
-          JOIN nv qv ON qv.vec_id = s.query_id
-          JOIN nv cv ON cv.vec_id = s.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
-  }
-
   /** §2 #236 — IVF-SQ8 (the FAISS `IndexIVFScalarQuantizer(QT_8bit)`
     * composition): the coarse quantizer (#39/#66) composed with int8
     * scalar quantization (#234) — the sub-linear-scan × recall-free-
@@ -4741,72 +2983,6 @@ object Similarity {
     val v = vectors(spark, sfDir)
     serveFirst(v, nQueries, Some(withTrainCache(v)(trainCentroids(_, nCells))),
       nProbe, Sq8, TopK(k))
-  }
-
-  /** DuckDB replay for [[annIvfSq8]]: trained centroids inlined (the
-    * [[ivfTrainedOracle]] stance), then cell assignment/probing exactly
-    * as [[ivfPqOracleFor]] and the sq8 scoring exactly as [[sq8Oracle]]
-    * — the two proven replays composed. */
-  def ivfSq8TrainedOracle(nCells: Int = 16, nProbe: Int = 4,
-                          nQueries: Int = 10, k: Int = 5,
-                          shortlistFactor: Int = 8): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
-    val cents = withTrainCache(v)(trainCentroids(_, nCells))
-    ivfSq8OracleFor(cents, nProbe, nQueries, k, shortlistFactor)
-  }
-
-  /** [[ivfSq8TrainedOracle]]'s replay for a GIVEN quantizer — shared
-    * with the static-quantizer artifact leg ([[annIvfSq8Indexed]]),
-    * which serves bit-identically by construction. */
-  private def ivfSq8OracleFor(cents: Array[Array[Double]],
-                              nProbe: Int, nQueries: Int, k: Int,
-                              shortlistFactor: Int): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    s"""WITH cents(cell, cv) AS (VALUES $centRows),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        dq AS (${sq8DequantCteBody}),
-        acand AS (SELECT a.cell, d.vec_id, d.d FROM dq d
-                  JOIN (SELECT vec_id, cell FROM ranked WHERE crnk = 1) a
-                    ON a.vec_id = d.vec_id),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q
-                   FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries),
-        short AS (SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                (${dot("p.e_q", "n.d")}
-                   / (sqrt(${dot("p.e_q", "p.e_q")})
-                      * sqrt(${dot("n.d", "n.d")}))) DESC,
-                n.vec_id) AS r
-            FROM probes p, acand n
-            WHERE n.cell = p.cell AND n.vec_id <> p.query_id)
-          WHERE r <= ${shortlistFactor * k})
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
-            CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
-              s.neighbor_id) AS INTEGER) AS rnk
-          FROM short s
-          JOIN nv qv ON qv.vec_id = s.query_id
-          JOIN nv cv ON cv.vec_id = s.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
   }
 
   /** §2 #90 — IVFADC (Jégou et al. 2011 §IV): the coarse quantizer
@@ -4859,7 +3035,7 @@ object Similarity {
     * never rounded back to float. zip_with is CodegenFallback, but it
     * runs once per corpus ROW on map-only passes (train/encode), never
     * on the per-pair ADC hot path. */
-  private def residualAssigned(v: DataFrame,
+  private[graft] def residualAssigned(v: DataFrame,
                                cents: Array[Array[Double]]): DataFrame =
     v.select(col("vec_id"), col("embedding"),
         element_at(graft.functions.VectorQuantize.nearestCells(
@@ -4905,109 +3081,6 @@ object Similarity {
     }
     serveFirst(v, nQueries, Some(cents), nProbe, Pq(cbs, Some(cents)),
       TopK(k))
-  }
-
-  /** Oracle for [[annIvfPqResidual]]: both trained models inlined (the
-    * [[ivfTrainedOracle]] stance); coarse assignment, the DOUBLE
-    * residual subtract, residual PQ encoding, the centroid-plus-codeword
-    * ADC, shortlist, and re-rank replayed exactly. */
-  def ivfPqResidualTrainedOracle(nCells: Int = 16, nProbe: Int = 4,
-                                 nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
-    val (cents, cbs) = withTrainCache(v) { vc =>
-      val cents = trainCentroids(vc, nCells)
-      (cents, trainPqCodebooks(
-        residualAssigned(vc, cents).select(col("vec_id"),
-          col("res").as("embedding"))))
-    }
-    ivfPqResidualOracleFor(cents, cbs, nProbe, nQueries, k)
-  }
-
-  private def ivfPqResidualOracleFor(cents: Array[Array[Double]],
-                                     cbs: Array[Array[Array[Double]]],
-                                     nProbe: Int, nQueries: Int,
-                                     k: Int): String = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    val cbRows = (for {
-      m <- 0 until nSub
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})")
-      .mkString(", ")
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    // centroid term FIRST, then sub-spaces left to right — the engine's
-    // reduceLeft order
-    val adc = (s"${dot("p.e_q", "ct.cv")}" +: (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"p.e_q[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }).mkString(" + ")
-    val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    s"""WITH cents(cell, cv) AS (VALUES $centRows),
-        cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        resid AS (SELECT r.vec_id, r.cell,
-            list_transform(list_zip(r.embedding, c.cv),
-              x -> CAST(x[1] AS DOUBLE) - x[2]) AS re
-          FROM (SELECT vec_id, embedding, cell FROM ranked WHERE crnk = 1) r
-          JOIN cents c ON c.cell = r.cell),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  re[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM resid,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        acodes AS (SELECT a.cell, c.* FROM codes c
-                   JOIN (SELECT vec_id, cell FROM resid) a
-                     ON a.vec_id = c.vec_id),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q
-                   FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries),
-        short AS (SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
-            FROM probes p, cents ct, acodes n, cbl
-            WHERE ct.cell = p.cell AND n.cell = p.cell
-              AND n.vec_id <> p.query_id)
-          WHERE r <= ${8 * k})
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
-            CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
-              s.neighbor_id) AS INTEGER) AS rnk
-          FROM short s
-          JOIN nv qv ON qv.vec_id = s.query_id
-          JOIN nv cv ON cv.vec_id = s.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
   }
 
   /** PQ (ADC) ACCELERATION LEG for the IVF index artifact — the
@@ -5388,207 +3461,6 @@ object Similarity {
       // (residual → 4) is spec-pinned separately in SimilaritySpec.
       annServeFromPqIndex(spark, _, _, nProbe, k, shortlistFactor = 8))
 
-  /** Oracle for [[annIvfPq]]: both trained models inlined (the
-    * [[ivfTrainedOracle]] stance); coarse assignment, probing, PQ
-    * encoding, ADC, shortlist, and re-rank replayed exactly. */
-  def ivfPqTrainedOracle(nCells: Int = 16, nProbe: Int = 4,
-                         nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
-    ivfPqOracleFor(trainCentroids(v, nCells), trainPqCodebooks(v),
-      nProbe, nQueries, k)
-  }
-
-  /** Oracle for [[annIvfPqOpqIndexed]]: the [[ivfPqOracleFor]] replay
-    * with the trained rotation inlined — codes from the rotated
-    * corpus, ADC off the rotated query, exact re-rank unchanged. */
-  def ivfPqOpqTrainedOracle(nCells: Int = 16, nProbe: Int = 4,
-                            nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
-    val (cents, rO, cbsO) = withTrainCache(v) { vc =>
-      val c = trainCentroids(vc, nCells)
-      val (r, cb) = trainOpqRotation(vc)
-      (c, r, cb)
-    }
-    ivfPqOracleFor(cents, cbsO, nProbe, nQueries, k, Some(rO))
-  }
-
-  private def ivfPqOracleFor(cents: Array[Array[Double]],
-                             cbs: Array[Array[Array[Double]]],
-                             nProbe: Int, nQueries: Int, k: Int,
-                             rotation: Option[Array[Array[Double]]] = None)
-      : String = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    val cbRows = (for {
-      m <- 0 until nSub
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})")
-      .mkString(", ")
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    // ADC reads the query in ENCODING space (e_s = R·q on a rotated
-    // leg, the raw query otherwise)
-    val adc = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"p.e_s[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    val rotCtes = rotation.map(r => opqRotCte(r) + ",\n        ")
-      .getOrElse("")
-    val encSrc = if (rotation.isDefined) "rot" else "embeddings"
-    val probesCte = rotation match {
-      case Some(_) =>
-        s"""probes AS (SELECT r.cell, r.vec_id AS query_id,
-                 rt.embedding AS e_s
-               FROM ranked r JOIN rot rt ON rt.vec_id = r.vec_id
-               WHERE r.crnk <= $nProbe AND r.vec_id < $nQueries)"""
-      case None =>
-        s"""probes AS (SELECT cell, vec_id AS query_id, embedding AS e_s
-               FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries)"""
-    }
-    s"""WITH cents(cell, cv) AS (VALUES $centRows),
-        cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        ${rotCtes}nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM $encSrc,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        acodes AS (SELECT a.cell, c.* FROM codes c
-                   JOIN (SELECT vec_id, cell FROM ranked WHERE crnk = 1) a
-                     ON a.vec_id = c.vec_id),
-        $probesCte,
-        short AS (SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
-            FROM probes p, acodes n, cbl
-            WHERE n.cell = p.cell AND n.vec_id <> p.query_id)
-          WHERE r <= ${8 * k})
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
-            CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
-              s.neighbor_id) AS INTEGER) AS rnk
-          FROM short s
-          JOIN nv qv ON qv.vec_id = s.query_id
-          JOIN nv cv ON cv.vec_id = s.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
-  }
-
-  /** Oracle for [[annPq]]: inlines the codebooks the engine
-    * deterministically trains on the verify SF (the
-    * [[ivfTrainedOracle]] stance — training is covered by the
-    * determinism property spec; encode, ADC, and rank are replayed
-    * EXACTLY downstream of the model). */
-  def pqTrainedOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    pqOracleFor(trainPqCodebooks(vectors(spark, sfDir)), nQueries, k)
-  }
-
-  /** DuckDB replay for a GIVEN codebook set: per-sub-space code
-    * assignment via a ranked 16-way expansion (dot DESC, code ASC —
-    * [[graft.functions.NearestCells]]' exact tie-break), ADC summed in
-    * the same fixed sub-space order. */
-  private def pqOracleFor(cbs: Array[Array[Array[Double]]],
-                          nQueries: Int, k: Int): String = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    // bias inlined as the SAME Scala-computed double the kernel adds,
-    // so `dot + bias` is bit-identical in both engines
-    val cbRows = (for {
-      m <- 0 until nSub
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})")
-      .mkString(", ")
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    val adc = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    s"""WITH cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM embeddings,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        short AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
-            FROM embeddings q, codes n, cbl
-            WHERE q.vec_id < $nQueries AND n.vec_id <> q.vec_id)
-          WHERE r <= ${8 * k})
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
-            CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
-              s.neighbor_id) AS INTEGER) AS rnk
-          FROM short s
-          JOIN nv qv ON qv.vec_id = s.query_id
-          JOIN nv cv ON cv.vec_id = s.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
-  }
-
   /** R·x as a column: one codegen'd dot per output dimension over the
     * broadcast rotation rows — map-only, like every encode step in the
     * PQ family. Output is `array<double>` (the trainers' and ADC's
@@ -5677,97 +3549,6 @@ object Similarity {
     val v = vectors(spark, sfDir)
     val (r, cbs) = withTrainCache(v)(trainOpqRotation(_))
     serveFirst(v, nQueries, None, 0, Pq(cbs, rotation = Some(r)), TopK(k))
-  }
-
-  /** DuckDB oracle for [[annPqOpq]]: the trained rotation AND
-    * codebooks inlined; the rotation replayed as one dot per output
-    * dimension (`list(d ORDER BY j)` — the engine's array(dot…)
-    * component-for-component), then the [[pqOracleFor]] replay over
-    * the rotated frame with the exact re-rank on the ORIGINAL
-    * embeddings. */
-  def opqTrainedOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val (r, cbs) = withTrainCache(vectors(spark, sfDir))(
-      trainOpqRotation(_))
-    opqOracleFor(r, cbs, nQueries, k)
-  }
-
-  private[graft] def opqRotCte(r: Array[Array[Double]],
-                               src: String = "embeddings"): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val rRows = r.zipWithIndex.map { case (row, j) =>
-      s"($j, ${row.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    s"""rr(j, rv) AS (VALUES $rRows),
-        rot AS (SELECT vec_id, list(rd ORDER BY j) AS embedding FROM (
-            SELECT e.vec_id, r.j, ${dot("e.embedding", "r.rv")} AS rd
-            FROM $src e, rr r) GROUP BY vec_id)"""
-  }
-
-  private def opqOracleFor(r: Array[Array[Double]],
-                           cbs: Array[Array[Array[Double]]],
-                           nQueries: Int, k: Int): String = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val cbRows = (for {
-      m <- 0 until nSub
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})")
-      .mkString(", ")
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    val adc = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    s"""WITH ${opqRotCte(r)},
-        cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM rot,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        short AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
-            FROM rot q, codes n, cbl
-            WHERE q.vec_id < $nQueries AND n.vec_id <> q.vec_id)
-          WHERE r <= ${8 * k})
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
-            CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
-              s.neighbor_id) AS INTEGER) AS rnk
-          FROM short s
-          JOIN nv qv ON qv.vec_id = s.query_id
-          JOIN nv cv ON cv.vec_id = s.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
   }
 
   /** §2 #27 — LSH-bucketed ANN: 16 sign bits → 8 bands × 2 bits; a
@@ -5873,41 +3654,6 @@ object Similarity {
           cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
             col("n_c")).as("cos")),
       k)
-  }
-
-  /** DuckDB oracle for [[annSignSketch]]: the 63-bit packing, the
-    * Hamming top-m (row_number over (hamming, neighbor_id) — the exact
-    * TopKByScore order), and the cosine rerank all replay in SQL. */
-  def signSketchOracle(nQueries: Int = 10, m: Int = 50,
-                       k: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        b AS (SELECT vec_id, embedding, nrm,
-          CAST(list_sum([CASE WHEN embedding[i + 1] > 0
-                              THEN (CAST(1 AS BIGINT) << i) ELSE 0 END
-                         for i in range(63)]) AS BIGINT) AS code
-          FROM n),
-        topm AS (
-          SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id
-                ORDER BY bit_count(xor(q.code, c.code)), c.vec_id) AS rm
-            FROM b q JOIN b c ON q.vec_id <> c.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE rm <= $m)
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT t.query_id, t.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
-            CAST(row_number() OVER (PARTITION BY t.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
-              t.neighbor_id) AS INTEGER) AS rnk
-          FROM topm t
-          JOIN b qv ON qv.vec_id = t.query_id
-          JOIN b cv ON cv.vec_id = t.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
   }
 
   /** §2 #76 — embedding QUANTIZATION (int8, per-vector max-abs scale):
@@ -6052,80 +3798,6 @@ object Similarity {
         min(when(isOut, col("c4"))).as("min_out_c4"))
       .orderBy("label")
   }
-
-  /** DuckDB oracle for [[embeddingOutliers]]: the #164 cosine CTEs +
-    * quantile_disc fences with the same doubled-integer comparisons. */
-  val embeddingOutliersOracle: String =
-    """WITH dims AS (
-         SELECT label, unnest(embedding) AS v,
-                generate_subscripts(embedding, 1) AS pos
-         FROM embeddings),
-       cent AS (
-         SELECT label, pos, round(avg(CAST(v AS DOUBLE)), 6) AS m
-         FROM dims GROUP BY label, pos),
-       cvec AS (
-         SELECT label, list(m ORDER BY pos) AS centroid,
-           sqrt(list_reduce(list_transform(list_zip(list(m ORDER BY pos),
-             list(m ORDER BY pos)), x -> CAST(x[1] AS DOUBLE)
-               * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)) AS cn
-         FROM cent GROUP BY label),
-       scored AS (
-         SELECT e.label,
-           CAST(round(list_reduce(list_transform(
-               list_zip(e.embedding, c.centroid),
-               x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)),
-               (p, q) -> p + q)
-             / (sqrt(list_reduce(list_transform(list_zip(e.embedding,
-                 e.embedding), x -> CAST(x[1] AS DOUBLE)
-                   * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)) * c.cn)
-             * 10000) AS BIGINT) AS c4
-         FROM embeddings e JOIN cvec c USING (label)),
-       f AS (SELECT label,
-           CAST(quantile_disc(c4, 0.25) AS BIGINT) AS q1_c4,
-           CAST(quantile_disc(c4, 0.75) AS BIGINT) AS q3_c4
-         FROM scored GROUP BY label)
-       SELECT scored.label, count(*) AS n_vecs,
-         min(q1_c4) AS q1_c4, min(q3_c4) AS q3_c4,
-         CAST(sum(CASE WHEN c4*2 < q1_c4*2 - (q3_c4-q1_c4)*3
-                    OR c4*2 > q3_c4*2 + (q3_c4-q1_c4)*3
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-         min(CASE WHEN c4*2 < q1_c4*2 - (q3_c4-q1_c4)*3
-                    OR c4*2 > q3_c4*2 + (q3_c4-q1_c4)*3
-                  THEN c4 END) AS min_out_c4
-       FROM scored JOIN f ON scored.label = f.label
-       GROUP BY scored.label ORDER BY scored.label"""
-
-  /** DuckDB oracle for [[embeddingClassStats]]: same 1e-6 centroid
-    * quantization, same left-fold dot ([[graft.functions.DotProduct]]'s
-    * cross-engine contract), min/max over bit-identical cosines. */
-  val embeddingClassStatsOracle: String =
-    """WITH dims AS (
-         SELECT label, unnest(embedding) AS v,
-                generate_subscripts(embedding, 1) AS pos
-         FROM embeddings),
-       cent AS (
-         SELECT label, pos, round(avg(CAST(v AS DOUBLE)), 6) AS m
-         FROM dims GROUP BY label, pos),
-       cvec AS (
-         SELECT label, list(m ORDER BY pos) AS centroid,
-           sqrt(list_reduce(list_transform(list_zip(list(m ORDER BY pos),
-             list(m ORDER BY pos)), x -> CAST(x[1] AS DOUBLE)
-               * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)) AS cn
-         FROM cent GROUP BY label),
-       scored AS (
-         SELECT e.label, c.cn,
-           list_reduce(list_transform(list_zip(e.embedding, c.centroid),
-             x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)),
-             (p, q) -> p + q)
-           / (sqrt(list_reduce(list_transform(list_zip(e.embedding,
-               e.embedding), x -> CAST(x[1] AS DOUBLE)
-                 * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)) * c.cn) AS cos
-         FROM embeddings e JOIN cvec c USING (label))
-       SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-              round(any_value(cn), 4) AS centroid_norm,
-              round(min(cos), 4) AS min_cos,
-              round(max(cos), 4) AS max_cos
-       FROM scored GROUP BY label ORDER BY label"""
 
   /** Power-iteration training of the TOP PRINCIPAL COMPONENT: μ is the
     * 1e-6-quantized per-dim mean (the centroid doctrine), then `iters`
@@ -6298,59 +3970,6 @@ object Similarity {
                       iters: Int = 5): DataFrame =
     embeddingWhitenFrom(Tables.load(spark, sfDir, "embeddings"), iters)
 
-  /** DuckDB oracle for [[embeddingWhiten]]: μ/pc/‖pc‖ inlined as
-    * trained literals, the projection and every decimal sum replayed
-    * with identical arithmetic. */
-  def embeddingWhitenOracle(iters: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val (mu, pc) = trainPc1(
-      graft.Tables.load(spark, sfDir, "embeddings").select(col("embedding")),
-      iters)
-    val muL = mu.mkString("[", ", ", "]")
-    val pcL = pc.mkString("[", ", ", "]")
-    val pcN = math.sqrt(pc.map(x => x * x).sum)
-    val dotQ = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    s"""WITH diff AS (SELECT list_transform(list_zip(embedding, $muL),
-            x -> CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) AS diff
-          FROM embeddings),
-        sc AS (SELECT diff, ${dotQ("diff", pcL)} AS s FROM diff),
-        ww AS (SELECT diff, s,
-            list_transform(list_zip(diff, $pcL),
-              x -> CAST(x[1] AS DOUBLE) - s * CAST(x[2] AS DOUBLE)) AS w
-          FROM sc),
-        m AS (SELECT s, ${dotQ("w", pcL)} AS s2,
-            ${dotQ("diff", "diff")} AS nd2, ${dotQ("w", "w")} AS nw2
-          FROM ww),
-        cc AS (SELECT s, s2, nd2, nw2,
-            CASE WHEN nd2 > 0 THEN abs(s) / (sqrt(nd2) * $pcN)
-                 ELSE 0.0 END AS cos_b,
-            CASE WHEN nw2 > 0 THEN abs(s2) / (sqrt(nw2) * $pcN)
-                 ELSE 0.0 END AS cos_a
-          FROM m)
-       SELECT CAST(count(*) AS BIGINT) AS n_vecs,
-         round(CAST(sum(CAST(round(cos_b, 8) AS DECIMAL(28,8))) AS DOUBLE)
-               / count(*), 4) AS mean_abs_cos_before4,
-         round(CAST(sum(CAST(round(cos_a, 8) AS DECIMAL(28,8))) AS DOUBLE)
-               / count(*), 4) AS mean_abs_cos_after4,
-         round(CAST(sum(CAST(round(s*s, 8) AS DECIMAL(28,8))) AS DOUBLE)
-               / CAST(sum(CAST(round(nd2, 8) AS DECIMAL(28,8))) AS DOUBLE),
-               6) AS ev_share_before6,
-         round(CAST(sum(CAST(round(s2*s2, 8) AS DECIMAL(28,8))) AS DOUBLE)
-               / CAST(sum(CAST(round(nw2, 8) AS DECIMAL(28,8))) AS DOUBLE),
-               6) AS ev_share_after6,
-         round(CAST(sum(CAST(round(nd2, 8) AS DECIMAL(28,8))) AS DOUBLE)
-               / count(*), 6) AS var_total_before6,
-         round(CAST(sum(CAST(round(nw2, 8) AS DECIMAL(28,8))) AS DOUBLE)
-               / count(*), 6) AS var_total_after6
-       FROM cc"""
-  }
-
   /** §2 #251 — WHITENED RETRIEVAL RECALL (VERDICT-r18 #3: measure,
     * don't claim): the #226 recall-table stance applied to the
     * all-but-the-top transform — does Mu 2018's anisotropy removal
@@ -6416,202 +4035,6 @@ object Similarity {
       .unionByName(one("pq_opq_whitened", serveFirst(w, nQueries, None, 0,
         Pq(cbsWO, rotation = Some(rW)), TopK(k))))
       .orderBy("variant")
-  }
-
-  /** DuckDB oracle for [[whitenRecallEval]]: μ/pc, the
-    * whitened-trained centroids, and the whitened rotation+codebooks
-    * inlined as literals; the whitened corpus built by one CTE (the
-    * exact [[whitenVectors]] arithmetic) and every rung's stage —
-    * argmax assignment, sq8 clamp/round, rotated encode, ADC
-    * shortlist, exact whitened-space rerank — replayed off it. */
-  def whitenRecallEvalOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val vRaw = vectors(spark, sfDir)
-    val (mu, pc) = trainWhitening(vRaw)
-    val w = whitenVectors(vRaw.select(col("vec_id"), col("embedding")),
-        mu, pc)
-      .withColumn("nrm", l2norm(col("embedding")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (centsW, rW, cbsWO) =
-      try {
-        val c = trainCentroids(w, 16)
-        val (r, cb) = trainOpqRotation(w)
-        (c, r, cb)
-      } finally w.unpersist(blocking = false)
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val muL = mu.mkString("[", ", ", "]")
-    val pcL = pc.mkString("[", ", ", "]")
-    val centRows = centsW.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    val nSub = cbsWO.length
-    val sub = cbsWO.head.head.length
-    val (cbRows, cbLit) = pqCbLits(cbsWO)
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    val adc = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    def hit(shortCte: String) =
-      s"""(SELECT CAST(count(*) AS BIGINT)
-            FROM $shortCte s
-            JOIN truthw t ON t.query_id = s.query_id
-                         AND t.neighbor_id = s.neighbor_id)"""
-    def rerank(preCte: String, outCte: String) =
-      s"""$outCte AS (SELECT query_id, neighbor_id FROM (
-            SELECT s.query_id, s.neighbor_id,
-              row_number() OVER (PARTITION BY s.query_id ORDER BY
-                ${dot("qv.embedding", "cv.embedding")}
-                  / (qv.nrm * cv.nrm) DESC, s.neighbor_id) AS rnk
-            FROM $preCte s
-            JOIN nw qv ON qv.vec_id = s.query_id
-            JOIN nw cv ON cv.vec_id = s.neighbor_id)
-          WHERE rnk <= $k)"""
-    s"""WITH wd AS (SELECT vec_id,
-            list_transform(list_zip(embedding, $muL),
-              x -> CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) AS diff
-          FROM embeddings),
-        wemb AS (SELECT vec_id,
-            list_transform(list_zip(diff, $pcL),
-              x -> CAST(x[1] AS DOUBLE) - s * CAST(x[2] AS DOUBLE))
-              AS embedding
-          FROM (SELECT vec_id, diff, ${dot("diff", pcL)} AS s FROM wd)),
-        nw AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM wemb),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        truthw AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
-                  DESC, c.vec_id) AS rnk
-            FROM nw q JOIN nw c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE rnk <= $k),
-        bruteraw AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
-                  DESC, c.vec_id) AS rnk
-            FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE rnk <= $k),
-        cents(cell, cv) AS (VALUES $centRows),
-        rankedw AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nw v, cents c),
-        assignedw AS (SELECT cell, vec_id AS neighbor_id,
-                        embedding AS e_c, nrm AS n_c
-                      FROM rankedw WHERE crnk = 1),
-        probesw AS (SELECT cell, vec_id AS query_id, embedding AS e_q,
-                      nrm AS n_q
-                    FROM rankedw WHERE crnk <= 4
-                      AND vec_id < $nQueries),
-        ivfw AS (SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, a.neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
-                a.neighbor_id) AS rnk
-            FROM probesw p JOIN assignedw a ON p.cell = a.cell
-            WHERE p.query_id <> a.neighbor_id)
-          WHERE rnk <= $k),
-        dqw AS (${sq8DequantCteBodyOver("wemb")}),
-        sq8pre AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                (${dot("q.embedding", "d.d")}
-                   / (q.nrm * sqrt(${dot("d.d", "d.d")}))) DESC,
-                d.vec_id) AS r
-            FROM nw q, dqw d
-            WHERE q.vec_id < $nQueries AND d.vec_id <> q.vec_id)
-          WHERE r <= ${8 * k}),
-        ${rerank("sq8pre", "sq8w")},
-        ${opqRotCte(rW, "wemb")},
-        cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM rot,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias)
-                          DESC, cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        opqpre AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
-            FROM rot q, codes n, cbl
-            WHERE q.vec_id < $nQueries AND n.vec_id <> q.vec_id)
-          WHERE r <= ${8 * k}),
-        ${rerank("opqpre", "opqw")},
-        nt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truthw)
-       SELECT variant, n_truth, n_hit,
-         round(CAST(n_hit AS DOUBLE) / n_truth, 4) AS recall
-       FROM (
-         SELECT 'brute_raw' AS variant, nt.n_truth,
-           ${hit("bruteraw")} AS n_hit FROM nt
-         UNION ALL SELECT 'ivf_whitened', nt.n_truth,
-           ${hit("ivfw")} FROM nt
-         UNION ALL SELECT 'sq8_whitened', nt.n_truth,
-           ${hit("sq8w")} FROM nt
-         UNION ALL SELECT 'pq_opq_whitened', nt.n_truth,
-           ${hit("opqw")} FROM nt)
-       ORDER BY variant"""
-  }
-
-  /** DuckDB oracle for [[embeddingPca]]: μ and the trained component
-    * inlined as literals (the semanticDedup stance — the same training
-    * code runs once per session), variance/λ recomputed FROM DATA with
-    * the identical decimal-sum arithmetic. */
-  def embeddingPcaOracle(iters: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val (mu, pc) = trainPc1(
-      graft.Tables.load(spark, sfDir, "embeddings").select(col("embedding")),
-      iters)
-    val muL = mu.mkString("[", ", ", "]")
-    val pcL = pc.mkString("[", ", ", "]")
-    s"""WITH diff AS (SELECT list_transform(list_zip(embedding, $muL),
-            x -> CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) AS diff
-          FROM embeddings),
-        scored AS (SELECT diff,
-            list_reduce(list_transform(list_zip(diff, $pcL),
-              x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)),
-              (p, q) -> p + q) AS s
-          FROM diff),
-        lam AS (SELECT sum(CAST(round(s*s, 8) AS DECIMAL(28,8))) AS ss
-                FROM scored),
-        dims AS (SELECT generate_subscripts(diff, 1) AS pos,
-                   unnest(diff) AS dx FROM scored),
-        pv AS (SELECT pos, sum(CAST(round(dx*dx, 8) AS DECIMAL(28,8))) AS vv,
-                 count(*) AS cnt FROM dims GROUP BY 1),
-        tv AS (SELECT sum(vv) AS tv FROM pv)
-       SELECT CAST(pos - 1 AS INTEGER) AS pos,
-         CAST(($muL)[pos] AS DOUBLE) AS mu6,
-         CAST(($pcL)[pos] AS DOUBLE) AS loading6,
-         round(CAST(vv AS DOUBLE) / cnt, 6) AS var6,
-         round(CAST(ss AS DOUBLE) / CAST(tv AS DOUBLE), 6) AS ev_share6
-       FROM pv CROSS JOIN lam CROSS JOIN tv ORDER BY pos"""
   }
 
   /** The WHITENED INDEX LEG: an IVF artifact whose inverted lists
@@ -6718,66 +4141,4 @@ object Similarity {
     servedFromScratch(spark, sfDir, "ivf-whiten-index", nQueries)(
       ivfWhitenIndexToDir(spark, sfDir, _))(
       annServeWhitenedFromIndex(spark, _, _, nProbe, k))
-
-  /** DuckDB oracle for [[annIvfWhitenedIndexed]]: μ/pc and the
-    * whitened-space centroids inlined as trained literals (all
-    * deterministic — the [[whitenRecallEvalOracle]] stance); the
-    * whitened corpus is one CTE (the exact [[whitenVectors]]
-    * arithmetic) and the [[ivfOracleFor]] assignment/probe/rank replay
-    * runs off it — queries whitened by the SAME CTE, because a served
-    * query is a corpus row transformed with the same stored model. */
-  def ivfWhitenedOracle(nProbe: Int = 4, nQueries: Int = 10,
-                        k: Int = 5, nCells: Int = 16,
-                        iters: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val raw = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    val (mu, pc) = trainWhitening(raw, iters)
-    val w = whitenVectors(raw, mu, pc)
-    val cents = withTrainCache(w)(trainCentroids(_, nCells))
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val muL = mu.mkString("[", ", ", "]")
-    val pcL = pc.mkString("[", ", ", "]")
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    s"""WITH wd AS (SELECT vec_id,
-            list_transform(list_zip(embedding, $muL),
-              x -> CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) AS diff
-          FROM embeddings),
-        wemb AS (SELECT vec_id,
-            list_transform(list_zip(diff, $pcL),
-              x -> CAST(x[1] AS DOUBLE) - s * CAST(x[2] AS DOUBLE))
-              AS embedding
-          FROM (SELECT vec_id, diff, ${dot("diff", pcL)} AS s FROM wd)),
-        nw AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM wemb),
-        cents(cell, cv) AS (VALUES $centRows),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nw v, cents c),
-        assigned AS (SELECT cell, vec_id AS neighbor_id, embedding AS e_c,
-                       nrm AS n_c FROM ranked WHERE crnk = 1),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q,
-                     nrm AS n_q
-                   FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries)
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT p.query_id, a.neighbor_id,
-            ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cos,
-            CAST(row_number() OVER (PARTITION BY p.query_id ORDER BY
-              ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
-              a.neighbor_id) AS INTEGER) AS rnk
-          FROM probes p JOIN assigned a ON p.cell = a.cell
-          WHERE p.query_id <> a.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
-  }
 }

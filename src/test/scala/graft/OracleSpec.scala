@@ -44,7 +44,7 @@ class OracleSpec extends SparkSpec {
     val prev = sys.props.get(key)
     sys.props(key) = "/root/testdata/sf0.01"
     val oracles =
-      try SparkEntry.oracleSql
+      try graft.oracle.OracleSql.all
       finally prev match {
         case Some(p) => sys.props(key) = p
         case None => sys.props.remove(key)
