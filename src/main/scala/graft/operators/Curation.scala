@@ -951,7 +951,7 @@ object Curation {
     * one delta batch through [[bm25StatsAppend]], and serve the
     * standard query from the maintained artifact — which equals
     * serving a full rebuild over the whole corpus EXACTLY (the oracle
-    * is [[bm25IndexedOracle]] verbatim: same replay, full corpus), so
+    * is `Curation.bm25IndexedOracle` verbatim: same replay, full corpus), so
     * the daily-maintenance path is oracle-checked, not just
     * spec-claimed. */
   def bm25Incremental(spark: SparkSession, sfDir: String): DataFrame = {

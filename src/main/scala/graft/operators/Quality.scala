@@ -54,7 +54,7 @@ object Quality {
     * into 16-bit halves keeps every intermediate below 2^48:
     * `a*K mod 2^32 = (a0*K mod 2^32 + (a1*K mod 2^16)*2^16) mod 2^32`
     * for `a = a1*2^16 + a0`. Values are IDENTICAL to the naive formula
-    * wherever it didn't overflow. SQL twin: [[knuthSql]]. */
+    * wherever it didn't overflow. SQL twin: `Quality.knuthSql`. */
   def knuth32(key: Column): Column = {
     val a = pmod(key.cast("long"), lit(Mod32))
     val a1 = (a / 65536L).cast("long")

@@ -951,7 +951,7 @@ object Similarity {
   /** §2 #66 — oracle-checked IVF variant: same map-only assignment and
     * probe pipeline as [[annIvf]], over the STATIC quantizer — so a SQL
     * oracle can replay cell assignment, probing, and ranking exactly
-    * (see [[ivfStaticOracle]]). */
+    * (see `Ann.ivfStaticOracle`). */
   def annIvfStatic(spark: SparkSession, sfDir: String, nProbe: Int = 4,
                    nQueries: Int = 10, k: Int = 5): DataFrame =
     serveFirst(vectors(spark, sfDir), nQueries, Some(staticCentroids()),
@@ -1831,7 +1831,7 @@ object Similarity {
     *    centroids face it), so the monitor must flag
     *    `is_shifted` = true.
     * Everything — assignment, shares, 8-dp PSI terms, distance terms
-    * — is replayed exactly by [[ivfDriftOracle]] (float addition is
+    * — is replayed exactly by `Ann.ivfDriftOracle` (float addition is
     * replayed as double-add-then-cast, exact because a float + 0.5
     * fits double precision). */
   def ivfDrift(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1892,7 +1892,7 @@ object Similarity {
     * what dies first, which is why `is_shifted` means retrain even
     * when spot-checked answers still look right. Same deterministic
     * scenario construction as [[ivfDrift]]; everything is replayed by
-    * [[ivfDriftImpactOracle]]. */
+    * `Ann.ivfDriftImpactOracle`. */
   def ivfDriftImpact(spark: SparkSession, sfDir: String, nQueries: Int = 10,
                      k: Int = 5, nProbe: Int = 4): DataFrame = {
     val cents = staticCentroids()
@@ -2002,9 +2002,9 @@ object Similarity {
     *    the RESET baseline (the monitor restarts from the rebuilt
     *    population) and the candidate volume is restored toward the
     *    balanced ~nProbe/nCells fraction, at recall ≥ the pre phase.
-    * The oracle ([[ivfRebuildOracle]]) replays both phases — the post
+    * The oracle (`Ann.ivfRebuildOracle`) replays both phases — the post
     * quantizer is the deterministically-trained k-means the oracle
-    * inlines, the [[ivfTrainedOracle]] doctrine. */
+    * inlines, the `Ann.ivfTrainedOracle` doctrine. */
   def ivfRebuild(spark: SparkSession, sfDir: String, nQueries: Int = 10,
                  k: Int = 5, nProbe: Int = 4, nCells: Int = 16): DataFrame = {
     val v = vectors(spark, sfDir).select(col("vec_id"), col("embedding"))
@@ -2119,7 +2119,7 @@ object Similarity {
     *    order of magnitude, every sub-space must flag `is_stale`.
     * Everything downstream of the trained model — code argmin, the
     * three-term error, 8-dp decimal sums, 6-dp means, the 4-dp ratio
-    * and the flag — is replayed exactly by [[pqDriftOracle]]. */
+    * and the flag — is replayed exactly by `Ann.pqDriftOracle`. */
   def pqDrift(spark: SparkSession, sfDir: String,
               staleRatio: Double = 1.5): DataFrame = {
     val v = vectors(spark, sfDir).select(col("vec_id"), col("embedding"))
@@ -2207,7 +2207,7 @@ object Similarity {
   }
 
   /** §2 #150 — IVF serving FROM THE ARTIFACT: build the index once
-    * (static quantizer, so [[ivfStaticOracle]] replays the whole
+    * (static quantizer, so `Ann.ivfStaticOracle` replays the whole
     * pipeline), then serve the standard query set from it. Output is
     * identical to [[annIvfStatic]] by construction — same assignment,
     * same probes, same ranking — which the shared oracle and
@@ -2237,7 +2237,7 @@ object Similarity {
     * proving the artifact seam extends to the 4×-cheaper sq8 scan with
     * zero new lifecycle surface. Bit-identical to the inline pipeline
     * under the same quantizer, which the shared oracle
-    * ([[ivfSq8StaticOracle]]) and SimilaritySpec both pin. */
+    * (`Ann.ivfSq8StaticOracle`) and SimilaritySpec both pin. */
   def annIvfSq8Indexed(spark: SparkSession, sfDir: String,
                        nProbe: Int = 4, nQueries: Int = 10,
                        k: Int = 5): DataFrame =
@@ -2926,7 +2926,7 @@ object Similarity {
     * [[graft.functions.TopKByScore]] aggregate (≤ 4k rows per query per
     * partition); the re-rank gathers only R×Q full vectors by an
     * id equi-join. The whole pipeline — encode, ADC, shortlist,
-    * re-rank — is replayed exactly by [[pqTrainedOracle]]. */
+    * re-rank — is replayed exactly by `Ann.pqTrainedOracle`. */
   def annPq(spark: SparkSession, sfDir: String,
             nQueries: Int = 10, k: Int = 5): DataFrame = {
     val v = vectors(spark, sfDir)
@@ -2977,7 +2977,7 @@ object Similarity {
     * broadcast centroids, cell equi-join against the ≤ nQueries×nProbe
     * broadcast probe set, bounded TopK both stages. Everything
     * downstream of the trained quantizer is replayed exactly by
-    * [[ivfSq8TrainedOracle]]. */
+    * `Ann.ivfSq8TrainedOracle`. */
   def annIvfSq8(spark: SparkSession, sfDir: String, nCells: Int = 16,
                 nProbe: Int = 4, nQueries: Int = 10, k: Int = 5): DataFrame = {
     val v = vectors(spark, sfDir)
@@ -2999,7 +2999,7 @@ object Similarity {
     * no distinct. Both ranking stages are the bounded
     * [[graft.functions.TopKByScore]] aggregate. Everything downstream
     * of the two trained models is replayed exactly by
-    * [[ivfPqTrainedOracle]]. */
+    * `Ann.ivfPqTrainedOracle`. */
   def annIvfPq(spark: SparkSession, sfDir: String, nCells: Int = 16,
                nProbe: Int = 4, nQueries: Int = 10, k: Int = 5): DataFrame = {
     val v = vectors(spark, sfDir)
@@ -3018,7 +3018,7 @@ object Similarity {
     * codebooks tells serving to rotate the query before the ADC dots,
     * and the same marker steers re-sync, `pq_drift`, and retrain.
     * Identical to inline IVF-OPQ serving under the same models
-    * (SimilaritySpec pins it; shared [[ivfPqOpqTrainedOracle]]). */
+    * (SimilaritySpec pins it; shared `Ann.ivfPqOpqTrainedOracle`). */
   def annIvfPqOpqIndexed(spark: SparkSession, sfDir: String,
                          nProbe: Int = 4, nQueries: Int = 10,
                          k: Int = 5): DataFrame =
@@ -3066,7 +3066,7 @@ object Similarity {
     * bounded [[graft.functions.TopKByScore]] aggregate; the re-rank
     * gathers shortlist×queries full vectors by equi-join. Everything
     * downstream of the two trained models is replayed exactly by
-    * [[ivfPqResidualTrainedOracle]]. */
+    * `Ann.ivfPqResidualTrainedOracle`. */
   def annIvfPqResidual(spark: SparkSession, sfDir: String, nCells: Int = 16,
                        nProbe: Int = 4, nQueries: Int = 10,
                        k: Int = 5): DataFrame = {
@@ -3319,7 +3319,7 @@ object Similarity {
     * when `codes/` is absent (run [[ivfPqIndexAdd]]) or predates the
     * base's compaction watermark (re-sync — see [[ivfPqIndexAdd]]).
     * With no live deltas the output is IDENTICAL to [[annIvfPq]] under
-    * the same models (SimilaritySpec; shared [[ivfPqTrainedOracle]]).
+    * the same models (SimilaritySpec; shared `Ann.ivfPqTrainedOracle`).
     *
     * `shortlistFactor = 0` (the default) resolves MODE-AWARE from the
     * leg's stored `_residual` marker: 4 for a residual leg, 8 for raw
@@ -3430,7 +3430,7 @@ object Similarity {
     * leg, then serve the standard query set from the materialized
     * index. Output is identical to [[annIvfPq]] by construction — same
     * models, same ADC shortlist, same exact re-rank — which the shared
-    * [[ivfPqTrainedOracle]] and SimilaritySpec both pin (the
+    * `Ann.ivfPqTrainedOracle` and SimilaritySpec both pin (the
     * [[annIvfIndexed]] pattern, one level up the compression stack). */
   def annIvfPqIndexed(spark: SparkSession, sfDir: String, nProbe: Int = 4,
                       nQueries: Int = 10, k: Int = 5): DataFrame =
@@ -3443,7 +3443,7 @@ object Similarity {
     * (`ivfPqIndexAdd(residual = Some(true))`) — the artifact form of
     * [[annIvfPqResidual]], proving the higher-recall encoding survives
     * the materialize/marker/serve path bit-identically (shared
-    * [[ivfPqResidualTrainedOracle]]): the `_residual` marker beside
+    * `Ann.ivfPqResidualTrainedOracle`): the `_residual` marker beside
     * the codebooks tells serving to add the centroid ADC term, and the
     * same marker steers re-sync, `pq_drift`, and retrain — so the
     * production cadence keeps the recall gain without any caller

@@ -1238,7 +1238,7 @@ object TextAnalysis {
     * aggregate (bpeTrain's stance); the EM loop runs driver-side on
     * the ≤ maxWords (word, freq) table — bounded model state, exactly
     * like the k-means/PQ/OPQ family, covered by determinism +
-    * property specs while [[unigramTrainedOracle]] replays the
+    * property specs while `Text.unigramTrainedOracle` replays the
     * corpus-scale ENCODE exactly downstream of the model. */
   private[graft] def trainUnigram(wordFreqs: Seq[(String, Long)],
                                   vocabSize: Int = 120,

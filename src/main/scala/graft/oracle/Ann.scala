@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions.l2norm
-import graft.operators.Similarity.{hyperplanes, l2Biases, residualAssigned,
+import graft.operators.Similarity.{hyperplanes, residualAssigned,
   staticCentroids, trainCentroids, trainOpqRotation, trainPc1,
-  trainPqCodebooks, trainWhitening, vectors, whitenVectors, withTrainCache}
+  trainPqCodebooks, trainWhitening, whitenVectors, withTrainCache}
+import Oracle._
 
 /** DuckDB replays of the ANN, embedding and kNN-graph queries
   * (Similarity, Graph). */
@@ -16,31 +17,18 @@ object Ann {
     * assignment/probing/ranking replayed (the [[ivfStaticOracle]]
     * machinery with every vector as a query) plus the mutual
     * self-join. */
-  def knnGraphAnnOracle(nProbe: Int = 6, k: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = staticCentroids().zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        cents(cell, cv) AS (VALUES $centRows),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM n v, cents c),
-        assigned AS (SELECT cell, vec_id AS neighbor_id, embedding AS e_c,
-                       nrm AS n_c FROM ranked WHERE crnk = 1),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q,
-                     nrm AS n_q FROM ranked WHERE crnk <= $nProbe),
+  def knnGraphAnnOracle(nProbe: Int = 6, k: Int = 5): String =
+    s"""WITH ${normCte("n")},
+        cents(cell, cv) AS (VALUES ${rows(staticCentroids())}),
+        ${rankedCte(norm = "n")},
+        ${assignedCte()},
+        ${probesCte(nProbe, "", norm = true)},
         e AS (
           SELECT query_id, neighbor_id, rnk, cos FROM (
             SELECT p.query_id, a.neighbor_id,
-              ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cos,
+              ${probedCos()} AS cos,
               CAST(row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
+                ${probedCos()} DESC,
                 a.neighbor_id) AS INTEGER) AS rnk
             FROM probes p JOIN assigned a ON p.cell = a.cell
             WHERE p.query_id <> a.neighbor_id)
@@ -50,22 +38,17 @@ object Ann {
         FROM e LEFT JOIN e r ON r.query_id = e.neighbor_id
                             AND r.neighbor_id = e.query_id
         ORDER BY src_id, e.rnk"""
-  }
 
   /** DuckDB oracle for [[labelSpread]]: the same rank/vote/argmax
     * chain replayed with window functions. */
   def labelSpreadOracle(k: Int = 5, seedMod: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    s"""WITH n AS (SELECT vec_id, label, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+    s"""WITH ${normCte("n", label = true)},
         sd AS (SELECT * FROM n WHERE vec_id % $seedMod = 0),
         qs AS (SELECT * FROM n WHERE vec_id % $seedMod <> 0),
         e AS (SELECT query_id, nb_label FROM (
             SELECT q.vec_id AS query_id, s.label AS nb_label,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "s.embedding")} / (q.nrm * s.nrm) DESC,
+                ${cosOf("q", "s")} DESC,
                 s.vec_id) AS rnk
             FROM qs q JOIN sd s ON true)
           WHERE rnk <= $k),
@@ -91,53 +74,28 @@ object Ann {
     * with one branch per probe setting, all off shared CTEs. */
   def ivfProbeSweepOracle(nQueries: Int = 10, k: Int = 5): String = {
     val cents = staticCentroids()
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
     val pers = (1 to cents.length).map { p =>
       s"""SELECT $p AS n_probe,
            (SELECT count(*) FROM truth) AS n_truth,
-           (SELECT count(*)
-            FROM (SELECT pr.query_id, a.neighbor_id,
-                    row_number() OVER (PARTITION BY pr.query_id ORDER BY
-                      ${dot("pr.e_q", "a.e_c")} / (pr.n_q * a.n_c) DESC,
-                      a.neighbor_id) AS rnk
-                  FROM (SELECT cell, vec_id AS query_id, embedding AS e_q,
+           ${hits("pr", "a", probedCos("pr"),
+             s"""(SELECT cell, vec_id AS query_id, embedding AS e_q,
                           nrm AS n_q
                         FROM ranked
                         WHERE crnk <= $p AND vec_id < $nQueries) pr
                   JOIN assigned a ON pr.cell = a.cell
-                  WHERE pr.query_id <> a.neighbor_id) i
-            JOIN truth t ON t.query_id = i.query_id
-                        AND t.neighbor_id = i.neighbor_id
-            WHERE i.rnk <= $k) AS n_hit,
+                  WHERE pr.query_id <> a.neighbor_id""", k,
+             count = "count(*)")} AS n_hit,
            (SELECT CAST(sum(cc.cnt) AS BIGINT) - $nQueries
             FROM (SELECT cell FROM ranked
                   WHERE crnk <= $p AND vec_id < $nQueries) pp
             JOIN cc USING (cell)) AS n_candidates"""
     }.mkString("\n          UNION ALL\n          ")
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        cents(cell, cv) AS (VALUES $centRows),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM n v, cents c),
-        assigned AS (SELECT cell, vec_id AS neighbor_id, embedding AS e_c,
-                       nrm AS n_c FROM ranked WHERE crnk = 1),
+    s"""WITH ${normCte("n")},
+        cents(cell, cv) AS (VALUES ${rows(cents)}),
+        ${rankedCte(norm = "n")},
+        ${assignedCte()},
         cc AS (SELECT cell, count(*) AS cnt FROM assigned GROUP BY 1),
-        truth AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-                c.vec_id) AS rnk
-            FROM n q JOIN n c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE rnk <= $k)
+        ${truthCte("truth", "n", s"q.vec_id < $nQueries", k)}
        SELECT n_probe, n_truth, n_hit,
          round(n_hit / n_truth, 4) AS recall, n_candidates
        FROM ($pers)
@@ -152,87 +110,34 @@ object Ann {
     * truth. */
   def pqShortlistSweepOracle(nQueries: Int = 10, k: Int = 5,
                              factors: Seq[Int] = Seq(1, 2, 4, 8)): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val cbs = withTrainCache(vectors(spark, sfDir))(trainPqCodebooks(_))
+    val cbs = withTrainCache(Oracle.vectors())(trainPqCodebooks(_))
     val nSub = cbs.length
     val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val cbRows = (for {
-      m <- 0 until nSub
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})")
-      .mkString(", ")
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    val adc = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
     val branches = factors.map { f =>
       s"""SELECT $f AS shortlist_factor,
            (SELECT least(${f.toLong * k}, count(*) - 1) * $nQueries
             FROM embeddings) AS n_rerank,
            (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM (SELECT s.query_id, s.neighbor_id,
-                    row_number() OVER (PARTITION BY s.query_id ORDER BY
-                      ${dot("qv.embedding", "cv.embedding")}
-                        / (qv.nrm * cv.nrm) DESC, s.neighbor_id) AS rnk
-                  FROM (SELECT query_id, neighbor_id FROM adcr
-                        WHERE r <= ${f * k}) s
-                  JOIN nv qv ON qv.vec_id = s.query_id
-                  JOIN nv cv ON cv.vec_id = s.neighbor_id) i
-            JOIN truth t ON t.query_id = i.query_id
-                        AND t.neighbor_id = i.neighbor_id
-            WHERE i.rnk <= $k) AS n_hit"""
+           ${rerankHits(prefix(f * k), k)} AS n_hit"""
     }.mkString("\n          UNION ALL\n          ")
-    s"""WITH cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM embeddings,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        adcr AS (SELECT query_id, neighbor_id, r FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
-            FROM embeddings q, codes n, cbl
-            WHERE q.vec_id < $nQueries AND n.vec_id <> q.vec_id)
-          WHERE r <= ${factors.max * k}),
-        truth AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-                c.vec_id) AS rnk
-            FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE rnk <= $k)
+    s"""WITH ${codebookCtes(cbs)},
+        ${pqEncode(nSub, sub, "embeddings")},
+        ${normCte()},
+        ${shortlist("adcr", "q.vec_id AS query_id", "q.vec_id",
+          "embeddings q, codes n, cbl", unprobed(nQueries),
+          adc("q.embedding", "cbl", nSub, sub), factors.max * k,
+          keepRank = true)},
+        ${truthCte("truth", "nv", s"q.vec_id < $nQueries", k)}
        SELECT shortlist_factor, n_rerank, n_truth, n_hit,
          round(n_hit / CAST(n_truth AS DOUBLE), 4) AS recall
        FROM ($branches)
        ORDER BY shortlist_factor"""
   }
+
+  /** The first `n` of each query's ranked shortlist `adcr`. */
+  private def prefix(n: Int): String =
+    s"(SELECT query_id, neighbor_id FROM adcr WHERE r <= $n)"
+
 
   /** DuckDB oracle for [[pqShortlistSweepResidual]]: the
     * [[ivfPqResidualTrainedOracle]] machinery (both trained models
@@ -245,108 +150,29 @@ object Ann {
                                      nProbe: Int = 4,
                                      factors: Seq[Int] = Seq(1, 2, 4, 8))
       : String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
-    val (cents, cbs) = withTrainCache(v) { vc =>
-      val cents = trainCentroids(vc, 16)
-      (cents, trainPqCodebooks(
-        residualAssigned(vc, cents).select(col("vec_id"),
-          col("res").as("embedding"))))
-    }
+    val (cents, cbs) = residualModels(16)
     val nSub = cbs.length
     val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    val cbRows = (for {
-      m <- 0 until nSub
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})")
-      .mkString(", ")
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    val adc = (s"${dot("p.e_q", "ct.cv")}" +: (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"p.e_q[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }).mkString(" + ")
-    val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
     val branches = factors.map { f =>
       s"""SELECT $f AS shortlist_factor,
            (SELECT CAST(count(*) AS BIGINT) FROM adcr
             WHERE r <= ${f * k}) AS n_rerank,
            (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM (SELECT s.query_id, s.neighbor_id,
-                    row_number() OVER (PARTITION BY s.query_id ORDER BY
-                      ${dot("qv.embedding", "cv.embedding")}
-                        / (qv.nrm * cv.nrm) DESC, s.neighbor_id) AS rnk
-                  FROM (SELECT query_id, neighbor_id FROM adcr
-                        WHERE r <= ${f * k}) s
-                  JOIN nv qv ON qv.vec_id = s.query_id
-                  JOIN nv cv ON cv.vec_id = s.neighbor_id) i
-            JOIN truth t ON t.query_id = i.query_id
-                        AND t.neighbor_id = i.neighbor_id
-            WHERE i.rnk <= $k) AS n_hit"""
+           ${rerankHits(prefix(f * k), k)} AS n_hit"""
     }.mkString("\n          UNION ALL\n          ")
-    s"""WITH cents(cell, cv) AS (VALUES $centRows),
-        cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        resid AS (SELECT r.vec_id, r.cell,
-            list_transform(list_zip(r.embedding, c.cv),
-              x -> CAST(x[1] AS DOUBLE) - x[2]) AS re
-          FROM (SELECT vec_id, embedding, cell FROM ranked WHERE crnk = 1) r
-          JOIN cents c ON c.cell = r.cell),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  re[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM resid,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        acodes AS (SELECT a.cell, c.* FROM codes c
-                   JOIN (SELECT vec_id, cell FROM resid) a
-                     ON a.vec_id = c.vec_id),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q
-                   FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries),
-        adcr AS (SELECT query_id, neighbor_id, r FROM (
-            SELECT p.query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
-            FROM probes p, cents ct, acodes n, cbl
-            WHERE ct.cell = p.cell AND n.cell = p.cell
-              AND n.vec_id <> p.query_id)
-          WHERE r <= ${factors.max * k}),
-        truth AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-                c.vec_id) AS rnk
-            FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE rnk <= $k)
+    s"""WITH cents(cell, cv) AS (VALUES ${rows(cents)}),
+        ${codebookCtes(cbs)},
+        ${normCte()},
+        ${rankedCte()},
+        $residCte,
+        ${pqEncode(nSub, sub, "resid", "re")},
+        ${cellCodesCte(cells = "SELECT vec_id, cell FROM resid")},
+        ${probesCte(nProbe, s"vec_id < $nQueries", norm = false)},
+        ${shortlist("adcr", "p.query_id", "p.query_id",
+          "probes p, cents ct, acodes n, cbl", s"ct.cell = p.cell AND $probed",
+          adc("p.e_q", "cbl", nSub, sub, Some("ct.cv")), factors.max * k,
+          keepRank = true)},
+        ${truthCte("truth", "nv", s"q.vec_id < $nQueries", k)}
        SELECT shortlist_factor, n_rerank, n_truth, n_hit,
          round(n_hit / CAST(n_truth AS DOUBLE), 4) AS recall
        FROM ($branches)
@@ -360,52 +186,19 @@ object Ann {
     * hit count, all the proven replay machinery. */
   def pqBitsSweepOracle(sizes: Seq[Int] = Seq(4, 16, 64),
                         nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
-    val models = withTrainCache(v)(vc =>
+    val models = withTrainCache(Oracle.vectors())(vc =>
       sizes.map(kk => kk -> trainPqCodebooks(vc, k = kk)))
     val nSub = models.head._2.length
     val sub = models.head._2.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
+    // one codebook, code and shortlist CTE per size over the shared `sub`
     val perSize = models.map { case (sz, cbs) =>
-      val cbRows = (for {
-        m <- 0 until nSub
-        kk <- cbs(m).indices
-      } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-        s"${l2Biases(cbs(m))(kk)})")
-        .mkString(", ")
-      val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-        .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-      val adc = (0 until nSub).map { m =>
-        val lo = m * sub + 1
-        val hi = (m + 1) * sub
-        s"${dot(s"q.embedding[$lo:$hi]", s"k${sz}_cbl.cb[${m + 1}][n.c$m + 1]")}"
-      }.mkString(" + ")
-      s"""k${sz}_cb(m, kk, cv, bias) AS (VALUES $cbRows),
-         k${sz}_cbl AS (SELECT $cbLit AS cb),
-         k${sz}_coded AS (SELECT vec_id, m, kk, s, cv, bias FROM (
-             SELECT sub.vec_id, sub.m, cb.kk, sub.s, cb.cv, cb.bias,
-               row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                 ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                   cb.kk) AS r
-             FROM sub JOIN k${sz}_cb cb ON cb.m = sub.m) WHERE r = 1),
-         k${sz}_codes AS (SELECT vec_id, $codePivot
-                          FROM k${sz}_coded GROUP BY 1),
-         k${sz}_short AS (SELECT query_id, neighbor_id FROM (
-             SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 ($adc) DESC, n.vec_id) AS r
-             FROM embeddings q, k${sz}_codes n, k${sz}_cbl
-             WHERE q.vec_id < $nQueries AND n.vec_id <> q.vec_id)
-           WHERE r <= ${8 * k})"""
+      val name = (base: String) =>
+        if (base == "sub") base else s"k${sz}_$base"
+      s"""${codebookCtes(cbs, name)},
+         ${codeCtes(nSub, name, terms = true)},
+         ${shortlist(s"k${sz}_short", "q.vec_id AS query_id", "q.vec_id",
+           s"embeddings q, k${sz}_codes n, k${sz}_cbl", unprobed(nQueries),
+           adc("q.embedding", s"k${sz}_cbl", nSub, sub), 8 * k)}"""
     }.mkString(",\n        ")
     val branches = models.map { case (sz, cbs) =>
       val bits = 32 - Integer.numberOfLeadingZeros(sz - 1)
@@ -415,33 +208,11 @@ object Ann {
               - 2 * ${dot("s", "cv")} - 2 * bias, 8) AS DECIMAL(18,8)))
               AS DOUBLE) / count(*), 6) FROM k${sz}_coded) AS mean_mse6,
            (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM (SELECT s.query_id, s.neighbor_id,
-                    row_number() OVER (PARTITION BY s.query_id ORDER BY
-                      ${dot("qv.embedding", "cv.embedding")}
-                        / (qv.nrm * cv.nrm) DESC, s.neighbor_id) AS rnk
-                  FROM k${sz}_short s
-                  JOIN nv qv ON qv.vec_id = s.query_id
-                  JOIN nv cv ON cv.vec_id = s.neighbor_id) i
-            JOIN truth t ON t.query_id = i.query_id
-                        AND t.neighbor_id = i.neighbor_id
-            WHERE i.rnk <= $k) AS n_hit"""
+           ${rerankHits(s"k${sz}_short", k)} AS n_hit"""
     }.mkString("\n          UNION ALL\n          ")
-    s"""WITH sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM embeddings,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        truth AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-                c.vec_id) AS rnk
-            FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE rnk <= $k),
+    s"""WITH ${subCte(nSub, sub, "embeddings")},
+        ${normCte()},
+        ${truthCte("truth", "nv", s"q.vec_id < $nQueries", k)},
         $perSize
        SELECT codebook_k, bits_per_code, bits_per_vector, mean_mse6,
          n_truth, n_hit,
@@ -454,13 +225,7 @@ object Ann {
     * [[ivfPqTrainedOracle]] machinery merged onto SHARED CTEs (one code
     * pivot, one truth) with one counting branch per variant. */
   def annRecallEvalPqOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
-    val (cents, cbs, cbsR, rO, cbsO) = withTrainCache(v) { vc =>
+    val (cents, cbs, cbsR, rO, cbsO) = withTrainCache(Oracle.vectors()) { vc =>
       val cents = trainCentroids(vc, 16)
       val (rO, cbsO) = trainOpqRotation(vc)
       (cents, trainPqCodebooks(vc),
@@ -470,206 +235,64 @@ object Ann {
     }
     val nSub = cbs.length
     val sub = cbs.head.head.length
-    val nProbe = 4
-    val dotE = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    val (cbRows, cbLit) = pqCbLits(cbs)
-    val (cbrRows, cbrLit) = pqCbLits(cbsR)
-    val (cboRows, cboLit) = pqCbLits(cbsO)
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    def adc(qE: String) = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dotE(s"$qE[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    // OPQ ADC: the rotated query's slices off the OPQ codebooks
-    val adcO = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dotE(s"q.embedding[$lo:$hi]", s"cbol.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    // IVF×OPQ ADC: same rotated-query slices, probed cells only
-    val adcIO = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dotE(s"p.e_s[$lo:$hi]", s"cbol.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    // residual ADC: centroid term FIRST (the engine's reduceLeft order),
-    // then the per-sub-space codeword dots off the RESIDUAL codebooks
-    val adcR = (s"${dotE("p.e_q", "ct.cv")}" +: (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dotE(s"p.e_q[$lo:$hi]", s"cbrl.cb[${m + 1}][n.c$m + 1]")}"
-    }).mkString(" + ")
+    val limit = 8 * k
+    def short(name: String, from: String, where: String, score: String) =
+      if (from.startsWith("probe"))
+        shortlist(name, "p.query_id", "p.query_id", from, where, score, limit)
+      else
+        shortlist(name, "q.vec_id AS query_id", "q.vec_id", from, where,
+          score, limit)
     // one branch per variant: shortlist CTE name in, hit count out
-    def hitCount(shortCte: String) =
-      s"""(SELECT CAST(count(*) AS BIGINT)
-            FROM (SELECT s.query_id, s.neighbor_id,
-                    row_number() OVER (PARTITION BY s.query_id ORDER BY
-                      ${dotE("qv.embedding", "cv.embedding")}
-                        / (qv.nrm * cv.nrm) DESC, s.neighbor_id) AS rnk
-                  FROM $shortCte s
-                  JOIN nv qv ON qv.vec_id = s.query_id
-                  JOIN nv cv ON cv.vec_id = s.neighbor_id) i
-            JOIN truth t ON t.query_id = i.query_id
-                        AND t.neighbor_id = i.neighbor_id
-            WHERE i.rnk <= $k)"""
-    s"""WITH cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        cbr(m, kk, cv, bias) AS (VALUES $cbrRows),
-        cbrl AS (SELECT $cbrLit AS cb),
-        cbo(m, kk, cv, bias) AS (VALUES $cboRows),
-        cbol AS (SELECT $cboLit AS cb),
-        ${opqRotCte(rO)},
-        subo AS (SELECT vec_id, mm.m AS m,
-                   embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                 FROM rot,
-                      (SELECT unnest(range(0, $nSub)) AS m) mm),
-        codedo AS (SELECT vec_id, m, kk FROM (
-                     SELECT subo.vec_id, subo.m, cbo.kk,
-                       row_number() OVER (PARTITION BY subo.vec_id, subo.m
-                         ORDER BY (${dotE("subo.s", "cbo.cv")} + cbo.bias)
-                           DESC, cbo.kk) AS r
-                     FROM subo JOIN cbo ON cbo.m = subo.m)
-                   WHERE r = 1),
-        codeso AS (SELECT vec_id, $codePivot FROM codedo GROUP BY 1),
-        cents(cell, cv) AS (VALUES $centRows),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dotE("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM embeddings,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dotE("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dotE("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        acodes AS (SELECT a.cell, c.* FROM codes c
-                   JOIN (SELECT vec_id, cell FROM ranked WHERE crnk = 1) a
-                     ON a.vec_id = c.vec_id),
-        resid AS (SELECT r.vec_id, r.cell,
-            list_transform(list_zip(r.embedding, c.cv),
-              x -> CAST(x[1] AS DOUBLE) - x[2]) AS re
-          FROM (SELECT vec_id, embedding, cell FROM ranked WHERE crnk = 1) r
-          JOIN cents c ON c.cell = r.cell),
-        subr AS (SELECT vec_id, mm.m AS m,
-                   re[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                 FROM resid,
-                      (SELECT unnest(range(0, $nSub)) AS m) mm),
-        codedr AS (SELECT vec_id, m, kk FROM (
-                     SELECT subr.vec_id, subr.m, cbr.kk,
-                       row_number() OVER (PARTITION BY subr.vec_id, subr.m
-                         ORDER BY (${dotE("subr.s", "cbr.cv")} + cbr.bias)
-                           DESC, cbr.kk) AS r
-                     FROM subr JOIN cbr ON cbr.m = subr.m)
-                   WHERE r = 1),
-        codesr AS (SELECT vec_id, $codePivot FROM codedr GROUP BY 1),
-        acodesr AS (SELECT a.cell, c.* FROM codesr c
-                    JOIN (SELECT vec_id, cell FROM resid) a
-                      ON a.vec_id = c.vec_id),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q
-                   FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries),
-        acodeso AS (SELECT a.cell, c.* FROM codeso c
-                    JOIN (SELECT vec_id, cell FROM ranked WHERE crnk = 1) a
-                      ON a.vec_id = c.vec_id),
+    def branch(variant: String, shortCte: String) =
+      s"""SELECT '$variant' AS variant,
+           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
+           ${rerankHits(shortCte, k)} AS n_hit"""
+    s"""WITH ${codebookCtes(cbs)},
+        ${codebookCtes(cbsR, suffix("r"))},
+        ${codebookCtes(cbsO, suffix("o"))},
+        ${rotationCtes(rO)},
+        ${pqEncode(nSub, sub, "rot", name = suffix("o"))},
+        cents(cell, cv) AS (VALUES ${rows(cents)}),
+        ${normCte()},
+        ${pqEncode(nSub, sub, "embeddings")},
+        ${rankedCte()},
+        ${cellCodesCte()},
+        $residCte,
+        ${pqEncode(nSub, sub, "resid", "re", suffix("r"))},
+        ${cellCodesCte("acodesr", "codesr", "SELECT vec_id, cell FROM resid")},
+        ${probesCte(4, s"vec_id < $nQueries", norm = false)},
+        ${cellCodesCte("acodeso", "codeso")},
         probeso AS (SELECT p.cell, p.query_id, rt.embedding AS e_s
                     FROM probes p JOIN rot rt ON rt.vec_id = p.query_id),
-        truth AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dotE("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
-                c.vec_id) AS rnk
-            FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE rnk <= $k),
-        short_pq AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                (${adc("q.embedding")}) DESC, n.vec_id) AS r
-            FROM embeddings q, codes n, cbl
-            WHERE q.vec_id < $nQueries AND n.vec_id <> q.vec_id)
-          WHERE r <= ${8 * k}),
-        short_pq_opq AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ($adcO) DESC, n.vec_id) AS r
-            FROM rot q, codeso n, cbol
-            WHERE q.vec_id < $nQueries AND n.vec_id <> q.vec_id)
-          WHERE r <= ${8 * k}),
-        short_ivfpq AS (SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                (${adc("p.e_q")}) DESC, n.vec_id) AS r
-            FROM probes p, acodes n, cbl
-            WHERE n.cell = p.cell AND n.vec_id <> p.query_id)
-          WHERE r <= ${8 * k}),
-        short_ivfpq_opq AS (SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ($adcIO) DESC, n.vec_id) AS r
-            FROM probeso p, acodeso n, cbol
-            WHERE n.cell = p.cell AND n.vec_id <> p.query_id)
-          WHERE r <= ${8 * k}),
-        short_ivfpq_r AS (SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ($adcR) DESC, n.vec_id) AS r
-            FROM probes p, cents ct, acodesr n, cbrl
-            WHERE ct.cell = p.cell AND n.cell = p.cell
-              AND n.vec_id <> p.query_id)
-          WHERE r <= ${8 * k}),
-        dqz AS (${sq8DequantCteBody}),
-        short_sq8 AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                (${dotE("q.embedding", "n.d")}
-                   / (sqrt(${dotE("q.embedding", "q.embedding")})
-                      * sqrt(${dotE("n.d", "n.d")}))) DESC,
-                n.vec_id) AS r
-            FROM embeddings q JOIN dqz n ON n.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE r <= ${8 * k})
+        ${truthCte("truth", "nv", s"q.vec_id < $nQueries", k)},
+        ${short("short_pq", "embeddings q, codes n, cbl", unprobed(nQueries),
+          adc("q.embedding", "cbl", nSub, sub))},
+        ${short("short_pq_opq", "rot q, codeso n, cbol", unprobed(nQueries),
+          adc("q.embedding", "cbol", nSub, sub))},
+        ${short("short_ivfpq", "probes p, acodes n, cbl", probed,
+          adc("p.e_q", "cbl", nSub, sub))},
+        ${short("short_ivfpq_opq", "probeso p, acodeso n, cbol", probed,
+          adc("p.e_s", "cbol", nSub, sub))},
+        ${short("short_ivfpq_r", "probes p, cents ct, acodesr n, cbrl",
+          s"ct.cell = p.cell AND $probed",
+          adc("p.e_q", "cbrl", nSub, sub, Some("ct.cv")))},
+        dqz AS (${sq8Dequant()}),
+        ${short("short_sq8", "embeddings q JOIN dqz n ON n.vec_id <> q.vec_id",
+          s"q.vec_id < $nQueries", sq8Score("q.embedding"))}
        SELECT variant, n_truth, n_hit,
          round(n_hit / CAST(n_truth AS DOUBLE), 4) AS recall
        FROM (
-         SELECT 'ann_ivfpq' AS variant,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           ${hitCount("short_ivfpq")} AS n_hit
+         ${branch("ann_ivfpq", "short_ivfpq")}
          UNION ALL
-         SELECT 'ann_ivfpq_opq' AS variant,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           ${hitCount("short_ivfpq_opq")} AS n_hit
+         ${branch("ann_ivfpq_opq", "short_ivfpq_opq")}
          UNION ALL
-         SELECT 'ann_ivfpq_residual' AS variant,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           ${hitCount("short_ivfpq_r")} AS n_hit
+         ${branch("ann_ivfpq_residual", "short_ivfpq_r")}
          UNION ALL
-         SELECT 'ann_pq' AS variant,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           ${hitCount("short_pq")} AS n_hit
+         ${branch("ann_pq", "short_pq")}
          UNION ALL
-         SELECT 'ann_pq_opq' AS variant,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           ${hitCount("short_pq_opq")} AS n_hit
+         ${branch("ann_pq_opq", "short_pq_opq")}
          UNION ALL
-         SELECT 'ann_sq8' AS variant,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           ${hitCount("short_sq8")} AS n_hit)
+         ${branch("ann_sq8", "short_sq8")})
        ORDER BY variant"""
   }
 
@@ -677,15 +300,11 @@ object Ann {
     * filter + the same oriented triangle join and per-corner
     * attribution. */
   def knnTrianglesOracle(k: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+    s"""WITH ${normCte("n")},
         e0 AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
+                ${cosOf("q", "c")} DESC,
                 c.vec_id) AS rnk
             FROM n q JOIN n c ON c.vec_id <> q.vec_id)
           WHERE rnk <= $k),
@@ -723,15 +342,11 @@ object Ann {
     * mutual filter + recursive-CTE transitive closure + the identical
     * majority/purity arithmetic. */
   def knnCommunitiesOracle(k: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    s"""WITH RECURSIVE n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+    s"""WITH RECURSIVE ${normCte("n")},
         e0 AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
+                ${cosOf("q", "c")} DESC,
                 c.vec_id) AS rnk
             FROM n q JOIN n c ON c.vec_id <> q.vec_id)
           WHERE rnk <= $k),
@@ -767,60 +382,34 @@ object Ann {
     * probed-cell population sum — unioned. */
   def ivfDriftImpactOracle(nQueries: Int = 10, k: Int = 5,
                            nProbe: Int = 4): String = {
-    val cents = staticCentroids()
-    val dotE = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
     val qCap = nQueries * 5
     def scen(tag: String, deltaSrc: String) =
-      s"""${tag}_n AS (SELECT vec_id, embedding,
-             sqrt(${dotE("embedding", "embedding")}) AS nrm
-           FROM (SELECT * FROM base UNION ALL SELECT * FROM $deltaSrc)),
-         ${tag}_ranked AS (
-           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-               ${dotE("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-           FROM ${tag}_n v, cents c),
-         ${tag}_assigned AS (SELECT cell, vec_id AS neighbor_id,
-             embedding AS e_c, nrm AS n_c
-           FROM ${tag}_ranked WHERE crnk = 1),
+      s"""${normCte(s"${tag}_n",
+             s"(SELECT * FROM base UNION ALL SELECT * FROM $deltaSrc)")},
+         ${rankedCte(s"${tag}_ranked", s"${tag}_n")},
+         ${assignedCte(s"${tag}_assigned", s"${tag}_ranked")},
          ${tag}_cc AS (SELECT cell, count(*) AS cnt
            FROM ${tag}_assigned GROUP BY 1),
-         ${tag}_truth AS (SELECT query_id, neighbor_id FROM (
-             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 ${dotE("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
-                   DESC, c.vec_id) AS rnk
-             FROM ${tag}_n q JOIN ${tag}_n c ON c.vec_id <> q.vec_id
-             WHERE q.vec_id % 5 = 0 AND q.vec_id < $qCap)
-           WHERE rnk <= $k)"""
+         ${truthCte(s"${tag}_truth", s"${tag}_n",
+           s"q.vec_id % 5 = 0 AND q.vec_id < $qCap", k)}"""
     def sel(tag: String) =
       s"""SELECT '$tag' AS scenario,
            (SELECT CAST(count(*) AS BIGINT) FROM ${tag}_truth) AS n_truth,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM (SELECT pr.query_id, a.neighbor_id,
-                    row_number() OVER (PARTITION BY pr.query_id ORDER BY
-                      ${dotE("pr.e_q", "a.e_c")} / (pr.n_q * a.n_c) DESC,
-                      a.neighbor_id) AS rnk
-                  FROM (SELECT cell, vec_id AS query_id, embedding AS e_q,
+           ${hits("pr", "a", probedCos("pr"),
+             s"""(SELECT cell, vec_id AS query_id, embedding AS e_q,
                           nrm AS n_q
                         FROM ${tag}_ranked
                         WHERE crnk <= $nProbe AND vec_id % 5 = 0
                           AND vec_id < $qCap) pr
                   JOIN ${tag}_assigned a ON pr.cell = a.cell
-                  WHERE pr.query_id <> a.neighbor_id) i
-            JOIN ${tag}_truth t ON t.query_id = i.query_id
-                               AND t.neighbor_id = i.neighbor_id
-            WHERE i.rnk <= $k) AS n_hit,
+                  WHERE pr.query_id <> a.neighbor_id""", k,
+             truth = s"${tag}_truth")} AS n_hit,
            (SELECT CAST(sum(cc.cnt) AS BIGINT) - $nQueries
             FROM (SELECT cell FROM ${tag}_ranked
                   WHERE crnk <= $nProbe AND vec_id % 5 = 0
                     AND vec_id < $qCap) pp
             JOIN ${tag}_cc cc USING (cell)) AS n_candidates"""
-    s"""WITH cents(cell, cv) AS (VALUES $centRows),
+    s"""WITH cents(cell, cv) AS (VALUES ${rows(staticCentroids())}),
         base AS (SELECT vec_id, embedding FROM embeddings
                  WHERE vec_id % 5 <> 0),
         delta_stable AS (SELECT vec_id, embedding FROM embeddings
@@ -852,32 +441,20 @@ object Ann {
     * parquet rows (float storage is exact). */
   def ivfRebuildOracle(nQueries: Int = 10, k: Int = 5, nProbe: Int = 4,
                        nCells: Int = 16): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir).select(col("vec_id"), col("embedding"))
+    val v = Oracle.vectors().select(col("vec_id"), col("embedding"))
     val shifted = v.filter(col("vec_id") % 5 === 0).select(col("vec_id"),
       transform(col("embedding"), x => x + lit(0.5f)).as("embedding"))
     val postCents = trainCentroids(
       v.filter(col("vec_id") % 5 =!= 0).unionByName(shifted), nCells)
-    val dotE = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    def centRows(cents: Array[Array[Double]]) =
-      cents.zipWithIndex.map { case (c, i) =>
-        s"(${i}, ${c.mkString("[", ", ", "]")})"
-      }.mkString(", ")
     val qCap = nQueries * 5
     // ranked assignment of the drifted corpus under one centroid table
     def ranked(tag: String, cents: String) =
       s"""${tag}_ranked AS (
            SELECT v.vec_id, v.embedding, c.cell,
-             ${dotE("v.embedding", "c.cv")} AS dp,
-             sqrt(${dotE("v.embedding", "v.embedding")}) AS nrm,
+             ${dot("v.embedding", "c.cv")} AS dp,
+             sqrt(${dot("v.embedding", "v.embedding")}) AS nrm,
              row_number() OVER (PARTITION BY v.vec_id ORDER BY
-               ${dotE("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+               ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
            FROM cur v, $cents c)"""
     // per-cell (cnt, dsum) stats over a crnk=1 slice
     def stat(tag: String, name: String, pre: String, where: String) =
@@ -907,15 +484,12 @@ object Ann {
              FROM ${tag}_j, ${tag}_tot))"""
     // brute truth + probed-cell candidate bill over the same ranked CTE
     def impact(tag: String) =
-      s"""${tag}_truth AS (SELECT query_id, neighbor_id FROM (
-             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 ${dotE("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
-                   DESC, c.vec_id) AS rnk
-             FROM ${tag}_ranked q
+      s"""${topKIds(s"${tag}_truth", ("q.vec_id AS query_id", "q.vec_id"),
+             ("c.vec_id AS neighbor_id", "c.vec_id"), cosOf("q", "c"),
+             s"""${tag}_ranked q
              JOIN ${tag}_ranked c ON c.crnk = 1 AND c.vec_id <> q.vec_id
-             WHERE q.crnk = 1 AND q.vec_id % 5 = 0 AND q.vec_id < $qCap)
-           WHERE rnk <= $k),
+             WHERE q.crnk = 1 AND q.vec_id % 5 = 0 AND q.vec_id < $qCap""",
+             k)},
          ${tag}_cc AS (SELECT cell, count(*) AS cnt
            FROM ${tag}_ranked WHERE crnk = 1 GROUP BY 1)"""
     def sel(tag: String) =
@@ -927,12 +501,8 @@ object Ann {
            (SELECT n_cells_onesided FROM ${tag}_summary)
              AS n_cells_onesided,
            (SELECT CAST(count(*) AS BIGINT) FROM ${tag}_truth) AS n_truth,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM (SELECT pr.query_id, a.neighbor_id,
-                    row_number() OVER (PARTITION BY pr.query_id ORDER BY
-                      ${dotE("pr.e_q", "a.e_c")} / (pr.n_q * a.n_c) DESC,
-                      a.neighbor_id) AS rnk
-                  FROM (SELECT cell, vec_id AS query_id,
+           ${hits("pr", "a", probedCos("pr"),
+             s"""(SELECT cell, vec_id AS query_id,
                           embedding AS e_q, nrm AS n_q
                         FROM ${tag}_ranked
                         WHERE crnk <= $nProbe AND vec_id % 5 = 0
@@ -941,17 +511,15 @@ object Ann {
                           embedding AS e_c, nrm AS n_c
                         FROM ${tag}_ranked WHERE crnk = 1) a
                     ON pr.cell = a.cell
-                  WHERE pr.query_id <> a.neighbor_id) i
-            JOIN ${tag}_truth t ON t.query_id = i.query_id
-                               AND t.neighbor_id = i.neighbor_id
-            WHERE i.rnk <= $k) AS n_hit,
+                  WHERE pr.query_id <> a.neighbor_id""", k,
+             truth = s"${tag}_truth")} AS n_hit,
            (SELECT CAST(sum(cc.cnt) AS BIGINT) - $nQueries
             FROM (SELECT cell FROM ${tag}_ranked
                   WHERE crnk <= $nProbe AND vec_id % 5 = 0
                     AND vec_id < $qCap) pp
             JOIN ${tag}_cc cc USING (cell)) AS n_candidates"""
-    s"""WITH cents_pre(cell, cv) AS (VALUES ${centRows(staticCentroids())}),
-        cents_post(cell, cv) AS (VALUES ${centRows(postCents)}),
+    s"""WITH cents_pre(cell, cv) AS (VALUES ${rows(staticCentroids())}),
+        cents_post(cell, cv) AS (VALUES ${rows(postCents)}),
         cur AS (SELECT vec_id, embedding FROM embeddings
                 WHERE vec_id % 5 <> 0
                 UNION ALL
@@ -984,23 +552,16 @@ object Ann {
     * terms, same one-sided-cell accounting, both scenarios replayed
     * and unioned. */
   def ivfDriftOracle(): String = {
-    val cents = staticCentroids()
-    val dotE = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
     // ranked-assignment replay + per-cell count/distance rollup for one
     // corpus CTE; columns named by `pre` so base stats join two
     // scenario stats without collisions
     def stats(src: String, tag: String, pre: String) =
       s"""${tag}_scored AS (
            SELECT v.vec_id, c.cell,
-             ${dotE("v.embedding", "c.cv")} AS dp,
-             sqrt(${dotE("v.embedding", "v.embedding")}) AS nrm,
+             ${dot("v.embedding", "c.cv")} AS dp,
+             sqrt(${dot("v.embedding", "v.embedding")}) AS nrm,
              row_number() OVER (PARTITION BY v.vec_id ORDER BY
-               ${dotE("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+               ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
            FROM $src v, cents c),
          ${tag}_stat AS (
            SELECT cell, CAST(count(*) AS BIGINT) AS ${pre}_cnt,
@@ -1045,7 +606,7 @@ object Ann {
            round(CAST(t.cd AS DOUBLE) / t.n_cur, 6) AS cur_mdist6,
            coalesce(CAST(m.psi_sum AS DOUBLE), 0.0) > 0.2 AS is_shifted
          FROM ${tag}_shares s, ${tag}_summary m, ${tag}_tot t"""
-    s"""WITH cents(cell, cv) AS (VALUES $centRows),
+    s"""WITH cents(cell, cv) AS (VALUES ${rows(staticCentroids())}),
         base AS (SELECT vec_id, embedding FROM embeddings
                  WHERE vec_id % 5 <> 0),
         delta AS (SELECT vec_id, embedding FROM embeddings
@@ -1072,25 +633,12 @@ object Ann {
     * code argmin (biased dot DESC, code ASC), the SAME three-term 8-dp
     * decimal error, and the shared-baseline join per scenario. */
   def pqDriftOracle(staleRatio: Double = 1.5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir).select(col("vec_id"), col("embedding"))
+    val v = Oracle.vectors().select(col("vec_id"), col("embedding"))
     val cbs = withTrainCache(v.filter(col("vec_id") % 5 =!= 0))(
       trainPqCodebooks(_))
     val nSub = cbs.length
     val sub = cbs.head.head.length
-    val dotE = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val cbRows = (for {
-      m <- 0 until nSub
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})")
-      .mkString(", ")
+    val cbRows = codebookRows(cbs)
     def stats(src: String, tag: String, pre: String) =
       s"""${tag}_sub AS (SELECT v.vec_id, mm.m AS m,
              v.embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
@@ -1098,11 +646,11 @@ object Ann {
          ${tag}_coded AS (SELECT vec_id, m, s, cv, bias FROM (
              SELECT t.vec_id, t.m, t.s, cb.cv, cb.bias,
                row_number() OVER (PARTITION BY t.vec_id, t.m
-                 ORDER BY (${dotE("t.s", "cb.cv")} + cb.bias) DESC,
+                 ORDER BY (${dot("t.s", "cb.cv")} + cb.bias) DESC,
                    cb.kk) AS r
              FROM ${tag}_sub t JOIN cb ON cb.m = t.m) WHERE r = 1),
          ${tag}_stat AS (SELECT m, CAST(count(*) AS BIGINT) AS ${pre}_cnt,
-             sum(CAST(round(${dotE("s", "s")} - 2 * ${dotE("s", "cv")}
+             sum(CAST(round(${dot("s", "s")} - 2 * ${dot("s", "cv")}
                - 2 * bias, 8) AS DECIMAL(18,8))) AS ${pre}_esum
            FROM ${tag}_coded GROUP BY m)"""
     def scen(tag: String) =
@@ -1143,7 +691,7 @@ object Ann {
     * replay over the STATIC quantizer the artifact build pins. */
   def ivfSq8StaticOracle(nProbe: Int = 4, nQueries: Int = 10, k: Int = 5,
                          shortlistFactor: Int = 8): String =
-    ivfSq8OracleFor(staticCentroids(), nProbe, nQueries, k, shortlistFactor)
+    ann(Ivf(staticCentroids(), nProbe), Sq8, nQueries, k, shortlistFactor)
 
   /** DuckDB replay for [[annMmrSq8Indexed]]: [[mmrOracleOver]]'s
     * greedy rounds fed by the sq8 two-stage shortlist — static-IVF
@@ -1154,27 +702,15 @@ object Ann {
                           k: Int = 5, shortlistFactor: Int = 8,
                           lambda: Double = 0.7,
                           preFactor: Int = 2): String = {
-    val dot = mmrDotSql _
-    val centRows = staticCentroids().zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
     mmrOracleOver(
-      s"""cents(cell, cv) AS (VALUES $centRows),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        assigned AS (SELECT cell, vec_id AS cand_id, embedding AS e_c,
-                       nrm AS n_c FROM ranked WHERE crnk = 1),
-        dq AS ($sq8DequantCteBody),
+      s"""cents(cell, cv) AS (VALUES ${rows(staticCentroids())}),
+        ${rankedCte()},
+        ${assignedCte(id = "cand_id")},
+        dq AS (${sq8Dequant()}),
         acand AS (SELECT a.cell, a.cand_id, d.d,
                     sqrt(${dot("d.d", "d.d")}) AS n_d
                   FROM assigned a JOIN dq d ON d.vec_id = a.cand_id),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q,
-                     nrm AS n_q
-                   FROM ranked WHERE crnk <= $nProbe
-                     AND vec_id < $nQueries),
+        ${probesCte(nProbe, s"vec_id < $nQueries", norm = true)},
         pre AS (SELECT query_id, cand_id FROM (
             SELECT p.query_id, n.cand_id,
               row_number() OVER (PARTITION BY p.query_id ORDER BY
@@ -1183,17 +719,7 @@ object Ann {
             FROM probes p JOIN acand n ON n.cell = p.cell
             WHERE n.cand_id <> p.query_id)
           WHERE r <= ${preFactor * shortlistFactor * k}),
-        short AS (SELECT query_id, cand_id, cosq FROM (
-            SELECT pr.query_id, pr.cand_id,
-              ${dot("qv.embedding", "cv.embedding")}
-                / (qv.nrm * cv.nrm) AS cosq,
-              row_number() OVER (PARTITION BY pr.query_id ORDER BY
-                ${dot("qv.embedding", "cv.embedding")}
-                  / (qv.nrm * cv.nrm) DESC, pr.cand_id) AS r
-            FROM pre pr
-            JOIN nv qv ON qv.vec_id = pr.query_id
-            JOIN nv cv ON cv.vec_id = pr.cand_id)
-          WHERE r <= ${shortlistFactor * k})""", k, lambda)
+        ${mmrRescore(shortlistFactor * k)}""", k, lambda)
   }
 
   /** DuckDB replay for [[annMmrPqIndexed]]: [[mmrOracleOver]]'s greedy
@@ -1206,99 +732,59 @@ object Ann {
                          shortlistFactor: Int = 8,
                          lambda: Double = 0.7,
                          preFactor: Int = 2): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
+    val v = Oracle.vectors()
     val (cents, cbs) =
       withTrainCache(v)(vc => (trainCentroids(vc, nCells),
         trainPqCodebooks(vc)))
     val nSub = cbs.length
     val sub = cbs.head.head.length
-    val dot = mmrDotSql _
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    val (cbRows, cbLit) = pqCbLits(cbs)
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    val adc = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"p.e_s[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
     mmrOracleOver(
-      s"""cents(cell, cv) AS (VALUES $centRows),
-        cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM embeddings,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS MATERIALIZED (SELECT vec_id, $codePivot
-                               FROM coded GROUP BY 1),
-        acodes AS (SELECT a.cell, c.* FROM codes c
-                   JOIN (SELECT vec_id, cell FROM ranked WHERE crnk = 1) a
-                     ON a.vec_id = c.vec_id),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_s
-               FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries),
+      s"""cents(cell, cv) AS (VALUES ${rows(cents)}),
+        ${codebookCtes(cbs)},
+        ${rankedCte()},
+        ${pqEncode(nSub, sub, "embeddings", materialize = true)},
+        ${cellCodesCte()},
+        ${probesCte(nProbe, s"vec_id < $nQueries", norm = false)},
         pre AS MATERIALIZED (SELECT query_id, cand_id FROM (
             SELECT p.query_id, n.vec_id AS cand_id,
               row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
+                (${adc("p.e_q", "cbl", nSub, sub)}) DESC, n.vec_id) AS r
             FROM probes p, acodes n, cbl
-            WHERE n.cell = p.cell AND n.vec_id <> p.query_id)
+            WHERE $probed)
           WHERE r <= ${preFactor * shortlistFactor * k}),
         -- MATERIALIZED: the greedy skeleton references short/pairs once
         -- per unrolled round; inlining would re-evaluate the full PQ
         -- encode + ADC chain 2k+ times and exhaust the checker's memory
-        short AS MATERIALIZED (SELECT query_id, cand_id, cosq FROM (
+        ${mmrRescore(shortlistFactor * k, materialize = true)}""",
+      k, lambda)
+  }
+
+  /** `short(query_id, cand_id, cosq)`: the exact re-rank of
+    * pre-shortlist `pre`, cut to `limit` per query. */
+  private def mmrRescore(limit: Int, materialize: Boolean = false)
+      : String =
+    s"""short AS${if (materialize) " MATERIALIZED" else ""} (SELECT query_id, cand_id, cosq FROM (
             SELECT pr.query_id, pr.cand_id,
-              ${dot("qv.embedding", "cv.embedding")}
-                / (qv.nrm * cv.nrm) AS cosq,
+              ${cosOf("qv", "cv")} AS cosq,
               row_number() OVER (PARTITION BY pr.query_id ORDER BY
-                ${dot("qv.embedding", "cv.embedding")}
-                  / (qv.nrm * cv.nrm) DESC, pr.cand_id) AS r
+                ${cosOf("qv", "cv")} DESC, pr.cand_id) AS r
             FROM pre pr
             JOIN nv qv ON qv.vec_id = pr.query_id
             JOIN nv cv ON cv.vec_id = pr.cand_id)
-          WHERE r <= ${shortlistFactor * k})""", k, lambda)
-  }
+          WHERE r <= $limit)"""
 
   /** DuckDB replay for [[annMmr]] — static SQL with the k greedy
     * rounds UNROLLED (sel1..selK + cumulative selected sets): the same
     * shortlist/pair arithmetic, the same `λ·cosq − (1−λ)·max` formula
     * with the same literal λ, the same (mmr DESC, id) tie-break. */
-  /** The DuckDB dot-product fragment the MMR oracle builders share
-    * (the file's older oracles predate the helper and keep their local
-    * copies — consolidation tracked as cleanup, not a defect). */
-  private def mmrDotSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(list_zip($a, $b),
-        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-
   def mmrOracle(nQueries: Int = 10, k: Int = 5, shortlistFactor: Int = 8,
                 lambda: Double = 0.7): String = {
-    val dot = mmrDotSql _
     mmrOracleOver(
       s"""short AS (SELECT query_id, cand_id, cosq FROM (
             SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-              ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosq,
+              ${cosOf("q", "c")} AS cosq,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
+                ${cosOf("q", "c")} DESC,
                 c.vec_id) AS r
             FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
             WHERE q.vec_id < $nQueries)
@@ -1313,27 +799,16 @@ object Ann {
   def mmrIndexedOracle(nProbe: Int = 4, nQueries: Int = 10, k: Int = 5,
                        shortlistFactor: Int = 8,
                        lambda: Double = 0.7): String = {
-    val dot = mmrDotSql _
-    val centRows = staticCentroids().zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
     mmrOracleOver(
-      s"""cents(cell, cv) AS (VALUES $centRows),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        assigned AS (SELECT cell, vec_id AS cand_id, embedding AS e_c,
-                       nrm AS n_c FROM ranked WHERE crnk = 1),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q,
-                     nrm AS n_q
-                   FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries),
+      s"""cents(cell, cv) AS (VALUES ${rows(staticCentroids())}),
+        ${rankedCte()},
+        ${assignedCte(id = "cand_id")},
+        ${probesCte(nProbe, s"vec_id < $nQueries", norm = true)},
         short AS (SELECT query_id, cand_id, cosq FROM (
             SELECT p.query_id, a.cand_id,
-              ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cosq,
+              ${probedCos()} AS cosq,
               row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
+                ${probedCos()} DESC,
                 a.cand_id) AS r
             FROM probes p JOIN assigned a ON p.cell = a.cell
             WHERE p.query_id <> a.cand_id)
@@ -1347,7 +822,6 @@ object Ann {
     * drift in the selection arithmetic. */
   private def mmrOracleOver(shortCtes: String, k: Int,
                             lambda: Double): String = {
-    val dot = mmrDotSql _
     val lam = lambda.toString
     val oneMinus = (1.0 - lambda).toString
     // k = 1 has no later rounds: emit NO trailing CTE (a dangling
@@ -1376,12 +850,10 @@ object Ann {
     val unionAll = (1 to k)
       .map(r => s"SELECT query_id, cand_id, $r AS rnk, cosq, mmr FROM sel$r")
       .mkString(" UNION ALL ")
-    s"""WITH nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
+    s"""WITH ${normCte()},
         $shortCtes,
         pairs AS (SELECT a.query_id, a.cand_id AS a_id, b.cand_id AS b_id,
-            ${dot("ea.embedding", "eb.embedding")} / (ea.nrm * eb.nrm) AS cab
+            ${cosOf("ea", "eb")} AS cab
           FROM short a
           JOIN short b ON b.query_id = a.query_id
                       AND b.cand_id <> a.cand_id
@@ -1406,22 +878,10 @@ object Ann {
     * smaller delta id. */
   def semanticDedupIncrementalOracle(nCells: Int = 16,
                                      tau: Double = 0.4): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val cents = withTrainCache(vectors(spark, sfDir))(
+    val cents = withTrainCache(Oracle.vectors())(
       trainCentroids(_, nCells))
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        cents(cell, cv) AS (VALUES $centRows),
+    s"""WITH ${normCte("n")},
+        cents(cell, cv) AS (VALUES ${rows(cents)}),
         assigned AS (SELECT vec_id, embedding, nrm, cell,
                             vec_id % 5 = 0 AS is_base FROM (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
@@ -1449,32 +909,16 @@ object Ann {
     * the (cos DESC, id ASC) top-match replayed exactly. */
   def decontaminateSemanticOracle(nCells: Int = 16, nProbe: Int = 4,
                                   tau: Double = 0.4): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val cents = trainCentroids(vectors(spark, sfDir), nCells)
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        cents(cell, cv) AS (VALUES $centRows),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM n v, cents c),
+    val cents = trainCentroids(Oracle.vectors(), nCells)
+    s"""WITH ${normCte("n")},
+        cents(cell, cv) AS (VALUES ${rows(cents)}),
+        ${rankedCte(norm = "n")},
         corpus AS (SELECT vec_id, embedding, nrm, cell FROM ranked
                    WHERE crnk = 1 AND vec_id % 10 <> 0),
         probes AS (SELECT vec_id AS eval_id, embedding, nrm, cell
                    FROM ranked WHERE crnk <= $nProbe AND vec_id % 10 = 0),
         hits AS (SELECT c.vec_id, p.eval_id,
-                   ${dot("c.embedding", "p.embedding")} / (c.nrm * p.nrm)
+                   ${cosOf("c", "p")}
                      AS cos
                  FROM corpus c JOIN probes p ON p.cell = c.cell
                  WHERE ${dot("c.embedding", "p.embedding")}
@@ -1494,21 +938,9 @@ object Ann {
   /** Oracle for [[semanticDedup]]: trained centroids inlined, ranked
     * assignment + within-cell pairwise replay. */
   def semanticDedupOracle(nCells: Int = 16, tau: Double = 0.4): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val cents = trainCentroids(vectors(spark, sfDir), nCells)
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        cents(cell, cv) AS (VALUES $centRows),
+    val cents = trainCentroids(Oracle.vectors(), nCells)
+    s"""WITH ${normCte("n")},
+        cents(cell, cv) AS (VALUES ${rows(cents)}),
         assigned AS (SELECT vec_id, embedding, nrm, cell FROM (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
@@ -1533,31 +965,14 @@ object Ann {
                             probeCounts: Seq[Int] = Seq(1, 2, 4),
                             taus: Seq[Double] = Seq(0.3, 0.4),
                             nEval: Int = 50): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val cents = trainCentroids(vectors(spark, sfDir), nCells)
+    val cents = trainCentroids(Oracle.vectors(), nCells)
     val maxProbe = math.min(probeCounts.max, cents.length)
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
     val gridRows = probeCounts.flatMap(np =>
       taus.map(tau => s"($np, $tau)")).mkString(", ")
     val minTau = taus.min
-    s"""WITH cents(cell, cv) AS (VALUES $centRows),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
+    s"""WITH cents(cell, cv) AS (VALUES ${rows(cents)}),
+        ${normCte()},
+        ${rankedCte()},
         corpus AS (SELECT vec_id, embedding, nrm, cell FROM ranked
                    WHERE crnk = 1 AND vec_id % 10 <> 0),
         evals AS (SELECT vec_id AS eval_id, embedding, nrm
@@ -1568,13 +983,13 @@ object Ann {
                    FROM ranked WHERE crnk <= $maxProbe
                      AND vec_id % 10 = 0 AND vec_id < ${nEval * 10}),
         pairs AS (SELECT c.vec_id, p.probe_rank,
-                    ${dot("c.embedding", "p.embedding")} / (c.nrm * p.nrm)
+                    ${cosOf("c", "p")}
                       AS cos
                   FROM corpus c JOIN probes p ON p.cell = c.cell
                   WHERE ${dot("c.embedding", "p.embedding")}
                           / (c.nrm * p.nrm) >= $minTau),
         brute AS (SELECT c.vec_id,
-                    ${dot("c.embedding", "e.embedding")} / (c.nrm * e.nrm)
+                    ${cosOf("c", "e")}
                       AS cos
                   FROM corpus c, evals e
                   WHERE ${dot("c.embedding", "e.embedding")}
@@ -1601,16 +1016,12 @@ object Ann {
     * proven by the embedding_dedup oracle). This flips ann_lsh from a
     * weak rows-only check to a full value-hash oracle match. */
   def lshOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val planes = hyperplanes(16, 64)
     val bitExprs = planes.map { p =>
       val lit = p.mkString("[", ", ", "]")
       s"CASE WHEN ${dot("embedding", lit)} > 0 THEN '1' ELSE '0' END"
     }.mkString("concat(", ", ", ")")
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+    s"""WITH ${normCte("n")},
         bits AS (SELECT vec_id, embedding, nrm, $bitExprs AS bits FROM n),
         banded AS (
           SELECT vec_id, b.b || ':' || substring(bits, b.b * 2 + 1, 2)
@@ -1622,9 +1033,9 @@ object Ann {
           WHERE q.vec_id < $nQueries AND q.vec_id <> c.vec_id)
         SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
           SELECT p.query_id, p.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
+            ${cosOf("qv", "cv")} AS cos,
             CAST(row_number() OVER (PARTITION BY p.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
+              ${cosOf("qv", "cv")} DESC,
               p.neighbor_id) AS INTEGER) AS rnk
           FROM pair_ids p
           JOIN bits qv ON qv.vec_id = p.query_id
@@ -1632,208 +1043,38 @@ object Ann {
         WHERE rnk <= $k ORDER BY query_id, rnk"""
   }
 
-  /** DuckDB oracle for [[annIvfStatic]]: centroid rows inlined as VALUES
-    * list literals; assignment/probing replayed with a ranked 16-way
-    * expansion (the ORACLE may brute-force what the engine does
-    * map-only — that asymmetry is the point). */
+  /** DuckDB oracle for [[annIvfStatic]]: the static centroids inlined;
+    * assignment and probing replayed with a ranked 16-way expansion (the
+    * oracle may brute-force what the engine does map-only). */
   def ivfStaticOracle(nProbe: Int = 4, nQueries: Int = 10,
                       k: Int = 5): String =
-    ivfOracleFor(staticCentroids(), nProbe, nQueries, k)
+    ann(Ivf(staticCentroids(), nProbe), Exact, nQueries, k)
 
   /** Oracle for the TRAINED IVF query: inlines the centroid matrix the
-    * engine deterministically trains on the verify SF (set by Verify via
-    * -Dgraft.oracle.sfdir), so everything downstream of training —
-    * assignment, probing, ranking — is oracle-checked exactly. Training
-    * itself is covered by the determinism/unit-norm property spec; the
-    * oracle takes the quantizer as given, as any oracle must for a
-    * data-dependent model. */
+    * engine deterministically trains on the verify SF, so everything
+    * downstream of training — assignment, probing, ranking — is checked
+    * exactly. Training itself is covered by the determinism/unit-norm
+    * property spec; the oracle takes the quantizer as given, as any
+    * oracle must for a data-dependent model. */
   def ivfTrainedOracle(nCells: Int = 16, nProbe: Int = 4, nQueries: Int = 10,
-                       k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    ivfOracleFor(trainCentroids(vectors(spark, sfDir), nCells),
-      nProbe, nQueries, k)
-  }
+                       k: Int = 5): String =
+    ann(Ivf(trainCentroids(Oracle.vectors(), nCells), nProbe), Exact,
+      nQueries, k)
 
-  private def ivfOracleFor(cents: Array[Array[Double]], nProbe: Int,
-                           nQueries: Int, k: Int): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
-        cents(cell, cv) AS (VALUES $centRows),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM n v, cents c),
-        assigned AS (SELECT cell, vec_id AS neighbor_id, embedding AS e_c,
-                       nrm AS n_c FROM ranked WHERE crnk = 1),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q,
-                     nrm AS n_q
-                   FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries)
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT p.query_id, a.neighbor_id,
-            ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cos,
-            CAST(row_number() OVER (PARTITION BY p.query_id ORDER BY
-              ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
-              a.neighbor_id) AS INTEGER) AS rnk
-          FROM probes p JOIN assigned a ON p.cell = a.cell
-          WHERE p.query_id <> a.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
-  }
-
-  /** (VALUES rows, nested array literal) for a codebook set — the two
-    * inline forms every PQ-family oracle embeds; built HERE once so a
-    * multi-codebook oracle (the recall table prices raw + residual +
-    * OPQ off one statement) cannot drift between its copies. */
-  private def pqCbLits(cbs: Array[Array[Array[Double]]])
-      : (String, String) = {
-    val rows = (for {
-      m <- cbs.indices
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})").mkString(", ")
-    val lit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    (rows, lit)
-  }
-
-  /** The sq8 dequantized-corpus CTE body — embedding_quantize's exact
-    * per-element max-abs formula, defined ONCE and shared by every
-    * oracle that replays int8 serving ([[sq8Oracle]], the recall
-    * table, [[ivfSq8OracleFor]]), so the clamp/round arithmetic cannot
-    * drift between the variants it prices. */
-  // private[graft]: Curation's fused-retrieval oracle replays the sq8
-  // vector leg with the SAME clamp/round body (the shared-body stance)
-  private[graft] def sq8DequantCteBody: String =
-    sq8DequantCteBodyOver("embeddings")
-
-  /** [[sq8DequantCteBody]] over an arbitrary (vec_id, embedding)
-    * source CTE/table — the whitened-space replay reuses the exact
-    * clamp/round arithmetic over its transformed corpus. */
-  private def sq8DequantCteBodyOver(src: String): String =
-    s"""SELECT vec_id,
-                 list_transform(embedding,
-                   v -> least(greatest(
-                          round(CAST(v AS DOUBLE) * scale), -127.0),
-                          127.0) / scale) AS d
-               FROM (SELECT vec_id, embedding,
-                       CASE WHEN maxabs > 0 THEN 127.0 / maxabs
-                            ELSE 1.0 END AS scale
-                     FROM (SELECT vec_id, embedding,
-                             list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                               list_transform(embedding,
-                                 v -> abs(CAST(v AS DOUBLE)))),
-                               (a, b) -> greatest(a, b)) AS maxabs
-                           FROM $src))"""
-
-  /** DuckDB replay for [[annSq8]] — static SQL: per-element max-abs
-    * quantize/clamp/dequantize (the embedding_quantize oracle's exact
-    * formula), stage-1 cosine as three left folds, the same
-    * shortlist-then-exact-re-rank tail as [[pqOracleFor]]. */
+  /** DuckDB replay for [[annSq8]]: per-element max-abs
+    * quantize/clamp/dequantize, stage-1 cosine as three left folds, the
+    * shortlist and the exact re-rank. */
   def sq8Oracle(nQueries: Int = 10, k: Int = 5,
-                shortlistFactor: Int = 8): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    s"""WITH nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        dq AS (${sq8DequantCteBody}),
-        short AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                (${dot("q.embedding", "n.d")}
-                   / (sqrt(${dot("q.embedding", "q.embedding")})
-                      * sqrt(${dot("n.d", "n.d")}))) DESC,
-                n.vec_id) AS r
-            FROM embeddings q JOIN dq n ON n.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE r <= ${shortlistFactor * k})
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
-            CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
-              s.neighbor_id) AS INTEGER) AS rnk
-          FROM short s
-          JOIN nv qv ON qv.vec_id = s.query_id
-          JOIN nv cv ON cv.vec_id = s.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
-  }
+                shortlistFactor: Int = 8): String =
+    ann(Brute, Sq8, nQueries, k, shortlistFactor)
 
-  /** DuckDB replay for [[annIvfSq8]]: trained centroids inlined (the
-    * [[ivfTrainedOracle]] stance), then cell assignment/probing exactly
-    * as [[ivfPqOracleFor]] and the sq8 scoring exactly as [[sq8Oracle]]
-    * — the two proven replays composed. */
+  /** DuckDB replay for [[annIvfSq8]]: trained centroids inlined, then
+    * cell assignment/probing and the sq8 scoring of the probed cells. */
   def ivfSq8TrainedOracle(nCells: Int = 16, nProbe: Int = 4,
                           nQueries: Int = 10, k: Int = 5,
                           shortlistFactor: Int = 8): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
-    val cents = withTrainCache(v)(trainCentroids(_, nCells))
-    ivfSq8OracleFor(cents, nProbe, nQueries, k, shortlistFactor)
-  }
-
-  /** [[ivfSq8TrainedOracle]]'s replay for a GIVEN quantizer — shared
-    * with the static-quantizer artifact leg ([[annIvfSq8Indexed]]),
-    * which serves bit-identically by construction. */
-  private def ivfSq8OracleFor(cents: Array[Array[Double]],
-                              nProbe: Int, nQueries: Int, k: Int,
-                              shortlistFactor: Int): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    s"""WITH cents(cell, cv) AS (VALUES $centRows),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        dq AS (${sq8DequantCteBody}),
-        acand AS (SELECT a.cell, d.vec_id, d.d FROM dq d
-                  JOIN (SELECT vec_id, cell FROM ranked WHERE crnk = 1) a
-                    ON a.vec_id = d.vec_id),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q
-                   FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries),
-        short AS (SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                (${dot("p.e_q", "n.d")}
-                   / (sqrt(${dot("p.e_q", "p.e_q")})
-                      * sqrt(${dot("n.d", "n.d")}))) DESC,
-                n.vec_id) AS r
-            FROM probes p, acand n
-            WHERE n.cell = p.cell AND n.vec_id <> p.query_id)
-          WHERE r <= ${shortlistFactor * k})
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
-            CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
-              s.neighbor_id) AS INTEGER) AS rnk
-          FROM short s
-          JOIN nv qv ON qv.vec_id = s.query_id
-          JOIN nv cv ON cv.vec_id = s.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
+    val cents = withTrainCache(Oracle.vectors())(trainCentroids(_, nCells))
+    ann(Ivf(cents, nProbe), Sq8, nQueries, k, shortlistFactor)
   }
 
   /** Oracle for [[annIvfPqResidual]]: both trained models inlined (the
@@ -1842,393 +1083,57 @@ object Ann {
     * ADC, shortlist, and re-rank replayed exactly. */
   def ivfPqResidualTrainedOracle(nCells: Int = 16, nProbe: Int = 4,
                                  nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
-    val (cents, cbs) = withTrainCache(v) { vc =>
+    val (cents, cbs) = residualModels(nCells)
+    ann(Ivf(cents, nProbe), Pq(cbs, residual = true), nQueries, k)
+  }
+
+  /** The trained centroids and the codebooks trained on the residuals
+    * to them — the engine's residual IVF-PQ models. */
+  private def residualModels(nCells: Int)
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) =
+    withTrainCache(Oracle.vectors()) { vc =>
       val cents = trainCentroids(vc, nCells)
       (cents, trainPqCodebooks(
         residualAssigned(vc, cents).select(col("vec_id"),
           col("res").as("embedding"))))
     }
-    ivfPqResidualOracleFor(cents, cbs, nProbe, nQueries, k)
-  }
-
-  private def ivfPqResidualOracleFor(cents: Array[Array[Double]],
-                                     cbs: Array[Array[Array[Double]]],
-                                     nProbe: Int, nQueries: Int,
-                                     k: Int): String = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    val cbRows = (for {
-      m <- 0 until nSub
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})")
-      .mkString(", ")
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    // centroid term FIRST, then sub-spaces left to right — the engine's
-    // reduceLeft order
-    val adc = (s"${dot("p.e_q", "ct.cv")}" +: (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"p.e_q[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }).mkString(" + ")
-    val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    s"""WITH cents(cell, cv) AS (VALUES $centRows),
-        cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        resid AS (SELECT r.vec_id, r.cell,
-            list_transform(list_zip(r.embedding, c.cv),
-              x -> CAST(x[1] AS DOUBLE) - x[2]) AS re
-          FROM (SELECT vec_id, embedding, cell FROM ranked WHERE crnk = 1) r
-          JOIN cents c ON c.cell = r.cell),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  re[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM resid,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        acodes AS (SELECT a.cell, c.* FROM codes c
-                   JOIN (SELECT vec_id, cell FROM resid) a
-                     ON a.vec_id = c.vec_id),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q
-                   FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries),
-        short AS (SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
-            FROM probes p, cents ct, acodes n, cbl
-            WHERE ct.cell = p.cell AND n.cell = p.cell
-              AND n.vec_id <> p.query_id)
-          WHERE r <= ${8 * k})
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
-            CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
-              s.neighbor_id) AS INTEGER) AS rnk
-          FROM short s
-          JOIN nv qv ON qv.vec_id = s.query_id
-          JOIN nv cv ON cv.vec_id = s.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
-  }
 
   /** Oracle for [[annIvfPq]]: both trained models inlined (the
     * [[ivfTrainedOracle]] stance); coarse assignment, probing, PQ
     * encoding, ADC, shortlist, and re-rank replayed exactly. */
   def ivfPqTrainedOracle(nCells: Int = 16, nProbe: Int = 4,
                          nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
-    ivfPqOracleFor(trainCentroids(v, nCells), trainPqCodebooks(v),
-      nProbe, nQueries, k)
+    val v = Oracle.vectors()
+    ann(Ivf(trainCentroids(v, nCells), nProbe), Pq(trainPqCodebooks(v)),
+      nQueries, k)
   }
 
-  /** Oracle for [[annIvfPqOpqIndexed]]: the [[ivfPqOracleFor]] replay
-    * with the trained rotation inlined — codes from the rotated
-    * corpus, ADC off the rotated query, exact re-rank unchanged. */
+  /** Oracle for [[annIvfPqOpqIndexed]]: the IVF-PQ replay with the
+    * trained rotation inlined — codes from the rotated corpus, ADC off
+    * the rotated query, exact re-rank unchanged. */
   def ivfPqOpqTrainedOracle(nCells: Int = 16, nProbe: Int = 4,
                             nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val v = vectors(spark, sfDir)
-    val (cents, rO, cbsO) = withTrainCache(v) { vc =>
+    val (cents, rO, cbsO) = withTrainCache(Oracle.vectors()) { vc =>
       val c = trainCentroids(vc, nCells)
       val (r, cb) = trainOpqRotation(vc)
       (c, r, cb)
     }
-    ivfPqOracleFor(cents, cbsO, nProbe, nQueries, k, Some(rO))
-  }
-
-  private def ivfPqOracleFor(cents: Array[Array[Double]],
-                             cbs: Array[Array[Array[Double]]],
-                             nProbe: Int, nQueries: Int, k: Int,
-                             rotation: Option[Array[Array[Double]]] = None)
-      : String = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    val cbRows = (for {
-      m <- 0 until nSub
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})")
-      .mkString(", ")
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    // ADC reads the query in ENCODING space (e_s = R·q on a rotated
-    // leg, the raw query otherwise)
-    val adc = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"p.e_s[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    val rotCtes = rotation.map(r => opqRotCte(r) + ",\n        ")
-      .getOrElse("")
-    val encSrc = if (rotation.isDefined) "rot" else "embeddings"
-    val probesCte = rotation match {
-      case Some(_) =>
-        s"""probes AS (SELECT r.cell, r.vec_id AS query_id,
-                 rt.embedding AS e_s
-               FROM ranked r JOIN rot rt ON rt.vec_id = r.vec_id
-               WHERE r.crnk <= $nProbe AND r.vec_id < $nQueries)"""
-      case None =>
-        s"""probes AS (SELECT cell, vec_id AS query_id, embedding AS e_s
-               FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries)"""
-    }
-    s"""WITH cents(cell, cv) AS (VALUES $centRows),
-        cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        ${rotCtes}nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nv v, cents c),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM $encSrc,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        acodes AS (SELECT a.cell, c.* FROM codes c
-                   JOIN (SELECT vec_id, cell FROM ranked WHERE crnk = 1) a
-                     ON a.vec_id = c.vec_id),
-        $probesCte,
-        short AS (SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
-            FROM probes p, acodes n, cbl
-            WHERE n.cell = p.cell AND n.vec_id <> p.query_id)
-          WHERE r <= ${8 * k})
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
-            CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
-              s.neighbor_id) AS INTEGER) AS rnk
-          FROM short s
-          JOIN nv qv ON qv.vec_id = s.query_id
-          JOIN nv cv ON cv.vec_id = s.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
+    ann(Ivf(cents, nProbe), Pq(cbsO, rotation = Some(rO)), nQueries, k)
   }
 
   /** Oracle for [[annPq]]: inlines the codebooks the engine
     * deterministically trains on the verify SF (the
-    * [[ivfTrainedOracle]] stance — training is covered by the
-    * determinism property spec; encode, ADC, and rank are replayed
-    * EXACTLY downstream of the model). */
-  def pqTrainedOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    pqOracleFor(trainPqCodebooks(vectors(spark, sfDir)), nQueries, k)
-  }
-
-  /** DuckDB replay for a GIVEN codebook set: per-sub-space code
-    * assignment via a ranked 16-way expansion (dot DESC, code ASC —
-    * [[graft.functions.NearestCells]]' exact tie-break), ADC summed in
-    * the same fixed sub-space order. */
-  private def pqOracleFor(cbs: Array[Array[Array[Double]]],
-                          nQueries: Int, k: Int): String = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    // bias inlined as the SAME Scala-computed double the kernel adds,
-    // so `dot + bias` is bit-identical in both engines
-    val cbRows = (for {
-      m <- 0 until nSub
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})")
-      .mkString(", ")
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    val adc = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    s"""WITH cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM embeddings,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        short AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
-            FROM embeddings q, codes n, cbl
-            WHERE q.vec_id < $nQueries AND n.vec_id <> q.vec_id)
-          WHERE r <= ${8 * k})
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
-            CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
-              s.neighbor_id) AS INTEGER) AS rnk
-          FROM short s
-          JOIN nv qv ON qv.vec_id = s.query_id
-          JOIN nv cv ON cv.vec_id = s.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
-  }
+    * [[ivfTrainedOracle]] stance); encode, ADC, and rank are replayed
+    * EXACTLY downstream of the model. */
+  def pqTrainedOracle(nQueries: Int = 10, k: Int = 5): String =
+    ann(Brute, Pq(trainPqCodebooks(Oracle.vectors())), nQueries, k)
 
   /** DuckDB oracle for [[annPqOpq]]: the trained rotation AND
-    * codebooks inlined; the rotation replayed as one dot per output
-    * dimension (`list(d ORDER BY j)` — the engine's array(dot…)
-    * component-for-component), then the [[pqOracleFor]] replay over
-    * the rotated frame with the exact re-rank on the ORIGINAL
-    * embeddings. */
+    * codebooks inlined; the PQ replay over the rotated frame with the
+    * exact re-rank on the ORIGINAL embeddings. */
   def opqTrainedOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val (r, cbs) = withTrainCache(vectors(spark, sfDir))(
-      trainOpqRotation(_))
-    opqOracleFor(r, cbs, nQueries, k)
-  }
-
-  private[graft] def opqRotCte(r: Array[Array[Double]],
-                               src: String = "embeddings"): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val rRows = r.zipWithIndex.map { case (row, j) =>
-      s"($j, ${row.mkString("[", ", ", "]")})"
-    }.mkString(", ")
-    s"""rr(j, rv) AS (VALUES $rRows),
-        rot AS (SELECT vec_id, list(rd ORDER BY j) AS embedding FROM (
-            SELECT e.vec_id, r.j, ${dot("e.embedding", "r.rv")} AS rd
-            FROM $src e, rr r) GROUP BY vec_id)"""
-  }
-
-  private def opqOracleFor(r: Array[Array[Double]],
-                           cbs: Array[Array[Array[Double]]],
-                           nQueries: Int, k: Int): String = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    val cbRows = (for {
-      m <- 0 until nSub
-      kk <- cbs(m).indices
-    } yield s"($m, $kk, ${cbs(m)(kk).mkString("[", ", ", "]")}, " +
-      s"${l2Biases(cbs(m))(kk)})")
-      .mkString(", ")
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    val adc = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
-    val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    s"""WITH ${opqRotCte(r)},
-        cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM rot,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
-                          cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        short AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
-            FROM rot q, codes n, cbl
-            WHERE q.vec_id < $nQueries AND n.vec_id <> q.vec_id)
-          WHERE r <= ${8 * k})
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
-            CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
-              s.neighbor_id) AS INTEGER) AS rnk
-          FROM short s
-          JOIN nv qv ON qv.vec_id = s.query_id
-          JOIN nv cv ON cv.vec_id = s.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
+    val (r, cbs) = withTrainCache(Oracle.vectors())(trainOpqRotation(_))
+    ann(Brute, Pq(cbs, rotation = Some(r)), nQueries, k)
   }
 
   /** DuckDB oracle for [[annSignSketch]]: the 63-bit packing, the
@@ -2236,11 +1141,7 @@ object Ann {
     * TopKByScore order), and the cosine rerank all replay in SQL. */
   def signSketchOracle(nQueries: Int = 10, m: Int = 50,
                        k: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-    s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+    s"""WITH ${normCte("n")},
         b AS (SELECT vec_id, embedding, nrm,
           CAST(list_sum([CASE WHEN embedding[i + 1] > 0
                               THEN (CAST(1 AS BIGINT) << i) ELSE 0 END
@@ -2256,9 +1157,9 @@ object Ann {
           WHERE rm <= $m)
         SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
           SELECT t.query_id, t.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
+            ${cosOf("qv", "cv")} AS cos,
             CAST(row_number() OVER (PARTITION BY t.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
+              ${cosOf("qv", "cv")} DESC,
               t.neighbor_id) AS INTEGER) AS rnk
           FROM topm t
           JOIN b qv ON qv.vec_id = t.query_id
@@ -2269,7 +1170,7 @@ object Ann {
   /** DuckDB oracle for [[embeddingOutliers]]: the #164 cosine CTEs +
     * quantile_disc fences with the same doubled-integer comparisons. */
   val embeddingOutliersOracle: String =
-    """WITH dims AS (
+    s"""WITH dims AS (
          SELECT label, unnest(embedding) AS v,
                 generate_subscripts(embedding, 1) AS pos
          FROM embeddings),
@@ -2278,9 +1179,7 @@ object Ann {
          FROM dims GROUP BY label, pos),
        cvec AS (
          SELECT label, list(m ORDER BY pos) AS centroid,
-           sqrt(list_reduce(list_transform(list_zip(list(m ORDER BY pos),
-             list(m ORDER BY pos)), x -> CAST(x[1] AS DOUBLE)
-               * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)) AS cn
+           sqrt(${dot("list(m ORDER BY pos)", "list(m ORDER BY pos)")}) AS cn
          FROM cent GROUP BY label),
        scored AS (
          SELECT e.label,
@@ -2288,9 +1187,7 @@ object Ann {
                list_zip(e.embedding, c.centroid),
                x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)),
                (p, q) -> p + q)
-             / (sqrt(list_reduce(list_transform(list_zip(e.embedding,
-                 e.embedding), x -> CAST(x[1] AS DOUBLE)
-                   * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)) * c.cn)
+             / (sqrt(${dot("e.embedding", "e.embedding")}) * c.cn)
              * 10000) AS BIGINT) AS c4
          FROM embeddings e JOIN cvec c USING (label)),
        f AS (SELECT label,
@@ -2312,7 +1209,7 @@ object Ann {
     * quantization, same left-fold dot ([[graft.functions.DotProduct]]'s
     * cross-engine contract), min/max over bit-identical cosines. */
   val embeddingClassStatsOracle: String =
-    """WITH dims AS (
+    s"""WITH dims AS (
          SELECT label, unnest(embedding) AS v,
                 generate_subscripts(embedding, 1) AS pos
          FROM embeddings),
@@ -2321,18 +1218,12 @@ object Ann {
          FROM dims GROUP BY label, pos),
        cvec AS (
          SELECT label, list(m ORDER BY pos) AS centroid,
-           sqrt(list_reduce(list_transform(list_zip(list(m ORDER BY pos),
-             list(m ORDER BY pos)), x -> CAST(x[1] AS DOUBLE)
-               * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)) AS cn
+           sqrt(${dot("list(m ORDER BY pos)", "list(m ORDER BY pos)")}) AS cn
          FROM cent GROUP BY label),
        scored AS (
          SELECT e.label, c.cn,
-           list_reduce(list_transform(list_zip(e.embedding, c.centroid),
-             x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)),
-             (p, q) -> p + q)
-           / (sqrt(list_reduce(list_transform(list_zip(e.embedding,
-               e.embedding), x -> CAST(x[1] AS DOUBLE)
-                 * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)) * c.cn) AS cos
+           ${dot("e.embedding", "c.centroid")}
+           / (sqrt(${dot("e.embedding", "e.embedding")}) * c.cn) AS cos
          FROM embeddings e JOIN cvec c USING (label))
        SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
               round(any_value(cn), 4) AS centroid_norm,
@@ -2344,30 +1235,23 @@ object Ann {
     * trained literals, the projection and every decimal sum replayed
     * with identical arithmetic. */
   def embeddingWhitenOracle(iters: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Oracle.input
     val (mu, pc) = trainPc1(
       graft.Tables.load(spark, sfDir, "embeddings").select(col("embedding")),
       iters)
     val muL = mu.mkString("[", ", ", "]")
     val pcL = pc.mkString("[", ", ", "]")
     val pcN = math.sqrt(pc.map(x => x * x).sum)
-    val dotQ = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     s"""WITH diff AS (SELECT list_transform(list_zip(embedding, $muL),
             x -> CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) AS diff
           FROM embeddings),
-        sc AS (SELECT diff, ${dotQ("diff", pcL)} AS s FROM diff),
+        sc AS (SELECT diff, ${dot("diff", pcL)} AS s FROM diff),
         ww AS (SELECT diff, s,
             list_transform(list_zip(diff, $pcL),
               x -> CAST(x[1] AS DOUBLE) - s * CAST(x[2] AS DOUBLE)) AS w
           FROM sc),
-        m AS (SELECT s, ${dotQ("w", pcL)} AS s2,
-            ${dotQ("diff", "diff")} AS nd2, ${dotQ("w", "w")} AS nw2
+        m AS (SELECT s, ${dot("w", pcL)} AS s2,
+            ${dot("diff", "diff")} AS nd2, ${dot("w", "w")} AS nw2
           FROM ww),
         cc AS (SELECT s, s2, nd2, nw2,
             CASE WHEN nd2 > 0 THEN abs(s) / (sqrt(nd2) * $pcN)
@@ -2400,12 +1284,7 @@ object Ann {
     * argmax assignment, sq8 clamp/round, rotated encode, ADC
     * shortlist, exact whitened-space rerank — replayed off it. */
   def whitenRecallEvalOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
-    val vRaw = vectors(spark, sfDir)
+    val vRaw = Oracle.vectors()
     val (mu, pc) = trainWhitening(vRaw)
     val w = whitenVectors(vRaw.select(col("vec_id"), col("embedding")),
         mu, pc)
@@ -2417,39 +1296,21 @@ object Ann {
         val (r, cb) = trainOpqRotation(w)
         (c, r, cb)
       } finally w.unpersist(blocking = false)
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val muL = mu.mkString("[", ", ", "]")
     val pcL = pc.mkString("[", ", ", "]")
-    val centRows = centsW.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
     val nSub = cbsWO.length
     val sub = cbsWO.head.head.length
-    val (cbRows, cbLit) = pqCbLits(cbsWO)
-    val codePivot = (0 until nSub)
-      .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    val adc = (0 until nSub).map { m =>
-      val lo = m * sub + 1
-      val hi = (m + 1) * sub
-      s"${dot(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
-    }.mkString(" + ")
     def hit(shortCte: String) =
       s"""(SELECT CAST(count(*) AS BIGINT)
             FROM $shortCte s
             JOIN truthw t ON t.query_id = s.query_id
                          AND t.neighbor_id = s.neighbor_id)"""
     def rerank(preCte: String, outCte: String) =
-      s"""$outCte AS (SELECT query_id, neighbor_id FROM (
-            SELECT s.query_id, s.neighbor_id,
-              row_number() OVER (PARTITION BY s.query_id ORDER BY
-                ${dot("qv.embedding", "cv.embedding")}
-                  / (qv.nrm * cv.nrm) DESC, s.neighbor_id) AS rnk
-            FROM $preCte s
+      topKIds(outCte, ("s.query_id", "s.query_id"),
+        ("s.neighbor_id", "s.neighbor_id"), cosOf("qv", "cv"),
+        s"""$preCte s
             JOIN nw qv ON qv.vec_id = s.query_id
-            JOIN nw cv ON cv.vec_id = s.neighbor_id)
-          WHERE rnk <= $k)"""
+            JOIN nw cv ON cv.vec_id = s.neighbor_id""", k)
     s"""WITH wd AS (SELECT vec_id,
             list_transform(list_zip(embedding, $muL),
               x -> CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) AS diff
@@ -2459,50 +1320,20 @@ object Ann {
               x -> CAST(x[1] AS DOUBLE) - s * CAST(x[2] AS DOUBLE))
               AS embedding
           FROM (SELECT vec_id, diff, ${dot("diff", pcL)} AS s FROM wd)),
-        nw AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM wemb),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        truthw AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
-                  DESC, c.vec_id) AS rnk
-            FROM nw q JOIN nw c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE rnk <= $k),
-        bruteraw AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
-                  DESC, c.vec_id) AS rnk
-            FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id < $nQueries)
-          WHERE rnk <= $k),
-        cents(cell, cv) AS (VALUES $centRows),
-        rankedw AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nw v, cents c),
-        assignedw AS (SELECT cell, vec_id AS neighbor_id,
-                        embedding AS e_c, nrm AS n_c
-                      FROM rankedw WHERE crnk = 1),
-        probesw AS (SELECT cell, vec_id AS query_id, embedding AS e_q,
-                      nrm AS n_q
-                    FROM rankedw WHERE crnk <= 4
-                      AND vec_id < $nQueries),
-        ivfw AS (SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, a.neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
-                a.neighbor_id) AS rnk
-            FROM probesw p JOIN assignedw a ON p.cell = a.cell
-            WHERE p.query_id <> a.neighbor_id)
-          WHERE rnk <= $k),
-        dqw AS (${sq8DequantCteBodyOver("wemb")}),
+        ${normCte("nw", "wemb")},
+        ${normCte()},
+        ${truthCte("truthw", "nw", s"q.vec_id < $nQueries", k)},
+        ${truthCte("bruteraw", "nv", s"q.vec_id < $nQueries", k)},
+        cents(cell, cv) AS (VALUES ${rows(centsW)}),
+        ${rankedCte("rankedw", "nw")},
+        ${assignedCte("assignedw", "rankedw")},
+        ${probesCte(4, s"vec_id < $nQueries", norm = true, "rankedw",
+          "probesw")},
+        ${topKIds("ivfw", ("p.query_id", "p.query_id"),
+          ("a.neighbor_id", "a.neighbor_id"), probedCos(),
+          """probesw p JOIN assignedw a ON p.cell = a.cell
+            WHERE p.query_id <> a.neighbor_id""", k)},
+        dqw AS (${sq8Dequant("wemb")}),
         sq8pre AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
@@ -2513,28 +1344,12 @@ object Ann {
             WHERE q.vec_id < $nQueries AND d.vec_id <> q.vec_id)
           WHERE r <= ${8 * k}),
         ${rerank("sq8pre", "sq8w")},
-        ${opqRotCte(rW, "wemb")},
-        cb(m, kk, cv, bias) AS (VALUES $cbRows),
-        cbl AS (SELECT $cbLit AS cb),
-        sub AS (SELECT vec_id, mm.m AS m,
-                  embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
-                FROM rot,
-                     (SELECT unnest(range(0, $nSub)) AS m) mm),
-        coded AS (SELECT vec_id, m, kk FROM (
-                    SELECT sub.vec_id, sub.m, cb.kk,
-                      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias)
-                          DESC, cb.kk) AS r
-                    FROM sub JOIN cb ON cb.m = sub.m)
-                  WHERE r = 1),
-        codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
-        opqpre AS (SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ($adc) DESC, n.vec_id) AS r
-            FROM rot q, codes n, cbl
-            WHERE q.vec_id < $nQueries AND n.vec_id <> q.vec_id)
-          WHERE r <= ${8 * k}),
+        ${rotationCtes(rW, "wemb")},
+        ${codebookCtes(cbsWO)},
+        ${pqEncode(nSub, sub, "rot")},
+        ${shortlist("opqpre", "q.vec_id AS query_id", "q.vec_id",
+          "rot q, codes n, cbl", unprobed(nQueries),
+          adc("q.embedding", "cbl", nSub, sub), 8 * k)},
         ${rerank("opqpre", "opqw")},
         nt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truthw)
        SELECT variant, n_truth, n_hit,
@@ -2556,11 +1371,7 @@ object Ann {
     * code runs once per session), variance/λ recomputed FROM DATA with
     * the identical decimal-sum arithmetic. */
   def embeddingPcaOracle(iters: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Oracle.input
     val (mu, pc) = trainPc1(
       graft.Tables.load(spark, sfDir, "embeddings").select(col("embedding")),
       iters)
@@ -2570,9 +1381,7 @@ object Ann {
             x -> CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) AS diff
           FROM embeddings),
         scored AS (SELECT diff,
-            list_reduce(list_transform(list_zip(diff, $pcL),
-              x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)),
-              (p, q) -> p + q) AS s
+            ${dot("diff", pcL)} AS s
           FROM diff),
         lam AS (SELECT sum(CAST(round(s*s, 8) AS DECIMAL(28,8))) AS ss
                 FROM scored),
@@ -2593,30 +1402,20 @@ object Ann {
     * whitened-space centroids inlined as trained literals (all
     * deterministic — the [[whitenRecallEvalOracle]] stance); the
     * whitened corpus is one CTE (the exact [[whitenVectors]]
-    * arithmetic) and the [[ivfOracleFor]] assignment/probe/rank replay
+    * arithmetic) and the IVF assignment/probe/rank replay
     * runs off it — queries whitened by the SAME CTE, because a served
     * query is a corpus row transformed with the same stored model. */
   def ivfWhitenedOracle(nProbe: Int = 4, nQueries: Int = 10,
                         k: Int = 5, nCells: Int = 16,
                         iters: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Oracle.input
     val raw = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val (mu, pc) = trainWhitening(raw, iters)
     val w = whitenVectors(raw, mu, pc)
     val cents = withTrainCache(w)(trainCentroids(_, nCells))
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val muL = mu.mkString("[", ", ", "]")
     val pcL = pc.mkString("[", ", ", "]")
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
-      s"(${i}, ${c.mkString("[", ", ", "]")})"
-    }.mkString(", ")
     s"""WITH wd AS (SELECT vec_id,
             list_transform(list_zip(embedding, $muL),
               x -> CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) AS diff
@@ -2626,45 +1425,28 @@ object Ann {
               x -> CAST(x[1] AS DOUBLE) - s * CAST(x[2] AS DOUBLE))
               AS embedding
           FROM (SELECT vec_id, diff, ${dot("diff", pcL)} AS s FROM wd)),
-        nw AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM wemb),
-        cents(cell, cv) AS (VALUES $centRows),
-        ranked AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nw v, cents c),
-        assigned AS (SELECT cell, vec_id AS neighbor_id, embedding AS e_c,
-                       nrm AS n_c FROM ranked WHERE crnk = 1),
-        probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q,
-                     nrm AS n_q
-                   FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries)
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT p.query_id, a.neighbor_id,
-            ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cos,
-            CAST(row_number() OVER (PARTITION BY p.query_id ORDER BY
-              ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
-              a.neighbor_id) AS INTEGER) AS rnk
-          FROM probes p JOIN assigned a ON p.cell = a.cell
-          WHERE p.query_id <> a.neighbor_id)
-        WHERE rnk <= $k ORDER BY query_id, rnk"""
+        ${normCte("nw", "wemb")},
+        cents(cell, cv) AS (VALUES ${rows(cents)}),
+        ${rankedCte(norm = "nw")},
+        ${assignedCte()},
+        ${probesCte(nProbe, s"vec_id < $nQueries", norm = true)}
+        ${topK("p", "a", probedCos(),
+          """probes p JOIN assigned a ON p.cell = a.cell
+          WHERE p.query_id <> a.neighbor_id""", k)}"""
   }
 
   /** DuckDB oracle for [[pagerank]]: the knn_graph edge CTE plus
     * `iters` unrolled iterations of the identical decimal-summed
-    * arithmetic. `normCte` / `dotSql` are the shared vector helpers
-    * from the ANN oracle family. */
-  def pagerankOracle(normCte: String, dotSql: (String, String) => String,
-                     k: Int = 5, d: Double = 0.85, iters: Int = 5): String = {
+    * arithmetic. */
+  def pagerankOracle(k: Int = 5, d: Double = 0.85, iters: Int = 5): String = {
     val base =
-      s"""$normCte,
+      s"""WITH ${normCte("n", label = true)},
           e AS (SELECT query_id AS src, neighbor_id AS dst FROM (
             SELECT query_id, neighbor_id,
               CAST(row_number() OVER (PARTITION BY query_id
                 ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rnk
             FROM (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                    ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
+                    ${cosOf("q", "c")} AS cos
                   FROM n q JOIN n c ON c.vec_id <> q.vec_id))
           WHERE rnk <= $k),
           deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),

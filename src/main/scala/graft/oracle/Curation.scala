@@ -1,6 +1,7 @@
 package graft.oracle
 
 import graft.operators.Similarity
+import Oracle._
 
 /** DuckDB replays of the curation queries: C4/Gopher gates, BM25 and
   * fused retrieval, mixtures, splits and shards (Curation). */
@@ -274,13 +275,8 @@ object Curation {
   /** DuckDB oracle for [[retrievalFuse]]: the #109 BM25 replay and the
     * brute cosine leg as CTEs, ranked identically, fused with the same
     * fixed-order reciprocal sum. */
-  /** The DuckDB dot-product fragment the retrieval oracles share. */
-  private def dotSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(list_zip($a, $b),
-        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
 
   def rrfOracle(kc: Int = 60, kLeg: Int = 20, k: Int = 10): String = {
-    val dot = dotSql _
     rrfOracleOver(
       s"""vec AS (SELECT doc_id,
             CAST(row_number() OVER (ORDER BY cos DESC, doc_id)
@@ -315,27 +311,15 @@ object Curation {
     * [[rrfServedOracle]], so the two served replays cannot drift in
     * the probe arithmetic. */
   private def ivfVecLegCtes(nProbe: Int, kLeg: Int): String = {
-    val dot = dotSql _
-    val centRows = Similarity.staticCentroids().zipWithIndex
-      .map { case (c, i) => s"(${i}, ${c.mkString("[", ", ", "]")})" }
-      .mkString(", ")
-    s"""cents(cell, cv) AS (VALUES $centRows),
-        rankedv AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nvv v, cents c),
-        assignedv AS (SELECT cell, vec_id AS neighbor_id,
-                        embedding AS e_c, nrm AS n_c
-                      FROM rankedv WHERE crnk = 1),
-        probesv AS (SELECT cell, vec_id AS query_id, embedding AS e_q,
-                      nrm AS n_q
-                    FROM rankedv WHERE crnk <= $nProbe AND vec_id = 0),
+    s"""cents(cell, cv) AS (VALUES ${rows(Similarity.staticCentroids())}),
+        ${rankedCte("rankedv", "nvv")},
+        ${assignedCte("assignedv", "rankedv")},
+        ${probesCte(nProbe, "vec_id = 0", norm = true, "rankedv", "probesv")},
         vec AS (SELECT doc_id,
             CAST(row_number() OVER (ORDER BY cos DESC, doc_id)
               AS INTEGER) AS vec_rank
           FROM (SELECT a.neighbor_id AS doc_id,
-                  ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cos
+                  ${probedCos()} AS cos
                 FROM probesv p JOIN assignedv a ON p.cell = a.cell
                 WHERE p.query_id <> a.neighbor_id)
           QUALIFY vec_rank <= $kLeg)"""
@@ -344,7 +328,7 @@ object Curation {
   /** DuckDB oracle for [[retrievalFuseSq8]]: the served fuse skeleton
     * with the vector leg replayed through the sq8 two-stage CTEs —
     * static-IVF assignment/probe, the shared dequant body
-    * ([[Ann.sq8DequantCteBody]]) scoring the shortlist, exact
+    * (`Oracle.sq8Dequant`) scoring the shortlist, exact
     * re-rank to kLeg — every stage of the cheap-scan leg exact. */
   def rrfSq8Oracle(nProbe: Int = 4, kc: Int = 60, kLeg: Int = 20,
                    k: Int = 10): String =
@@ -357,37 +341,18 @@ object Curation {
     * [[Similarity.annServeSq8FromIndex]]'s two stages with the
     * serving default shortlistFactor = 8. */
   private def sq8VecLegCtes(nProbe: Int, kLeg: Int): String = {
-    val dot = dotSql _
-    val centRows = Similarity.staticCentroids().zipWithIndex
-      .map { case (c, i) => s"(${i}, ${c.mkString("[", ", ", "]")})" }
-      .mkString(", ")
-    s"""cents(cell, cv) AS (VALUES $centRows),
-        rankedv AS (
-          SELECT v.vec_id, v.embedding, v.nrm, c.cell,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM nvv v, cents c),
-        dqv AS (${Ann.sq8DequantCteBody}),
-        acandv AS (SELECT a.cell, d.vec_id, d.d FROM dqv d
-                   JOIN (SELECT vec_id, cell FROM rankedv WHERE crnk = 1) a
-                     ON a.vec_id = d.vec_id),
-        probesv AS (SELECT cell, vec_id AS query_id, embedding AS e_q
-                    FROM rankedv WHERE crnk <= $nProbe AND vec_id = 0),
-        shortv AS (SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, n.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY p.query_id ORDER BY
-                (${dot("p.e_q", "n.d")}
-                   / (sqrt(${dot("p.e_q", "p.e_q")})
-                      * sqrt(${dot("n.d", "n.d")}))) DESC,
-                n.vec_id) AS r
-            FROM probesv p, acandv n
-            WHERE n.cell = p.cell AND n.vec_id <> p.query_id)
-          WHERE r <= ${8 * kLeg}),
+    s"""cents(cell, cv) AS (VALUES ${rows(Similarity.staticCentroids())}),
+        ${rankedCte("rankedv", "nvv")},
+        dqv AS (${sq8Dequant()}),
+        ${acandCte("acandv", "dqv", "rankedv")},
+        ${probesCte(nProbe, "vec_id = 0", norm = false, "rankedv", "probesv")},
+        ${shortlist("shortv", "p.query_id", "p.query_id", "probesv p, acandv n",
+          probed, sq8Score("p.e_q"), 8 * kLeg)},
         vec AS (SELECT doc_id,
             CAST(row_number() OVER (ORDER BY cos DESC, doc_id)
               AS INTEGER) AS vec_rank
           FROM (SELECT s.neighbor_id AS doc_id,
-                  ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm)
+                  ${cosOf("qv", "cv")}
                     AS cos
                 FROM shortv s
                 JOIN nvv qv ON qv.vec_id = s.query_id
@@ -402,7 +367,6 @@ object Curation {
     * cannot drift in the combine arithmetic. */
   private def rrfOracleOver(vecCtes: String, kc: Int, kLeg: Int,
                             k: Int, lexMatchedOnly: Boolean = false): String = {
-    val dot = dotSql _
     // the artifact-served lexical leg carries only documents holding
     // >= 1 query term (postings semantics, [[bm25FromIndex]]); the
     // brute leg scores every document. The predicate is DERIVED from
@@ -420,9 +384,7 @@ object Curation {
             CAST(row_number() OVER (ORDER BY score DESC, doc_id)
               AS INTEGER) AS lex_rank
           FROM lexs QUALIFY lex_rank <= $kLeg),
-        nvv AS (SELECT vec_id, embedding,
-            sqrt(${dot("embedding", "embedding")}) AS nrm
-          FROM embeddings),
+        ${normCte("nvv")},
         $vecCtes
        SELECT doc_id, lex_rank, vec_rank,
          round(coalesce(1.0 / ($kc + lex_rank), 0.0)

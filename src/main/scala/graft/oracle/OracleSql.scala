@@ -2,6 +2,7 @@ package graft.oracle
 
 import graft.Tables
 import graft.operators.SchemaTools
+import Oracle.dot
 
 /** The DuckDB oracle of every query: one SQL string per
   * `SparkEntry.queries` entry, runnable on the same parquet tables with
@@ -39,19 +40,14 @@ object OracleSql {
                FROM b JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v
                GROUP BY doc_id)"""
 
-  /** DuckDB left-fold dot product — the oracle twin of
-    * [[graft.functions.VectorFunctions.dot]] (bit-identical by
-    * construction: per-element double casts, left fold). */
-  private def duckDot(a: String, b: String): String =
-    s"""list_reduce(list_transform(list_zip($a, $b),
-        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
+  /** `n(vec_id, label, embedding, nrm)`: the normed embeddings the
+    * brute-force kNN replays rank. */
+  private val duckNormCte: String = s"WITH ${Oracle.normCte("n", label = true)}"
 
-  private val duckNormCte: String =
-    s"""WITH n AS (SELECT vec_id, label, embedding,
-        sqrt(${duckDot("embedding", "embedding")}) AS nrm FROM embeddings)"""
+  /** Brute-force cosine top-k — the ann_bruteforce oracle, also the
+    * ground truth inside ann_recall_eval's oracle. */
+  private val bruteAnnSql: String = Oracle.ann(Oracle.Brute, Oracle.Exact)
 
-  /** Brute-force cosine top-k in SQL — the ann_bruteforce oracle, also
-    * embedded as the ground truth inside ann_recall_eval's oracle. */
   // shared by dedup_clusters and its artifact-fed composed twin (#46b)
   private val dedupClustersSql: String =
     s"""${Dedup.duckdbShingleCte
@@ -106,18 +102,6 @@ object OracleSql {
                  (SELECT count(*) FROM lab WHERE id <> cluster_id)
                    AS n_near_removed,
                  (SELECT count(*) FROM lab WHERE id = cluster_id) AS n_out"""
-
-  private val bruteAnnSql: String =
-    s"""$duckNormCte
-        SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
-          SELECT query_id, neighbor_id, cos,
-            CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rnk
-          FROM (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                  ${duckDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
-                FROM n q JOIN n c ON c.vec_id <> q.vec_id
-                WHERE q.vec_id < 10))
-        WHERE rnk <= 5 ORDER BY query_id, rnk"""
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
@@ -282,10 +266,10 @@ object OracleSql {
     "embedding_dedup" ->
       s"""$duckNormCte
           SELECT a.label AS label, a.vec_id AS id_a, b.vec_id AS id_b,
-                 round(${duckDot("a.embedding", "b.embedding")}
+                 round(${dot("a.embedding", "b.embedding")}
                        / (a.nrm * b.nrm), 6) AS cos6
           FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
-          WHERE ${duckDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= 0.4
+          WHERE ${dot("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= 0.4
           ORDER BY id_a, id_b""",
     "ann_bruteforce" -> bruteAnnSql,
     "ann_recall_eval" -> {
@@ -311,7 +295,7 @@ object OracleSql {
               CAST(row_number() OVER (PARTITION BY query_id
                 ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rnk
             FROM (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                    ${duckDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
+                    ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
                   FROM n q JOIN n c ON c.vec_id <> q.vec_id))
           WHERE rnk <= 5)
           SELECT e.query_id AS src_id, e.neighbor_id AS dst_id,
@@ -325,7 +309,7 @@ object OracleSql {
     // over the combined corpus
     "knn_edges_incremental" ->
       s"""WITH n AS (SELECT vec_id, embedding,
-            sqrt(${duckDot("embedding", "embedding")}) AS nrm
+            sqrt(${dot("embedding", "embedding")}) AS nrm
           FROM (SELECT vec_id, embedding FROM embeddings
                 UNION ALL
                 SELECT vec_id + 10000 AS vec_id, embedding
@@ -335,7 +319,7 @@ object OracleSql {
               CAST(row_number() OVER (PARTITION BY query_id
                 ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rnk
             FROM (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                    ${duckDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
+                    ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
                   FROM n q JOIN n c ON c.vec_id <> q.vec_id))
           WHERE rnk <= 5)
           SELECT e.query_id AS src_id, e.neighbor_id AS dst_id,
@@ -351,7 +335,7 @@ object OracleSql {
               CAST(row_number() OVER (PARTITION BY query_id
                 ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rnk
             FROM (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                    ${duckDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
+                    ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
                   FROM n q JOIN n c ON c.label <> q.label
                   WHERE q.vec_id < 10))
           WHERE rnk <= 5 ORDER BY query_id, rnk""",
@@ -1177,7 +1161,7 @@ object OracleSql {
     "k_anonymity" -> Quality.kAnonymityOracle(),
     "l_diversity" -> Quality.lDiversityOracle(),
     "t_closeness" -> Quality.tClosenessOracle(),
-    "pagerank" -> Ann.pagerankOracle(duckNormCte, duckDot),
+    "pagerank" -> Ann.pagerankOracle(),
     "corpus_concentration" -> Quality.corpusConcentrationOracle,
     "deterministic_sample" ->
       s"""SELECT o_orderkey, ${centsSql("o_totalprice")} AS price_cents
