@@ -2,7 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json (`graft.oracle.OracleSql`), for the driver's
+  * DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
@@ -51,8 +52,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = graft.oracle.OracleSql.all
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // keys sorted, one entry per line: two runs' files diff line by line
+    val json = graft.oracle.OracleSql.all.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }
+      .mkString("{\n", ",\n", "\n}\n")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/_verify_errors.json"),
       failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }

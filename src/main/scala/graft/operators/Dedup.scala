@@ -814,18 +814,18 @@ object Dedup {
                                        checkpointDir: Option[String] = None)
       : DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    // per-run SUBDIRECTORY: concurrent/repeated runs never share a
-    // checkpoint namespace, and the global setCheckpointDir mutation is
-    // restored below so this call does not silently redirect other
-    // operators' checkpoints for the rest of the session. Round files
-    // are reaped by the ContextCleaner when their frames are GC'd
+    // per-run SUBDIRECTORY (ExportImport.runDir, deleted at JVM exit):
+    // concurrent/repeated runs never share a checkpoint namespace, and
+    // the global setCheckpointDir mutation is restored below so this
+    // call does not silently redirect other operators' checkpoints for
+    // the rest of the session. Round files are reaped by the
+    // ContextCleaner when their frames are GC'd
     // (spark.cleaner.referenceTracking.cleanCheckpoints, Tables
     // .configure) — a long-lived session does not accumulate dead
     // rounds on disk.
     val sc = pairs.sparkSession.sparkContext
     val prevCheckpointDir = sc.getCheckpointDir
-    checkpointDir.foreach(d =>
-      sc.setCheckpointDir(s"$d/run-${java.util.UUID.randomUUID()}"))
+    checkpointDir.foreach(d => sc.setCheckpointDir(ExportImport.runDir(d)))
     // both edge directions from ONE evaluation of the pair lineage: the
     // union-of-two-selects form computed the (possibly corpus-scale
     // prefix-join) pair plan TWICE inside the materializing count below

@@ -36,13 +36,18 @@ object ExportImport {
   }
 
   /** A fresh directory `<scratch>/<name>/run-<uuid>` for one run's
-    * artifact: concurrent runs never share one, and it is deleted when
-    * the JVM's FileSystems close at exit, so per-run artifacts do not
-    * pile up across processes. */
-  def runScratch(name: String): String = {
-    val d = scratch(s"$name/run-${java.util.UUID.randomUUID()}")
+    * artifact (see [[runDir]]). */
+  def runScratch(name: String): String = runDir(scratch(name))
+
+  /** A fresh directory `<base>/run-<uuid>`, created now: concurrent runs
+    * never share one, and it is deleted when the JVM's FileSystems close
+    * at exit, so per-run directories do not pile up across processes. */
+  def runDir(base: String): String = {
+    val conf = graft.sources.FsIO.sessionConf
+    val d = s"$base/run-${java.util.UUID.randomUUID()}"
+    graft.sources.FsIO.mkdirs(d, conf)
     val p = new org.apache.hadoop.fs.Path(d)
-    p.getFileSystem(graft.sources.FsIO.sessionConf).deleteOnExit(p)
+    p.getFileSystem(conf).deleteOnExit(p)
     d
   }
 

@@ -251,6 +251,12 @@ class DedupSpec extends SparkSpec {
     val inMem = Dedup.clustersFromPairs(nodes, pairs, 20)
       .collect().map(_.toString).toSeq
     val dir = graft.operators.ExportImport.scratch("ckpt-clusters")
+    // start empty: a run directory left by an earlier JVM is not this run's
+    val stale = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try stale.sorted(java.util.Comparator.reverseOrder())
+      .filter(_ != java.nio.file.Paths.get(dir))
+      .forEach(p => java.nio.file.Files.delete(p))
+    finally stale.close()
     val ckpt = Dedup.clustersFromPairs(nodes, pairs, 20, Some(dir))
       .collect().map(_.toString).toSeq
     assert(inMem == ckpt)
@@ -258,6 +264,14 @@ class DedupSpec extends SparkSpec {
     val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(p => java.nio.file.Files.isRegularFile(p)).count()
     assert(wrote > 0, "reliable checkpoint must write files")
+    // ...into one per-run directory that is deleted at JVM exit
+    val runs = new java.io.File(dir).listFiles().toSeq
+    assert(runs.size == 1 && runs.head.isDirectory &&
+      runs.head.getName.startsWith("run-"), s"checkpoint run dirs: $runs")
+    val run = new org.apache.hadoop.fs.Path(runs.head.getAbsolutePath)
+    val fs = run.getFileSystem(graft.sources.FsIO.sessionConf)
+    assert(fs.cancelDeleteOnExit(run), s"$run is not deleted at exit")
+    fs.deleteOnExit(run)
   }
 
   test("dedup_clusters: the distributed loop over hashed label leaves " +

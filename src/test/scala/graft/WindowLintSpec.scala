@@ -115,17 +115,16 @@ class WindowLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(offending.isEmpty, s"registries outside ArtifactState: $offending")
   }
 
-  /** A per-run scratch directory that no one deletes piles up on disk
-    * with every call; `ExportImport.runScratch` makes one and registers
-    * it for deletion at exit, so it is the only place a run id is put
-    * into a scratch path. */
+  /** A per-run directory that no one deletes piles up on disk with
+    * every call; `ExportImport.runDir` makes one and registers it for
+    * deletion at exit, so it is the only place an operator mints a run
+    * id. */
   test("per-run scratch directories come from the one helper") {
-    val pat = """scratch\(\s*s"[^"]*randomUUID""".r
     val found = sources("operators").map { case (path, text) =>
-      path -> pat.findAllIn(text).size
+      path -> "randomUUID".r.findAllIn(text).size
     }.filter(_._2 > 0)
     assert(found == Map("operators/ExportImport.scala" -> 1),
-      s"per-run scratch paths built outside ExportImport.runScratch: $found")
+      s"run ids minted outside ExportImport.runDir: $found")
   }
 
   /** A catch-all (`case _: Throwable`) also swallows interrupts and
@@ -139,5 +138,30 @@ class WindowLintSpec extends org.scalatest.funsuite.AnyFunSuite {
           path != "Verify.scala" => path
     }
     assert(offending.isEmpty, s"catch-all Throwable handlers: $offending")
+  }
+
+  /** The DuckDB replays are the truth the engine is checked against, so
+    * the engine never reads them: nothing under the engine packages
+    * names `graft.oracle`. */
+  test("no engine package references graft.oracle") {
+    val engine = Seq("operators", "api", "streaming", "functions", "sources")
+    val offending = engine.flatMap(sources(_)).collect {
+      case (path, text) if text.contains("graft.oracle") => path
+    }
+    assert(offending.isEmpty, s"engine files naming graft.oracle: $offending")
+  }
+
+  /** DuckDB-only list functions belong to the replays: in code (comments
+    * stripped) they appear under `graft/oracle` alone, so no replay text
+    * is left behind in the engine. */
+  test("DuckDB list functions appear only under graft/oracle") {
+    val duck = Seq("list_reduce(", "list_transform(", "list_zip(")
+    val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val offending = sources().collect {
+      case (path, text) if !path.startsWith("oracle/") &&
+          duck.exists(comments.replaceAllIn(text, " ").contains) => path
+    }
+    assert(offending.isEmpty,
+      s"DuckDB list functions outside graft/oracle: $offending")
   }
 }
