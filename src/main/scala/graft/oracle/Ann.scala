@@ -1,6 +1,5 @@
 package graft.oracle
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions.l2norm
@@ -1237,7 +1236,7 @@ object Ann {
   def embeddingWhitenOracle(iters: Int = 5): String = {
     val (spark, sfDir) = Oracle.input
     val (mu, pc) = trainPc1(
-      graft.Tables.load(spark, sfDir, "embeddings").select(col("embedding")),
+      Tables.load(spark, sfDir, "embeddings").select(col("embedding")),
       iters)
     val muL = mu.mkString("[", ", ", "]")
     val pcL = pc.mkString("[", ", ", "]")
@@ -1373,7 +1372,7 @@ object Ann {
   def embeddingPcaOracle(iters: Int = 5): String = {
     val (spark, sfDir) = Oracle.input
     val (mu, pc) = trainPc1(
-      graft.Tables.load(spark, sfDir, "embeddings").select(col("embedding")),
+      Tables.load(spark, sfDir, "embeddings").select(col("embedding")),
       iters)
     val muL = mu.mkString("[", ", ", "]")
     val pcL = pc.mkString("[", ", ", "]")

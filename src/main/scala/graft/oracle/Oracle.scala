@@ -86,13 +86,12 @@ private[oracle] object Oracle {
   /** Every vector ranked against every centroid (dot DESC, cell ASC —
     * the engine's `NearestCells` tie-break): `crnk = 1` is its cell,
     * `crnk <= nProbe` a query's probed cells. */
-  def rankedCte(name: String = "ranked", norm: String = "nv",
-                cents: String = "cents"): String =
+  def rankedCte(name: String = "ranked", norm: String = "nv"): String =
     s"""$name AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
               ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
-          FROM $norm v, $cents c)"""
+          FROM $norm v, cents c)"""
 
   /** Every corpus vector in its cell, with its norm, as candidate rows
     * named `id`. */
@@ -134,7 +133,8 @@ private[oracle] object Oracle {
   /** The coded corpus `codes` tagged with each vector's cell from
     * `cells(vec_id, cell)`. */
   def cellCodesCte(name: String = "acodes", codes: String = "codes",
-                   cells: String = "SELECT vec_id, cell FROM ranked WHERE crnk = 1")
+                   cells: String =
+                     "SELECT vec_id, cell FROM ranked WHERE crnk = 1")
       : String =
     s"""$name AS (SELECT a.cell, c.* FROM $codes c
                    JOIN ($cells) a
@@ -171,6 +171,7 @@ private[oracle] object Oracle {
     val (sb, cb) = (name("sub"), name("cb"))
     val keep = if (terms) ", s, cv, bias" else ""
     val keepIn = if (terms) s", $sb.s, $cb.cv, $cb.bias" else ""
+    val mat = if (materialize) " MATERIALIZED" else ""
     s"""${name("coded")} AS (SELECT vec_id, m, kk$keep FROM (
                     SELECT $sb.vec_id, $sb.m, $cb.kk$keepIn,
                       row_number() OVER (PARTITION BY $sb.vec_id, $sb.m
@@ -178,7 +179,7 @@ private[oracle] object Oracle {
                           $cb.kk) AS r
                     FROM $sb JOIN $cb ON $cb.m = $sb.m)
                   WHERE r = 1),
-        ${name("codes")} AS${if (materialize) " MATERIALIZED" else ""} (SELECT vec_id, ${codePivot(nSub)}
+        ${name("codes")} AS$mat (SELECT vec_id, ${codePivot(nSub)}
                              FROM ${name("coded")} GROUP BY 1)"""
   }
 
@@ -329,6 +330,11 @@ private[oracle] object Oracle {
     * to the top `k` — `(query_id, neighbor_id, rnk, cos6)`. */
   def ann(probe: Probe, codec: Codec, nQueries: Int = 10, k: Int = 5,
           shortlistFactor: Int = 8): String = {
+    codec match {
+      case Pq(_, true, _) =>
+        require(probe != Brute, "residual codes need an IVF probe")
+      case _ =>
+    }
     val limit = shortlistFactor * k
     val qWhere = s"vec_id < $nQueries"
     (probe, codec) match {
@@ -404,7 +410,8 @@ private[oracle] object Oracle {
               case None => probesCte(nProbe, qWhere, norm = false)
             }
             val (ct, ctWhere) =
-              if (residual) ("cents ct, ", "ct.cell = p.cell AND ") else ("", "")
+              if (residual) ("cents ct, ", "ct.cell = p.cell AND ")
+              else ("", "")
             s"""WITH cents(cell, cv) AS (VALUES ${rows(cents)}),
         ${codebookCtes(cbs)}$model,
         ${normCte()},

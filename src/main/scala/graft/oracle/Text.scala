@@ -1,6 +1,5 @@
 package graft.oracle
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.TextAnalysis.{kappaSelect, langCaseSql, sharedUnigramLp}
 
 /** DuckDB replays of the text-analysis and tokenizer queries
