@@ -61,9 +61,4 @@ object Tables {
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    // reliable-checkpoint files (clustersFromPairs' durable lineage
-    // cuts) are deleted by the ContextCleaner once their RDD handle is
-    // GC'd — without this, repeated propagation runs in one session
-    // accumulate dead round checkpoints on disk forever
-    .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
 }

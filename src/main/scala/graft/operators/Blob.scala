@@ -522,8 +522,8 @@ object Blob {
     * and the image corpus is deduped — the same end-to-end verb the
     * text side runs as dedup_clusters, closing the media→dedup bridge.
     * Scale shape inherited: banded fingerprint join for candidates,
-    * O(log diameter) pointer-halving rounds over the bounded pair
-    * table; image bytes never shuffle. */
+    * connected components finished on the driver (after contraction
+    * rounds past 2M edge rows); image bytes never shuffle. */
   def mediaPhashClusters(spark: SparkSession, sfDir: String,
                          maxHamming: Int = 7): DataFrame =
     Dedup.dedupClustersFromPairs(

@@ -1265,8 +1265,8 @@ object Curation {
     * dedup-clustering, not before.
     *
     * Scale shape: one exact prefix join (the pair table — or read the
-    * materialized artifact via [[leakageSafeSplitFrom]]) + the O(log d)
-    * propagation + a map-only hash; assignment is deterministic
+    * materialized artifact via [[leakageSafeSplitFrom]]) + connected
+    * components + a map-only hash; assignment is deterministic
     * (knuth32, same values in SQL), so replays and backfills agree. */
   def leakageSafeSplit(spark: SparkSession, sfDir: String,
                        tau: Double = 0.3, mod: Int = 10): DataFrame =

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 /** Iterative graph algorithms over edge lists.
   *
   * The missing family next to the one-shot graph ops (dedup_clusters'
-  * pointer-halving, label_spread's seeded propagation): fixed-point
+  * connected components, label_spread's seeded propagation): fixed-point
   * iteration where every round is a join + aggregate over the edge
   * list. PageRank is the canonical member — centrality over the k-NN
   * similarity graph ranks the most "representative" documents/vectors

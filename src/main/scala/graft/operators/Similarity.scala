@@ -773,9 +773,9 @@ object Similarity {
     *
     * Scale shape: edges come from the session-shared artifact
     * ([[sharedKnnEdgesDir]] — the broadcast-free cell equi-join build
-    * paid once per corpus version); components run the SAME O(log d)
-    * pointer-halving propagation as dedup_clusters over ≤ N·k mutual
-    * edges; the rollup is a two-level (community, label) hash agg —
+    * paid once per corpus version); components run the SAME
+    * contraction rounds and driver finish as dedup_clusters over ≤ N·k
+    * mutual edges; the rollup is a two-level (community, label) hash agg —
     * majority via min(struct), no window over members. */
   def knnCommunities(spark: SparkSession, sfDir: String, k: Int = 5,
                      maxIters: Int = 20): DataFrame = {

@@ -27,7 +27,7 @@ object Analytics {
          ON a.o_custkey = b.ck AND a.o_orderdate < b.od
        ORDER BY o_orderkey"""
 
-  /** DuckDB oracle for [[funnelWindowed]]. */
+  /** DuckDB oracle for [[graft.operators.Analytics.funnelWindowed]]. */
   def funnelWindowedOracle(stepA: String = "view",
                            stepB: String = "purchase",
                            windowUs: Long = 3600000000L): String =
@@ -48,8 +48,8 @@ object Analytics {
               round((SELECT quantile_cont(delay_us, 0.5) FROM cv) / 1e6, 4)
                 AS p50_delay_s"""
 
-  /** DuckDB oracle for [[attribution]] (row_number replays the same
-    * (t, event_id) last-touch order). */
+  /** DuckDB oracle for [[graft.operators.Analytics.attribution]] (row_number
+    * replays the same (t, event_id) last-touch order). */
   def attributionOracle(touches: Seq[String] = Seq("view", "click"),
                         windowUs: Long = 86400000000L): String = {
     val in = touches.map(t => s"'$t'").mkString(", ")
@@ -77,7 +77,7 @@ object Analytics {
        GROUP BY 1 ORDER BY 1"""
   }
 
-  /** DuckDB oracle for [[eventsAnomaly]]. */
+  /** DuckDB oracle for [[graft.operators.Analytics.eventsAnomaly]]. */
   def eventsAnomalyOracle(k: Double = 3.0): String =
     s"""WITH d AS (SELECT epoch_us(ts) // 86400000000 AS day,
               count(*) AS n FROM events GROUP BY 1),
@@ -89,8 +89,8 @@ object Analytics {
               adev > mad * $k AS is_anomaly
        FROM dv, md ORDER BY day"""
 
-  /** DuckDB oracle for [[eventsCusum]]: same exact-integer μ/σ, same
-    * prefix-sum closed form over the same day order. */
+  /** DuckDB oracle for [[graft.operators.Analytics.eventsCusum]]: same
+    * exact-integer μ/σ, same prefix-sum closed form over the same day order. */
   val eventsCusumOracle: String =
     """WITH d AS (SELECT epoch_us(ts) // 86400000000 AS day,
               count(*) AS n FROM events GROUP BY 1),
@@ -118,7 +118,7 @@ object Analytics {
               (s_pos > sigma * 4 OR s_neg > sigma * 4) AS is_change
        FROM cs ORDER BY day"""
 
-  /** DuckDB oracle for [[pathTransitions]]. */
+  /** DuckDB oracle for [[graft.operators.Analytics.pathTransitions]]. */
   val pathTransitionsOracle: String =
     """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS t, event_id
                   FROM events),
@@ -135,7 +135,7 @@ object Analytics {
        FROM tr JOIN ft USING (prev_type)
        ORDER BY prev_type, next_type"""
 
-  /** DuckDB oracle for [[driftReport]]. */
+  /** DuckDB oracle for [[graft.operators.Analytics.driftReport]]. */
   val driftOracle: String =
     """WITH e AS (SELECT event_type, epoch_us(ts) AS t FROM events),
         s AS (SELECT min(t) AS t_min, max(t) AS t_max FROM e),
@@ -184,8 +184,9 @@ object Analytics {
        CROSS JOIN no_
        ORDER BY n_both DESC, p1, p2 LIMIT $topK"""
 
-  /** DuckDB oracle for [[eventsHopping]]: every event contributes to
-    * its epoch-aligned 5-minute bucket's window and the one before. */
+  /** DuckDB oracle for [[graft.operators.Analytics.eventsHopping]]: every event
+    * contributes to its epoch-aligned 5-minute bucket's window and the one
+    * before. */
   val eventsHoppingOracle: String =
     """WITH ev AS (SELECT event_type,
              CAST(round(value*100) AS BIGINT) AS v_c,
@@ -198,7 +199,7 @@ object Analytics {
          count(*) AS n, CAST(sum(v_c) AS BIGINT) AS sum_value_c
        FROM w GROUP BY 1, 2 ORDER BY 1, 2"""
 
-  /** DuckDB oracle for [[eventDedup]]. */
+  /** DuckDB oracle for [[graft.operators.Analytics.eventDedup]]. */
   val eventDedupOracle: String =
     """WITH base AS (SELECT event_id, user_id, event_type,
             epoch_us(ts) AS t, CAST(round(value*100) AS BIGINT) AS v_c
@@ -237,7 +238,7 @@ object Analytics {
        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
        GROUP BY 1 ORDER BY 1"""
 
-  /** DuckDB oracle for [[retentionCohorts]]. */
+  /** DuckDB oracle for [[graft.operators.Analytics.retentionCohorts]]. */
   val retentionOracle: String =
     """WITH a AS (SELECT user_id,
             CAST(date_trunc('week', ts) AS DATE) AS wk FROM events),
@@ -250,8 +251,9 @@ object Analytics {
        GROUP BY cohort_wk, week_offset
        ORDER BY cohort_wk, week_offset"""
 
-  /** `newSessionOp` is the gap comparator: ">" replays [[sessionize]]'s
-    * strict boundary, ">=" replays the native window's half-open one. */
+  /** `newSessionOp` is the gap comparator: ">" replays
+    * [[graft.operators.Sessionize.sessionize]]'s strict boundary, ">=" replays
+    * the native window's half-open one. */
   def sessionizeOracle(gapMinutes: Int = 30, newSessionOp: String = ">"): String = {
     val gapUs = gapMinutes.toLong * 60 * 1000000
     s"""SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
@@ -276,10 +278,10 @@ object Analytics {
         GROUP BY 1, 2 ORDER BY 1, 2"""
   }
 
-  /** DuckDB oracle for [[sessionizeNative]] — the same islands replay
-    * as [[sessionize]] (the inclusive native boundary IS the strict->
-    * break; `newSessionOp = ">="` is kept available for engines whose
-    * session windows are half-open). */
+  /** DuckDB oracle for [[graft.operators.Sessionize.sessionizeNative]] — the
+    * same islands replay as [[graft.operators.Sessionize.sessionize]] (the
+    * inclusive native boundary IS the strict-> break; `newSessionOp = ">="` is
+    * kept available for engines whose session windows are half-open). */
   def sessionizeNativeOracle(gapMinutes: Int = 30): String =
     sessionizeOracle(gapMinutes)
 }

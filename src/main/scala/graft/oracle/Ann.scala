@@ -12,10 +12,10 @@ import Oracle._
   * (Similarity, Graph). */
 object Ann {
 
-  /** DuckDB oracle for [[knnGraphAnn]]: static centroids inlined,
-    * assignment/probing/ranking replayed (the [[ivfStaticOracle]]
-    * machinery with every vector as a query) plus the mutual
-    * self-join. */
+  /** DuckDB oracle for [[graft.operators.Similarity.knnGraphAnn]]: static
+    * centroids inlined, assignment/probing/ranking replayed (the
+    * [[ivfStaticOracle]] machinery with every vector as a query) plus the
+    * mutual self-join. */
   def knnGraphAnnOracle(nProbe: Int = 6, k: Int = 5): String =
     s"""WITH ${normCte("n")},
         cents(cell, cv) AS (VALUES ${rows(staticCentroids())}),
@@ -38,8 +38,8 @@ object Ann {
                             AND r.neighbor_id = e.query_id
         ORDER BY src_id, e.rnk"""
 
-  /** DuckDB oracle for [[labelSpread]]: the same rank/vote/argmax
-    * chain replayed with window functions. */
+  /** DuckDB oracle for [[graft.operators.Similarity.labelSpread]]: the same
+    * rank/vote/argmax chain replayed with window functions. */
   def labelSpreadOracle(k: Int = 5, seedMod: Int = 5): String = {
     s"""WITH ${normCte("n", label = true)},
         sd AS (SELECT * FROM n WHERE vec_id % $seedMod = 0),
@@ -69,8 +69,9 @@ object Ann {
        FROM ev JOIN sc USING (label) ORDER BY label"""
   }
 
-  /** DuckDB oracle for [[ivfProbeSweep]]: the static-IVF CTE machinery
-    * with one branch per probe setting, all off shared CTEs. */
+  /** DuckDB oracle for [[graft.operators.Similarity.ivfProbeSweep]]: the
+    * static-IVF CTE machinery with one branch per probe setting, all off shared
+    * CTEs. */
   def ivfProbeSweepOracle(nQueries: Int = 10, k: Int = 5): String = {
     val cents = staticCentroids()
     val pers = (1 to cents.length).map { p =>
@@ -101,12 +102,11 @@ object Ann {
        ORDER BY n_probe"""
   }
 
-  /** DuckDB oracle for [[pqShortlistSweep]]: the [[pqTrainedOracle]]
-    * machinery (trained codebooks + biases inlined, code pivot, ADC
-    * sum in fixed sub-space order) with the candidates ADC-ranked once
-    * in a shared CTE and one branch per factor — each filters its
-    * rank-prefix, exact-reranks, and scores against the shared brute
-    * truth. */
+  /** DuckDB oracle for [[graft.operators.Similarity.pqShortlistSweep]]: the
+    * [[pqTrainedOracle]] machinery (trained codebooks + biases inlined, code
+    * pivot, ADC sum in fixed sub-space order) with the candidates ADC-ranked
+    * once in a shared CTE and one branch per factor — each filters its
+    * rank-prefix, exact-reranks, and scores against the shared brute truth. */
   def pqShortlistSweepOracle(nQueries: Int = 10, k: Int = 5,
                              factors: Seq[Int] = Seq(1, 2, 4, 8)): String = {
     val cbs = withTrainCache(Oracle.vectors())(trainPqCodebooks(_))
@@ -138,13 +138,12 @@ object Ann {
     s"(SELECT query_id, neighbor_id FROM adcr WHERE r <= $n)"
 
 
-  /** DuckDB oracle for [[pqShortlistSweepResidual]]: the
-    * [[ivfPqResidualTrainedOracle]] machinery (both trained models
-    * inlined, double residual subtract, residual encode,
-    * centroid-first ADC) with the probed-cell candidates ranked once
-    * in a shared CTE and one branch per factor — rank-prefix filter,
-    * exact re-rank, hit count vs the shared brute truth, and the
-    * measured prefix count as the gather bill. */
+  /** DuckDB oracle for [[graft.operators.Similarity.pqShortlistSweepResidual]]:
+    * the [[ivfPqResidualTrainedOracle]] machinery (both trained models inlined,
+    * double residual subtract, residual encode, centroid-first ADC) with the
+    * probed-cell candidates ranked once in a shared CTE and one branch per
+    * factor — rank-prefix filter, exact re-rank, hit count vs the shared brute
+    * truth, and the measured prefix count as the gather bill. */
   def pqShortlistSweepResidualOracle(nQueries: Int = 10, k: Int = 5,
                                      nProbe: Int = 4,
                                      factors: Seq[Int] = Seq(1, 2, 4, 8))
@@ -178,10 +177,10 @@ object Ann {
        ORDER BY shortlist_factor"""
   }
 
-  /** DuckDB oracle for [[pqBitsSweep]]: one trained codebook set per
-    * size inlined; shared sub-vector slices and brute truth; per size —
-    * the code argmin (keeping s/cv/bias for the three-term 8-dp decimal
-    * error), the code pivot, the ADC shortlist, and the exact re-rank
+  /** DuckDB oracle for [[graft.operators.Similarity.pqBitsSweep]]: one trained
+    * codebook set per size inlined; shared sub-vector slices and brute truth;
+    * per size — the code argmin (keeping s/cv/bias for the three-term 8-dp
+    * decimal error), the code pivot, the ADC shortlist, and the exact re-rank
     * hit count, all the proven replay machinery. */
   def pqBitsSweepOracle(sizes: Seq[Int] = Seq(4, 16, 64),
                         nQueries: Int = 10, k: Int = 5): String = {
@@ -220,9 +219,10 @@ object Ann {
        ORDER BY codebook_k"""
   }
 
-  /** DuckDB oracle for [[annRecallEvalPq]]: the [[pqTrainedOracle]] and
-    * [[ivfPqTrainedOracle]] machinery merged onto SHARED CTEs (one code
-    * pivot, one truth) with one counting branch per variant. */
+  /** DuckDB oracle for [[graft.operators.Similarity.annRecallEvalPq]]: the
+    * [[pqTrainedOracle]] and [[ivfPqTrainedOracle]] machinery merged onto
+    * SHARED CTEs (one code pivot, one truth) with one counting branch per
+    * variant. */
   def annRecallEvalPqOracle(nQueries: Int = 10, k: Int = 5): String = {
     val (cents, cbs, cbsR, rO, cbsO) = withTrainCache(Oracle.vectors()) { vc =>
       val cents = trainCentroids(vc, 16)
@@ -295,8 +295,8 @@ object Ann {
        ORDER BY variant"""
   }
 
-  /** DuckDB oracle for [[knnTriangles]]: the exact knn CTE + mutual
-    * filter + the same oriented triangle join and per-corner
+  /** DuckDB oracle for [[graft.operators.Similarity.knnTriangles]]: the exact
+    * knn CTE + mutual filter + the same oriented triangle join and per-corner
     * attribution. */
   def knnTrianglesOracle(k: Int = 5): String = {
     s"""WITH ${normCte("n")},
@@ -337,9 +337,9 @@ object Ann {
        ORDER BY v.vec_id"""
   }
 
-  /** DuckDB oracle for [[knnCommunities]]: the exact knn edge CTE +
-    * mutual filter + recursive-CTE transitive closure + the identical
-    * majority/purity arithmetic. */
+  /** DuckDB oracle for [[graft.operators.Similarity.knnCommunities]]: the exact
+    * knn edge CTE + mutual filter + recursive-CTE transitive closure + the
+    * identical majority/purity arithmetic. */
   def knnCommunitiesOracle(k: Int = 5): String = {
     s"""WITH RECURSIVE ${normCte("n")},
         e0 AS (SELECT query_id, neighbor_id FROM (
@@ -376,9 +376,9 @@ object Ann {
        ORDER BY community_id"""
   }
 
-  /** DuckDB oracle for [[ivfDriftImpact]]: per-scenario corpus CTEs,
-    * the ranked-assignment replay, brute truth, probe serve, and the
-    * probed-cell population sum — unioned. */
+  /** DuckDB oracle for [[graft.operators.Similarity.ivfDriftImpact]]:
+    * per-scenario corpus CTEs, the ranked-assignment replay, brute truth, probe
+    * serve, and the probed-cell population sum — unioned. */
   def ivfDriftImpactOracle(nQueries: Int = 10, k: Int = 5,
                            nProbe: Int = 4): String = {
     val qCap = nQueries * 5
@@ -428,16 +428,15 @@ object Ann {
        ORDER BY scenario"""
   }
 
-  /** DuckDB oracle for [[ivfRebuild]]: the pre phase replays the
-    * static-quantizer drift + impact formulas over the drifted corpus
-    * (baseline = the base-only rows of the same ranked assignment);
-    * the post phase replays them under the INLINED retrained
-    * centroids, with baseline = the corpus itself (the reset
-    * semantics, so every PSI term cancels to 0 exactly). Training is
-    * taken as given, the [[ivfTrainedOracle]] doctrine: deterministic
-    * seeds + per-iteration 1e-6 mean quantization make the k-means
-    * replayable from either the in-memory union or the artifact's
-    * parquet rows (float storage is exact). */
+  /** DuckDB oracle for [[graft.operators.Similarity.ivfRebuild]]: the pre phase
+    * replays the static-quantizer drift + impact formulas over the drifted
+    * corpus (baseline = the base-only rows of the same ranked assignment); the
+    * post phase replays them under the INLINED retrained centroids, with
+    * baseline = the corpus itself (the reset semantics, so every PSI term
+    * cancels to 0 exactly). Training is taken as given, the
+    * [[ivfTrainedOracle]] doctrine: deterministic seeds + per-iteration 1e-6
+    * mean quantization make the k-means replayable from either the in-memory
+    * union or the artifact's parquet rows (float storage is exact). */
   def ivfRebuildOracle(nQueries: Int = 10, k: Int = 5, nProbe: Int = 4,
                        nCells: Int = 16): String = {
     val v = Oracle.vectors().select(col("vec_id"), col("embedding"))
@@ -546,10 +545,10 @@ object Ann {
        ORDER BY phase"""
   }
 
-  /** DuckDB oracle for [[ivfDrift]]: centroids inlined as VALUES, the
-    * ranked-assignment replay of [[ivfStaticOracle]], same 8-dp decimal
-    * terms, same one-sided-cell accounting, both scenarios replayed
-    * and unioned. */
+  /** DuckDB oracle for [[graft.operators.Similarity.ivfDrift]]: centroids
+    * inlined as VALUES, the ranked-assignment replay of [[ivfStaticOracle]],
+    * same 8-dp decimal terms, same one-sided-cell accounting, both scenarios
+    * replayed and unioned. */
   def ivfDriftOracle(): String = {
     // ranked-assignment replay + per-cell count/distance rollup for one
     // corpus CTE; columns named by `pre` so base stats join two
@@ -627,9 +626,9 @@ object Ann {
        ORDER BY scenario, cell"""
   }
 
-  /** DuckDB replay of [[pqDrift]]: trained codebooks + biases inlined
-    * (the [[pqTrainedOracle]] stance), per-corpus sub-vector explode,
-    * code argmin (biased dot DESC, code ASC), the SAME three-term 8-dp
+  /** DuckDB replay of [[graft.operators.Similarity.pqDrift]]: trained codebooks
+    * + biases inlined (the [[pqTrainedOracle]] stance), per-corpus sub-vector
+    * explode, code argmin (biased dot DESC, code ASC), the SAME three-term 8-dp
     * decimal error, and the shared-baseline join per scenario. */
   def pqDriftOracle(staleRatio: Double = 1.5): String = {
     val v = Oracle.vectors().select(col("vec_id"), col("embedding"))
@@ -686,17 +685,18 @@ object Ann {
        ORDER BY scenario, m"""
   }
 
-  /** Oracle for [[annIvfSq8Indexed]]: the [[ivfSq8TrainedOracle]]
-    * replay over the STATIC quantizer the artifact build pins. */
+  /** Oracle for [[graft.operators.Similarity.annIvfSq8Indexed]]: the
+    * [[ivfSq8TrainedOracle]] replay over the STATIC quantizer the artifact
+    * build pins. */
   def ivfSq8StaticOracle(nProbe: Int = 4, nQueries: Int = 10, k: Int = 5,
                          shortlistFactor: Int = 8): String =
     ann(Ivf(staticCentroids(), nProbe), Sq8, nQueries, k, shortlistFactor)
 
-  /** DuckDB replay for [[annMmrSq8Indexed]]: [[mmrOracleOver]]'s
-    * greedy rounds fed by the sq8 two-stage shortlist — static-IVF
-    * assignment/probe CTEs, the shared sq8 dequant body scoring the
-    * pre-shortlist, exact rescore cut to f·k — every stage of the
-    * served form exact. */
+  /** DuckDB replay for [[graft.operators.Similarity.annMmrSq8Indexed]]:
+    * [[mmrOracleOver]]'s greedy rounds fed by the sq8 two-stage shortlist —
+    * static-IVF assignment/probe CTEs, the shared sq8 dequant body scoring the
+    * pre-shortlist, exact rescore cut to f·k — every stage of the served form
+    * exact. */
   def mmrSq8IndexedOracle(nProbe: Int = 4, nQueries: Int = 10,
                           k: Int = 5, shortlistFactor: Int = 8,
                           lambda: Double = 0.7,
@@ -721,11 +721,11 @@ object Ann {
         ${mmrRescore(shortlistFactor * k)}""", k, lambda)
   }
 
-  /** DuckDB replay for [[annMmrPqIndexed]]: [[mmrOracleOver]]'s greedy
-    * rounds fed by the ADC two-stage shortlist — both trained models
-    * inlined (the [[ivfPqTrainedOracle]] stance), coarse assignment /
-    * probing / PQ encoding / ADC pre-shortlist / exact rescore cut to
-    * f·k, every stage of the served form exact. */
+  /** DuckDB replay for [[graft.operators.Similarity.annMmrPqIndexed]]:
+    * [[mmrOracleOver]]'s greedy rounds fed by the ADC two-stage shortlist —
+    * both trained models inlined (the [[ivfPqTrainedOracle]] stance), coarse
+    * assignment / probing / PQ encoding / ADC pre-shortlist / exact rescore cut
+    * to f·k, every stage of the served form exact. */
   def mmrPqIndexedOracle(nCells: Int = 16, nProbe: Int = 4,
                          nQueries: Int = 10, k: Int = 5,
                          shortlistFactor: Int = 8,
@@ -772,10 +772,10 @@ object Ann {
             JOIN nv cv ON cv.vec_id = pr.cand_id)
           WHERE r <= $limit)"""
 
-  /** DuckDB replay for [[annMmr]] — static SQL with the k greedy
-    * rounds UNROLLED (sel1..selK + cumulative selected sets): the same
-    * shortlist/pair arithmetic, the same `λ·cosq − (1−λ)·max` formula
-    * with the same literal λ, the same (mmr DESC, id) tie-break. */
+  /** DuckDB replay for [[graft.operators.Similarity.annMmr]] — static SQL with
+    * the k greedy rounds UNROLLED (sel1..selK + cumulative selected sets): the
+    * same shortlist/pair arithmetic, the same `λ·cosq − (1−λ)·max` formula with
+    * the same literal λ, the same (mmr DESC, id) tie-break. */
   def mmrOracle(nQueries: Int = 10, k: Int = 5, shortlistFactor: Int = 8,
                 lambda: Double = 0.7): String = {
     mmrOracleOver(
@@ -790,11 +790,11 @@ object Ann {
           WHERE r <= ${shortlistFactor * k})""", k, lambda)
   }
 
-  /** DuckDB replay for [[annMmrIndexed]]: [[mmrOracle]]'s greedy rounds
-    * over the IVF-PROBED shortlist — the [[ivfStaticOracle]] assignment
-    * CTEs (static centroid VALUES, argmax assignment, nProbe probes)
-    * feeding the same top-(f·k) ranking, so every stage of the served
-    * form is replayed exactly. */
+  /** DuckDB replay for [[graft.operators.Similarity.annMmrIndexed]]:
+    * [[mmrOracle]]'s greedy rounds over the IVF-PROBED shortlist — the
+    * [[ivfStaticOracle]] assignment CTEs (static centroid VALUES, argmax
+    * assignment, nProbe probes) feeding the same top-(f·k) ranking, so every
+    * stage of the served form is replayed exactly. */
   def mmrIndexedOracle(nProbe: Int = 4, nQueries: Int = 10, k: Int = 5,
                        shortlistFactor: Int = 8,
                        lambda: Double = 0.7): String = {
@@ -871,9 +871,9 @@ object Ann {
         ORDER BY query_id, rnk"""
   }
 
-  /** Oracle for [[semanticDedupIncremental]]: trained centroids
-    * inlined, ranked assignment, then the same order-free pairwise
-    * rule — EXISTS a same-cell cosine ≥ tau neighbor that is base or a
+  /** Oracle for [[graft.operators.Similarity.semanticDedupIncremental]]:
+    * trained centroids inlined, ranked assignment, then the same order-free
+    * pairwise rule — EXISTS a same-cell cosine ≥ tau neighbor that is base or a
     * smaller delta id. */
   def semanticDedupIncrementalOracle(nCells: Int = 16,
                                      tau: Double = 0.4): String = {
@@ -903,9 +903,9 @@ object Ann {
         ORDER BY a.vec_id"""
   }
 
-  /** Oracle for [[decontaminateSemantic]]: trained centroids inlined;
-    * both splits' ranked assignment, the probe join, the tau gate, and
-    * the (cos DESC, id ASC) top-match replayed exactly. */
+  /** Oracle for [[graft.operators.Similarity.decontaminateSemantic]]: trained
+    * centroids inlined; both splits' ranked assignment, the probe join, the tau
+    * gate, and the (cos DESC, id ASC) top-match replayed exactly. */
   def decontaminateSemanticOracle(nCells: Int = 16, nProbe: Int = 4,
                                   tau: Double = 0.4): String = {
     val cents = trainCentroids(Oracle.vectors(), nCells)
@@ -934,8 +934,8 @@ object Ann {
         ORDER BY c.vec_id"""
   }
 
-  /** Oracle for [[semanticDedup]]: trained centroids inlined, ranked
-    * assignment + within-cell pairwise replay. */
+  /** Oracle for [[graft.operators.Similarity.semanticDedup]]: trained centroids
+    * inlined, ranked assignment + within-cell pairwise replay. */
   def semanticDedupOracle(nCells: Int = 16, tau: Double = 0.4): String = {
     val cents = trainCentroids(Oracle.vectors(), nCells)
     s"""WITH ${normCte("n")},
@@ -957,9 +957,9 @@ object Ann {
         ORDER BY s.vec_id"""
   }
 
-  /** DuckDB oracle for [[deconRecallEval]]: trained centroids inlined;
-    * ranked probe assignment, the reachable-pair frame, the bounded
-    * brute truth, and every (n_probe, tau) counting row replayed. */
+  /** DuckDB oracle for [[graft.operators.Similarity.deconRecallEval]]: trained
+    * centroids inlined; ranked probe assignment, the reachable-pair frame, the
+    * bounded brute truth, and every (n_probe, tau) counting row replayed. */
   def deconRecallEvalOracle(nCells: Int = 16,
                             probeCounts: Seq[Int] = Seq(1, 2, 4),
                             taus: Seq[Double] = Seq(0.3, 0.4),
@@ -1007,13 +1007,13 @@ object Ann {
        ORDER BY g.n_probe, g.tau"""
   }
 
-  /** DuckDB oracle for [[annLsh]]. The hyperplanes are FIXED (seeded),
-    * so the whole pipeline — sign bits, banding, candidate pairs,
-    * cosine, ranking — is static SQL: the planes are inlined as list
-    * literals (Double.toString round-trips exactly, and the left-fold
-    * dot contract matches `VectorFunctions.dot` bit-for-bit, as already
-    * proven by the embedding_dedup oracle). This flips ann_lsh from a
-    * weak rows-only check to a full value-hash oracle match. */
+  /** DuckDB oracle for [[graft.operators.Similarity.annLsh]]. The hyperplanes
+    * are FIXED (seeded), so the whole pipeline — sign bits, banding, candidate
+    * pairs, cosine, ranking — is static SQL: the planes are inlined as list
+    * literals (Double.toString round-trips exactly, and the left-fold dot
+    * contract matches `VectorFunctions.dot` bit-for-bit, as already proven by
+    * the embedding_dedup oracle). This flips ann_lsh from a weak rows-only
+    * check to a full value-hash oracle match. */
   def lshOracle(nQueries: Int = 10, k: Int = 5): String = {
     val planes = hyperplanes(16, 64)
     val bitExprs = planes.map { p =>
@@ -1042,9 +1042,9 @@ object Ann {
         WHERE rnk <= $k ORDER BY query_id, rnk"""
   }
 
-  /** DuckDB oracle for [[annIvfStatic]]: the static centroids inlined;
-    * assignment and probing replayed with a ranked 16-way expansion (the
-    * oracle may brute-force what the engine does map-only). */
+  /** DuckDB oracle for [[graft.operators.Similarity.annIvfStatic]]: the static
+    * centroids inlined; assignment and probing replayed with a ranked 16-way
+    * expansion (the oracle may brute-force what the engine does map-only). */
   def ivfStaticOracle(nProbe: Int = 4, nQueries: Int = 10,
                       k: Int = 5): String =
     ann(Ivf(staticCentroids(), nProbe), Exact, nQueries, k)
@@ -1060,15 +1060,16 @@ object Ann {
     ann(Ivf(trainCentroids(Oracle.vectors(), nCells), nProbe), Exact,
       nQueries, k)
 
-  /** DuckDB replay for [[annSq8]]: per-element max-abs
-    * quantize/clamp/dequantize, stage-1 cosine as three left folds, the
+  /** DuckDB replay for [[graft.operators.Similarity.annSq8]]: per-element
+    * max-abs quantize/clamp/dequantize, stage-1 cosine as three left folds, the
     * shortlist and the exact re-rank. */
   def sq8Oracle(nQueries: Int = 10, k: Int = 5,
                 shortlistFactor: Int = 8): String =
     ann(Brute, Sq8, nQueries, k, shortlistFactor)
 
-  /** DuckDB replay for [[annIvfSq8]]: trained centroids inlined, then
-    * cell assignment/probing and the sq8 scoring of the probed cells. */
+  /** DuckDB replay for [[graft.operators.Similarity.annIvfSq8]]: trained
+    * centroids inlined, then cell assignment/probing and the sq8 scoring of the
+    * probed cells. */
   def ivfSq8TrainedOracle(nCells: Int = 16, nProbe: Int = 4,
                           nQueries: Int = 10, k: Int = 5,
                           shortlistFactor: Int = 8): String = {
@@ -1076,9 +1077,9 @@ object Ann {
     ann(Ivf(cents, nProbe), Sq8, nQueries, k, shortlistFactor)
   }
 
-  /** Oracle for [[annIvfPqResidual]]: both trained models inlined (the
-    * [[ivfTrainedOracle]] stance); coarse assignment, the DOUBLE
-    * residual subtract, residual PQ encoding, the centroid-plus-codeword
+  /** Oracle for [[graft.operators.Similarity.annIvfPqResidual]]: both trained
+    * models inlined (the [[ivfTrainedOracle]] stance); coarse assignment, the
+    * DOUBLE residual subtract, residual PQ encoding, the centroid-plus-codeword
     * ADC, shortlist, and re-rank replayed exactly. */
   def ivfPqResidualTrainedOracle(nCells: Int = 16, nProbe: Int = 4,
                                  nQueries: Int = 10, k: Int = 5): String = {
@@ -1097,8 +1098,8 @@ object Ann {
           col("res").as("embedding"))))
     }
 
-  /** Oracle for [[annIvfPq]]: both trained models inlined (the
-    * [[ivfTrainedOracle]] stance); coarse assignment, probing, PQ
+  /** Oracle for [[graft.operators.Similarity.annIvfPq]]: both trained models
+    * inlined (the [[ivfTrainedOracle]] stance); coarse assignment, probing, PQ
     * encoding, ADC, shortlist, and re-rank replayed exactly. */
   def ivfPqTrainedOracle(nCells: Int = 16, nProbe: Int = 4,
                          nQueries: Int = 10, k: Int = 5): String = {
@@ -1107,9 +1108,9 @@ object Ann {
       nQueries, k)
   }
 
-  /** Oracle for [[annIvfPqOpqIndexed]]: the IVF-PQ replay with the
-    * trained rotation inlined — codes from the rotated corpus, ADC off
-    * the rotated query, exact re-rank unchanged. */
+  /** Oracle for [[graft.operators.Similarity.annIvfPqOpqIndexed]]: the IVF-PQ
+    * replay with the trained rotation inlined — codes from the rotated corpus,
+    * ADC off the rotated query, exact re-rank unchanged. */
   def ivfPqOpqTrainedOracle(nCells: Int = 16, nProbe: Int = 4,
                             nQueries: Int = 10, k: Int = 5): String = {
     val (cents, rO, cbsO) = withTrainCache(Oracle.vectors()) { vc =>
@@ -1120,24 +1121,24 @@ object Ann {
     ann(Ivf(cents, nProbe), Pq(cbsO, rotation = Some(rO)), nQueries, k)
   }
 
-  /** Oracle for [[annPq]]: inlines the codebooks the engine
-    * deterministically trains on the verify SF (the
-    * [[ivfTrainedOracle]] stance); encode, ADC, and rank are replayed
-    * EXACTLY downstream of the model. */
+  /** Oracle for [[graft.operators.Similarity.annPq]]: inlines the codebooks the
+    * engine deterministically trains on the verify SF (the [[ivfTrainedOracle]]
+    * stance); encode, ADC, and rank are replayed EXACTLY downstream of the
+    * model. */
   def pqTrainedOracle(nQueries: Int = 10, k: Int = 5): String =
     ann(Brute, Pq(trainPqCodebooks(Oracle.vectors())), nQueries, k)
 
-  /** DuckDB oracle for [[annPqOpq]]: the trained rotation AND
-    * codebooks inlined; the PQ replay over the rotated frame with the
-    * exact re-rank on the ORIGINAL embeddings. */
+  /** DuckDB oracle for [[graft.operators.Similarity.annPqOpq]]: the trained
+    * rotation AND codebooks inlined; the PQ replay over the rotated frame with
+    * the exact re-rank on the ORIGINAL embeddings. */
   def opqTrainedOracle(nQueries: Int = 10, k: Int = 5): String = {
     val (r, cbs) = withTrainCache(Oracle.vectors())(trainOpqRotation(_))
     ann(Brute, Pq(cbs, rotation = Some(r)), nQueries, k)
   }
 
-  /** DuckDB oracle for [[annSignSketch]]: the 63-bit packing, the
-    * Hamming top-m (row_number over (hamming, neighbor_id) — the exact
-    * TopKByScore order), and the cosine rerank all replay in SQL. */
+  /** DuckDB oracle for [[graft.operators.Similarity.annSignSketch]]: the 63-bit
+    * packing, the Hamming top-m (row_number over (hamming, neighbor_id) — the
+    * exact TopKByScore order), and the cosine rerank all replay in SQL. */
   def signSketchOracle(nQueries: Int = 10, m: Int = 50,
                        k: Int = 5): String = {
     s"""WITH ${normCte("n")},
@@ -1166,8 +1167,9 @@ object Ann {
         WHERE rnk <= $k ORDER BY query_id, rnk"""
   }
 
-  /** DuckDB oracle for [[embeddingOutliers]]: the #164 cosine CTEs +
-    * quantile_disc fences with the same doubled-integer comparisons. */
+  /** DuckDB oracle for [[graft.operators.Similarity.embeddingOutliers]]: the
+    * #164 cosine CTEs + quantile_disc fences with the same doubled-integer
+    * comparisons. */
   val embeddingOutliersOracle: String =
     s"""WITH dims AS (
          SELECT label, unnest(embedding) AS v,
@@ -1204,9 +1206,10 @@ object Ann {
        FROM scored JOIN f ON scored.label = f.label
        GROUP BY scored.label ORDER BY scored.label"""
 
-  /** DuckDB oracle for [[embeddingClassStats]]: same 1e-6 centroid
-    * quantization, same left-fold dot ([[graft.functions.DotProduct]]'s
-    * cross-engine contract), min/max over bit-identical cosines. */
+  /** DuckDB oracle for [[graft.operators.Similarity.embeddingClassStats]]: same
+    * 1e-6 centroid quantization, same left-fold dot
+    * ([[graft.functions.DotProduct]]'s cross-engine contract), min/max over
+    * bit-identical cosines. */
   val embeddingClassStatsOracle: String =
     s"""WITH dims AS (
          SELECT label, unnest(embedding) AS v,
@@ -1230,9 +1233,9 @@ object Ann {
               round(max(cos), 4) AS max_cos
        FROM scored GROUP BY label ORDER BY label"""
 
-  /** DuckDB oracle for [[embeddingWhiten]]: μ/pc/‖pc‖ inlined as
-    * trained literals, the projection and every decimal sum replayed
-    * with identical arithmetic. */
+  /** DuckDB oracle for [[graft.operators.Similarity.embeddingWhiten]]:
+    * μ/pc/‖pc‖ inlined as trained literals, the projection and every decimal
+    * sum replayed with identical arithmetic. */
   def embeddingWhitenOracle(iters: Int = 5): String = {
     val (spark, sfDir) = Oracle.input
     val (mu, pc) = trainPc1(
@@ -1276,12 +1279,12 @@ object Ann {
        FROM cc"""
   }
 
-  /** DuckDB oracle for [[whitenRecallEval]]: μ/pc, the
-    * whitened-trained centroids, and the whitened rotation+codebooks
-    * inlined as literals; the whitened corpus built by one CTE (the
-    * exact [[whitenVectors]] arithmetic) and every rung's stage —
-    * argmax assignment, sq8 clamp/round, rotated encode, ADC
-    * shortlist, exact whitened-space rerank — replayed off it. */
+  /** DuckDB oracle for [[graft.operators.Similarity.whitenRecallEval]]: μ/pc,
+    * the whitened-trained centroids, and the whitened rotation+codebooks
+    * inlined as literals; the whitened corpus built by one CTE (the exact
+    * [[graft.operators.Similarity.whitenVectors]] arithmetic) and every rung's
+    * stage — argmax assignment, sq8 clamp/round, rotated encode, ADC shortlist,
+    * exact whitened-space rerank — replayed off it. */
   def whitenRecallEvalOracle(nQueries: Int = 10, k: Int = 5): String = {
     val vRaw = Oracle.vectors()
     val (mu, pc) = trainWhitening(vRaw)
@@ -1365,9 +1368,9 @@ object Ann {
        ORDER BY variant"""
   }
 
-  /** DuckDB oracle for [[embeddingPca]]: μ and the trained component
-    * inlined as literals (the semanticDedup stance — the same training
-    * code runs once per session), variance/λ recomputed FROM DATA with
+  /** DuckDB oracle for [[graft.operators.Similarity.embeddingPca]]: μ and the
+    * trained component inlined as literals (the semanticDedup stance — the same
+    * training code runs once per session), variance/λ recomputed FROM DATA with
     * the identical decimal-sum arithmetic. */
   def embeddingPcaOracle(iters: Int = 5): String = {
     val (spark, sfDir) = Oracle.input
@@ -1397,13 +1400,13 @@ object Ann {
        FROM pv CROSS JOIN lam CROSS JOIN tv ORDER BY pos"""
   }
 
-  /** DuckDB oracle for [[annIvfWhitenedIndexed]]: μ/pc and the
-    * whitened-space centroids inlined as trained literals (all
-    * deterministic — the [[whitenRecallEvalOracle]] stance); the
-    * whitened corpus is one CTE (the exact [[whitenVectors]]
-    * arithmetic) and the IVF assignment/probe/rank replay
-    * runs off it — queries whitened by the SAME CTE, because a served
-    * query is a corpus row transformed with the same stored model. */
+  /** DuckDB oracle for [[graft.operators.Similarity.annIvfWhitenedIndexed]]:
+    * μ/pc and the whitened-space centroids inlined as trained literals (all
+    * deterministic — the [[whitenRecallEvalOracle]] stance); the whitened
+    * corpus is one CTE (the exact [[graft.operators.Similarity.whitenVectors]]
+    * arithmetic) and the IVF assignment/probe/rank replay runs off it — queries
+    * whitened by the SAME CTE, because a served query is a corpus row
+    * transformed with the same stored model. */
   def ivfWhitenedOracle(nProbe: Int = 4, nQueries: Int = 10,
                         k: Int = 5, nCells: Int = 16,
                         iters: Int = 5): String = {
@@ -1434,8 +1437,8 @@ object Ann {
           WHERE p.query_id <> a.neighbor_id""", k)}"""
   }
 
-  /** DuckDB oracle for [[pagerank]]: the knn_graph edge CTE plus
-    * `iters` unrolled iterations of the identical decimal-summed
+  /** DuckDB oracle for [[graft.operators.Graph.pagerank]]: the knn_graph edge
+    * CTE plus `iters` unrolled iterations of the identical decimal-summed
     * arithmetic. */
   def pagerankOracle(k: Int = 5, d: Double = 0.85, iters: Int = 5): String = {
     val base =

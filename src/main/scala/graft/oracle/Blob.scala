@@ -5,9 +5,9 @@ package graft.oracle
   * perceptual and audio fingerprints (Blob). */
 object Blob {
 
-  /** DuckDB oracle for [[mediaFrameSampleArith]]: encodeBmp's layout is
-    * a pure function of the payload length (48-byte rows, 54-byte
-    * header), so counts, sampled indices, and offsets replay
+  /** DuckDB oracle for [[graft.operators.Blob.mediaFrameSampleArith]]:
+    * encodeBmp's layout is a pure function of the payload length (48-byte rows,
+    * 54-byte header), so counts, sampled indices, and offsets replay
     * arithmetically. */
   def mediaFrameSampleOracle(everyK: Int = 4): String =
     s"""WITH f AS (
@@ -20,9 +20,9 @@ object Blob {
               54 + 48 * unnest(range(0, n_frames, $everyK)) AS frame_off
        FROM f ORDER BY doc_id, frame_ix"""
 
-  /** DuckDB oracle for [[mediaPngRoundtripArith]]: the raster geometry
-    * is a pure function of the payload length; `ok` asserts the decoded
-    * pixels equal the source payload — losslessness through real zlib
+  /** DuckDB oracle for [[graft.operators.Blob.mediaPngRoundtripArith]]: the
+    * raster geometry is a pure function of the payload length; `ok` asserts the
+    * decoded pixels equal the source payload — losslessness through real zlib
     * compression and all five scanline filters. */
   val mediaPngRoundtripOracle: String =
     """SELECT doc_id,
@@ -34,8 +34,8 @@ object Blob {
          true AS ok
        FROM documents ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[mediaResizePng]]: same raster arithmetic as
-    * the BMP resize; `ok` asserts pixel-exact nearest-neighbor
+  /** DuckDB oracle for [[graft.operators.Blob.mediaResizePng]]: same raster
+    * arithmetic as the BMP resize; `ok` asserts pixel-exact nearest-neighbor
     * selection through two full compress/decompress cycles. */
   val mediaResizePngOracle: String =
     """SELECT doc_id,
@@ -48,8 +48,8 @@ object Blob {
          true AS ok
        FROM documents ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[mediaResize]]: dst rows are 8 px × 24 bpp =
-    * 24-byte (already aligned) rows under a 54-byte header. */
+  /** DuckDB oracle for [[graft.operators.Blob.mediaResize]]: dst rows are 8 px
+    * × 24 bpp = 24-byte (already aligned) rows under a 54-byte header. */
   val mediaResizeOracle: String =
     """SELECT doc_id,
          CAST(16 AS BIGINT) AS src_w,
@@ -64,9 +64,9 @@ object Blob {
          true AS ok
        FROM documents ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[mediaJpegStatsArith]]: raster geometry is a
-    * pure function of payload length; the SOF walk must recover it from
-    * the container bytes and the full decode must agree — both folded
+  /** DuckDB oracle for [[graft.operators.Blob.mediaJpegStatsArith]]: raster
+    * geometry is a pure function of payload length; the SOF walk must recover
+    * it from the container bytes and the full decode must agree — both folded
     * into `decode_ok`. */
   val mediaJpegStatsOracle: String =
     """SELECT doc_id,
@@ -80,9 +80,9 @@ object Blob {
          true AS decode_ok
        FROM documents ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[mediaPhashIncremental]]: fingerprints replay
-    * from code points, the decision rule replays as EXISTS over the
-    * all-pairs Hamming relation restricted to (base ∪ smaller-id
+  /** DuckDB oracle for [[graft.operators.Blob.mediaPhashIncremental]]:
+    * fingerprints replay from code points, the decision rule replays as EXISTS
+    * over the all-pairs Hamming relation restricted to (base ∪ smaller-id
     * delta) blockers. */
   def mediaPhashIncrementalOracle(maxHamming: Int = 7, mod: Int = 10,
                                   deltaFrom: Int = 8): String =
@@ -120,11 +120,11 @@ object Blob {
        FROM f a WHERE a.doc_id % $mod >= $deltaFrom
        ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[mediaPhashDedup]]: gray values replay from
-    * code points (the WAV contract), the 8×8 sample grid and the 56
-    * difference bits replay arithmetically, and the all-pairs
-    * xor/bit_count join brute-forces the same pairs the banded plan
-    * finds — recall equality is the checked property. */
+  /** DuckDB oracle for [[graft.operators.Blob.mediaPhashDedup]]: gray values
+    * replay from code points (the WAV contract), the 8×8 sample grid and the 56
+    * difference bits replay arithmetically, and the all-pairs xor/bit_count
+    * join brute-forces the same pairs the banded plan finds — recall equality
+    * is the checked property. */
   def mediaPhashDedupOracle(maxHamming: Int = 7): String =
     s"""WITH cps AS (
           SELECT doc_id,
@@ -155,8 +155,8 @@ object Blob {
        WHERE bit_count(xor(a.fp, b.fp)) <= $maxHamming
        ORDER BY id_a, id_b"""
 
-  /** DuckDB oracle for [[mediaPhashClusters]]: the phash pair CTE plus
-    * the same recursive transitive-closure cluster truth as
+  /** DuckDB oracle for [[graft.operators.Blob.mediaPhashClusters]]: the phash
+    * pair CTE plus the same recursive transitive-closure cluster truth as
     * dedup_clusters. */
   def mediaPhashClustersOracle(maxHamming: Int = 7): String =
     s"""WITH RECURSIVE cps AS (
@@ -199,13 +199,12 @@ object Blob {
               id = cluster_id AS is_canonical
        FROM lab ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[hammingPlan]]: fingerprints replay from code
-    * points; candidate volume replays the band-key grouping with the
-    * same shift/mask arithmetic; the recall rationals are re-derived
-    * INDEPENDENTLY — multiplicative binomials built stepwise in a
-    * recursive CTE (each partial product C(n−k+j, j) is an integer, so
-    * HUGEINT floor division is exact), then the same inclusion-
-    * exclusion sum. */
+  /** DuckDB oracle for [[graft.operators.Blob.hammingPlan]]: fingerprints
+    * replay from code points; candidate volume replays the band-key grouping
+    * with the same shift/mask arithmetic; the recall rationals are re-derived
+    * INDEPENDENTLY — multiplicative binomials built stepwise in a recursive CTE
+    * (each partial product C(n−k+j, j) is an integer, so HUGEINT floor division
+    * is exact), then the same inclusion- exclusion sum. */
   def hammingPlanOracle(): String =
     s"""WITH RECURSIVE cps AS (
           SELECT doc_id,
@@ -297,11 +296,10 @@ object Blob {
        JOIN den d13 ON d13.h = 13
        ORDER BY c.bands"""
 
-  /** DuckDB oracle for [[mediaWavFpDedup]]: samples and the 57-frame
-    * energy envelope replay from code points (exact integer sums), the
-    * 56 difference bits replay arithmetically, and the all-pairs
-    * xor/bit_count join brute-forces the same pairs the banded plan
-    * finds. */
+  /** DuckDB oracle for [[graft.operators.Blob.mediaWavFpDedup]]: samples and
+    * the 57-frame energy envelope replay from code points (exact integer sums),
+    * the 56 difference bits replay arithmetically, and the all-pairs
+    * xor/bit_count join brute-forces the same pairs the banded plan finds. */
   def mediaWavFpDedupOracle(maxHamming: Int = 13): String =
     s"""WITH cps AS (
           SELECT doc_id,
@@ -330,12 +328,12 @@ object Blob {
        WHERE bit_count(xor(a.fp, b.fp)) <= $maxHamming
        ORDER BY id_a, id_b"""
 
-  /** DuckDB oracle for [[mediaWavFpPlanned]]: same fingerprint replay
-    * as [[mediaWavFpDedupOracle]], with the candidate stage replayed
-    * EXACTLY — a pair survives iff some 7-bit contiguous band of the
-    * two fingerprints is identical (xor band = 0), i.e. the same
-    * deterministic 8×7 band join the Spark plan executes — then the
-    * same Hamming ≤ maxH verification. */
+  /** DuckDB oracle for [[graft.operators.Blob.mediaWavFpPlanned]]: same
+    * fingerprint replay as [[mediaWavFpDedupOracle]], with the candidate stage
+    * replayed EXACTLY — a pair survives iff some 7-bit contiguous band of the
+    * two fingerprints is identical (xor band = 0), i.e. the same deterministic
+    * 8×7 band join the Spark plan executes — then the same Hamming ≤ maxH
+    * verification. */
   def mediaWavFpPlannedOracle(maxHamming: Int = 13): String = {
     val bandMatch = (0 until 8)
       .map(b => s"((xor(a.fp, b.fp) >> ${b * 7}) & 127) = 0")
@@ -395,11 +393,11 @@ object Blob {
                            for k in range(56)]) AS BIGINT) AS fp
           FROM e)"""
 
-  /** DuckDB oracle for [[mediaWavFpIncremental]]: fingerprints replay
-    * from code points; the decision rule replays as EXISTS over the
-    * all-pairs Hamming relation restricted to base ∪ smaller-id delta
-    * blockers (exact at radius 7 by pigeonhole, so no band arithmetic
-    * is needed). */
+  /** DuckDB oracle for [[graft.operators.Blob.mediaWavFpIncremental]]:
+    * fingerprints replay from code points; the decision rule replays as EXISTS
+    * over the all-pairs Hamming relation restricted to base ∪ smaller-id delta
+    * blockers (exact at radius 7 by pigeonhole, so no band arithmetic is
+    * needed). */
   def mediaWavFpIncrementalOracle(maxHamming: Int = 7, mod: Int = 10,
                                   deltaFrom: Int = 8): String =
     s"""WITH $wavFpCte
@@ -414,10 +412,10 @@ object Blob {
        FROM f a WHERE a.doc_id % $mod >= $deltaFrom
        ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[mediaWavFpClusters]]: the wav fingerprint CTE
-    * plus the same recursive transitive-closure cluster truth as
-    * dedup_clusters (seeded from ALL documents, so fingerprint-less
-    * docs stay singletons). */
+  /** DuckDB oracle for [[graft.operators.Blob.mediaWavFpClusters]]: the wav
+    * fingerprint CTE plus the same recursive transitive-closure cluster truth
+    * as dedup_clusters (seeded from ALL documents, so fingerprint-less docs
+    * stay singletons). */
   def mediaWavFpClustersOracle(maxHamming: Int = 7): String =
     s"""WITH RECURSIVE $wavFpCte,
         pairs AS (
@@ -437,9 +435,9 @@ object Blob {
               id = cluster_id AS is_canonical
        FROM lab ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[mediaWavStats]]: the sample mapping and every
-    * statistic replayed from code points; container size = 44-byte
-    * canonical header + 2 bytes per sample. */
+  /** DuckDB oracle for [[graft.operators.Blob.mediaWavStats]]: the sample
+    * mapping and every statistic replayed from code points; container size =
+    * 44-byte canonical header + 2 bytes per sample. */
   def mediaWavStatsOracle(sampleRate: Int = 16000): String =
     s"""WITH cps AS (SELECT doc_id,
              [unicode(text[i])

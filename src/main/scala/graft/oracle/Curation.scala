@@ -7,8 +7,8 @@ import Oracle._
   * fused retrieval, mixtures, splits and shards (Curation). */
 object Curation {
 
-  /** DuckDB oracle for [[contaminationReport]] — the decontaminate
-    * oracle's CTEs rolled up by source. */
+  /** DuckDB oracle for [[graft.operators.Curation.contaminationReport]] — the
+    * decontaminate oracle's CTEs rolled up by source. */
   def contaminationReportOracle(n: Int = 4, benchMod: Int = 50): String =
     s"""WITH w AS (SELECT doc_id,
               string_split_regex(trim(lower(text)), '\\s+') AS w
@@ -34,7 +34,7 @@ object Curation {
        WHERE d.doc_id % $benchMod <> 0
        GROUP BY d.source ORDER BY d.source"""
 
-  /** DuckDB oracle for [[mixtureTemperature]]. */
+  /** DuckDB oracle for [[graft.operators.Curation.mixtureTemperature]]. */
   def mixtureTemperatureOracle(budgetTokens: Long = 2000L): String =
     s"""WITH t AS (SELECT doc_id, source,
            CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
@@ -60,9 +60,9 @@ object Curation {
        WHERE c.cum <= b.budget_tokens
        GROUP BY 1, 2, 3 ORDER BY 1"""
 
-  /** DuckDB oracle for [[c4Clean]]: the page synthesis and every line
-    * rule replayed with list comprehensions (chr(10) = the engine's
-    * '\n'; single-space splits agree because the synthesis only ever
+  /** DuckDB oracle for [[graft.operators.Curation.c4Clean]]: the page synthesis
+    * and every line rule replayed with list comprehensions (chr(10) = the
+    * engine's '\n'; single-space splits agree because the synthesis only ever
     * joins with single spaces). */
   def c4Oracle(minLineWords: Int = 3, minKeptLines: Int = 3): String =
     s"""WITH pages AS (
@@ -97,9 +97,9 @@ object Curation {
           sha256(coalesce(array_to_string(kept, chr(10)), '')) AS kept_sha
         FROM cleaned ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[gopherReport]]: the #235 replay's metric CTE
-    * extended with the same per-rule flags, one UNION ALL branch per
-    * rule. */
+  /** DuckDB oracle for [[graft.operators.Curation.gopherReport]]: the #235
+    * replay's metric CTE extended with the same per-rule flags, one UNION ALL
+    * branch per rule. */
   def gopherReportOracle(minWords: Int = 50, maxWords: Int = 100000,
                          minMeanLen: Double = 3.0,
                          maxMeanLen: Double = 10.0,
@@ -138,9 +138,9 @@ object Curation {
         FROM ($branches) ORDER BY rule"""
   }
 
-  /** DuckDB oracle for [[gopherQuality]]: the page synthesis and every
-    * rule replayed with list comprehensions; all ratios are int/int
-    * divisions so the unrounded keep-decision doubles agree exactly. */
+  /** DuckDB oracle for [[graft.operators.Curation.gopherQuality]]: the page
+    * synthesis and every rule replayed with list comprehensions; all ratios are
+    * int/int divisions so the unrounded keep-decision doubles agree exactly. */
   /** The #235/#239 oracle's shared CTE chain: the fixture page
     * synthesis + per-doc metric computation, ONE definition so the
     * report's flags can never drift from the battery's replay. */
@@ -222,10 +222,10 @@ object Curation {
             AND n_stop >= $minStopHits) AS keep
         FROM met ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[bm25Search]]: the shared body plus this
-    * oracle's own top-k order — the fusion replay appends its own
-    * instead ([[rrfOracleOver]]), so neither depends on string-editing
-    * the other's ORDER BY (ADVICE-r18). */
+  /** DuckDB oracle for [[graft.operators.Curation.bm25Search]]: the shared body
+    * plus this oracle's own top-k order — the fusion replay appends its own
+    * instead ([[rrfOracleOver]]), so neither depends on string-editing the
+    * other's ORDER BY (ADVICE-r18). */
   def bm25Oracle(terms: Seq[String] = Seq("data", "filter", "join"),
                  k: Int = 20, k1: Double = 1.2, b: Double = 0.75): String =
     s"""${bm25OracleBody(terms, k1, b)}
@@ -260,9 +260,9 @@ object Curation {
        FROM base, stats"""
   }
 
-  /** DuckDB oracle for [[bm25Indexed]]: the #109 replay restricted to
-    * documents holding at least one query term — the postings
-    * representation's exact semantics. */
+  /** DuckDB oracle for [[graft.operators.Curation.bm25Indexed]]: the #109
+    * replay restricted to documents holding at least one query term — the
+    * postings representation's exact semantics. */
   def bm25IndexedOracle(terms: Seq[String] = Seq("data", "filter",
                           "join"),
                         k: Int = 20): String = {
@@ -272,9 +272,9 @@ object Curation {
        ORDER BY score DESC, doc_id LIMIT $k"""
   }
 
-  /** DuckDB oracle for [[retrievalFuse]]: the #109 BM25 replay and the
-    * brute cosine leg as CTEs, ranked identically, fused with the same
-    * fixed-order reciprocal sum. */
+  /** DuckDB oracle for [[graft.operators.Curation.retrievalFuse]]: the #109
+    * BM25 replay and the brute cosine leg as CTEs, ranked identically, fused
+    * with the same fixed-order reciprocal sum. */
 
   def rrfOracle(kc: Int = 60, kLeg: Int = 20, k: Int = 10): String = {
     rrfOracleOver(
@@ -289,18 +289,18 @@ object Curation {
           QUALIFY vec_rank <= $kLeg)""", kc, kLeg, k)
   }
 
-  /** DuckDB oracle for [[retrievalFuseIndexed]]: the same fuse
-    * skeleton with the vector leg replayed through the static-IVF
-    * assignment/probe CTEs ([[Ann.ivfStaticOracle]]'s
-    * machinery) — every stage of the served form exact. */
+  /** DuckDB oracle for [[graft.operators.Curation.retrievalFuseIndexed]]: the
+    * same fuse skeleton with the vector leg replayed through the static-IVF
+    * assignment/probe CTEs ([[Ann.ivfStaticOracle]]'s machinery) — every stage
+    * of the served form exact. */
   def rrfIndexedOracle(nProbe: Int = 4, kc: Int = 60, kLeg: Int = 20,
                        k: Int = 10): String =
     rrfOracleOver(ivfVecLegCtes(nProbe, kLeg), kc, kLeg, k)
 
-  /** DuckDB oracle for [[retrievalFuseServed]]: BOTH legs replayed in
-    * their artifact-served semantics — the lexical list restricted to
-    * term-matching documents (the postings scan's exact output), the
-    * vector list through the static-IVF probe CTEs. */
+  /** DuckDB oracle for [[graft.operators.Curation.retrievalFuseServed]]: BOTH
+    * legs replayed in their artifact-served semantics — the lexical list
+    * restricted to term-matching documents (the postings scan's exact output),
+    * the vector list through the static-IVF probe CTEs. */
   def rrfServedOracle(nProbe: Int = 4, kc: Int = 60, kLeg: Int = 20,
                       k: Int = 10): String =
     rrfOracleOver(ivfVecLegCtes(nProbe, kLeg), kc, kLeg, k,
@@ -325,11 +325,11 @@ object Curation {
           QUALIFY vec_rank <= $kLeg)"""
   }
 
-  /** DuckDB oracle for [[retrievalFuseSq8]]: the served fuse skeleton
-    * with the vector leg replayed through the sq8 two-stage CTEs —
-    * static-IVF assignment/probe, the shared dequant body
-    * (`Oracle.sq8Dequant`) scoring the shortlist, exact
-    * re-rank to kLeg — every stage of the cheap-scan leg exact. */
+  /** DuckDB oracle for [[graft.operators.Curation.retrievalFuseSq8]]: the
+    * served fuse skeleton with the vector leg replayed through the sq8
+    * two-stage CTEs — static-IVF assignment/probe, the shared dequant body
+    * (`Oracle.sq8Dequant`) scoring the shortlist, exact re-rank to kLeg — every
+    * stage of the cheap-scan leg exact. */
   def rrfSq8Oracle(nProbe: Int = 4, kc: Int = 60, kLeg: Int = 20,
                    k: Int = 10): String =
     rrfOracleOver(sq8VecLegCtes(nProbe, kLeg), kc, kLeg, k,
@@ -338,7 +338,7 @@ object Curation {
   /** The sq8-scan vector-leg CTE chain (assignment → dequant scan →
     * bounded shortlist → exact re-rank → ranked `vec` list) —
     * [[ivfVecLegCtes]] one scan rung down, mirroring
-    * [[Similarity.annServeSq8FromIndex]]'s two stages with the
+    * [[graft.operators.Similarity.annServeSq8FromIndex]]'s two stages with the
     * serving default shortlistFactor = 8. */
   private def sq8VecLegCtes(nProbe: Int, kLeg: Int): String = {
     s"""cents(cell, cv) AS (VALUES ${rows(Similarity.staticCentroids())}),
@@ -368,10 +368,11 @@ object Curation {
   private def rrfOracleOver(vecCtes: String, kc: Int, kLeg: Int,
                             k: Int, lexMatchedOnly: Boolean = false): String = {
     // the artifact-served lexical leg carries only documents holding
-    // >= 1 query term (postings semantics, [[bm25FromIndex]]); the
-    // brute leg scores every document. The predicate is DERIVED from
-    // the default term list (the bm25IndexedOracle stance), so a term
-    // count change can never leave it filtering on stale tf columns.
+    // >= 1 query term (postings semantics,
+    // [[graft.operators.Curation.bm25FromIndex]]); the brute leg scores every
+    // document. The predicate is DERIVED from the default term list (the
+    // bm25IndexedOracle stance), so a term count change can never leave it
+    // filtering on stale tf columns.
     val defaultTerms = Seq("data", "filter", "join")
     val lexBody =
       if (lexMatchedOnly)
@@ -395,7 +396,7 @@ object Curation {
        LIMIT $k"""
   }
 
-  /** DuckDB oracle for [[shardAssign]]. */
+  /** DuckDB oracle for [[graft.operators.Curation.shardAssign]]. */
   def shardOracle(nShards: Int = 8, headK: Int = 8): String =
     s"""WITH d AS (SELECT doc_id,
             CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
@@ -416,8 +417,9 @@ object Curation {
        WHERE head.rk <= $headK
        ORDER BY a.shard, head.rk"""
 
-  /** DuckDB oracle for [[splitLeakage]]: split hash, normalized content
-    * hashes and the all-pairs cross-split Jaccard replayed. */
+  /** DuckDB oracle for [[graft.operators.Curation.splitLeakage]]: split hash,
+    * normalized content hashes and the all-pairs cross-split Jaccard
+    * replayed. */
   def splitLeakageOracle(tau: Double = 0.5, mod: Int = 10): String =
     s"""WITH t AS (SELECT doc_id, text,
             (${Quality.knuthSql("doc_id")}) % $mod = 0
@@ -454,8 +456,9 @@ object Curation {
                              AS DOUBLE), 4)
               END AS leak_rate"""
 
-  /** DuckDB oracle for [[leakageSafeSplit]]: recursive-CTE cluster
-    * truth + the same knuth32 split hash on the cluster id. */
+  /** DuckDB oracle for [[graft.operators.Curation.leakageSafeSplit]]:
+    * recursive-CTE cluster truth + the same knuth32 split hash on the cluster
+    * id. */
   def leakageSafeSplitOracle(tau: Double = 0.3, mod: Int = 10): String =
     s"""${Dedup.duckdbShingleCte
             .replaceFirst("WITH sh", "WITH RECURSIVE sh")},
@@ -479,8 +482,9 @@ object Curation {
                    THEN 'eval' ELSE 'train' END AS split
        FROM lab ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[budgetSelect]]: the quality_model score
-    * replayed + a window cumsum over the same total order. */
+  /** DuckDB oracle for [[graft.operators.Curation.budgetSelect]]: the
+    * quality_model score replayed + a window cumsum over the same total
+    * order. */
   def budgetSelectOracle(frac: Double = 0.5): String =
     s"""WITH s AS (SELECT doc_id,
             CAST(length(text) AS BIGINT) AS n_chars_calc,
@@ -508,8 +512,9 @@ object Curation {
        FROM sel, tot WHERE cum_tokens <= budget
        ORDER BY score DESC, doc_id"""
 
-  /** DuckDB oracle for [[dsirWeights]]: KR bucket hash, both
-    * distributions, smoothing and the ratio terms replayed exactly. */
+  /** DuckDB oracle for [[graft.operators.Curation.dsirWeights]]: KR bucket
+    * hash, both distributions, smoothing and the ratio terms replayed
+    * exactly. */
   def dsirOracle(nBuckets: Int = 1024): String = {
     val kr = """list_reduce(
          [CAST(unicode(w[i]) AS BIGINT)
@@ -537,10 +542,10 @@ object Curation {
        GROUP BY doc_id ORDER BY doc_id"""
   }
 
-  /** DuckDB oracle for [[pipelineReport]]: the charset/quality regex
-    * arithmetic, the shared entropy CTE chain, the dedup_exact
-    * normalized fingerprint window, and the decontaminate gram probe —
-    * composed into the identical first-fail CASE and stacked
+  /** DuckDB oracle for [[graft.operators.Curation.pipelineReport]]: the
+    * charset/quality regex arithmetic, the shared entropy CTE chain, the
+    * dedup_exact normalized fingerprint window, and the decontaminate gram
+    * probe — composed into the identical first-fail CASE and stacked
     * attrition. */
   def pipelineReportOracle(n: Int = 4, benchMod: Int = 50): String = {
     require(n == 4, "the oracle's gram construction is written for n = 4")

@@ -28,7 +28,7 @@ object Dedup {
               / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $tau
         ORDER BY id_a, id_b"""
 
-  /** DuckDB oracle for [[paraDedup]]. */
+  /** DuckDB oracle for [[graft.operators.Dedup.paraDedup]]. */
   val paraOracle: String =
     """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws,
            greatest(1, (len(string_split(text, ' ')) + 11) // 12) AS nP
@@ -51,7 +51,7 @@ object Dedup {
            chr(10) ORDER BY pos), '')) AS kept_sha
        FROM k GROUP BY doc_id ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[lineDedup]]. */
+  /** DuckDB oracle for [[graft.operators.Dedup.lineDedup]]. */
   def lineDedupOracle(maxDf: Long = 2L): String =
     s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws,
            greatest(1, (len(string_split(text, ' ')) + 9) // 10) AS nL
@@ -80,16 +80,17 @@ object Dedup {
            chr(10) ORDER BY pos), '')) AS kept_sha
        FROM k GROUP BY doc_id ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[dedupEvalSweep]]: three full replays (the
-    * oracle may brute-force what the engine shares/caches). */
+  /** DuckDB oracle for [[graft.operators.Dedup.dedupEvalSweep]]: three full
+    * replays (the oracle may brute-force what the engine shares/caches). */
   def dedupEvalSweepOracle(tau: Double = 0.5): String =
     Seq((8, 8), (16, 4), (32, 2)).map { case (b, r) =>
       s"""SELECT 'b${b}r$r' AS geometry, *
           FROM (${dedupEvalOracle(tau, b, r, " WHERE doc_id % 5 = 0")})"""
     }.mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY geometry")
 
-  /** DuckDB oracle for [[dedupEval]]: base hash, permutations, band
-    * keys, bucket pairs and exact truth all replayed in SQL. */
+  /** DuckDB oracle for [[graft.operators.Dedup.dedupEval]]: base hash,
+    * permutations, band keys, bucket pairs and exact truth all replayed in
+    * SQL. */
   def dedupEvalOracle(tau: Double = 0.5, bands: Int = 16,
                       rowsPerBand: Int = 4, docWhere: String = ""): String = {
     val permExprs = perms.map { case (a, b) =>
@@ -134,14 +135,14 @@ object Dedup {
               END AS recall"""
   }
 
-  /** DuckDB oracle for [[simhashPlan]]: fingerprints replay via the
-    * shared shingle CTE + KR hash + majority vote (the dedup_simhash
-    * oracle's own fp derivation); candidate volume replays the
+  /** DuckDB oracle for [[graft.operators.Dedup.simhashPlan]]: fingerprints
+    * replay via the shared shingle CTE + KR hash + majority vote (the
+    * dedup_simhash oracle's own fp derivation); candidate volume replays the
     * band-key grouping with the same shift/mask arithmetic; the recall
-    * rationals are re-derived INDEPENDENTLY — multiplicative binomials
-    * built stepwise in a recursive CTE (each partial product
-    * C(n−k+j, j) is an integer, so HUGEINT floor division is exact),
-    * then the same inclusion-exclusion sum. */
+    * rationals are re-derived INDEPENDENTLY — multiplicative binomials built
+    * stepwise in a recursive CTE (each partial product C(n−k+j, j) is an
+    * integer, so HUGEINT floor division is exact), then the same
+    * inclusion-exclusion sum. */
   def simhashPlanOracle(): String =
     // the shared shingle CTE opens with plain WITH; the binr binomial
     // CTE below is recursive, so promote the clause
@@ -231,8 +232,8 @@ object Dedup {
        JOIN den d10 ON d10.h = 10
        ORDER BY c.bands"""
 
-  /** DuckDB oracle for [[dedupSurvivorship]]: the recursive-CTE
-    * cluster truth + a row_number replay of the argmax policy. */
+  /** DuckDB oracle for [[graft.operators.Dedup.dedupSurvivorship]]: the
+    * recursive-CTE cluster truth + a row_number replay of the argmax policy. */
   def dedupSurvivorshipOracle(tau: Double = 0.3): String =
     s"""${Dedup.duckdbShingleCte
             .replaceFirst("WITH sh", "WITH RECURSIVE sh")},
@@ -263,8 +264,8 @@ object Dedup {
               s.chars_total - k.kept_chars AS chars_dropped
        FROM sz s JOIN keep k USING (cluster_id) ORDER BY cluster_id"""
 
-  /** DuckDB oracle for [[dedupThresholdSweep]]: the all-pairs truth at
-    * the smallest tau, re-counted per threshold. */
+  /** DuckDB oracle for [[graft.operators.Dedup.dedupThresholdSweep]]: the
+    * all-pairs truth at the smallest tau, re-counted per threshold. */
   def dedupThresholdSweepOracle(
       taus: Seq[Double] = Seq(0.3, 0.5, 0.7)): String = {
     val base = taus.min
@@ -290,7 +291,7 @@ object Dedup {
        SELECT * FROM ($rows) ORDER BY tau"""
   }
 
-  /** DuckDB oracle for [[kgramNovelty]]. */
+  /** DuckDB oracle for [[graft.operators.Dedup.kgramNovelty]]. */
   val kgramNoveltyOracle: String =
     s"""${Dedup.duckdbShingleCte},
         x AS (SELECT doc_id, unnest(s) AS s FROM sh WHERE len(s) > 0),
@@ -303,10 +304,10 @@ object Dedup {
        FROM x JOIN d USING (s)
        GROUP BY doc_id ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[exactSubstrSpans]]: the positional gram stream
-    * rebuilt with list comprehensions, the SAME Karp-Rabin hash folded
-    * per gram (identical collisions by construction), and the interval
-    * union replayed with the same running-max window. */
+  /** DuckDB oracle for [[graft.operators.Dedup.exactSubstrSpans]]: the
+    * positional gram stream rebuilt with list comprehensions, the SAME
+    * Karp-Rabin hash folded per gram (identical collisions by construction),
+    * and the interval union replayed with the same running-max window. */
   def exactSubstrSpansOracle(n: Int = 8, minCount: Int = 2): String =
     s"""${substrSpanCtes(n, minCount)}
        SELECT doc_id, n_tokens, count(*) AS n_spans,
@@ -357,9 +358,9 @@ object Dedup {
                  min(pos) AS s, max(pos) + $n - 1 AS e
                FROM sp GROUP BY 1, 2, 3)"""
 
-  /** DuckDB oracle for [[exactSubstrScrub]]: the [[substrSpanCtes]]
-    * intervals expanded to covered positions, the token stream
-    * position-anti-joined against them, and each doc re-assembled with
+  /** DuckDB oracle for [[graft.operators.Dedup.exactSubstrScrub]]: the
+    * [[substrSpanCtes]] intervals expanded to covered positions, the token
+    * stream position-anti-joined against them, and each doc re-assembled with
     * an ordered string_agg — same normalized form, same sha256. */
   def exactSubstrScrubOracle(n: Int = 8, minCount: Int = 2): String =
     s"""${scrubCtes(n, minCount)}
@@ -391,8 +392,8 @@ object Dedup {
                   sha256(coalesce(r.scrubbed, '')) AS fp
                 FROM nt n LEFT JOIN reb r USING (doc_id))"""
 
-  /** DuckDB oracle for [[scrubReport]]: the scrub CTE chain rolled up
-    * by the labeled source. */
+  /** DuckDB oracle for [[graft.operators.Dedup.scrubReport]]: the scrub CTE
+    * chain rolled up by the labeled source. */
   def scrubReportOracle(n: Int = 8, minCount: Int = 2): String =
     s"""${scrubCtes(n, minCount)}
        SELECT d.source, count(*) AS n_docs,
@@ -405,7 +406,7 @@ object Dedup {
        FROM scr s JOIN documents d USING (doc_id)
        GROUP BY d.source ORDER BY d.source"""
 
-  /** DuckDB oracle for [[memorizationGrams]]. */
+  /** DuckDB oracle for [[graft.operators.Dedup.memorizationGrams]]. */
   def memorizationGramsOracle(minDocs: Int = 3, topK: Int = 40): String =
     s"""WITH sh AS (
          SELECT doc_id,
@@ -421,8 +422,8 @@ object Dedup {
        FROM x GROUP BY gram HAVING count(*) >= $minDocs
        ORDER BY n_docs DESC, gram ASC LIMIT $topK"""
 
-  /** DuckDB oracle for [[sourceOverlap]]: the exact all-pairs truth at
-    * the same tau, rolled up identically. */
+  /** DuckDB oracle for [[graft.operators.Dedup.sourceOverlap]]: the exact
+    * all-pairs truth at the same tau, rolled up identically. */
   def sourceOverlapOracle(tau: Double = 0.3): String =
     s"""${Dedup.duckdbShingleCte},
         pairs AS (
@@ -444,8 +445,8 @@ object Dedup {
        GROUP BY source_a, source_b, tot.n_total
        ORDER BY source_a, source_b"""
 
-  /** DuckDB oracle for [[docContainment]]: the doc_winnow fingerprint
-    * replay + df cap + fingerprint self-join. */
+  /** DuckDB oracle for [[graft.operators.Dedup.docContainment]]: the doc_winnow
+    * fingerprint replay + df cap + fingerprint self-join. */
   def containmentOracle(maxDf: Long = 50L, minShared: Long = 2L,
                         tau: Double = 0.5): String =
     s"""WITH fpl AS (
@@ -481,8 +482,8 @@ object Dedup {
              >= $tau
        ORDER BY id_a, id_b"""
 
-  /** DuckDB oracle for [[dedupPairsIncremental]]: the all-pairs truth
-    * restricted to pairs touching the delta slice. */
+  /** DuckDB oracle for [[graft.operators.Dedup.dedupPairsIncremental]]: the
+    * all-pairs truth restricted to pairs touching the delta slice. */
   def dedupPairsIncrementalOracle(tau: Double = 0.3, mod: Int = 10,
                                   deltaFrom: Int = 8): String =
     s"""${Dedup.duckdbShingleCte}
@@ -498,10 +499,10 @@ object Dedup {
               >= $tau
         ORDER BY id_a, id_b"""
 
-  /** DuckDB oracle for [[dedupAuditComposed]]: the all-pairs truth at
-    * the floor tau, then every audit scalar replayed off that one pair
-    * table — transitive-closure CTEs for the cluster-based columns
-    * (full corpus for survivorship, exact-canonical endpoints for the
+  /** DuckDB oracle for [[graft.operators.Dedup.dedupAuditComposed]]: the
+    * all-pairs truth at the floor tau, then every audit scalar replayed off
+    * that one pair table — transitive-closure CTEs for the cluster-based
+    * columns (full corpus for survivorship, exact-canonical endpoints for the
     * corpus audit). */
   def dedupAuditComposedOracle(
       taus: Seq[Double] = Seq(0.3, 0.5, 0.7)): String =
@@ -570,8 +571,8 @@ object Dedup {
          (SELECT count(*) FROM clab WHERE id <> cluster_id) AS n_near_removed,
          (SELECT count(*) FROM clab WHERE id = cluster_id) AS n_out"""
 
-  /** DuckDB oracle for [[lshPlan]] — the same closed forms over the
-    * same scheme list. */
+  /** DuckDB oracle for [[graft.operators.Dedup.lshPlan]] — the same closed
+    * forms over the same scheme list. */
   def lshPlanOracle(nHashes: Int = 64): String = {
     val schemes = (0 to 30).map(1 << _).filter(b =>
       b <= nHashes && nHashes % b == 0).map(b => s"($b, ${nHashes / b})")

@@ -30,15 +30,16 @@ object Quality {
           AND o_orderpriority <> '3-LOW'
         ORDER BY o_orderkey"""
 
-  /** DuckDB twin of [[knuth32]] (same split-multiply, same values). */
+  /** DuckDB twin of [[graft.operators.Quality.knuth32]] (same split-multiply,
+    * same values). */
   def knuthSql(key: String): String = {
     val a = s"(($key) % 4294967296)"
     s"((($a % 65536) * 2654435761) % 4294967296 + " +
       s"((($a // 65536) * 2654435761) % 65536) * 65536) % 4294967296"
   }
 
-  /** DuckDB oracle for [[outlierFences]] (quantile_disc ==
-    * percentile_disc, proven by pctile_value). */
+  /** DuckDB oracle for [[graft.operators.Quality.outlierFences]] (quantile_disc
+    * == percentile_disc, proven by pctile_value). */
   val outlierOracle: String =
     """WITH ev AS (SELECT event_type,
            CAST(round(value*100) AS BIGINT) AS v_c FROM events),
@@ -60,8 +61,9 @@ object Quality {
        FROM ev JOIN f ON ev.event_type = f.event_type
        GROUP BY 1 ORDER BY 1"""
 
-  /** DuckDB oracle for [[integrityChecksum]]: same canonical text, same
-    * KR fold (the bloom_decontaminate-proven replay), same decimal sum. */
+  /** DuckDB oracle for [[graft.operators.Quality.integrityChecksum]]: same
+    * canonical text, same KR fold (the bloom_decontaminate-proven replay), same
+    * decimal sum. */
   val integrityOracle: String =
     """WITH t AS (SELECT o_orderstatus AS grp,
            o_orderkey || '|' || o_custkey || '|' || o_orderstatus || '|' ||
@@ -77,9 +79,9 @@ object Quality {
            % 2305843009213693951 AS BIGINT) AS checksum
        FROM t GROUP BY grp ORDER BY grp"""
 
-  /** DuckDB oracle for [[joinSkewReport]] (quantile_cont = Spark's
-    * interpolating percentile; explicit DOUBLE casts because DuckDB's
-    * `/` on integers is integer division). */
+  /** DuckDB oracle for [[graft.operators.Quality.joinSkewReport]]
+    * (quantile_cont = Spark's interpolating percentile; explicit DOUBLE casts
+    * because DuckDB's `/` on integers is integer division). */
   val joinSkewOracle: String =
     """WITH c AS (SELECT user_id AS key, count(*) AS cnt
                   FROM events GROUP BY 1),
@@ -102,7 +104,8 @@ object Quality {
          round(top_cnt / CAST(n_rows AS DOUBLE), 4) AS top_share
        FROM a, t"""
 
-  /** Oracle twin of [[profileTable]] (UNION ALL, one leg per column). */
+  /** Oracle twin of [[graft.operators.Quality.profileTable]] (UNION ALL, one
+    * leg per column). */
   val profileOracle: String = {
     def leg(c: String, mn: String, mx: String) =
       s"""SELECT '$c' AS col_name, count(*) AS n_rows,
@@ -126,7 +129,7 @@ object Quality {
     legs.mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY col_name")
   }
 
-  /** DuckDB oracle for [[kAnonymity]]. */
+  /** DuckDB oracle for [[graft.operators.Quality.kAnonymity]]. */
   def kAnonymityOracle(k: Int = 5): String =
     s"""WITH g AS (SELECT c_nationkey, c_mktsegment,
                   floor(c_acctbal / 1000) AS bal_bucket, count(*) AS cnt
@@ -157,7 +160,7 @@ object Quality {
                - round(log10(1 + 1.0 / digit), 4)), 4) > 0.02 AS flag_digit
        FROM g ORDER BY digit"""
 
-  /** DuckDB oracle for [[lDiversity]]. */
+  /** DuckDB oracle for [[graft.operators.Quality.lDiversity]]. */
   def lDiversityOracle(l: Int = 3): String =
     s"""WITH gs AS (SELECT c_nationkey, c_mktsegment,
                       floor(c_acctbal / 1000) AS s, count(*) AS cnt
@@ -177,8 +180,8 @@ object Quality {
          max(n_sensitive) AS max_diversity
        FROM g"""
 
-  /** DuckDB oracle for [[tCloseness]]: same observed-cell algebra,
-    * 8-dp decimal terms, 4-dp class distance. */
+  /** DuckDB oracle for [[graft.operators.Quality.tCloseness]]: same
+    * observed-cell algebra, 8-dp decimal terms, 4-dp class distance. */
   def tClosenessOracle(t: Double = 0.2): String =
     s"""WITH cells AS (SELECT c_nationkey AS q0, c_mktsegment AS q1,
                          floor(c_acctbal / 1000) AS s, count(*) AS cnt
@@ -208,7 +211,7 @@ object Quality {
          min(tv4) AS min_tv4, max(tv4) AS max_tv4
        FROM tv"""
 
-  /** DuckDB oracle for [[totalsReconcile]]. */
+  /** DuckDB oracle for [[graft.operators.Quality.totalsReconcile]]. */
   val totalsReconcileOracle: String =
     """WITH l AS (SELECT l_orderkey,
               CAST(sum(CAST(round(l_extendedprice * (1 - l_discount)
@@ -232,8 +235,8 @@ object Quality {
          (SELECT n_orphan_line_keys FROM orph) AS n_orphan_line_keys
        FROM j"""
 
-  /** DuckDB oracle for [[corpusConcentration]] — same histogram
-    * regrouping, same int64 arithmetic, same final divisions. */
+  /** DuckDB oracle for [[graft.operators.Quality.corpusConcentration]] — same
+    * histogram regrouping, same int64 arithmetic, same final divisions. */
   val corpusConcentrationOracle: String =
     """WITH hist AS (SELECT n_chars AS v, count(*) AS c
                      FROM documents GROUP BY 1),
@@ -259,10 +262,10 @@ object Quality {
                / CAST(max(t_chars) AS DOUBLE), 6) AS top10_share
        FROM w, k"""
 
-  /** DuckDB oracle for [[corrMatrix]]: the same cents quantization,
-    * exact-integer sufficient statistics, and closed-form correlation
-    * — deliberately NOT DuckDB's corr() (whose streaming update order
-    * is not part of any cross-engine contract). */
+  /** DuckDB oracle for [[graft.operators.Quality.corrMatrix]]: the same cents
+    * quantization, exact-integer sufficient statistics, and closed-form
+    * correlation — deliberately NOT DuckDB's corr() (whose streaming update
+    * order is not part of any cross-engine contract). */
   def corrMatrixOracle(): String = {
     def d(e: String) = s"CAST(sum($e) AS DOUBLE)"
     val pairs = for {
@@ -330,7 +333,7 @@ object Quality {
          FROM src o FULL OUTER JOIN new_snap n ON o.k = n.k)
        WHERE change_type <> 'same' ORDER BY o_orderkey, change_type"""
 
-  /** DuckDB oracle for [[scd2Intervals]]. */
+  /** DuckDB oracle for [[graft.operators.MergeImport.scd2Intervals]]. */
   val scd2Oracle: String =
     """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS t,
             event_type AS status FROM events),
@@ -392,7 +395,7 @@ object Quality {
              FROM orders)
        GROUP BY 1 ORDER BY 1"""
 
-  /** DuckDB oracle for [[zorderLayout]]. */
+  /** DuckDB oracle for [[graft.operators.Maintenance.zorderLayout]]. */
   def zorderLayoutOracle(bits: Int = 8, nFiles: Int = 64): String = {
     val n = 1L << bits
     def leg(fileExpr: String, name: String) =

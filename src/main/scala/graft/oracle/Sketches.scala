@@ -6,8 +6,8 @@ import graft.operators.Sketches.{CmsA, CmsB, CmsGr, CmsP}
   * composed forms (Sketches, SketchHash). */
 object Sketches {
 
-  /** DuckDB CTEs replaying [[sourceHashes]]: per-doc distinct shingles
-    * (same construction as [[Dedup.duckdbShingleCte]], with
+  /** DuckDB CTEs replaying [[graft.operators.Sketches.sourceHashes]]: per-doc
+    * distinct shingles (same construction as [[Dedup.duckdbShingleCte]], with
     * source), KR+mix hash, cross-doc DISTINCT. */
   private def sourceHashCte: String =
     s"""WITH sg AS (SELECT source,
@@ -20,8 +20,8 @@ object Sketches {
                  ${Sketches.duckdbSketchHash("t")} AS g
                FROM sg)"""
 
-  /** DuckDB oracle for [[kmvDistinct]]: same hashes, k-th smallest via
-    * row_number, same estimator arithmetic. */
+  /** DuckDB oracle for [[graft.operators.Sketches.kmvDistinct]]: same hashes,
+    * k-th smallest via row_number, same estimator arithmetic. */
   def kmvDistinctOracle(k: Int = 256): String =
     s"""$sourceHashCte,
         r AS (SELECT source, g,
@@ -43,8 +43,8 @@ object Sketches {
                     2) AS err_pct2
        FROM e ORDER BY source"""
 
-  /** DuckDB oracle for [[hllDistinct]]: registers replayed with
-    * integer ops (`%`, `//`, `bin()` for bit length, `<<` for the
+  /** DuckDB oracle for [[graft.operators.Sketches.hllDistinct]]: registers
+    * replayed with integer ops (`%`, `//`, `bin()` for bit length, `<<` for the
     * scaled terms), then the same estimator arithmetic. */
   def hllDistinctOracle(): String =
     s"""$sourceHashCte,
@@ -78,9 +78,9 @@ object Sketches {
                     / CAST(n_exact AS DOUBLE) * 100, 2) AS err_pct2
        FROM e ORDER BY source"""
 
-  /** DuckDB oracle for [[cmsTopk]]: grid, top-k and min-of-cells all
-    * replayed (cells sum per-term exact counts — identical to summing
-    * item occurrences). */
+  /** DuckDB oracle for [[graft.operators.Sketches.cmsTopk]]: grid, top-k and
+    * min-of-cells all replayed (cells sum per-term exact counts — identical to
+    * summing item occurrences). */
   def cmsTopkOracle(w: Int = 512, k: Int = 20): String = {
     val aCase = CmsA.zipWithIndex
       .map { case (a, j) => s"WHEN $j THEN $a" }.mkString(" ")
@@ -117,8 +117,8 @@ object Sketches {
     """CASE WHEN v <= 31 THEN v
        ELSE (v >> (length(bin(v)) - 5)) << (length(bin(v)) - 5) END"""
 
-  /** DuckDB oracle for [[hdrQuantiles]]: same integer bucket, same
-    * integer rank targets, same cumulative-window extraction. */
+  /** DuckDB oracle for [[graft.operators.Sketches.hdrQuantiles]]: same integer
+    * bucket, same integer rank targets, same cumulative-window extraction. */
   def hdrQuantilesOracle(): String = {
     def qsel(qn: Int, qd: Int, p: String, sfx: String) =
       s"min(CASE WHEN cum >= ($qn * n + ${qd - 1}) // $qd THEN b END) AS p$p$sfx"
@@ -162,8 +162,9 @@ object Sketches {
               ELSE CAST(0.7213 AS DOUBLE) / (1 + CAST(1.079 AS DOUBLE) / 64)
                    * 4096 * pow(2, 52) / CAST($s AS DOUBLE) END, 4)"""
 
-  /** DuckDB oracle for [[sourceOverlapHll]]: registers per source, max
-    * per register across sources, the same estimator on both levels. */
+  /** DuckDB oracle for [[graft.operators.Sketches.sourceOverlapHll]]: registers
+    * per source, max per register across sources, the same estimator on both
+    * levels. */
   def sourceOverlapHllOracle(): String =
     s"""$sourceHashCte,
         rw AS (SELECT source, g % 64 AS reg,
@@ -198,9 +199,9 @@ object Sketches {
                     2) AS err_pct2
        FROM ss, ue, ex"""
 
-  /** DuckDB oracle for [[sourceJaccardKmv]]: per-source bottom-k via
-    * row_number, the same tagged union / rank / match-share over
-    * sketch content, the same exact-join anchor. */
+  /** DuckDB oracle for [[graft.operators.Sketches.sourceJaccardKmv]]:
+    * per-source bottom-k via row_number, the same tagged union / rank /
+    * match-share over sketch content, the same exact-join anchor. */
   def sourceJaccardKmvOracle(k: Int = 256): String =
     s"""$sourceHashCte,
         sk AS (SELECT source, g FROM
@@ -245,9 +246,9 @@ object Sketches {
        LEFT JOIN iv ON iv.sa = e.sa AND iv.sb = e.sb
        ORDER BY e.sa, e.sb"""
 
-  /** DuckDB oracle for [[sourceJaccardComposed]]: the estimate legs of
-    * [[sourceJaccardKmvOracle]] — bottom-k replay, tagged union, rank,
-    * match share — without the exact-join anchor. */
+  /** DuckDB oracle for [[graft.operators.Sketches.sourceJaccardComposed]]: the
+    * estimate legs of [[sourceJaccardKmvOracle]] — bottom-k replay, tagged
+    * union, rank, match share — without the exact-join anchor. */
   def sourceJaccardComposedOracle(k: Int = 256): String =
     s"""$sourceHashCte,
         sk AS (SELECT source, g FROM
@@ -274,8 +275,8 @@ object Sketches {
        FROM w WHERE rn <= $k GROUP BY sa, sb
        ORDER BY sa, sb"""
 
-  /** DuckDB oracle for [[hdrQuantilesComposed]]: the estimate leg of
-    * [[hdrQuantilesOracle]] alone. */
+  /** DuckDB oracle for [[graft.operators.Sketches.hdrQuantilesComposed]]: the
+    * estimate leg of [[hdrQuantilesOracle]] alone. */
   def hdrQuantilesComposedOracle(): String =
     s"""WITH lv AS (SELECT source, CAST(length(text) AS BIGINT) AS v
                     FROM documents),
@@ -292,15 +293,16 @@ object Sketches {
               min(CASE WHEN cum >= (99 * n + 99) // 100 THEN b END) AS p99_est
        FROM c GROUP BY source ORDER BY source"""
 
-  /** DuckDB replay of [[mix]] over a BIGINT SQL expression: the wrap
-    * Java gets for free needs HUGEINT width, then `% 2^63` keeps the
-    * same low 63 bits the Scala side masks. */
+  /** DuckDB replay of [[graft.functions.SketchHash.mix]] over a BIGINT SQL
+    * expression: the wrap Java gets for free needs HUGEINT width, then `% 2^63`
+    * keeps the same low 63 bits the Scala side masks. */
   def duckdbMix(hExpr: String): String =
     s"""CAST((CAST($hExpr AS HUGEINT) * 11400714819323198485)
            % 9223372036854775808 AS BIGINT)"""
 
-  /** DuckDB replay of [[sketchHash]] over a VARCHAR SQL expression
-    * (KR fold per [[KrHashF.hashUtf8]], then the mix). */
+  /** DuckDB replay of [[graft.functions.SketchHash.sketchHash]] over a VARCHAR
+    * SQL expression (KR fold per [[graft.functions.KrHashF.hashUtf8]], then the
+    * mix). */
   def duckdbSketchHash(tExpr: String): String =
     duckdbMix(
       s"""list_reduce([CAST(unicode(($tExpr)[i]) AS BIGINT)

@@ -53,7 +53,7 @@ object Text {
          sha256(clean) AS clean_sha
        FROM stripped ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[charsetGate]]. */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.charsetGate]]. */
   val charsetOracle: String =
     """WITH t AS (SELECT doc_id, text ||
            CASE WHEN doc_id % 9 = 0
@@ -74,7 +74,7 @@ object Text {
          (n_replacement = 0 AND n_control = 0) AS charset_ok
        FROM c ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[vocabCoverage]]. */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.vocabCoverage]]. */
   val vocabOracle: String =
     """WITH w AS (SELECT unnest(string_split_regex(trim(lower(text)), '\s+'))
              AS word FROM documents),
@@ -89,7 +89,7 @@ object Text {
                     AS BIGINT) / CAST(total AS DOUBLE), 4) AS cum_frac
        FROM top, t ORDER BY rank"""
 
-  /** DuckDB oracle for [[wordPmi]]. */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.wordPmi]]. */
   val pmiOracle: String =
     """WITH w AS (SELECT string_split_regex(trim(lower(text)), '\s+') AS w
            FROM documents),
@@ -109,8 +109,8 @@ object Text {
        WHERE n_pair >= 5
        ORDER BY pmi DESC, w1, w2 LIMIT 50"""
 
-  /** DuckDB oracle for [[qualityModel]] (features = the text_stats
-    * oracle's, verbatim). */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.qualityModel]] (features
+    * = the text_stats oracle's, verbatim). */
   val qualityModelOracle: String =
     """WITH s AS (SELECT doc_id,
              CAST(length(text) AS BIGINT) AS n_chars_calc,
@@ -131,8 +131,9 @@ object Text {
               round(1.0 / (1.0 + exp(-z)), 4) >= 0.5 AS accepted
        FROM z ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[qualityCalibration]] — the quality_model and
-    * lang_id oracle pipelines joined and decile-bucketed. */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.qualityCalibration]] —
+    * the quality_model and lang_id oracle pipelines joined and
+    * decile-bucketed. */
   val qualityCalibrationOracle: String =
     s"""WITH s AS (SELECT doc_id,
              CAST(length(text) AS BIGINT) AS n_chars_calc,
@@ -175,7 +176,7 @@ object Text {
                / CAST(count(*) AS DOUBLE), 4) AS lang_ok_rate
        FROM j GROUP BY 1 ORDER BY 1"""
 
-  /** DuckDB oracle for [[invertedIndex]]. */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.invertedIndex]]. */
   val invertedIndexOracle: String =
     s"""WITH t AS (SELECT doc_id,
             unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
@@ -189,7 +190,7 @@ object Text {
        FROM pd GROUP BY term
        ORDER BY df DESC, term LIMIT 50"""
 
-  /** DuckDB oracle for [[sourceMixReport]]. */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.sourceMixReport]]. */
   val sourceMixOracle: String =
     """WITH bl AS (SELECT source, lang, count(*) AS n,
             CAST(sum(len(string_split_regex(trim(text), '\s+')))
@@ -215,8 +216,9 @@ object Text {
        FROM bs JOIN ent ON bs.source = ent.source, tot
        ORDER BY bs.source"""
 
-  /** DuckDB oracle for [[sourceKl]]: same top-K tie-break, same
-    * double-division and ln arithmetic, same 8-dp decimal term sum. */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.sourceKl]]: same top-K
+    * tie-break, same double-division and ln arithmetic, same 8-dp decimal term
+    * sum. */
   def sourceKlOracle(topK: Int = 200): String =
     s"""WITH w AS (SELECT source,
              unnest(string_split_regex(trim(lower(text)), '\\s+')) AS t
@@ -236,8 +238,8 @@ object Text {
        FROM s JOIN ns ON s.source = ns.source, nc
        GROUP BY s.source ORDER BY s.source"""
 
-  /** DuckDB oracle for [[sourcePsi]]: same fixed bins, same 8-dp
-    * decimal terms, same skipped-bin accounting. */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.sourcePsi]]: same fixed
+    * bins, same 8-dp decimal terms, same skipped-bin accounting. */
   def sourcePsiOracle(binWidth: Int = 256): String =
     s"""WITH cells AS (SELECT source, n_chars // $binWidth AS bin,
                          count(*) AS cs
@@ -264,10 +266,10 @@ object Text {
        JOIN st ON st.source = c.source, gt, nb
        GROUP BY c.source ORDER BY c.source"""
 
-  /** DuckDB oracle for [[textNormalize]] (chr(769)=U+0301 COMBINING
-    * ACUTE, chr(8491)=U+212B ANGSTROM SIGN, chr(778)=U+030A COMBINING
-    * RING — DuckDB's nfc_normalize applies the same UAX #15 tables as
-    * java.text.Normalizer). */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.textNormalize]]
+    * (chr(769)=U+0301 COMBINING ACUTE, chr(8491)=U+212B ANGSTROM SIGN,
+    * chr(778)=U+030A COMBINING RING — DuckDB's nfc_normalize applies the same
+    * UAX #15 tables as java.text.Normalizer). */
   val textNormalizeOracle: String =
     """WITH t AS (SELECT doc_id,
            text || CASE WHEN doc_id % 3 = 0 THEN ' cafe' || chr(769)
@@ -288,9 +290,9 @@ object Text {
          sha256(norm) AS norm_sha
        FROM n ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[qualityFunnel]]: every gate formula is the
-    * already-proven oracle fragment (text_stats, lang_id, modal-word
-    * count), composed into the same first-fail attribution. */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.qualityFunnel]]: every
+    * gate formula is the already-proven oracle fragment (text_stats, lang_id,
+    * modal-word count), composed into the same first-fail attribution. */
   def qualityFunnelOracle(minWords: Int = 10, minQuality: Double = 0.5,
                           topWordMax: Double = 0.3): String =
     s"""WITH s AS (SELECT doc_id, lang,
@@ -343,9 +345,10 @@ object Text {
                 n - r1 - r2 - r3 - r4 FROM a)
        ORDER BY stage"""
 
-  /** DuckDB oracle for [[bpeEncode]]: the [[bpeTrainOracle]] CTE chain
-    * learns the same rules, then every corpus word is folded through
-    * them in order (rule k applied via a cross join of the 1-row m_k). */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.bpeEncode]]: the
+    * [[bpeTrainOracle]] CTE chain learns the same rules, then every corpus word
+    * is folded through them in order (rule k applied via a cross join of the
+    * 1-row m_k). */
   def bpeEncodeOracle(nMerges: Int = 5, maxWords: Int = 2000): String =
     s"""${bpeEncodeCtes(nMerges, maxWords)}
        SELECT doc_id, count(*) AS n_words,
@@ -399,9 +402,9 @@ object Text {
                 WHERE regexp_matches(word, '^[a-z]+$$'))"""
   }
 
-  /** DuckDB oracle for [[bpeFertility]]: the [[bpeEncodeOracle]] CTE
-    * chain (same learned rules, same per-word fold) rolled up by the
-    * labeled language instead of per doc. */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.bpeFertility]]: the
+    * [[bpeEncodeOracle]] CTE chain (same learned rules, same per-word fold)
+    * rolled up by the labeled language instead of per doc. */
   def bpeFertilityOracle(nMerges: Int = 5, maxWords: Int = 2000): String =
     s"""${bpeEncodeCtes(nMerges, maxWords)},
         perdoc AS (SELECT doc_id, count(*) AS n_words,
@@ -419,9 +422,10 @@ object Text {
        FROM perdoc p JOIN documents d USING (doc_id)
        GROUP BY d.lang ORDER BY d.lang"""
 
-  /** DuckDB oracle for [[bpeTrain]]: word frequencies, pair counts,
-    * argmax and the merge fold replayed round by round (one CTE chain
-    * per round — the oracle may unroll what the engine loops). */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.bpeTrain]]: word
+    * frequencies, pair counts, argmax and the merge fold replayed round by
+    * round (one CTE chain per round — the oracle may unroll what the engine
+    * loops). */
   def bpeTrainOracle(nMerges: Int = 5, maxWords: Int = 2000): String = {
     val rounds = (1 to nMerges).map { k =>
       val prev = s"v${k - 1}"
@@ -456,12 +460,12 @@ object Text {
        SELECT * FROM ($union) ORDER BY step"""
   }
 
-  /** The DuckDB CTE chain replaying the unigram [[encode]] for a
-    * GIVEN model: words split identically, then the SAME integer
-    * Viterbi DP as a list_reduce fold with the piece micro-nat scores
-    * inlined as one CASE. Ends at `$encName` (doc_id, n_chars,
-    * n_toks). Shared by the encode and fertility oracles so the two
-    * replays cannot drift. */
+  /** The DuckDB CTE chain replaying the unigram
+    * [[graft.operators.TextAnalysis.encode]] for a GIVEN model: words split
+    * identically, then the SAME integer Viterbi DP as a list_reduce fold with
+    * the piece micro-nat scores inlined as one CASE. Ends at `$encName`
+    * (doc_id, n_chars, n_toks). Shared by the encode and fertility oracles so
+    * the two replays cannot drift. */
   private def unigramEncCte(lp: Map[String, Long], maxPieceLen: Int,
                             encName: String): String = {
     val caseArms = lp.toSeq.sortBy(_._1).map { case (p, v) =>
@@ -500,9 +504,10 @@ object Text {
          WHERE regexp_matches(word, '^[a-z]+$$'))"""
   }
 
-  /** DuckDB oracle for [[unigramEncode]]: trains the SAME model (the
-    * deterministic driver-side trainer — the ivfTrainedOracle stance)
-    * and replays the corpus encode exactly via [[unigramEncCte]]. */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.unigramEncode]]: trains
+    * the SAME model (the deterministic driver-side trainer — the
+    * ivfTrainedOracle stance) and replays the corpus encode exactly via
+    * [[unigramEncCte]]. */
   def unigramTrainedOracle(vocabSize: Int = 120, maxPieceLen: Int = 4,
                            iters: Int = 2,
                            maxWords: Int = 2000): String = {
@@ -518,8 +523,8 @@ object Text {
        FROM uenc GROUP BY doc_id ORDER BY doc_id"""
   }
 
-  /** DuckDB oracle for [[tokenizerFertility]]: the BPE replay
-    * ([[bpeEncodeCtes]]) and the unigram replay ([[unigramEncCte]])
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.tokenizerFertility]]: the
+    * BPE replay ([[bpeEncodeCtes]]) and the unigram replay ([[unigramEncCte]])
     * rolled up by language, one UNION ALL branch per tokenizer. */
   def tokenizerFertilityOracle(nMerges: Int = 5, maxWords: Int = 2000,
                                vocabSize: Int = 120, maxPieceLen: Int = 4,
@@ -586,17 +591,18 @@ object Text {
             CAST(length(d.text) AS BIGINT) AS n_chars_calc
           FROM documents d LEFT JOIN folded f ON d.doc_id = f.doc_id)"""
 
-  /** DuckDB oracle for [[charEntropy]] — same fold, same order, same
-    * ln-based log2 (see the operator scaladoc for the bit-equality
-    * argument). */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.charEntropy]] — same
+    * fold, same order, same ln-based log2 (see the operator scaladoc for the
+    * bit-equality argument). */
   def charEntropyOracle(lo: Double = 3.0, hi: Double = 5.0): String =
     s"""WITH $charEntropyCtes
        SELECT doc_id, char_entropy, n_chars_calc,
               char_entropy < $lo OR char_entropy > $hi AS flagged
        FROM ent ORDER BY doc_id"""
 
-  /** DuckDB oracle for [[gateAgreement]]: the text_stats quality
-    * arithmetic + the entropy CTE chain + the IDENTICAL κ fragment. */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.gateAgreement]]: the
+    * text_stats quality arithmetic + the entropy CTE chain + the IDENTICAL κ
+    * fragment. */
   def gateAgreementOracle(minWords: Int = 20, minQuality: Double = 0.3,
                           lo: Double = 3.0, hi: Double = 5.0): String =
     s"""WITH $charEntropyCtes,
@@ -626,9 +632,9 @@ object Text {
        SELECT ${kappaSelect.mkString(",\n         ")}
        FROM g"""
 
-  /** DuckDB oracle for [[zipfFit]]: identical rank tie-break and
-    * closed-form least squares (sums of ≤maxRank well-scaled terms —
-    * 4-dp rounding absorbs summation-order ulps, the repo's standard
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.zipfFit]]: identical rank
+    * tie-break and closed-form least squares (sums of ≤maxRank well-scaled
+    * terms — 4-dp rounding absorbs summation-order ulps, the repo's standard
     * float-aggregate contract). */
   def zipfFitOracle(maxRank: Int = 500): String =
     s"""WITH w AS (
@@ -650,9 +656,9 @@ object Text {
              * (count(*) * sum(y*y) - sum(y) * sum(y)), 0.0), 4) AS r2
        FROM r GROUP BY source ORDER BY source"""
 
-  /** DuckDB oracle for [[corpusReport]] — same per-doc features (the
-    * text_stats + char_entropy oracles' arithmetic), same decimal
-    * means. */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.corpusReport]] — same
+    * per-doc features (the text_stats + char_entropy oracles' arithmetic), same
+    * decimal means. */
   def corpusReportOracle(lo: Double = 3.0, hi: Double = 5.0): String =
     s"""WITH counts AS (
           SELECT doc_id, ch, CAST(count(*) AS DOUBLE) AS c
@@ -696,8 +702,8 @@ object Text {
            AS top_source_share
        FROM perdoc"""
 
-  /** DuckDB oracle for [[langConfusion]] — the lang_id oracle's CASE
-    * scoring rolled up into matrix cells. */
+  /** DuckDB oracle for [[graft.operators.TextAnalysis.langConfusion]] — the
+    * lang_id oracle's CASE scoring rolled up into matrix cells. */
   def langConfusionOracle: String =
     s"""WITH scored AS (
           SELECT doc_id, lang, $langCaseSql AS pred_lang

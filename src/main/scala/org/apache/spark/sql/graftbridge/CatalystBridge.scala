@@ -2,7 +2,6 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal accessor for Spark-private Column↔Expression conversion
@@ -51,31 +50,6 @@ object CatalystBridge {
   def analyzed(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
-
-  /** COLUMNAR lineage cut: rebuild `df` as a fresh [[LogicalRDD]] leaf
-    * over its own InternalRow RDD. Unlike the public
-    * `createDataFrame(df.rdd, schema)` there is no InternalRow→Row→
-    * InternalRow encode/decode detour (which also evicts the stage from
-    * whole-stage codegen), and unlike `localCheckpoint` no origin
-    * constraints are dragged along (those trip Union constraint
-    * rewriting in iterative plans). The RDD is lazy; callers must
-    * persist/materialize the result while the source plan is alive.
-    *
-    * The leaf is `df` hash-partitioned by column `key` into
-    * `numPartitions`, and says so: a join or aggregate on `key` against
-    * another side hashed the same way plans no exchange. The
-    * repartition happens here, so the claim always holds. */
-  def internalLeaf(df: org.apache.spark.sql.DataFrame, key: String,
-                   numPartitions: Int): org.apache.spark.sql.DataFrame = {
-    val classic = df.repartition(numPartitions, df(key))
-      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    val spark = classic.sparkSession
-    org.apache.spark.sql.classic.Dataset.ofRows(spark,
-      org.apache.spark.sql.execution.LogicalRDD(
-        classic.queryExecution.analyzed.output,
-        classic.queryExecution.toRdd,
-        HashPartitioning(Seq(expression(df(key))), numPartitions))(spark))
-  }
 
   /** Blocks until every listener has seen the events posted so far, or
     * 10 s pass (the listener bus is private[spark]): a listener's

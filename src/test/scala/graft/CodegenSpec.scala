@@ -68,26 +68,6 @@ class CodegenSpec extends SparkSpec {
       graft.operators.Maintenance.zorderLayout(spark, sf))
   }
 
-  test("label-propagation round over an internalLeaf stays codegen'd") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // the clustersFromPairs per-round shape: lineage cut to a leaf,
-    // then hop + pointer-halving self-join. The old createDataFrame(
-    // .rdd, schema) cut paid an InternalRow->Row->InternalRow detour
-    // that evicted every round from whole-stage codegen.
-    val labels0 = Seq((1L, 1L), (2L, 1L), (3L, 3L)).toDF("id", "lbl")
-    val leaf = org.apache.spark.sql.graftbridge.CatalystBridge
-      .internalLeaf(labels0, "id", 2)
-    val hop = leaf.groupBy("id").agg(min("lbl").as("lbl"))
-    val round = hop.as("h")
-      .join(hop.select(col("id").as("lid"), col("lbl").as("lbl2")).as("g"),
-        col("h.lbl") === col("g.lid"))
-      .select(col("h.id").as("id"), col("lbl2").as("lbl"))
-    assertCodegen("propagation_round", round)
-    assert(round.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      .sameElements(Array((1L, 1L), (2L, 1L), (3L, 3L))))
-  }
-
   test("ANN scoring (dot product) stays inside whole-stage codegen") {
     // the pair-scoring Project must be starred — aggregate/zip_with
     // here would be a CodegenFallback on the hottest inner loop

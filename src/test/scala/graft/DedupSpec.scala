@@ -248,8 +248,13 @@ class DedupSpec extends SparkSpec {
     val pairs = Dedup.dedupNgramExactjoin(spark, sf, 0.3)
       .select("id_a", "id_b")
     val nodes = Tables.load(spark, sf, "documents").select(col("doc_id"))
-    val inMem = Dedup.clustersFromPairs(nodes, pairs, 20)
+    // a bound of 4 edge rows makes this small graph run contraction rounds
+    val inMem = Dedup.connectedComponents(nodes, pairs, 20, None, 4)
       .collect().map(_.toString).toSeq
+    assert(Dedup.lastContractionRounds > 0, "must run contraction rounds")
+    val roundZero = Dedup.clustersFromPairs(nodes, pairs, 20)
+      .collect().map(_.toString).toSeq
+    assert(inMem == roundZero)
     val dir = graft.operators.ExportImport.scratch("ckpt-clusters")
     // start empty: a run directory left by an earlier JVM is not this run's
     val stale = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
@@ -257,7 +262,7 @@ class DedupSpec extends SparkSpec {
       .filter(_ != java.nio.file.Paths.get(dir))
       .forEach(p => java.nio.file.Files.delete(p))
     finally stale.close()
-    val ckpt = Dedup.clustersFromPairs(nodes, pairs, 20, Some(dir))
+    val ckpt = Dedup.connectedComponents(nodes, pairs, 20, Some(dir), 4)
       .collect().map(_.toString).toSeq
     assert(inMem == ckpt)
     // the checkpoint actually wrote durable round state
@@ -274,43 +279,102 @@ class DedupSpec extends SparkSpec {
     fs.deleteOnExit(run)
   }
 
-  test("dedup_clusters: the distributed loop over hashed label leaves " +
-      "equals the driver union-find") {
+  private def clusterRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.get(0).toString.toLong, r.get(1).toString.toLong,
+      r.getLong(2), r.getBoolean(3))).toSeq
+
+  test("dedup_clusters: contraction rounds equal round zero for int and " +
+      "long ids") {
     import spark.implicits._
-    // int ids skip the long-id driver fast path, so the same graph runs
-    // the in-memory distributed loop, whose per-round label leaf declares
-    // its hash partitioning (joins and aggregates on id plan no exchange)
     val edges = (0 until 300).filter(_ % 5 != 0)
       .map(i => (i % 200, (i * 7 + 3) % 200))
       .filter { case (a, b) => a != b } ++ Seq((250, 251), (251, 252))
     val nodes = (0 until 260).toDF("doc_id")
     val pairs = edges.toDF("id_a", "id_b")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.get(0).toString.toLong, r.get(1).toString.toLong,
-        r.getLong(2), r.getBoolean(3))).toSeq
-    val distributed = rows(Dedup.clustersFromPairs(nodes, pairs, 40))
-    assert(Dedup.lastPropagationRounds > 0, "must run the distributed loop")
-    val driver = rows(Dedup.clustersFromPairs(
-      nodes.select(col("doc_id").cast("long")),
-      pairs.select(col("id_a").cast("long"), col("id_b").cast("long")), 40))
-    assert(Dedup.lastPropagationRounds == 0, "must take the driver path")
-    assert(distributed == driver)
-    assert(distributed.map(_._2).distinct.size < 260, "graph must merge")
+    for (t <- Seq("int", "long")) {
+      val n = nodes.select(col("doc_id").cast(t))
+      val p = pairs.select(col("id_a").cast(t), col("id_b").cast(t))
+      val rounds = Dedup.connectedComponents(n, p, 40, None, 20)
+      assert(Dedup.lastContractionRounds > 0, s"$t: must run rounds")
+      val roundZero = Dedup.clustersFromPairs(n, p, 40)
+      assert(Dedup.lastContractionRounds == 0, s"$t: must run none")
+      // the caller's id type survives either way
+      for (df <- Seq(rounds, roundZero))
+        assert(df.schema("cluster_id").dataType.simpleString ==
+          (if (t == "int") "int" else "bigint"), df.schema)
+      val got = clusterRows(rounds)
+      assert(got == clusterRows(roundZero), t)
+      assert(got.map(_._2).distinct.size < 260, "graph must merge")
+    }
   }
 
-  test("internalLeaf: its declared hash partitioning holds — an aggregate " +
-      "on the key plans no exchange and sees each key once") {
-    import spark.implicits._
-    val df = (0 until 1000).map(i => (i % 97, i)).toDF("id", "v")
-      .repartition(4)
-    val leaf = org.apache.spark.sql.graftbridge.CatalystBridge
-      .internalLeaf(df, "id", 3)
-    val agg = leaf.groupBy("id").agg(count(lit(1)).as("n"))
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"no exchange expected:\n$plan")
-    val got = agg.collect().map(r => (r.getInt(0), r.getLong(1)))
-    assert(got.map(_._1).sorted.toSeq == (0 until 97))
-    assert(got.map(_._2).sum == 1000L)
+  test("dedup_clusters: a chain and a random graph contract to the " +
+      "round-zero components") {
+    for ((name, (nodes, pairs)) <- Seq(
+        "chain" -> GraphGen.chain(spark, 1500),
+        "random" -> GraphGen.random(spark, 2000, 1400, 7L))) {
+      val rounds = clusterRows(
+        Dedup.connectedComponents(nodes, pairs, 40, None, 100))
+      val r = Dedup.lastContractionRounds
+      assert(r >= 2, s"$name: ran $r rounds")
+      assert(rounds == clusterRows(Dedup.clustersFromPairs(nodes, pairs, 40)),
+        name)
+      assert(rounds.size == (if (name == "chain") 1500 else 2000))
+    }
+  }
+
+  test("dedup_clusters: the last round's jobs list no more stages than " +
+      "the first round's") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    // per SQL execution: its call site ("localCheckpoint at
+    // Dedup.scala:…"); per job: its execution and the stages it lists.
+    // A round that drags its predecessors' lineage along lists more
+    // stages every round.
+    val sites = new java.util.concurrent.ConcurrentHashMap[String, String]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          sites.put(s.executionId.toString, s.description)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => jobs.add((id, e.stageInfos.size)))
+    }
+    val sc = spark.sparkContext
+    val (nodes, pairs) = GraphGen.chain(spark, 2000)
+    sc.addSparkListener(listener)
+    try {
+      Dedup.connectedComponents(nodes, pairs, 40, None, 60).collect()
+      org.apache.spark.sql.graftbridge.CatalystBridge.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    val rounds = Dedup.lastContractionRounds
+    assert(rounds >= 4, s"ran $rounds rounds")
+    // the most stages one job of an execution lists, per execution in
+    // order, grouped by call site; a round's sites run once per round
+    val perExec = jobs.asScala.toSeq.groupBy(_._1).toSeq
+      .map { case (id, js) => (id.toLong, sites.get(id), js.map(_._2).max) }
+      .sortBy(_._1)
+    val bySite = perExec.groupBy(_._2).filter(_._2.size >= rounds)
+    assert(bySite.size >= 2, s"per-round call sites: $perExec")
+    bySite.foreach { case (site, execs) =>
+      assert(execs.last._3 <= execs.head._3,
+        s"$site: stages per job by round ${execs.map(_._3)}")
+    }
+  }
+
+  test("dedup_clusters: rounds that miss the bound within maxIters fail " +
+      "loudly") {
+    val (nodes, pairs) = GraphGen.chain(spark, 1000)
+    val e = intercept[IllegalArgumentException](
+      Dedup.connectedComponents(nodes, pairs, 2, None, 10))
+    assert(e.getMessage.contains(
+      "did not contract to 10 edge rows in 2 rounds"), e.getMessage)
   }
 
   test("dedup_threshold_sweep: counts are monotone non-increasing in tau") {

@@ -72,17 +72,19 @@ class WindowLintSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   /** Operators run inside the caller's session and must leave it as
-    * they found it: a session-conf write is visible to every other
-    * query planned meanwhile in that session, and a query whose
-    * branches were collected eagerly on driver threads hides its plan
-    * and outlives a failure. Both are rejected at the source. */
+    * they found it: a session-conf write, or a `setCheckpointDir` on
+    * the shared SparkContext, is visible to every other query planned
+    * meanwhile in that session, and a query whose branches were
+    * collected eagerly on driver threads hides its plan and outlives a
+    * failure. All are rejected at the source. */
   test("no operator writes session conf or runs branches eagerly") {
     val offending = sources("operators").collect {
       case (path, text) if text.contains("conf.set(") ||
+          text.contains("setCheckpointDir(") ||
           text.contains("Branches") => path
     }
     assert(offending.isEmpty,
-      s"operators writing session conf or using Branches: $offending")
+      s"operators writing session conf or state or using Branches: $offending")
   }
 
   /** The IVF index artifact's layout — its members and markers — is
